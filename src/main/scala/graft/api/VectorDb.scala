@@ -511,8 +511,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
       .orderBy(col("ham").asc, col("id").asc)
       .limit(rerank)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
-    val sim = round(graft.GraftExtensions.cosineSim(col("vector"),
-      array(query.map(lit): _*)), 6)
+    val sim = round(graft.functions.VectorFunctions.cosineQuery(col("vector"), query), 6)
     // legs are disjoint: codes cover only ids below the build watermark
     graft.search.IdFetch.fetchByIds(data, "id", candIds)
       .union(data.where(col("id") >= binCoveredUpTo))
@@ -566,8 +565,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
       .orderBy(col("d2").asc, col("id").asc)
       .limit(rerank)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
-    val sim = round(graft.GraftExtensions.cosineSim(col("vector"),
-      array(query.map(lit): _*)), 6)
+    val sim = round(graft.functions.VectorFunctions.cosineQuery(col("vector"), query), 6)
     graft.search.IdFetch.fetchByIds(data, "id", candIds)
       .union(data.where(col("id") >= pcaCoveredUpTo))
       .select(col("id"), sim.as("sim"))
@@ -1179,7 +1177,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     def score(df: DataFrame): DataFrame = {
       val base = filter.foldLeft(df)((d, f) => d.where(f))
       base.withColumn("sim",
-        round(graft.functions.VectorFunctions.cosineConst(col("vector"), query), 6))
+        round(graft.functions.VectorFunctions.cosineQuery(col("vector"), query), 6))
         .select("id", "sim")
     }
     // graph-covered candidates re-scored against live rows ∪ exact delta;

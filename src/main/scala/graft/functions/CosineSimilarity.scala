@@ -13,7 +13,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * (vervectordb/__init__.py:31-36), so the DuckDB oracle mirror stays
   * valid. Compared to the expanded built-in formulation this reads each
   * element once instead of four times — the hot-path form for wide
-  * embedding columns. Input/null contract lives on [[VectorBinaryMetric]]
+  * embedding columns, and the scorer of every single-query serve
+  * ([[VectorFunctions.cosineQuery]]). Input/null contract lives on [[VectorBinaryMetric]]
   * (shared with dot_product/l2_distance).
   */
 case class CosineSimilarity(left: Expression, right: Expression)

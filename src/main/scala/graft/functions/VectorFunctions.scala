@@ -1,14 +1,23 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Vector scalar functions over `ARRAY<FLOAT|DOUBLE>` columns.
   *
-  * All formulations expand to built-in Catalyst expressions (element_at,
-  * arithmetic, sqrt) so they stay inside whole-stage codegen — no UDFs.
-  * Sums are left-associated, matching the DuckDB oracle's expanded SQL
-  * term-for-term, so double results are bit-identical across engines.
+  * Serving scores a row against a query through [[cosineQuery]]: the fused
+  * [[CosineSimilarity]] kernel with the query passed as ONE array literal,
+  * so the compiled plan is the same for every query.
+  *
+  * The other formulations expand to built-in Catalyst expressions
+  * (element_at, arithmetic, sqrt) so they stay inside whole-stage codegen —
+  * no UDFs. Sums are left-associated, matching the DuckDB oracle's expanded
+  * SQL term-for-term, so double results are bit-identical across engines.
+  * [[cosineConst]] is that expanded mirror of [[cosineQuery]]: CosineSpec
+  * pins the two bitwise against each other and the SQL oracle.
   *
   * Cosine semantics mirror the reference (vervectordb/__init__.py:31-36):
   * zero-norm input → similarity 0.0.
@@ -17,6 +26,21 @@ object VectorFunctions {
 
   private def elem(vec: Column, i: Int): Column =
     element_at(vec, i + 1).cast("double")
+
+  /** Cosine similarity of an array column vs a constant query vector,
+    * scored by the fused [[CosineSimilarity]] kernel. The query is one
+    * `ARRAY<DOUBLE>` literal, which generated code reads through a
+    * reference object rather than inlining its values: a new query reuses
+    * the compiled plan from the codegen cache, and the optimizer sees a
+    * handful of nodes instead of one per element. Built through
+    * [[ColumnBridge]], so it needs no [[graft.GraftExtensions]] in the
+    * session. Bit-identical to [[cosineConst]] (same accumulation order)
+    * for a non-zero query; a zero-norm query scores 0.0 on every row. */
+  def cosineQuery(vec: Column, q: Seq[Double]): Column =
+    ColumnBridge.column(CosineSimilarity(
+      ColumnBridge.expression(vec.cast("array<double>")),
+      Literal(UnsafeArrayData.fromPrimitiveArray(q.toArray),
+        ArrayType(DoubleType, containsNull = false))))
 
   /** Dot product of an array column against a constant query vector. */
   def dotConst(vec: Column, q: Seq[Double]): Column =
@@ -31,7 +55,11 @@ object VectorFunctions {
   def normConst(q: Seq[Double]): Column =
     sqrt(q.map(x => lit(x) * lit(x)).reduceLeft(_ + _))
 
-  /** Cosine similarity of an array column vs a constant query vector. */
+  /** Cosine similarity of an array column vs a constant query vector,
+    * expanded element by element — the parity mirror of [[cosineQuery]]
+    * and of the oracle's SQL expansion. Guards only the row norm, so a
+    * zero-norm query divides by zero (an error under ANSI mode, NaN
+    * without it); serving code uses [[cosineQuery]]. */
   def cosineConst(vec: Column, q: Seq[Double]): Column = {
     val n = norm(vec, q.length)
     when(n === 0.0, lit(0.0)).otherwise(dotConst(vec, q) / (n * normConst(q)))

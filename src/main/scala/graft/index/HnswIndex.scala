@@ -143,7 +143,16 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
 
   def size: Int = n
 
+  /** The flat store is one JVM array, so `cap * dim` must fit an Int:
+    * fail loudly before the product wraps (a negative size, or a silently
+    * short array) rather than part-way through an insert. */
+  private def requireFlatFits(cap: Long, dim: Int): Unit =
+    require(cap * dim <= Int.MaxValue,
+      s"HNSW flat vector store limit: capacity $cap x dim $dim = " +
+        s"${cap * dim} doubles exceeds Int.MaxValue (${Int.MaxValue})")
+
   private def grow(): Unit = {
+    if (flat != null) requireFlatFits(cap * 2L, dim)
     cap *= 2
     if (flat != null) flat = java.util.Arrays.copyOf(flat, cap * dim)
     norms = java.util.Arrays.copyOf(norms, cap)
@@ -183,7 +192,10 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
   /** Register node `node`'s vector in the flat store (first vector fixes
     * the index's dimensionality — one index holds one vector family). */
   private def storeVec(node: Int, vector: Array[Double]): Unit = {
-    if (dim < 0) { dim = vector.length; flat = new Array[Double](cap * dim) }
+    if (dim < 0) {
+      requireFlatFits(cap, vector.length)
+      dim = vector.length; flat = new Array[Double](cap * dim)
+    }
     require(vector.length == dim,
       s"vector dim ${vector.length} != index dim $dim (node $node)")
     System.arraycopy(vector, 0, flat, node * dim, dim)
@@ -297,10 +309,11 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
   def insert(id: Long, vector: Array[Double]): Unit = {
     if (idToIdx.contains(id)) return
     if (n == cap) grow()
-    val level = randomLevel()
-    val node = n; n += 1
-    idToIdx(id) = node
+    val node = n
     storeVec(node, vector)
+    val level = randomLevel()
+    n += 1
+    idToIdx(id) = node
     norms(node) = vecNorm(vector)
     extIds(node) = id
     nodeLevels(node) = level
@@ -362,9 +375,10 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
   private[index] def restoreNode(id: Long, vector: Array[Double], level: Int,
       isEntry: Boolean): Int = {
     if (n == cap) grow()
-    val node = n; n += 1
-    idToIdx(id) = node
+    val node = n
     storeVec(node, vector)
+    n += 1
+    idToIdx(id) = node
     norms(node) = vecNorm(vector)
     extIds(node) = id
     nodeLevels(node) = level

@@ -456,6 +456,14 @@ object Ivf {
     maintain(currentClustered(spark, root), model, driftThreshold, vecCol,
       idCol, k, seed)(w => { graft.store.VersionedLayout.publish(spark, root)(w); () })
 
+  /** `cluster_id` ∈ `probes`, with the probe set bound as ONE array literal.
+    * Generated code reads the literal through a reference object, so a new
+    * probe set reuses the compiled plan; an `isin` writes each probe into
+    * the generated code and compiles afresh per probe set. Over a clustered
+    * layout it is still a partition filter on `cluster_id` (PlanSpec). */
+  def probeFilter(probes: Seq[Int]): Column =
+    array_contains(typedLit(probes.sorted.toArray), col("cluster_id"))
+
   /** S3: probe-pruned approximate top-k. `max(k/2, 8)` probes per the
     * reference; filter-first exact semantics within the probed subset. */
   def search(assigned: DataFrame, model: IvfModel, query: Seq[Double], topK: Int,
@@ -463,7 +471,7 @@ object Ivf {
       : DataFrame = {
     val nProbes = math.max(model.k / 2, 8)
     val probes = model.probeClusters(query, nProbes)
-    val pruned = assigned.where(col("cluster_id").isin(probes: _*))
+    val pruned = assigned.where(probeFilter(probes))
     VectorSearch.bruteForceTopK(pruned, query, topK, filter, vecCol, idCol)
   }
 
@@ -485,7 +493,7 @@ object Ivf {
       filter: Option[Column] = None, vecCol: String = "vector", idCol: String = "id")
       : DataFrame = {
     val probes = model.probeClustersAdaptive(query, sizes, overscan.toLong * topK, minProbes)
-    val pruned = assigned.where(col("cluster_id").isin(probes: _*))
+    val pruned = assigned.where(probeFilter(probes))
     VectorSearch.bruteForceTopK(pruned, query, topK, filter, vecCol, idCol)
   }
 

@@ -126,7 +126,7 @@ object IvfPq {
         }
       }
     }
-    val cand = encoded.where(col("cluster_id").isin(probes: _*))
+    val cand = encoded.where(Ivf.probeFilter(probes))
       .withColumn("adc_score", graft.functions.ModelExpressions
         .adcScoreClustered(col("cluster_id"), col("pq_code"), luts))
       .orderBy(col("adc_score").desc, col(idCol).asc)
@@ -142,7 +142,7 @@ object IvfPq {
         val candIds = cand.select(col(idCol)).collect().map(_.get(0)).toSeq
         graft.search.IdFetch.fetchByIds(
             filter.foldLeft(raw)((d, f) => d.where(f)), idCol, candIds)
-          .withColumn("sim", round(VectorFunctions.cosineConst(col(vecCol), query), 6))
+          .withColumn("sim", round(VectorFunctions.cosineQuery(col(vecCol), query), 6))
           .orderBy(col("sim").desc, col(idCol).asc)
           .limit(topK)
           .select(col(idCol), col("sim"))

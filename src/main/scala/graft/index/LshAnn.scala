@@ -955,7 +955,7 @@ object LshAnn {
         col(GroupCol) === col("__lsh_ptr_hgroup"), "leftsemi")
       .select(col(idCol), col(vecCol))
       .withColumn("sim",
-        round(graft.functions.VectorFunctions.cosineConst(col(vecCol), query), 6))
+        round(graft.functions.VectorFunctions.cosineQuery(col(vecCol), query), 6))
       .select(col(idCol), col("sim"))
       .orderBy(col("sim").desc, col(idCol).asc)
       .limit(topK)

@@ -113,7 +113,7 @@ object BinaryQuantizer {
     graft.search.IdFetch.fetchByIds(vecs, idCol, candRows.map(_.get(0)).toSeq)
       .join(broadcast(candDf), Seq(idCol))
       .select(col(idCol), col("ham"),
-        round(graft.functions.VectorFunctions.cosineConst(col(vecCol), query), 6)
+        round(graft.functions.VectorFunctions.cosineQuery(col(vecCol), query), 6)
           .as("sim"))
       .orderBy(col("sim").desc, col(idCol).asc)
       .limit(k)

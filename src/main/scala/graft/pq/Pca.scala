@@ -165,7 +165,7 @@ object Pca {
       .collect().map(_.get(0)).toSeq
     graft.search.IdFetch.fetchByIds(vecs, idCol, candIds)
       .select(col(idCol),
-        round(graft.functions.VectorFunctions.cosineConst(col(vecCol), query), 6)
+        round(graft.functions.VectorFunctions.cosineQuery(col(vecCol), query), 6)
           .as("sim"))
       .orderBy(col("sim").desc, col(idCol).asc)
       .limit(k)

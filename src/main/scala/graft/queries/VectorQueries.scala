@@ -311,7 +311,7 @@ object VectorQueries {
   def groupedTopK(spark: SparkSession, dir: String): DataFrame = {
     val data = VectorModel.lineitemVectors(spark, dir)
       .withColumn("sim_raw",
-        graft.functions.VectorFunctions.cosineConst(col("vector"), VectorModel.Query))
+        graft.functions.VectorFunctions.cosineQuery(col("vector"), VectorModel.Query))
     graft.operators.TopK.perGroupTopK(data, "category", col("id"), col("sim_raw"), 3)
       .orderBy("category", "rn")
   }

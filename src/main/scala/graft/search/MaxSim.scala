@@ -35,7 +35,7 @@ object MaxSim {
     require(queryVecs.nonEmpty, "maxsim: need at least one query vector")
     val sims = chunkVecs.select(
       col(idCol) +: queryVecs.zipWithIndex.map { case (q, i) =>
-        VectorFunctions.cosineConst(col(vecCol), q).as(s"s$i")
+        VectorFunctions.cosineQuery(col(vecCol), q).as(s"s$i")
       }: _*)
     val aggs = queryVecs.indices.map(i => max(col(s"s$i")).as(s"m$i"))
     val maxes = sims.groupBy(idCol).agg(aggs.head, aggs.tail: _*)

@@ -16,7 +16,11 @@ import graft.functions.VectorFunctions
   *    unlike the reference's overfetch-then-filter (`top_k*3`,
   *    vervectordb/__init__.py:345,386,470) which can drop matches — see
   *    SURVEY.md §2 "overfetch semantics note".
-  *  - All similarity math expands to codegen'd built-in expressions.
+  *  - Single-query scoring runs the fused [[graft.functions.CosineSimilarity]]
+  *    kernel with the query passed as one array literal
+  *    ([[VectorFunctions.cosineQuery]]): the generated code is the same for
+  *    every query, so a new query reuses the compiled plan. The expanded
+  *    [[VectorFunctions.cosineConst]] is the oracle's parity mirror.
   */
 object VectorSearch {
 
@@ -32,7 +36,7 @@ object VectorSearch {
       idCol: String = "id"): DataFrame = {
     val base = filter.foldLeft(data)((d, f) => d.where(f))
     base
-      .withColumn("sim", round(VectorFunctions.cosineConst(col(vecCol), query), 6))
+      .withColumn("sim", round(VectorFunctions.cosineQuery(col(vecCol), query), 6))
       .orderBy(col("sim").desc, col(idCol).asc)
       .limit(k)
   }
@@ -109,10 +113,8 @@ object VectorSearch {
       vecCol: String = "vector",
       idCol: String = "id"): DataFrame = {
     val base = filter.foldLeft(data)((d, f) => d.where(f))
-    val q = array(query.map(lit): _*)
     base
-      .withColumn("sim",
-        round(graft.GraftExtensions.cosineSim(col(vecCol), q), 6))
+      .withColumn("sim", round(VectorFunctions.cosineQuery(col(vecCol), query), 6))
       .where(col("sim") >= minSim)
       .orderBy(col("sim").desc, col(idCol).asc)
   }
@@ -151,7 +153,7 @@ object VectorSearch {
       idCol: String = "id"): DataFrame = {
     val spark = data.sparkSession
     val pool = data
-      .withColumn("sim", round(VectorFunctions.cosineConst(col(vecCol), query), 6))
+      .withColumn("sim", round(VectorFunctions.cosineQuery(col(vecCol), query), 6))
       .orderBy(col("sim").desc, col(idCol).asc)
       .limit(poolSize)
       .select(col(idCol).cast("long"), col("sim"), col(vecCol).cast("array<double>"))

@@ -223,8 +223,7 @@ object StreamingIngest {
     if (!graft.store.Fs.exists(spark, deltaPath)) return graphCand
     val deltaScored = spark.read.parquet(deltaPath)
       .withColumn("sim", round(
-        graft.functions.VectorFunctions.cosineConst(
-          col(vecCol).cast("array<double>"), query), 6))
+        graft.functions.VectorFunctions.cosineQuery(col(vecCol), query), 6))
       .select(col(idCol), col("sim"))
     // dedup by id before ranking: a row can legitimately appear on both
     // sides in the window between a delta compaction's publish and its

@@ -26,8 +26,10 @@ class CosineSpec extends SparkSpec {
     val q = VectorModel.Query
     val both = df.select(
       VectorFunctions.cosineConst(col("vector"), q).as("expanded"),
-      graft.GraftExtensions.cosineSim(col("vector"), array(q.map(lit): _*)).as("fused"))
+      graft.GraftExtensions.cosineSim(col("vector"), array(q.map(lit): _*)).as("fused"),
+      VectorFunctions.cosineQuery(col("vector"), q).as("served"))
     assert(both.where(col("expanded") =!= col("fused")).count() === 0)
+    assert(both.where(col("expanded") =!= col("served")).count() === 0)
   }
 
   test("cosine_sim is callable from SQL and zero-norm guarded") {

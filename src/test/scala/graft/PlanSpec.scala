@@ -61,6 +61,16 @@ class PlanSpec extends SparkSpec {
     assert(probes.size < totalClusters)
   }
 
+  test("IVF search binds its probe set as a partition filter of a reread clustered layout") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_serve").toString
+    val (assigned, model) = Ivf.fit(VectorModel.lineitemVectors(spark, Sf0001))
+    Ivf.saveClustered(assigned, s"$dir/t")
+    val served = Ivf.search(spark.read.parquet(s"$dir/t"), model, VectorModel.Query, 10)
+    val scan = served.queryExecution.executedPlan.collectLeaves().head.toString
+    assert(scan.contains("PartitionFilters") && scan.contains("cluster_id"),
+      "probe filter must prune cluster partitions:\n" + scan.take(2000))
+  }
+
   test("bucketed tables join without any shuffle exchange") {
     import graft.store.VectorStore
     val vecs = VectorModel.lineitemVectors(spark, Sf0001)
