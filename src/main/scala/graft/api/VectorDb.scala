@@ -377,7 +377,28 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     * or the rebuilt graph answers differently than the one it replaces. */
   private var hnswNumPartitions: Int = 8
 
+  /** The current layout's graphs, restored once and resident in the block
+    * cache ([[graft.index.HnswStore.ResidentGraphs]]); created by the first
+    * clean serve, dropped whenever the layout is rebuilt or replaced. */
+  private var hnswResident: Option[graft.index.HnswStore.ResidentGraphs] = None
+
+  private def residentGraphs(path: String): graft.index.HnswStore.ResidentGraphs =
+    synchronized {
+      hnswResident.filter(_.path == path).getOrElse {
+        dropResidentGraphs()
+        val r = graft.index.HnswStore.resident(spark, path, hnswM, hnswEfConstruction)
+        hnswResident = Some(r)
+        r
+      }
+    }
+
+  private def dropResidentGraphs(): Unit = synchronized {
+    hnswResident.foreach(_.unpersist())
+    hnswResident = None
+  }
+
   private def dropOwnedHnsw(): Unit = {
+    dropResidentGraphs()
     if (hnswOwned) hnswOwnedRoot.foreach(deletePath)
     hnswOwnedRoot = None
   }
@@ -630,7 +651,8 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     // a rebuild into the SAME dir at the SAME watermark (e.g. after
     // delete/update-only mutations into a caller-supplied scratch) runs a
     // fresh k-means — shard ids denote different regions — so the memo
-    // key (path, watermark) alone cannot see it; drop eagerly
+    // key (path, watermark) alone cannot see it; drop eagerly (the
+    // resident graphs, keyed by path alone, went in dropOwnedHnsw above)
     hnswStatsMemo = None
   }
 
@@ -1041,6 +1063,17 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     * arguments match the build-time values — RecallSpec covers the
     * matching case).
     *
+    * The persisted graphs are restored ONCE per layout, by the first
+    * serve, and stay resident in Spark's block cache
+    * ([[graft.index.HnswStore.ResidentGraphs]]); every later query prunes
+    * the cached graphs to the probed shards and searches them in one job,
+    * with no file scan and no restore. A block that Spark evicts under
+    * memory pressure is restored again from the layout by the query that
+    * next needs it. The resident graphs are dropped when the index is
+    * rebuilt ([[buildHnswIndex]], [[maintainIndexes]]); layout files
+    * changed underneath a live instance do not change its answers until
+    * then (or until [[VectorDb.load]] makes a new instance).
+    *
     * `filter` (reference `filter_func`, `:379-409`): a fresh build filters
     * FIRST (graphs over exactly the qualifying rows — exact filter
     * semantics); a persisted CLEAN graph threads the predicate INTO the
@@ -1068,17 +1101,17 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
       throw new IllegalStateException("HNSW index not built")
     hnswPath match {
       case Some(p) if !hnswMutated && hnswCoveredUpTo == nextId =>
-        // clean index covering every row: serve straight from the graph
+        // clean index covering every row: serve straight from the
+        // resident graphs
+        val graphs = residentGraphs(p)
+        def routedParts: Option[Seq[Int]] =
+          if (hnswRouted) Some(graphs.probedShards(query, hnswRoutedProbes)) else None
         filter match {
-          case None if hnswRouted =>
-            // routed layout: score the routing sidecar driver-side, probe
-            // the top half of the shards — the other shards' files are
-            // pruned from the scan, their graphs never restored
-            graft.index.HnswStore.topKRouted(spark, p, query, topK,
-              probes = hnswRoutedProbes, efSearch = math.max(efSearch, 2 * topK))
           case None =>
-            graft.index.HnswStore.topK(spark, p, query, topK,
-              efSearch = math.max(efSearch, 2 * topK))
+            // routed layout: score the routing sidecar driver-side, probe
+            // the top half of the shards — the other shards' cached
+            // partitions are pruned, their graphs never touched
+            graphs.search(query, topK, math.max(efSearch, 2 * topK), routedParts)
           case Some(f) =>
             // three-tier dispatch by filter selectivity. The common
             // selective case pays ONE pushed-down id scan (the limit-probe
@@ -1099,9 +1132,6 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
             //    yields ~0.33·topK matches), bounded by density > 10% to
             //    ≤ 30·topK candidates.
             val ef2k = math.max(efSearch, 2 * topK)
-            def routedParts: Option[Seq[Int]] = if (hnswRouted)
-              Some(graft.index.HnswStore.probedShards(spark, p, query, hnswRoutedProbes))
-            else None
             def rerank(cand: DataFrame): DataFrame = {
               // pruned fetch (graft.search.IdFetch): the candidate set is
               // bounded (≤ 30·topK), so its ids push into the live-table
@@ -1123,12 +1153,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
               Seq.empty[(Long, Double)].toDF("id", "sim")
             } else if (probe.length <= MaxAcceptIds) {
               val accept = probe.map(_.getLong(0)).toSet
-              if (hnswRouted)
-                graft.index.HnswStore.topKRoutedFiltered(spark, p, query, topK,
-                  accept, probes = hnswRoutedProbes, efSearch = ef2k)
-              else
-                graft.index.HnswStore.topKFiltered(spark, p, query, topK, accept,
-                  efSearch = ef2k)
+              graphs.search(query, topK, ef2k, routedParts, accept.contains)
             } else {
               val counts = data.agg(
                 org.apache.spark.sql.functions.count(lit(1)),
@@ -1137,20 +1162,12 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
               val c = math.max(1L, counts.getLong(1))
               if (c.toDouble / n <= BloomSelectivity) {
                 val bloom = data.where(f).stat.bloomFilter("id", c, 0.01)
-                rerank(graft.index.HnswStore.topKFilteredApprox(spark, p, query,
-                  2 * topK, bloom.mightContain(_: Long), routedParts,
-                  efSearch = ef2k))
+                rerank(graphs.search(query, 2 * topK, ef2k, routedParts,
+                  bloom.mightContain(_: Long)))
               } else {
                 val fetchK = (topK.toLong * FilterOverfetch * n / c).toInt
-                val cand =
-                  if (hnswRouted)
-                    graft.index.HnswStore.topKRouted(spark, p, query, fetchK,
-                      probes = hnswRoutedProbes,
-                      efSearch = math.max(efSearch, 2 * fetchK))
-                  else
-                    graft.index.HnswStore.topK(spark, p, query, fetchK,
-                      efSearch = math.max(efSearch, 2 * fetchK))
-                rerank(cand)
+                rerank(graphs.search(query, fetchK, math.max(efSearch, 2 * fetchK),
+                  routedParts))
               }
             }
         }
@@ -1172,8 +1189,10 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
   private def hnswMergeSearch(path: String, query: Seq[Double], topK: Int,
       efSearch: Int, filter: Option[Column]): DataFrame = {
     val fetchK = topK * FilterOverfetch
-    val cand = graft.index.HnswStore.topK(spark, path, query, fetchK,
-      efSearch = math.max(efSearch, 2 * fetchK))
+    // the graph files are unchanged since the build, so the candidate leg
+    // reads the resident graphs too (all shards: the merge path never
+    // routed)
+    val cand = residentGraphs(path).search(query, fetchK, math.max(efSearch, 2 * fetchK))
     def score(df: DataFrame): DataFrame = {
       val base = filter.foldLeft(df)((d, f) => d.where(f))
       base.withColumn("sim",

@@ -123,17 +123,24 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
   /** adj(node)(level) — present for level <= nodeLevels(node). */
   private var adj = new Array[Array[IntVec]](cap)
   private var n = 0
-  private val idToIdx = mutable.LongMap.empty[Int]
+  private var idToIdx = mutable.LongMap.empty[Int]
   private var entry = -1
   private var maxLevel = 0
 
-  // scratch buffers reused across searchLayer calls (single-threaded use)
-  private var visitedStamp = new Array[Int](cap)
-  private var stamp = 0
-  private val candHeap = new Heap(max = true, 256)
-  private val resultHeap = new Heap(max = false, 256)
-  private val scratchSims = new Array[Double](4096)
-  private val scratchIdx = new Array[Int](4096)
+  /** One beam search's working state: the visited stamps, both heaps and
+    * the drain buffers. Inserts reuse [[buildScratch]] (a build is
+    * single-threaded); every search allocates its own, so one index can
+    * serve concurrent searches — a resident graph is shared by every task
+    * and client thread that probes its shard. */
+  private final class Scratch(nodes: Int, drain: Int) {
+    var visitedStamp = new Array[Int](nodes)
+    var stamp = 0
+    val candHeap = new Heap(max = true, 256)
+    val resultHeap = new Heap(max = false, 256)
+    val sims = new Array[Double](drain)
+    val idx = new Array[Int](drain)
+  }
+  private val buildScratch = new Scratch(cap, 4096)
   // prune scratch, reused across pruneEdges calls (insert adds a reverse
   // edge to up to m neighbors per level and prunes each over-cap list —
   // allocating a heap + kept buffer per prune was the one allocation
@@ -159,8 +166,26 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
     extIds = java.util.Arrays.copyOf(extIds, cap)
     nodeLevels = java.util.Arrays.copyOf(nodeLevels, cap)
     adj = java.util.Arrays.copyOf(adj, cap)
-    visitedStamp = java.util.Arrays.copyOf(visitedStamp, cap)
+    buildScratch.visitedStamp = java.util.Arrays.copyOf(buildScratch.visitedStamp, cap)
   }
+
+  /** Size every per-node store for exactly `nodes` nodes before the first
+    * one lands — [[HnswIndex.restore]] knows its row count, and a restored
+    * graph that stays resident would otherwise keep up to half its flat
+    * store as doubling slack for as long as it is cached. */
+  private def reserve(nodes: Int): Unit = {
+    require(n == 0, "reserve before the first node")
+    cap = math.max(1, nodes)
+    norms = new Array[Double](cap)
+    extIds = new Array[Long](cap)
+    nodeLevels = new Array[Int](cap)
+    adj = new Array[Array[IntVec]](cap)
+    idToIdx = new mutable.LongMap[Int](cap)
+    buildScratch.visitedStamp = new Array[Int](cap)
+  }
+
+  /** Length of the flat vector store (0 before the first vector). */
+  private[graft] def flatLength: Int = if (flat == null) 0 else flat.length
 
   private def randomLevel(): Int =
     math.min(LevelCap, (-math.log(rng.nextDouble() max Double.MinPositiveValue) * mL).toInt)
@@ -207,8 +232,8 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
     math.sqrt(s)
   }
 
-  /** Beam search at one level. On return, resultHeap holds ≤ ef entries
-    * (min-first). Overwrites both scratch heaps.
+  /** Beam search at one level. On return, `sc.resultHeap` holds ≤ ef
+    * entries (min-first). Overwrites both of `sc`'s heaps.
     *
     * `accept` (null = accept all): FILTERED traversal, the hnswlib-style
     * alternative to overfetch-and-post-filter. Non-matching nodes are
@@ -220,9 +245,13 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
     * return a full k where a 3k overfetch starves. The cost is more
     * traversal under selective filters (worst case the connected
     * component), bounded by the per-shard graph size. */
-  private def searchLayer(q: Array[Double], qNorm: Double, entryNode: Int,
+  private def searchLayer(sc: Scratch, q: Array[Double], qNorm: Double, entryNode: Int,
       ef: Int, level: Int, accept: Int => Boolean = null): Unit = {
-    stamp += 1
+    sc.stamp += 1
+    val stamp = sc.stamp
+    val visitedStamp = sc.visitedStamp
+    val candHeap = sc.candHeap
+    val resultHeap = sc.resultHeap
     candHeap.clear(); resultHeap.clear()
     val eSim = simTo(entryNode, q, qNorm)
     visitedStamp(entryNode) = stamp
@@ -264,14 +293,15 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
     }
   }
 
-  /** Drain resultHeap into scratch arrays sorted by (sim DESC, idx ASC);
-    * returns count. */
-  private def drainSorted(): Int = {
+  /** Drain `sc.resultHeap` into `sc`'s drain arrays sorted by
+    * (sim DESC, idx ASC); returns count. */
+  private def drainSorted(sc: Scratch): Int = {
+    val resultHeap = sc.resultHeap
     val cnt = resultHeap.size
     var i = cnt - 1
     while (i >= 0) {
-      scratchSims(i) = resultHeap.headSim
-      scratchIdx(i) = resultHeap.headNode
+      sc.sims(i) = resultHeap.headSim
+      sc.idx(i) = resultHeap.headNode
       resultHeap.pop()
       i -= 1
     }
@@ -324,28 +354,29 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
       return
     }
     val qNorm = norms(node)
+    val sc = buildScratch
     var ep = entry
     var l = maxLevel
     while (l > level) {
-      searchLayer(vector, qNorm, ep, 1, l)
-      if (resultHeap.size > 0) ep = resultHeap.headNode
+      searchLayer(sc, vector, qNorm, ep, 1, l)
+      if (sc.resultHeap.size > 0) ep = sc.resultHeap.headNode
       l -= 1
     }
     var lc = math.min(level, maxLevel)
     while (lc >= 0) {
-      searchLayer(vector, qNorm, ep, efConstruction, lc)
-      val cnt = drainSorted()
+      searchLayer(sc, vector, qNorm, ep, efConstruction, lc)
+      val cnt = drainSorted(sc)
       val take = math.min(m, cnt)
       val degreeCap = if (lc == 0) 2 * m else m
       var i = 0
       while (i < take) {
-        val nb = scratchIdx(i)
+        val nb = sc.idx(i)
         adj(node)(lc).add(nb)
         adj(nb)(lc).add(node)
         if (adj(nb)(lc).len > degreeCap) pruneEdges(nb, lc, degreeCap)
         i += 1
       }
-      if (cnt > 0) ep = scratchIdx(0)
+      if (cnt > 0) ep = sc.idx(0)
       lc -= 1
     }
     if (level > maxLevel) {
@@ -371,9 +402,10 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
         nodeLevels(node), adjExt, node == entry)
     }
 
-  /** Wire a restored node (phase 2 of [[HnswIndex.restore]]). */
+  /** Wire a restored node (phase 2 of [[HnswIndex.restore]]); each
+    * level's edge list is sized to the `adjExt` row it will hold. */
   private[index] def restoreNode(id: Long, vector: Array[Double], level: Int,
-      isEntry: Boolean): Int = {
+      adjExt: Array[Array[Long]], isEntry: Boolean): Int = {
     if (n == cap) grow()
     val node = n
     storeVec(node, vector)
@@ -382,7 +414,8 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
     norms(node) = vecNorm(vector)
     extIds(node) = id
     nodeLevels(node) = level
-    adj(node) = Array.fill(level + 1)(new IntVec(m + 1))
+    adj(node) = Array.tabulate(level + 1)(l =>
+      new IntVec(math.max(1, if (l < adjExt.length) adjExt(l).length else 0)))
     if (isEntry) { entry = node; maxLevel = math.max(maxLevel, level) }
     if (level > maxLevel) maxLevel = level
     node
@@ -411,23 +444,26 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 64, seed: Long = 42L) {
     * fresh builds) keeps expanding the beam until it holds ef MATCHING
     * results, so k qualifying rows come back whenever the graph's
     * connected component holds them. `acceptId` must be pure and cheap
-    * (a set lookup); null = unfiltered. */
+    * (a set lookup); null = unfiltered. Safe to call from several threads
+    * at once: each call has its own [[Scratch]]. */
   def searchFiltered(q: Array[Double], k: Int, efSearch: Int,
       acceptId: Long => Boolean): Seq[(Long, Double)] = {
     if (entry < 0) return Seq.empty
     val accept: Int => Boolean =
       if (acceptId == null) null else node => acceptId(extIds(node))
     val qNorm = vecNorm(q)
+    val ef = math.max(efSearch, 2 * k)
+    val sc = new Scratch(n, ef + 1)
     var ep = entry
     var l = maxLevel
     while (l > 0) {
-      searchLayer(q, qNorm, ep, 1, l)
-      if (resultHeap.size > 0) ep = resultHeap.headNode
+      searchLayer(sc, q, qNorm, ep, 1, l)
+      if (sc.resultHeap.size > 0) ep = sc.resultHeap.headNode
       l -= 1
     }
-    searchLayer(q, qNorm, ep, math.max(efSearch, 2 * k), 0, accept)
-    val cnt = drainSorted()
-    (0 until math.min(k, cnt)).map(i => (extIds(scratchIdx(i)), scratchSims(i)))
+    searchLayer(sc, q, qNorm, ep, ef, 0, accept)
+    val cnt = drainSorted(sc)
+    (0 until math.min(k, cnt)).map(i => (extIds(sc.idx(i)), sc.sims(i)))
   }
 }
 
@@ -435,12 +471,14 @@ object HnswIndex {
 
   /** Rebuild an index from [[HnswIndex.dump]] rows (must be in the dumped
     * order): allocate all nodes first, then wire adjacency — no beam
-    * search, O(nodes + edges). */
+    * search, O(nodes + edges). Every store is sized to `rows.size` up
+    * front, so the restored graph holds no growth slack. */
   def restore(rows: Seq[(Long, Array[Double], Int, Array[Array[Long]], Boolean)],
       m: Int = 16, efConstruction: Int = 64, seed: Long = 42L): HnswIndex = {
     val idx = new HnswIndex(m, efConstruction, seed)
-    val nodes = rows.map { case (id, vec, level, _, isEntry) =>
-      idx.restoreNode(id, vec, level, isEntry)
+    idx.reserve(rows.size)
+    val nodes = rows.map { case (id, vec, level, adjExt, isEntry) =>
+      idx.restoreNode(id, vec, level, adjExt, isEntry)
     }
     rows.iterator.zip(nodes.iterator).foreach { case ((_, _, _, adjExt, _), node) =>
       idx.restoreEdges(node, adjExt)

@@ -1,8 +1,10 @@
 package graft.index
 
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** HNSW persistence — the reference pickles its graph on `save`
   * (vervectordb/__init__.py:556-573); here each per-partition graph is
@@ -34,6 +36,15 @@ import org.apache.spark.sql.functions._
   *    returning neighbors from a truncated graph.
   * The fix for an over-large shard at scale is more, smaller shards at
   * build time.
+  *
+  * Two serving lifecycles share that restore and search body. The
+  * one-shot serves ([[topK]], [[topKRouted]], … — used by the registered
+  * queries, streaming and the recall bench) restore inside each query's
+  * own plan and keep nothing. A long-lived owner (the `VectorDb` facade)
+  * restores ONCE with [[resident]] and serves every later query from the
+  * graphs cached in Spark's block manager, pruned to the probed shards;
+  * a block evicted under memory pressure is restored again from the
+  * layout by the next query that needs it ([[ResidentGraphs]]).
   */
 object HnswStore {
 
@@ -406,37 +417,139 @@ object HnswStore {
           (id, vec, level, adj, isEntry)
         }, mm, ee)
     }
+
+    /** Every graph whose rows one read task holds, restored in place. */
+    def task(rows: Iterator[Rec], mm: Int, ee: Int): Iterator[(Int, HnswIndex)] =
+      rows.toSeq.groupBy(_._1).iterator.map { case (part, grp) => part -> apply(grp, mm, ee) }
+
+    /** The per-graph search every serving path runs: `accept` null =
+      * unfiltered, else threaded into the beam. */
+    def search(q: Array[Double], k: Int, efSearch: Int, accept: Long => Boolean)
+        : (Int, HnswIndex) => Iterator[(Long, Double)] =
+      (_, idx) => idx.searchFiltered(q, k, efSearch, accept).iterator
   }
 
-  /** Restore every graph co-resident with a task and run `search` on it.
-    * Graph parameters come from the layout's meta sidecar (build-time
-    * values); `m`/`efConstruction` are the fallback for layouts without
-    * one. Restoration goes through [[RestoreGroup]]'s structural
-    * completeness assertion. */
-  private def served[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, path: String, m: Int, efConstruction: Int,
-      parts: Option[Seq[Int]] = None)(
-      search: (Int, HnswIndex) => Iterator[T]): Dataset[T] = {
-    import spark.implicits._
+  /** The stored rows of one serve: the selected shards (`parts`, pruned on
+    * the partition column), the build-time graph parameters from the meta
+    * sidecar (`m`/`efConstruction` are the fallback for layouts without
+    * one), and whether every task is guaranteed complete graphs — legacy
+    * layouts (no part_rows) lack the structural guard, so they always take
+    * the grouping shuffle (complete groups by construction) rather than
+    * trusting the listing heuristic alone. */
+  private final case class Stored(rows: Dataset[Rec], inPlace: Boolean, m: Int, ef: Int)
+
+  private def stored(spark: SparkSession, path: String, m: Int, efConstruction: Int,
+      parts: Option[Seq[Int]]): Stored = {
     val (mm, ee) = readMeta(spark, path)
       .map(t => (t._1, t._2)).getOrElse((m, efConstruction))
     val (all, hasPartRows) = storedRecords(spark, path)
     // shard routing: the probe filter is on the layout's PARTITION column,
     // so Catalyst prunes unprobed shard files from the scan entirely
     // (PartitionFilters — the inverted-list shape, plan-asserted in spec)
-    val stored = parts.fold(all)(ps => all.filter(col("part").isin(ps: _*)))
-    def restore(grp: Seq[Rec]): HnswIndex = RestoreGroup(grp, mm, ee)
-    // legacy layouts (no part_rows) lack the structural guard, so they
-    // always serve via the grouping shuffle — complete groups by
-    // construction — rather than trusting the listing heuristic alone
-    if (hasPartRows && filesUnsplit(spark, path, parts))
-      stored.mapPartitions { rows =>
-        rows.toSeq.groupBy(_._1).iterator.flatMap { case (part, grp) =>
-          search(part, restore(grp.toSeq))
-        }
-      }
+    val rows = parts.fold(all)(ps => all.filter(col("part").isin(ps: _*)))
+    Stored(rows, hasPartRows && filesUnsplit(spark, path, parts), mm, ee)
+  }
+
+  /** Restore every graph co-resident with a task and run `search` on it,
+    * in one plan (the one-shot serve: nothing outlives the query).
+    * Restoration goes through [[RestoreGroup]]'s structural completeness
+    * assertion. */
+  private def served[T: org.apache.spark.sql.Encoder](
+      spark: SparkSession, path: String, m: Int, efConstruction: Int,
+      parts: Option[Seq[Int]] = None)(
+      search: (Int, HnswIndex) => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    val st = stored(spark, path, m, efConstruction, parts)
+    val (mm, ee) = (st.m, st.ef)
+    if (st.inPlace)
+      st.rows.mapPartitions(rows =>
+        RestoreGroup.task(rows, mm, ee).flatMap { case (part, idx) => search(part, idx) })
     else
-      stored.groupByKey(_._1).flatMapGroups((part, rows) => search(part, restore(rows.toSeq)))
+      st.rows.groupByKey(_._1).flatMapGroups((part, rows) =>
+        search(part, RestoreGroup(rows.toSeq, mm, ee)))
+  }
+
+  /** The single-query DataFrame tail every serve shares: sims rounded to
+    * 6 places, ranked (sim DESC, id ASC), cut at `k`. */
+  private def ranked(hits: Dataset[(Long, Double)], k: Int, idCol: String): DataFrame =
+    hits.toDF(idCol, "sim")
+      .withColumn("sim", round(col("sim"), 6))
+      .orderBy(col("sim").desc, col(idCol).asc)
+      .limit(k)
+
+  /** A layout's graphs restored ONCE and kept resident in Spark's block
+    * cache — the reference's build-once/search-from-memory lifecycle
+    * (`build_hnsw_index`/`hnsw_search`, vervectordb/__init__.py:367-409)
+    * on a cluster. Creating the handle reads the meta and routing
+    * sidecars once and restores every shard through the same body as the
+    * one-shot serve ([[RestoreGroup]]: in place when no file can split,
+    * else after the grouping shuffle), persisting the graphs as
+    * `RDD[(shard, HnswIndex)]` at `MEMORY_ONLY`; one job materializes
+    * them and records which cached partition holds which shard.
+    *
+    * Each [[search]] then prunes that RDD to the partitions holding the
+    * probed shards (`PartitionPruningRDD`) and runs the beam searches in
+    * those tasks: one job, no file scan, no restore. The scheduler
+    * prefers the executors that hold the blocks. Under memory pressure
+    * Spark's memory manager may evict a block; the next query recomputes
+    * it from lineage — re-reading and restoring that partition's shards
+    * from the layout — so eviction costs time, never a wrong answer.
+    *
+    * The handle snapshots the layout as it was on creation: files
+    * rewritten or deleted underneath it do not change its answers while
+    * its blocks stay cached (an evicted block restores from whatever the
+    * layout then holds). Whoever owns the layout [[unpersist]]s the
+    * handle when it rebuilds or replaces it. Thread-safe: concurrent
+    * searches share the graphs ([[HnswIndex.searchFiltered]] keeps its
+    * state per call). */
+  final class ResidentGraphs private[HnswStore] (spark: SparkSession, val path: String,
+      routing: Option[Ivf.IvfModel], graphs: RDD[(Int, HnswIndex)],
+      partitionOf: Map[Int, Int]) {
+
+    /** The top-`probes` shards for `query` by the memoized routing
+      * sidecar (the [[probedShards]] rule). */
+    def probedShards(query: Seq[Double], probes: Int): Seq[Int] =
+      routing.getOrElse(throw noRouting(path)).probeClusters(query, probes)
+
+    /** Top-`k` over the shards in `parts` (all shards when None), with
+      * `accept` (null = none) threaded into each beam — the one-shot
+      * [[topK]] / [[topKRouted]] / [[topKFilteredApprox]] answers, as a
+      * lazy DataFrame. */
+    def search(query: Seq[Double], k: Int, efSearch: Int,
+        parts: Option[Seq[Int]] = None, accept: Long => Boolean = null): DataFrame = {
+      import spark.implicits._
+      val keep = parts.map(_.toSet)
+      val partitions = keep.fold(partitionOf.values.toSet)(_.flatMap(partitionOf.get))
+      val searchOne = RestoreGroup.search(query.toArray, k, efSearch, accept)
+      val hits = PartitionPruningRDD.create(graphs, partitions)
+        .mapPartitions(_.flatMap { case (part, idx) =>
+          if (keep.forall(_(part))) searchOne(part, idx) else Iterator.empty
+        })
+      ranked(spark.createDataset(hits), k, "id")
+    }
+
+    def unpersist(): Unit = graphs.unpersist(blocking = false)
+  }
+
+  /** Restore `path`'s graphs once and keep them resident (see
+    * [[ResidentGraphs]]). */
+  def resident(spark: SparkSession, path: String, m: Int = 16,
+      efConstruction: Int = 64): ResidentGraphs = {
+    val st = stored(spark, path, m, efConstruction, None)
+    val (mm, ee) = (st.m, st.ef)
+    val recs = st.rows.rdd
+    val graphs =
+      if (st.inPlace) recs.mapPartitions(rows => RestoreGroup.task(rows, mm, ee))
+      else recs.groupBy(_._1).map { case (part, rows) => part -> RestoreGroup(rows.toSeq, mm, ee) }
+    graphs.setName(s"hnsw graphs $path").persist(StorageLevel.MEMORY_ONLY)
+    // the one job that restores every shard; a failed restore (a split
+    // shard's completeness assertion) must not leave the RDD persisted
+    val partitionOf =
+      try graphs.mapPartitionsWithIndex((i, it) => it.map { case (part, _) => part -> i })
+        .collect().toMap
+      catch { case e: Throwable => graphs.unpersist(blocking = false); throw e }
+    new ResidentGraphs(spark, path, readRouting(spark, path).map(Ivf.IvfModel(_)),
+      graphs, partitionOf)
   }
 
   /** First publish of a graph layout under a [[graft.store.VersionedLayout]]
@@ -555,15 +668,8 @@ object HnswStore {
     * graph IN PLACE (no shuffle — see object doc), search, merge globally. */
   def topK(spark: SparkSession, path: String, query: Seq[Double], k: Int,
       m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame = {
-    import spark.implicits._
-    val q = query.toArray
-    served(spark, path, m, efConstruction)((_, idx) => idx.search(q, k, efSearch).iterator)
-      .toDF(idCol, "sim")
-      .withColumn("sim", round(col("sim"), 6))
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
-  }
+      idCol: String = "id"): DataFrame =
+    topKFilteredApprox(spark, path, query, k, null, None, m, efConstruction, efSearch, idCol)
 
   /** Centroid-routed top-k over a [[saveRouted]] layout: score the query
     * against the routing sidecar's shard centroids DRIVER-SIDE (a tiny
@@ -575,22 +681,15 @@ object HnswStore {
     * (boundary losses bounded by multi-probing, same trade as IVF). */
   def topKRouted(spark: SparkSession, path: String, query: Seq[Double], k: Int,
       probes: Int = 4, m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame = {
-    import spark.implicits._
-    val model = routingModel(spark, path)
-    val parts = model.probeClusters(query, probes)
-    val q = query.toArray
-    served(spark, path, m, efConstruction, parts = Some(parts))((_, idx) =>
-      idx.search(q, k, efSearch).iterator)
-      .toDF(idCol, "sim")
-      .withColumn("sim", round(col("sim"), 6))
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
-  }
+      idCol: String = "id"): DataFrame =
+    topKFilteredApprox(spark, path, query, k, null,
+      Some(probedShards(spark, path, query, probes)), m, efConstruction, efSearch, idCol)
 
   private def routingModel(spark: SparkSession, path: String): Ivf.IvfModel =
-    Ivf.IvfModel(readRouting(spark, path).getOrElse(throw new IllegalStateException(
-      s"no routing sidecar at $path — routed serving needs a saveRouted layout")))
+    Ivf.IvfModel(readRouting(spark, path).getOrElse(throw noRouting(path)))
+
+  private def noRouting(path: String) = new IllegalStateException(
+    s"no routing sidecar at $path — routed serving needs a saveRouted layout")
 
   /** Per-shard node counts of a stored layout — the adaptive walk's mass
     * input ([[topKRoutedAdaptive]]): one cheap aggregate (≤ shards rows
@@ -620,8 +719,7 @@ object HnswStore {
     * aggregate over the layout against the broadcast routing sidecar;
     * computed once per layout and memoized by callers beside the sizes. */
   def meanShardRadius(spark: SparkSession, path: String): Double = {
-    val cents = readRouting(spark, path).getOrElse(throw new IllegalStateException(
-      s"no routing sidecar at $path — routed serving needs a saveRouted layout"))
+    val cents = readRouting(spark, path).getOrElse(throw noRouting(path))
     val centDf = spark.createDataFrame(
       cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
       .toDF("part", "_cent")
@@ -675,19 +773,10 @@ object HnswStore {
       k: Int, stats: RoutedStats, overscan: Int = 16, minProbes: Int = 3,
       marginBeta: Double = MarginBeta, maxProbes: Int = MaxAdaptiveProbes,
       m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame = {
-    import spark.implicits._
-    val model = routingModel(spark, path)
-    val parts = model.probeClustersByMargin(query, stats.sizes, overscan.toLong * k,
-      marginBeta * stats.radius, minProbes, maxProbes)
-    val q = query.toArray
-    served(spark, path, m, efConstruction, parts = Some(parts))((_, idx) =>
-      idx.search(q, k, efSearch).iterator)
-      .toDF(idCol, "sim")
-      .withColumn("sim", round(col("sim"), 6))
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
-  }
+      idCol: String = "id"): DataFrame =
+    topKFilteredApprox(spark, path, query, k, null,
+      Some(probedShardsAdaptive(spark, path, query, k, stats, overscan, minProbes,
+        marginBeta, maxProbes)), m, efConstruction, efSearch, idCol)
 
   /** The top-`probes` shard ids for `query` on a routed layout — the probe
     * resolution every routed serving path uses, exposed so callers
@@ -742,19 +831,16 @@ object HnswStore {
     * shipped once per task). False positives admit a few non-matching
     * candidates into the result, so the CALLER re-checks exactly and
     * should fetch a small multiple of k (fpp·ef extra rows expected).
-    * `parts` composes shard routing like the other filtered paths. */
+    * `parts` composes shard routing like the other filtered paths; a
+    * null `accept` searches unfiltered (the body of [[topK]] and the
+    * routed paths). */
   def topKFilteredApprox(spark: SparkSession, path: String, query: Seq[Double],
       fetchK: Int, accept: Long => Boolean, parts: Option[Seq[Int]] = None,
       m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
       idCol: String = "id"): DataFrame = {
     import spark.implicits._
-    val q = query.toArray
-    served(spark, path, m, efConstruction, parts = parts)((_, idx) =>
-      idx.searchFiltered(q, fetchK, efSearch, accept).iterator)
-      .toDF(idCol, "sim")
-      .withColumn("sim", round(col("sim"), 6))
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(fetchK)
+    ranked(served(spark, path, m, efConstruction, parts = parts)(
+      RestoreGroup.search(query.toArray, fetchK, efSearch, accept)), fetchK, idCol)
   }
 
   /** Batch search over the persisted graphs: each graph restores ONCE for

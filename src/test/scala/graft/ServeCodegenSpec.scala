@@ -1,15 +1,18 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 import graft.api.VectorDb
 import graft.index.Ivf
 
 /** Single-query serving binds the query (and IVF's probe set) as one
   * array literal, so a session of queries compiles its plan once and every
-  * later query reuses it from the codegen cache; and the zero-norm query
-  * scores 0.0 like the reference (vervectordb/__init__.py:31-36). */
+  * later query reuses it from the codegen cache; HNSW serves from graphs
+  * restored once, without a scan; and the zero-norm query scores 0.0 like
+  * the reference (vervectordb/__init__.py:31-36). */
 class ServeCodegenSpec extends SparkSpec {
 
   private val Dim = 32
@@ -83,5 +86,30 @@ class ServeCodegenSpec extends SparkSpec {
     assert(ivf.map(_.getAs[Double]("sim")).toSeq === Seq.fill(10)(0.0))
     val ids = ivf.map(_.getAs[Long]("id")).toSeq
     assert(ids.size === 10 && ids === ids.sorted && ids.distinct === ids)
+  }
+
+  test("a warm routed hnswSearch runs one job, scans no file and compiles nothing") {
+    val d = new VectorDb(spark, Dim)
+    d.batchInsert(db.toDf.collect().sortBy(_.getLong(0)).toSeq
+      .map(r => (r.getSeq[Double](1), Map.empty[String, String])))
+    d.buildHnswIndex(numPartitions = 8, routed = true)
+    d.hnswSearch(query(21), 10).collect() // warm-up: restores the graphs
+    var jobs = 0
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized(jobs += 1)
+    }
+    val before = compiles
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (seed <- Seq(22L, 23L)) {
+        val df = d.hnswSearch(query(seed), 10)
+        val scans = df.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
+        assert(scans.isEmpty, df.queryExecution.executedPlan.treeString)
+        assert(df.collect().length === 10)
+      }
+      org.apache.spark.grafttest.ListenerBridge.waitUntilEmpty(spark.sparkContext, 30000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(listener.synchronized(jobs) === 2, "one job per warm query")
+    assert(compiles === before, "a warm query must reuse the compiled plan")
   }
 }
