@@ -150,22 +150,23 @@ object RecallBench {
     graft.index.HnswStore.saveRouted(data, routedDir, numShards = 8,
       vecCol = "embedding", idCol = "vec_id")
     val (hnswAllMs, hnswAllRes) = timeAll(q =>
-      graft.index.HnswStore.topK(spark, routedDir, q, k, idCol = "vec_id")
+      graft.index.HnswStore.search(spark, routedDir, q, k, idCol = "vec_id")
         .select("vec_id"))
     val (hnswRoutedMs, hnswRoutedRes) = timeAll(q =>
-      graft.index.HnswStore.topKRouted(spark, routedDir, q, k, probes = 4, idCol = "vec_id")
+      graft.index.HnswStore.search(spark, routedDir, q, k,
+        graft.index.HnswStore.Nearest(4), idCol = "vec_id")
         .select("vec_id"))
     // ADAPTIVE routed probing — the serving default since round 8 (the
     // radius-margin walk over build-time stats); mean probed shards
     // published beside recall
-    val routedStats = graft.index.HnswStore.routedStats(spark, routedDir)
+    val adaptive = graft.index.HnswStore.Adaptive(
+      graft.index.HnswStore.routedStats(spark, routedDir))
     val (hnswAdaptMs, hnswAdaptRes) = timeAll(q =>
-      graft.index.HnswStore.topKRoutedAdaptive(spark, routedDir, q, k,
-        stats = routedStats, idCol = "vec_id")
+      graft.index.HnswStore.search(spark, routedDir, q, k, adaptive, idCol = "vec_id")
         .select("vec_id"))
     val adaptMeanProbes = queries.map(q =>
-      graft.index.HnswStore.probedShardsAdaptive(spark, routedDir, q, k,
-        routedStats).size).sum.toDouble / numQueries
+      graft.index.HnswStore.probedShards(spark, routedDir, q, k, adaptive)
+        .fold(0)(_.size)).sum.toDouble / numQueries
     // IVF-PQ: residual codes + ADC + exact refine (build amortized)
     val (ivfPqEncoded, ivfPqModel) = IvfPq.build(data, dim,
       vecCol = "embedding", idCol = "vec_id")

@@ -377,6 +377,11 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     * or the rebuilt graph answers differently than the one it replaces. */
   private var hnswNumPartitions: Int = 8
 
+  /** The shards every clean serve of the current layout probes: its
+    * [[graft.index.HnswStore.defaultRule]], resolved once per build or
+    * load. */
+  private var hnswRule: graft.index.HnswStore.ProbeRule = graft.index.HnswStore.AllShards
+
   /** The current layout's graphs, restored once and resident in the block
     * cache ([[graft.index.HnswStore.ResidentGraphs]]); created by the first
     * clean serve, dropped whenever the layout is rebuilt or replaced. */
@@ -386,7 +391,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     synchronized {
       hnswResident.filter(_.path == path).getOrElse {
         dropResidentGraphs()
-        val r = graft.index.HnswStore.resident(spark, path, hnswM, hnswEfConstruction)
+        val r = graft.index.HnswStore.resident(spark, path)
         hnswResident = Some(r)
         r
       }
@@ -646,6 +651,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     hnswOwned = true
     hnswOwnedRoot = Some(ownedRoot)
     hnswNumPartitions = numPartitions
+    hnswRule = graft.index.HnswStore.defaultRule(spark, p)
     hnswCoveredUpTo = nextId
     hnswMutated = false
     // a rebuild into the SAME dir at the SAME watermark (e.g. after
@@ -728,11 +734,6 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
       VectorSearch.bruteForceTopK(subset, query, topK, filter)
     }
   }
-
-  /** Shards probed by routed clean serving: half the shards, the same
-    * scanned-fraction default as the reference's IVF probe count
-    * (max(k/2, …)); recall vs all-shards is spec-gated at this point. */
-  private def hnswRoutedProbes: Int = math.max(2, hnswNumPartitions / 2)
 
   /** The persisted graph layout currently serving, if any (test/inspection
     * seam — e.g. asserting the routing sidecar survives maintenance). */
@@ -1066,7 +1067,10 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     * The persisted graphs are restored ONCE per layout, by the first
     * serve, and stay resident in Spark's block cache
     * ([[graft.index.HnswStore.ResidentGraphs]]); every later query prunes
-    * the cached graphs to the probed shards and searches them in one job,
+    * the cached graphs to the shards the layout's
+    * [[graft.index.HnswStore.defaultRule]] probes (half the shards of a
+    * routed layout, every shard of a hash-sharded one; the same before and
+    * after [[save]]/[[VectorDb.load]]) and searches them in one job,
     * with no file scan and no restore. A block that Spark evicts under
     * memory pressure is restored again from the layout by the query that
     * next needs it. The resident graphs are dropped when the index is
@@ -1077,9 +1081,10 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     * `filter` (reference `filter_func`, `:379-409`): a fresh build filters
     * FIRST (graphs over exactly the qualifying rows — exact filter
     * semantics); a persisted CLEAN graph threads the predicate INTO the
-    * beam search ([[graft.index.HnswStore.topKFiltered]] — one pushed-down
-    * id scan resolves the qualifying set, the beam expands until it holds
-    * k MATCHING rows), a documented improvement over the reference's
+    * beam search (the `accept` test of [[graft.index.HnswStore.search]],
+    * served from the resident graphs — one pushed-down id scan resolves
+    * the qualifying set, the beam expands until it holds k MATCHING
+    * rows), a documented improvement over the reference's
     * overfetch-topK×3-then-post-filter (`:386`), which starves under a
     * selective filter. Only the written-to incremental path retains the
     * overfetch shape (its candidates re-score against live rows anyway).
@@ -1104,14 +1109,12 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
         // clean index covering every row: serve straight from the
         // resident graphs
         val graphs = residentGraphs(p)
-        def routedParts: Option[Seq[Int]] =
-          if (hnswRouted) Some(graphs.probedShards(query, hnswRoutedProbes)) else None
         filter match {
           case None =>
             // routed layout: score the routing sidecar driver-side, probe
             // the top half of the shards — the other shards' cached
             // partitions are pruned, their graphs never touched
-            graphs.search(query, topK, math.max(efSearch, 2 * topK), routedParts)
+            graphs.search(query, topK, hnswRule, efSearch = efSearch)
           case Some(f) =>
             // three-tier dispatch by filter selectivity. The common
             // selective case pays ONE pushed-down id scan (the limit-probe
@@ -1131,7 +1134,6 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
             //    starves just above the Bloom cutoff: at 11% density it
             //    yields ~0.33·topK matches), bounded by density > 10% to
             //    ≤ 30·topK candidates.
-            val ef2k = math.max(efSearch, 2 * topK)
             def rerank(cand: DataFrame): DataFrame = {
               // pruned fetch (graft.search.IdFetch): the candidate set is
               // bounded (≤ 30·topK), so its ids push into the live-table
@@ -1153,7 +1155,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
               Seq.empty[(Long, Double)].toDF("id", "sim")
             } else if (probe.length <= MaxAcceptIds) {
               val accept = probe.map(_.getLong(0)).toSet
-              graphs.search(query, topK, ef2k, routedParts, accept.contains)
+              graphs.search(query, topK, hnswRule, accept.contains, efSearch)
             } else {
               val counts = data.agg(
                 org.apache.spark.sql.functions.count(lit(1)),
@@ -1162,12 +1164,11 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
               val c = math.max(1L, counts.getLong(1))
               if (c.toDouble / n <= BloomSelectivity) {
                 val bloom = data.where(f).stat.bloomFilter("id", c, 0.01)
-                rerank(graphs.search(query, 2 * topK, ef2k, routedParts,
-                  bloom.mightContain(_: Long)))
+                rerank(graphs.search(query, 2 * topK, hnswRule,
+                  bloom.mightContain(_: Long), efSearch))
               } else {
                 val fetchK = (topK.toLong * FilterOverfetch * n / c).toInt
-                rerank(graphs.search(query, fetchK, math.max(efSearch, 2 * fetchK),
-                  routedParts))
+                rerank(graphs.search(query, fetchK, hnswRule, efSearch = efSearch))
               }
             }
         }
@@ -1192,7 +1193,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     // the graph files are unchanged since the build, so the candidate leg
     // reads the resident graphs too (all shards: the merge path never
     // routed)
-    val cand = residentGraphs(path).search(query, fetchK, math.max(efSearch, 2 * fetchK))
+    val cand = residentGraphs(path).search(query, fetchK, efSearch = efSearch)
     def score(df: DataFrame): DataFrame = {
       val base = filter.foldLeft(df)((d, f) => d.where(f))
       base.withColumn("sim",
@@ -1261,12 +1262,8 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
             // across the query set, no per-call graph rebuild (the same
             // build-once dispatch hnswSearch uses); routed layouts prune
             // the scan to the union of the batch's probed shards
-            if (hnswRouted)
-              graft.index.HnswStore.batchTopKRouted(spark, p, indexed, topK,
-                probes = hnswRoutedProbes, efSearch = efSearch)
-            else
-              graft.index.HnswStore.batchTopK(spark, p, indexed, topK,
-                efSearch = efSearch)
+            graft.index.HnswStore.batchSearch(spark, p, indexed, topK, hnswRule,
+              efSearch)
           case _ =>
             // filter-first (graphs over qualifying rows only) or
             // post-write: fresh per-partition build over the live rows
@@ -1356,9 +1353,10 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     *    multi-probe budget — the knob that aligns the two modes.
     *
     * `adaptive = false` pins the fixed budgets (ivf max(k/2,8) probes,
-    * hnsw [[hnswRoutedProbes]], lsh radius-1). The per-layout statistics
-    * the walks need (cluster/bucket sizes, shard stats) are computed once
-    * and memoized until the next write/rebuild. */
+    * hnsw the layout's [[graft.index.HnswStore.defaultRule]], lsh
+    * radius-1). The per-layout statistics the walks need (cluster/bucket
+    * sizes, shard stats) are computed once and memoized until the next
+    * write/rebuild. */
   def batchSearchDf(queries: DataFrame, topK: Int = 5,
       method: String = "brute_force", efSearch: Int = 128,
       adaptive: Boolean = true, overscan: Int = -1,
@@ -1417,10 +1415,11 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
           throw new IllegalStateException(
             "big-batch HNSW serves from a CLEAN routed layout: build with " +
               "routed=true and run maintainIndexes() after writes")
-        graft.index.HnswStore.bigBatchTopKRouted(spark, p, q0, topK,
-          probes = hnswRoutedProbes, efSearch = efSearch,
-          stats = if (adaptive) Some(hnswStatsOf(p)) else None,
-          overscan = scan, acceptIds = acceptFrame)
+        val rule =
+          if (adaptive) graft.index.HnswStore.Adaptive(hnswStatsOf(p), scan)
+          else hnswRule
+        graft.index.HnswStore.bigBatchSearch(spark, p, q0, topK, rule,
+          efSearch, acceptIds = acceptFrame)
       case "lsh" =>
         val root = lshRoot.getOrElse(
           throw new IllegalStateException("LSH index not built"))
@@ -1736,6 +1735,7 @@ object VectorDb {
       // routedness is a property of the layout, detected from its sidecar
       db.hnswRouted =
         graft.index.HnswStore.readRouting(spark, s"$path/hnsw").isDefined
+      db.hnswRule = graft.index.HnswStore.defaultRule(spark, s"$path/hnsw")
     }
     if (pathExists(spark, s"$path/lsh")) {
       val root = s"$path/lsh"

@@ -37,14 +37,25 @@ import org.apache.spark.storage.StorageLevel
   * The fix for an over-large shard at scale is more, smaller shards at
   * build time.
   *
+  * Serving has ONE probe rule and one serve per query shape. A
+  * [[ProbeRule]] says which shards a query searches: [[AllShards]] (the
+  * only rule a hash-sharded layout serves), [[Nearest]]`(n)` (the `n`
+  * shards whose routing centroids are nearest the query) or
+  * [[Adaptive]] (the margin-extended candidate-mass walk). The serves are
+  * [[search]] (one query, with an optional beam `accept` test),
+  * [[batchSearch]] (a collected query set) and [[bigBatchSearch]] (a
+  * query DataFrame). None of them takes or reads the build parameters:
+  * `m` and `efConstruction` only size the insert and prune buffers, which
+  * a restored graph never uses, so restore takes [[HnswIndex]]'s defaults.
+  *
   * Two serving lifecycles share that restore and search body. The
-  * one-shot serves ([[topK]], [[topKRouted]], … — used by the registered
-  * queries, streaming and the recall bench) restore inside each query's
-  * own plan and keep nothing. A long-lived owner (the `VectorDb` facade)
-  * restores ONCE with [[resident]] and serves every later query from the
-  * graphs cached in Spark's block manager, pruned to the probed shards;
-  * a block evicted under memory pressure is restored again from the
-  * layout by the next query that needs it ([[ResidentGraphs]]).
+  * one-shot serves restore inside each query's own plan and keep nothing
+  * (the registered queries, streaming and the recall bench use them). A
+  * long-lived owner (the `VectorDb` facade) restores ONCE with
+  * [[resident]] and serves every later query from the graphs cached in
+  * Spark's block manager, pruned to the probed shards; a block evicted
+  * under memory pressure is restored again from the layout by the next
+  * query that needs it ([[ResidentGraphs]]). Both take the same rule.
   */
 object HnswStore {
 
@@ -98,16 +109,17 @@ object HnswStore {
 
   /** Graph hyperparameter sidecar (underscore-prefixed → invisible to the
     * parquet reader): build-time (m, efConstruction, numPartitions) travel
-    * with the layout, so serving and incremental maintenance use the
-    * BUILD-time parameters, not whatever defaults the caller has — the
-    * parity gap the reference never has because it pickles the whole index
-    * object (vervectordb/__init__.py:556-594). */
+    * with the layout, so rebuilds use the BUILD-time parameters, not
+    * whatever defaults the caller has — the parity gap the reference never
+    * has because it pickles the whole index object
+    * (vervectordb/__init__.py:556-594). No serve reads it: a restored
+    * graph searches the same whatever its `m`/`efConstruction`. */
   private val MetaFile = "_graft_meta"
 
   /** Shard-routing sidecar (underscore-prefixed → invisible to the parquet
     * reader): one line of comma-joined doubles per shard, line index =
-    * shard id. Written by [[saveRouted]], consumed by [[topKRouted]] /
-    * [[batchTopKRouted]]. */
+    * shard id. Written by [[saveRouted]], read by every serve whose
+    * [[ProbeRule]] routes. */
   private val RoutingFile = "_graft_routing"
 
   private def hadoopFs(spark: SparkSession, path: String) =
@@ -253,7 +265,7 @@ object HnswStore {
     * vector to its nearest of `numShards` centers, each cluster becomes
     * one HNSW graph, and the centroids persist as a routing sidecar. A
     * query then probes only the `probes` shards whose centroids it is most
-    * similar to ([[topKRouted]]) — the distributed analog of HNSW's own
+    * similar to ([[Nearest]]) — the distributed analog of HNSW's own
     * entry-point descent (the upper levels route the query to the right
     * region of ONE graph, vervectordb/__init__.py:116-122; the centroid
     * sidecar routes it to the right GRAPHS), and the same probe-pruning
@@ -403,9 +415,10 @@ object HnswStore {
     * is structurally complete against the stored shard row count — a split
     * shard fails loudly, never serves partial-graph results. Lives in its
     * own Serializable object so executor-side closures capture IT rather
-    * than the (cache-holding, non-serializable) HnswStore module. */
+    * than the (cache-holding, non-serializable) HnswStore module. Restore
+    * takes [[HnswIndex]]'s default `m`/`efConstruction` (see object doc). */
   private object RestoreGroup extends Serializable {
-    def apply(grp: Seq[Rec], mm: Int, ee: Int): HnswIndex = {
+    def apply(grp: Seq[Rec]): HnswIndex = {
       val expected = grp.head._8
       if (expected >= 0 && grp.size != expected)
         throw new IllegalStateException(
@@ -415,12 +428,12 @@ object HnswStore {
       HnswIndex.restore(
         grp.sortBy(_._2).map { case (_, _, id, vec, level, adj, isEntry, _) =>
           (id, vec, level, adj, isEntry)
-        }, mm, ee)
+        })
     }
 
     /** Every graph whose rows one read task holds, restored in place. */
-    def task(rows: Iterator[Rec], mm: Int, ee: Int): Iterator[(Int, HnswIndex)] =
-      rows.toSeq.groupBy(_._1).iterator.map { case (part, grp) => part -> apply(grp, mm, ee) }
+    def task(rows: Iterator[Rec]): Iterator[(Int, HnswIndex)] =
+      rows.toSeq.groupBy(_._1).iterator.map { case (part, grp) => part -> apply(grp) }
 
     /** The per-graph search every serving path runs: `accept` null =
       * unfiltered, else threaded into the beam. */
@@ -430,24 +443,19 @@ object HnswStore {
   }
 
   /** The stored rows of one serve: the selected shards (`parts`, pruned on
-    * the partition column), the build-time graph parameters from the meta
-    * sidecar (`m`/`efConstruction` are the fallback for layouts without
-    * one), and whether every task is guaranteed complete graphs — legacy
-    * layouts (no part_rows) lack the structural guard, so they always take
-    * the grouping shuffle (complete groups by construction) rather than
-    * trusting the listing heuristic alone. */
-  private final case class Stored(rows: Dataset[Rec], inPlace: Boolean, m: Int, ef: Int)
+    * the partition column), and whether every task is guaranteed complete
+    * graphs — legacy layouts (no part_rows) lack the structural guard, so
+    * they always take the grouping shuffle (complete groups by
+    * construction) rather than trusting the listing heuristic alone. */
+  private final case class Stored(rows: Dataset[Rec], inPlace: Boolean)
 
-  private def stored(spark: SparkSession, path: String, m: Int, efConstruction: Int,
-      parts: Option[Seq[Int]]): Stored = {
-    val (mm, ee) = readMeta(spark, path)
-      .map(t => (t._1, t._2)).getOrElse((m, efConstruction))
+  private def stored(spark: SparkSession, path: String, parts: Option[Seq[Int]]): Stored = {
     val (all, hasPartRows) = storedRecords(spark, path)
     // shard routing: the probe filter is on the layout's PARTITION column,
     // so Catalyst prunes unprobed shard files from the scan entirely
     // (PartitionFilters — the inverted-list shape, plan-asserted in spec)
     val rows = parts.fold(all)(ps => all.filter(col("part").isin(ps: _*)))
-    Stored(rows, hasPartRows && filesUnsplit(spark, path, parts), mm, ee)
+    Stored(rows, hasPartRows && filesUnsplit(spark, path, parts))
   }
 
   /** Restore every graph co-resident with a task and run `search` on it,
@@ -455,18 +463,16 @@ object HnswStore {
     * Restoration goes through [[RestoreGroup]]'s structural completeness
     * assertion. */
   private def served[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, path: String, m: Int, efConstruction: Int,
-      parts: Option[Seq[Int]] = None)(
+      spark: SparkSession, path: String, parts: Option[Seq[Int]])(
       search: (Int, HnswIndex) => Iterator[T]): Dataset[T] = {
     import spark.implicits._
-    val st = stored(spark, path, m, efConstruction, parts)
-    val (mm, ee) = (st.m, st.ef)
+    val st = stored(spark, path, parts)
     if (st.inPlace)
       st.rows.mapPartitions(rows =>
-        RestoreGroup.task(rows, mm, ee).flatMap { case (part, idx) => search(part, idx) })
+        RestoreGroup.task(rows).flatMap { case (part, idx) => search(part, idx) })
     else
       st.rows.groupByKey(_._1).flatMapGroups((part, rows) =>
-        search(part, RestoreGroup(rows.toSeq, mm, ee)))
+        search(part, RestoreGroup(rows.toSeq)))
   }
 
   /** The single-query DataFrame tail every serve shares: sims rounded to
@@ -480,20 +486,21 @@ object HnswStore {
   /** A layout's graphs restored ONCE and kept resident in Spark's block
     * cache — the reference's build-once/search-from-memory lifecycle
     * (`build_hnsw_index`/`hnsw_search`, vervectordb/__init__.py:367-409)
-    * on a cluster. Creating the handle reads the meta and routing
-    * sidecars once and restores every shard through the same body as the
-    * one-shot serve ([[RestoreGroup]]: in place when no file can split,
-    * else after the grouping shuffle), persisting the graphs as
-    * `RDD[(shard, HnswIndex)]` at `MEMORY_ONLY`; one job materializes
-    * them and records which cached partition holds which shard.
+    * on a cluster. Creating the handle reads the routing sidecar once and
+    * restores every shard through the same body as the one-shot serve
+    * ([[RestoreGroup]]: in place when no file can split, else after the
+    * grouping shuffle), persisting the graphs as `RDD[(shard, HnswIndex)]`
+    * at `MEMORY_ONLY`; one job materializes them and records which cached
+    * partition holds which shard.
     *
     * Each [[search]] then prunes that RDD to the partitions holding the
-    * probed shards (`PartitionPruningRDD`) and runs the beam searches in
-    * those tasks: one job, no file scan, no restore. The scheduler
-    * prefers the executors that hold the blocks. Under memory pressure
-    * Spark's memory manager may evict a block; the next query recomputes
-    * it from lineage — re-reading and restoring that partition's shards
-    * from the layout — so eviction costs time, never a wrong answer.
+    * shards its [[ProbeRule]] probes (`PartitionPruningRDD`) and runs the
+    * beam searches in those tasks: one job, no file scan, no restore. The
+    * scheduler prefers the executors that hold the blocks. Under memory
+    * pressure Spark's memory manager may evict a block; the next query
+    * recomputes it from lineage — re-reading and restoring that
+    * partition's shards from the layout — so eviction costs time, never a
+    * wrong answer.
     *
     * The handle snapshots the layout as it was on creation: files
     * rewritten or deleted underneath it do not change its answers while
@@ -506,19 +513,12 @@ object HnswStore {
       routing: Option[Ivf.IvfModel], graphs: RDD[(Int, HnswIndex)],
       partitionOf: Map[Int, Int]) {
 
-    /** The top-`probes` shards for `query` by the memoized routing
-      * sidecar (the [[probedShards]] rule). */
-    def probedShards(query: Seq[Double], probes: Int): Seq[Int] =
-      routing.getOrElse(throw noRouting(path)).probeClusters(query, probes)
-
-    /** Top-`k` over the shards in `parts` (all shards when None), with
-      * `accept` (null = none) threaded into each beam — the one-shot
-      * [[topK]] / [[topKRouted]] / [[topKFilteredApprox]] answers, as a
-      * lazy DataFrame. */
-    def search(query: Seq[Double], k: Int, efSearch: Int,
-        parts: Option[Seq[Int]] = None, accept: Long => Boolean = null): DataFrame = {
+    /** The one-shot [[HnswStore.search]] answer for the same arguments, as
+      * a lazy DataFrame. */
+    def search(query: Seq[Double], k: Int, rule: ProbeRule = AllShards,
+        accept: Long => Boolean = null, efSearch: Int = 128): DataFrame = {
       import spark.implicits._
-      val keep = parts.map(_.toSet)
+      val keep = rule.shards(routing.getOrElse(throw noRouting(path)), query, k).map(_.toSet)
       val partitions = keep.fold(partitionOf.values.toSet)(_.flatMap(partitionOf.get))
       val searchOne = RestoreGroup.search(query.toArray, k, efSearch, accept)
       val hits = PartitionPruningRDD.create(graphs, partitions)
@@ -533,14 +533,12 @@ object HnswStore {
 
   /** Restore `path`'s graphs once and keep them resident (see
     * [[ResidentGraphs]]). */
-  def resident(spark: SparkSession, path: String, m: Int = 16,
-      efConstruction: Int = 64): ResidentGraphs = {
-    val st = stored(spark, path, m, efConstruction, None)
-    val (mm, ee) = (st.m, st.ef)
+  def resident(spark: SparkSession, path: String): ResidentGraphs = {
+    val st = stored(spark, path, None)
     val recs = st.rows.rdd
     val graphs =
-      if (st.inPlace) recs.mapPartitions(rows => RestoreGroup.task(rows, mm, ee))
-      else recs.groupBy(_._1).map { case (part, rows) => part -> RestoreGroup(rows.toSeq, mm, ee) }
+      if (st.inPlace) recs.mapPartitions(RestoreGroup.task)
+      else recs.groupBy(_._1).map { case (part, rows) => part -> RestoreGroup(rows.toSeq) }
     graphs.setName(s"hnsw graphs $path").persist(StorageLevel.MEMORY_ONLY)
     // the one job that restores every shard; a failed restore (a split
     // shard's completeness assertion) must not leave the RDD persisted
@@ -664,35 +662,8 @@ object HnswStore {
     }
   }
 
-  /** Approximate top-k over the persisted graphs: restore each partition's
-    * graph IN PLACE (no shuffle — see object doc), search, merge globally. */
-  def topK(spark: SparkSession, path: String, query: Seq[Double], k: Int,
-      m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame =
-    topKFilteredApprox(spark, path, query, k, null, None, m, efConstruction, efSearch, idCol)
-
-  /** Centroid-routed top-k over a [[saveRouted]] layout: score the query
-    * against the routing sidecar's shard centroids DRIVER-SIDE (a tiny
-    * model, exactly like IVF probe selection), then restore and search only
-    * the top-`probes` shards — the scan's partition filter prunes every
-    * other shard's files. At thousands of shards this is the difference
-    * between an all-shards broadcast per lookup and touching a constant
-    * number of graph files; recall vs the all-shards path is spec-gated
-    * (boundary losses bounded by multi-probing, same trade as IVF). */
-  def topKRouted(spark: SparkSession, path: String, query: Seq[Double], k: Int,
-      probes: Int = 4, m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame =
-    topKFilteredApprox(spark, path, query, k, null,
-      Some(probedShards(spark, path, query, probes)), m, efConstruction, efSearch, idCol)
-
-  private def routingModel(spark: SparkSession, path: String): Ivf.IvfModel =
-    Ivf.IvfModel(readRouting(spark, path).getOrElse(throw noRouting(path)))
-
-  private def noRouting(path: String) = new IllegalStateException(
-    s"no routing sidecar at $path — routed serving needs a saveRouted layout")
-
   /** Per-shard node counts of a stored layout — the adaptive walk's mass
-    * input ([[topKRoutedAdaptive]]): one cheap aggregate (≤ shards rows
+    * input ([[Adaptive]]): one cheap aggregate (≤ shards rows
     * back), computed once per layout and memoized by callers beside the
     * routing sidecar, exactly like [[Ivf.clusterSizes]]. */
   def shardSizes(spark: SparkSession, path: String): Map[Int, Long] = {
@@ -755,166 +726,123 @@ object HnswStore {
     * a constant. */
   val MaxAdaptiveProbes = 16
 
-  /** [[topKRouted]] with the probe LIST chosen ADAPTIVELY per query
-    * ([[Ivf.IvfModel.probeClustersByMargin]] over the routing sidecar +
-    * per-shard node counts) instead of a fixed count — the
-    * adaptive-default/fixed-parity split the stored-IVF path serves with.
-    * The walk keeps probing while the candidate mass is below
+  /** Which shards a serve searches for one query. Every serve takes one
+    * rule, and [[ProbeRule.shards]] is the one driver-side resolver that
+    * turns it into a probe list. Routed rules rank the shards by the
+    * layout's routing sidecar ([[saveRouted]]); a hash-sharded layout has
+    * none and serves only [[AllShards]]. */
+  sealed trait ProbeRule {
+    /** The shards probed for `query` at top-`k` (None = every shard), ranked
+      * by `routing` — read only when the rule routes. Both routed rules
+      * probe a prefix of the centroid ranking. */
+    final def shards(routing: => Ivf.IvfModel, query: Seq[Double], k: Int)
+        : Option[Seq[Int]] = this match {
+      case AllShards => None
+      case Nearest(n) => Some(routing.probeClusters(query, n))
+      case Adaptive(st, overscan, minProbes) =>
+        Some(routing.probeClustersByMargin(query, st.sizes, overscan.toLong * k,
+          MarginBeta * st.radius, minProbes, MaxAdaptiveProbes))
+    }
+  }
+
+  /** Every shard: the all-shards fan-out, restoring every graph. */
+  case object AllShards extends ProbeRule
+
+  /** The `n` shards whose routing centroids are most similar to the query
+    * — the distributed analog of HNSW's own entry-point descent, and the
+    * same probe pruning as IVF (boundary losses bounded by multi-probing;
+    * recall vs [[AllShards]] is spec-gated). */
+  final case class Nearest(n: Int) extends ProbeRule
+
+  /** The probe list chosen per query by the margin-extended walk
+    * ([[Ivf.IvfModel.probeClustersByMargin]] over the routing sidecar and
+    * `stats`): it keeps probing while the candidate mass is below
     * `overscan · k` (the skew guard) OR the shard's centroid distance is
-    * within (1+`marginAlpha`)× the best shard's (boundary coverage — the
-    * actual recall driver for routed graphs: a query deep inside one
-    * cluster probes [[Ivf.IvfModel.probeClustersByMargin minProbes]]
-    * shards, a boundary query with near-tied centroids extends to all of
-    * them). At 1000+ shards a fixed probe count is either wasteful or
-    * starving; this tracks each query's need. Recall vs the fixed-probe
-    * path is spec-gated at fewer mean probed shards (RecallSpec /
-    * RECALL.md round 8). */
-  def topKRoutedAdaptive(spark: SparkSession, path: String, query: Seq[Double],
-      k: Int, stats: RoutedStats, overscan: Int = 16, minProbes: Int = 3,
-      marginBeta: Double = MarginBeta, maxProbes: Int = MaxAdaptiveProbes,
-      m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame =
-    topKFilteredApprox(spark, path, query, k, null,
-      Some(probedShardsAdaptive(spark, path, query, k, stats, overscan, minProbes,
-        marginBeta, maxProbes)), m, efConstruction, efSearch, idCol)
+    * within `best + MarginBeta · stats.radius` (boundary coverage — the
+    * recall driver for routed graphs), never fewer than `minProbes` and
+    * never more than [[MaxAdaptiveProbes]] shards. A query deep inside one
+    * cluster probes `minProbes` shards; a boundary query extends to its
+    * near-tied neighbours. Recall vs the fixed rule is spec-gated at fewer
+    * mean probed shards (RecallSpec, RECALL.md round 8). */
+  final case class Adaptive(stats: RoutedStats, overscan: Int = 16,
+      minProbes: Int = 3) extends ProbeRule
 
-  /** The top-`probes` shard ids for `query` on a routed layout — the probe
-    * resolution every routed serving path uses, exposed so callers
-    * composing their own filtered variants (e.g. the facade's Bloom tier
-    * over [[topKFilteredApprox]]) don't reach into the sidecar format. */
-  private[graft] def probedShards(spark: SparkSession, path: String,
-      query: Seq[Double], probes: Int): Seq[Int] =
-    routingModel(spark, path).probeClusters(query, probes)
+  /** The rule a layout serves by default: [[AllShards]] for a hash-sharded
+    * layout; for a routed one, [[Nearest]] over half the shards it was
+    * built with (at least 2), the same scanned-fraction default as the
+    * reference's IVF probe count. The count is the routing sidecar's, one
+    * centroid per built shard, so a derived-count layout probes half the
+    * shards it actually has. */
+  def defaultRule(spark: SparkSession, path: String): ProbeRule =
+    readRouting(spark, path).fold[ProbeRule](AllShards)(centroids =>
+      Nearest(math.max(2, centroids.length / 2)))
 
-  /** The adaptive probe list [[topKRoutedAdaptive]] serves with — exposed
-    * so the gates/harness can assert the probed-shard count, not just the
+  private def routingModel(spark: SparkSession, path: String): Ivf.IvfModel =
+    Ivf.IvfModel(readRouting(spark, path).getOrElse(throw noRouting(path)))
+
+  private def noRouting(path: String) = new IllegalStateException(
+    s"no routing sidecar at $path — routed serving needs a saveRouted layout")
+
+  /** The shards `rule` probes for `query` on the layout at `path` — exposed
+    * so gates and harnesses can assert the probed count, not just the
     * result quality. */
-  private[graft] def probedShardsAdaptive(spark: SparkSession, path: String,
-      query: Seq[Double], k: Int, stats: RoutedStats,
-      overscan: Int = 16, minProbes: Int = 3,
-      marginBeta: Double = MarginBeta, maxProbes: Int = MaxAdaptiveProbes): Seq[Int] =
-    routingModel(spark, path).probeClustersByMargin(query, stats.sizes,
-      overscan.toLong * k, marginBeta * stats.radius, minProbes, maxProbes)
+  private[graft] def probedShards(spark: SparkSession, path: String,
+      query: Seq[Double], k: Int, rule: ProbeRule): Option[Seq[Int]] =
+    rule.shards(routingModel(spark, path), query, k)
 
-  /** Filter-aware top-k over the persisted graphs: `acceptIds` is threaded
-    * into each graph's beam search ([[HnswIndex.searchFiltered]]), so the
-    * beam keeps expanding until it holds k MATCHING results — a selective
-    * filter returns a full k where the reference's 3k-overfetch-then-
-    * post-filter starves. The id set ships once per task via the closure
-    * (Spark broadcasts task binaries); it is the SELECTIVE-filter path —
-    * the set is small exactly when this path is needed, and a
-    * non-selective filter is better served unfiltered + post-filter. At
-    * warehouse scale the same traversal accepts a Bloom filter of
-    * qualifying ids (false positives only admit a few non-matching
-    * candidates, removed by the final exact re-check the caller does). */
-  def topKFiltered(spark: SparkSession, path: String, query: Seq[Double], k: Int,
-      acceptIds: scala.collection.Set[Long],
-      m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame = {
+  /** Approximate top-`k` for one query over the persisted graphs: resolve
+    * `rule` driver-side (a tiny model, exactly like IVF probe selection),
+    * then restore and search the probed graphs IN PLACE (no shuffle — see
+    * object doc) and merge globally. The scan's partition filter prunes
+    * every unprobed shard's files, so at thousands of shards a lookup
+    * touches a constant number of graph files.
+    *
+    * `accept` (null = unfiltered) is threaded into each graph's beam
+    * ([[HnswIndex.searchFiltered]]), so the beam keeps expanding until it
+    * holds `k` ACCEPTED results — a selective filter returns a full `k`
+    * where the reference's 3k-overfetch-then-post-filter starves. It may
+    * be an exact id set's `contains` (the set ships once per task in the
+    * closure) or, at warehouse scale, a Bloom filter's `mightContain`
+    * built in one distributed pass over the qualifying ids: its false
+    * positives admit a few non-matching candidates, so that caller
+    * re-checks exactly and should fetch a small multiple of `k`. Routing
+    * and filtering compose: every row is accepted, and recall is bounded
+    * by routing (an accepted neighbour in an unprobed shard is missed). */
+  def search(spark: SparkSession, path: String, query: Seq[Double], k: Int,
+      rule: ProbeRule = AllShards, accept: Long => Boolean = null,
+      efSearch: Int = 128, idCol: String = "id"): DataFrame = {
     import spark.implicits._
-    // nothing qualifies → nothing to search: without this guard the beam
-    // never fills and traverses every shard's whole connected component
-    // just to return zero rows
-    if (acceptIds.isEmpty)
-      return Seq.empty[(Long, Double)].toDF(idCol, "sim")
-    val accept = acceptIds // stable local capture for the task closure
-    topKFilteredApprox(spark, path, query, k, accept.contains, parts = None,
-      m = m, efConstruction = efConstruction, efSearch = efSearch, idCol = idCol)
+    val parts = rule.shards(routingModel(spark, path), query, k)
+    ranked(served(spark, path, parts)(
+      RestoreGroup.search(query.toArray, k, efSearch, accept)), k, idCol)
   }
 
-  /** Beam-threaded search behind an APPROXIMATE membership test — the
-    * warehouse-scale middle ground between an exact driver-side id set
-    * (collapses past ~10⁵ qualifying rows) and blind overfetch (starves
-    * under selective filters): pass a Bloom filter's `mightContain` built
-    * from ONE distributed pass over the qualifying ids (`df.stat
-    * .bloomFilter` — megabytes for hundreds of millions of ids at 1% fpp,
-    * shipped once per task). False positives admit a few non-matching
-    * candidates into the result, so the CALLER re-checks exactly and
-    * should fetch a small multiple of k (fpp·ef extra rows expected).
-    * `parts` composes shard routing like the other filtered paths; a
-    * null `accept` searches unfiltered (the body of [[topK]] and the
-    * routed paths). */
-  def topKFilteredApprox(spark: SparkSession, path: String, query: Seq[Double],
-      fetchK: Int, accept: Long => Boolean, parts: Option[Seq[Int]] = None,
-      m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame = {
-    import spark.implicits._
-    ranked(served(spark, path, m, efConstruction, parts = parts)(
-      RestoreGroup.search(query.toArray, fetchK, efSearch, accept)), fetchK, idCol)
-  }
-
-  /** Batch search over the persisted graphs: each graph restores ONCE for
-    * the whole query set (the amortization [[Hnsw.hnswBatchTopK]] gets
-    * from building once — here even the restore is amortized). Returns
+  /** Top-`k` for a collected query set in ONE job: each graph restores
+    * once for the whole set (the amortization [[Hnsw.hnswBatchTopK]] gets
+    * from building once — here even the restore is amortized). Under a
+    * routed rule the scan is pruned to the UNION of every query's probed
+    * shards and each restored graph serves only the queries that probed
+    * it (per-query work stays that query's probe list, not the union).
+    * Ranking is the k-bounded per-group aggregator. Returns
     * (query_id, idCol, sim, rn) like the other batch paths. */
-  def batchTopK(spark: SparkSession, path: String, queries: Seq[(Long, Seq[Double])],
-      k: Int, m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame = {
+  def batchSearch(spark: SparkSession, path: String,
+      queries: Seq[(Long, Seq[Double])], k: Int, rule: ProbeRule = AllShards,
+      efSearch: Int = 128, idCol: String = "id"): DataFrame = {
     import spark.implicits._
-    val qArr = queries.map { case (qid, q) => (qid, q.toArray) }
-    val perPartition = served(spark, path, m, efConstruction) { (_, idx) =>
-      qArr.iterator.flatMap { case (qid, q) =>
-        idx.search(q, k, efSearch).map { case (id, sim) => (qid, id, sim) }
-      }
-    }.toDF("query_id", idCol, "sim_raw")
-    graft.operators.TopK.perGroupTopK(perPartition, "query_id", col(idCol), col("sim_raw"), k)
-      .withColumnRenamed("id", idCol)
-  }
-
-  /** The full serving composition: centroid routing AND beam-threaded
-    * filtering — probe the top-`probes` shards, thread the accept set into
-    * each probed graph's traversal. The two approximations compose their
-    * contracts: results are exactly-filtered (every row accepted), and
-    * recall is bounded by routing (an accepted neighbor in an unprobed
-    * shard is missed — the same trade as unfiltered routing, spec-gated). */
-  def topKRoutedFiltered(spark: SparkSession, path: String, query: Seq[Double],
-      k: Int, acceptIds: scala.collection.Set[Long], probes: Int = 4,
-      m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id"): DataFrame = {
-    import spark.implicits._
-    if (acceptIds.isEmpty)
-      return Seq.empty[(Long, Double)].toDF(idCol, "sim")
-    val model = routingModel(spark, path)
-    val parts = model.probeClusters(query, probes)
-    val accept = acceptIds
-    topKFilteredApprox(spark, path, query, k, accept.contains, Some(parts),
-      m = m, efConstruction = efConstruction, efSearch = efSearch, idCol = idCol)
-  }
-
-  /** Centroid-routed batch search over a [[saveRouted]] layout: ONE job for
-    * the query set. The scan is pruned to the UNION of every query's probed
-    * shards, each restored graph serves only the queries that probed it
-    * (driver-side probe map — per-query work stays `probes` graphs, not the
-    * union), and ranking is the k-bounded per-group aggregator. Returns
-    * (query_id, idCol, sim, rn) like the other batch paths. */
-  def batchTopKRouted(spark: SparkSession, path: String,
-      queries: Seq[(Long, Seq[Double])], k: Int, probes: Int = 4,
-      m: Int = 16, efConstruction: Int = 64, efSearch: Int = 128,
-      idCol: String = "id", stats: Option[RoutedStats] = None,
-      overscan: Int = 16, minProbes: Int = 3): DataFrame = {
-    import spark.implicits._
-    val model = routingModel(spark, path)
-    // `sizes` switches every query's probe list to the adaptive
-    // candidate-mass walk ([[topKRoutedAdaptive]]) — the restored-graph
-    // volume then scales with each query's candidate need instead of
-    // |queries|·probes, keeping batch==single parity on either mode.
-    // Probes resolve PER ENTRY, not per qid: a duplicated query id with
+    lazy val routing = routingModel(spark, path)
+    // probes resolve PER ENTRY, not per qid: a duplicated query id with
     // two different vectors must route each vector by its own centroids
     // (a qid-keyed map would search the first vector in the second's
     // shards); duplicate entries then simply merge under the shared qid
     // in the aggregator, like the non-routed batch paths
-    def probesOf(q: Seq[Double]): Seq[Int] = stats match {
-      case Some(st) => model.probeClustersByMargin(q, st.sizes, overscan.toLong * k,
-        MarginBeta * st.radius, minProbes, MaxAdaptiveProbes)
-      case None => model.probeClusters(q, probes)
-    }
     val entries = queries.map { case (qid, q) =>
-      (qid, q.toArray, probesOf(q).toSet)
+      (qid, q.toArray, rule.shards(routing, q, k).map(_.toSet))
     }
-    val union = entries.flatMap(_._3).distinct.sorted
-    val perPartition = served(spark, path, m, efConstruction,
-      parts = Some(union)) { (part, idx) =>
-      entries.iterator.filter(_._3(part)).flatMap { case (qid, q, _) =>
+    val union =
+      if (rule == AllShards) None
+      else Some(entries.flatMap(_._3.toSeq.flatten).distinct.sorted)
+    val perPartition = served(spark, path, union) { (part, idx) =>
+      entries.iterator.filter(_._3.forall(_(part))).flatMap { case (qid, q, _) =>
         idx.search(q, k, efSearch).map { case (id, sim) => (qid, id, sim) }
       }
     }.toDF("query_id", idCol, "sim_raw")
@@ -922,49 +850,47 @@ object HnswStore {
       .withColumnRenamed("id", idCol)
   }
 
-  /** [[batchTopKRouted]] for query sets too large to collect: the queries
-    * stay a DataFrame end-to-end. Each query row routes to its `probes`
-    * nearest shards via the codegen'd
-    * [[graft.functions.ModelExpressions.probeClusters]] expression over
-    * the routing centroids (the same ranking the driver-side probe list
-    * uses — BigBatchSpec gates exact result parity), then a COGROUP on the
-    * shard id pairs every shard's stored graph rows with exactly the
-    * queries that probed it: one grouping shuffle of (query, shard)
-    * entries against the graph rows, graph restored once per shard, no
-    * driver or broadcast materialization of anything query-sized.
+  /** [[batchSearch]] for query sets too large to collect: the queries
+    * stay a DataFrame end-to-end. Each query row resolves `rule` with the
+    * codegen'd [[graft.functions.ModelExpressions.probeClusters]] /
+    * [[graft.functions.ModelExpressions.probeClustersByMargin]] expression
+    * over the routing centroids (the same ranking and stop rule as
+    * [[ProbeRule.shards]] — BigBatchSpec gates exact result parity), then
+    * a COGROUP on the shard id pairs every shard's stored graph rows with
+    * exactly the queries that probed it: one grouping shuffle of (query,
+    * shard) entries against the graph rows, graph restored once per shard,
+    * no driver or broadcast materialization of anything query-sized. Needs
+    * a routed layout for every rule ([[AllShards]] probes every centroid).
     *
     * There is deliberately no partition-filter pruning here: a big batch's
     * probed-shard union approaches all shards, so the scan reads the
     * layout once — the pruning that matters is per-shard (each graph
     * serves only its own queries via the cogroup). */
-  def bigBatchTopKRouted(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int, probes: Int = 4, m: Int = 16, efConstruction: Int = 64,
-      efSearch: Int = 128, idCol: String = "id",
+  def bigBatchSearch(spark: SparkSession, path: String, queries: DataFrame,
+      k: Int, rule: ProbeRule = AllShards, efSearch: Int = 128, idCol: String = "id",
       queryIdCol: String = "query_id", queryVecCol: String = "qvec",
-      stats: Option[RoutedStats] = None, overscan: Int = 16,
-      minProbes: Int = 3, acceptIds: Option[DataFrame] = None,
-      bloomFpp: Double = 0.01): DataFrame = {
+      acceptIds: Option[DataFrame] = None, bloomFpp: Double = 0.01): DataFrame = {
     import spark.implicits._
     val model = routingModel(spark, path)
-    val (mm, ee) = readMeta(spark, path)
-      .map(t => (t._1, t._2)).getOrElse((m, efConstruction))
-    // `stats` switches every query ROW's probe list to the margin-extended
-    // adaptive walk ([[topKRoutedAdaptive]]'s rule, evaluated per row by
-    // the codegen'd ProbeClustersByMargin kernel — identical ranking and
-    // stop rule to the driver-side walk, so probe sets match the collected
-    // adaptive path exactly; BigBatchSpec-gated). The walk spends probes
-    // on boundary queries and stops early on concentrated ones, so the
-    // cogroup volume tracks per-query need instead of |queries|·probes.
-    val probeList = stats match {
-      case Some(st) =>
+    // the rule evaluated per query ROW by the codegen'd probe kernels —
+    // identical ranking and stop rule to ProbeRule.shards, so probe sets
+    // match the collected paths exactly (BigBatchSpec-gated). The adaptive
+    // walk spends probes on boundary queries and stops early on
+    // concentrated ones, so the cogroup volume tracks per-query need
+    // instead of |queries|·probes.
+    val probeList = rule match {
+      case AllShards =>
+        graft.functions.ModelExpressions.probeClusters(
+          col("qvec"), model.centroids, model.centroids.length)
+      case Nearest(n) =>
+        graft.functions.ModelExpressions.probeClusters(
+          col("qvec"), model.centroids, n)
+      case Adaptive(st, overscan, minProbes) =>
         val sizesArr = Array.tabulate(model.centroids.length)(c =>
           st.sizes.getOrElse(c, 0L))
         graft.functions.ModelExpressions.probeClustersByMargin(
           col("qvec"), model.centroids, sizesArr, overscan.toLong * k,
           MarginBeta * st.radius, minProbes, MaxAdaptiveProbes)
-      case None =>
-        graft.functions.ModelExpressions.probeClusters(
-          col("qvec"), model.centroids, probes)
     }
     val probed = graft.operators.Par.widen(queries)
       .select(col(queryIdCol).cast("long").as("query_id"),
@@ -979,17 +905,17 @@ object HnswStore {
     // .bloomFilter` — megabytes for hundreds of millions of ids, shipped
     // once per task), each graph's beam keeps expanding until it holds k
     // bloom-accepted results (no overfetch starvation — the
-    // [[topKFilteredApprox]] contract), and Bloom false positives are
+    // [[search]] `accept` contract), and Bloom false positives are
     // removed by an exact LEFT SEMI re-check afterwards. The re-check can
     // leave a query with slightly fewer than k rows exactly when a false
     // positive displaced a true match in the beam (probability ~fpp per
     // result slot — tune `bloomFpp` down if k-exactness matters more than
     // filter bytes). Recall remains bounded by shard routing like every
     // routed path.
-    // nothing qualifies → nothing to search (the [[topKFiltered]] guard
-    // at query-set scale): an empty Bloom rejects every id, and a beam
-    // that can never hold k accepted results walks each probed shard's
-    // whole connected component once PER QUERY ROW just to return zero
+    // nothing qualifies → nothing to search: an empty Bloom rejects every
+    // id, and a beam that can never hold k accepted results walks each
+    // probed shard's whole connected component once PER QUERY ROW just to
+    // return zero.
     // the id frame is consumed three times (count, Bloom build, exact
     // re-check) — CacheRegistry.cached so an expensive filter predicate
     // scans once, not thrice (registry eviction bounds the footprint)
@@ -1011,7 +937,7 @@ object HnswStore {
           val grp = recs.toSeq
           if (grp.isEmpty) Iterator.empty
           else {
-            val idx = RestoreGroup(grp, mm, ee)
+            val idx = RestoreGroup(grp)
             qs.flatMap { case (qid, q, _) =>
               (bloom match {
                 case Some(bf) =>

@@ -245,7 +245,7 @@ object ApproxQueries {
     * in O(nodes+edges) with results identical to a fresh build
     * (RecallSpec). Layout memoized per dataset dir. */
   def hnswStoredTopK(spark: SparkSession, dir: String): DataFrame =
-    graft.index.HnswStore.topK(spark, hnswLayout(spark, dir), VectorModel.Query, 10)
+    graft.index.HnswStore.search(spark, hnswLayout(spark, dir), VectorModel.Query, 10)
 
   /** HASH-GATE of the single-query HNSW family (`vq_hnsw_topk`,
     * `vq_hnsw_stored_topk`, `vq_hnsw_routed_topk`,
@@ -334,23 +334,23 @@ object ApproxQueries {
     * survives thousands of shards: the routing sidecar scores shard
     * centroids driver-side and the scan's partition filter prunes every
     * unprobed shard's files; only the probed graphs restore. The probe
-    * LIST is ADAPTIVE by default ([[graft.index.HnswStore
-    * .topKRoutedAdaptive]] over the memoized per-shard node counts) — the
-    * same candidate-mass rule as stored-IVF serving, so at 1000+ shards
+    * LIST is ADAPTIVE by default ([[graft.index.HnswStore.Adaptive]] over
+    * the memoized per-shard node counts) — the same candidate-mass rule
+    * as stored-IVF serving, so at 1000+ shards
     * the probed count tracks each query's need instead of a fixed
     * [[RoutedProbes]]; recall at fewer mean probed shards is spec-gated
     * (RecallSpec, RECALL.md round 8). */
   def hnswRoutedTopK(spark: SparkSession, dir: String): DataFrame =
-    graft.index.HnswStore.topKRoutedAdaptive(spark, hnswRoutedLayout(spark, dir),
-      VectorModel.Query, 10, stats = routedStats(spark, dir))
+    graft.index.HnswStore.search(spark, hnswRoutedLayout(spark, dir),
+      VectorModel.Query, 10, graft.index.HnswStore.Adaptive(routedStats(spark, dir)))
 
   /** The FIXED-probe routed path ([[RoutedProbes]] of the derived count) —
     * kept registered as the parity knob beside the adaptive default,
     * exactly like `vq_ivf_parity_topk`: a migrating user can pin the
     * constant-probe rule for bit-for-bit reproducibility. */
   def hnswRoutedParityTopK(spark: SparkSession, dir: String): DataFrame =
-    graft.index.HnswStore.topKRouted(spark, hnswRoutedLayout(spark, dir),
-      VectorModel.Query, 10, probes = RoutedProbes)
+    graft.index.HnswStore.search(spark, hnswRoutedLayout(spark, dir),
+      VectorModel.Query, 10, graft.index.HnswStore.Nearest(RoutedProbes))
 
   /** S4 with method=hnsw over the routed layout: the whole query batch in
     * one job, scan pruned to the union of the queries' probed shards, each
@@ -363,8 +363,8 @@ object ApproxQueries {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1)
       .toSeq
-    graft.index.HnswStore.batchTopKRouted(spark, path, queries, 3,
-      stats = Some(routedStats(spark, dir)))
+    graft.index.HnswStore.batchSearch(spark, path, queries, 3,
+      graft.index.HnswStore.Adaptive(routedStats(spark, dir)))
       .orderBy("query_id", "rn")
   }
 
@@ -424,7 +424,7 @@ object ApproxQueries {
 
   /** S4 with method=hnsw over the PERSISTED graphs — the full
     * build-once/serve-many batch shape: graph restore amortized across
-    * the query set, no index shuffle ([[graft.index.HnswStore.batchTopK]]). */
+    * the query set, no index shuffle ([[graft.index.HnswStore.batchSearch]]). */
   def hnswStoredBatchTopK(spark: SparkSession, dir: String): DataFrame = {
     val path = hnswLayout(spark, dir)
     val queries = VectorModel.partQueries(spark, dir)
@@ -432,7 +432,7 @@ object ApproxQueries {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1)
       .toSeq
-    graft.index.HnswStore.batchTopK(spark, path, queries, 3)
+    graft.index.HnswStore.batchSearch(spark, path, queries, 3)
       .orderBy("query_id", "rn")
   }
 
@@ -1856,10 +1856,10 @@ object ApproxQueries {
     * 0.995 at mean 5.5/64 shards on the round-8 grid — instead of the
     * fixed probes=4 pin this entry served through round 10). */
   def hnswRoutedBigBatchTopK(spark: SparkSession, dir: String): DataFrame =
-    graft.index.HnswStore.bigBatchTopKRouted(spark,
+    graft.index.HnswStore.bigBatchSearch(spark,
       hnswRoutedLayout(spark, dir),
       VectorModel.partQueriesBig(spark, dir), 3,
-      stats = Some(routedStats(spark, dir)))
+      graft.index.HnswStore.Adaptive(routedStats(spark, dir)))
       .orderBy("query_id", "rn")
 
   /** LSH big batch over the embeddings layout — see [[ivfBigBatchTopK]].

@@ -208,18 +208,12 @@ object StreamingIngest {
   def hnswDeltaSearch(spark: SparkSession, graphPath: String, deltaPath: String,
       query: Seq[Double], k: Int, efSearch: Int = 128,
       vecCol: String = "vector", idCol: String = "id"): DataFrame = {
-    // a routed layout serves its graph leg routed (top half of the shards
-    // probed, rest pruned — [[graft.index.HnswStore.topKRouted]]); the
-    // delta leg is an exact scan either way
-    val graphCand = graft.index.HnswStore.readRouting(spark, graphPath) match {
-      case Some(centroids) =>
-        graft.index.HnswStore.topKRouted(spark, graphPath, query, k,
-          probes = math.max(2, centroids.length / 2), efSearch = efSearch,
-          idCol = idCol)
-      case None =>
-        graft.index.HnswStore.topK(
-          spark, graphPath, query, k, efSearch = efSearch, idCol = idCol)
-    }
+    // the graph leg probes the layout's default shards (the top half of a
+    // routed layout's, rest pruned — the facade's rule); the delta leg is
+    // an exact scan either way
+    val graphCand = graft.index.HnswStore.search(spark, graphPath, query, k,
+      graft.index.HnswStore.defaultRule(spark, graphPath), efSearch = efSearch,
+      idCol = idCol)
     if (!graft.store.Fs.exists(spark, deltaPath)) return graphCand
     val deltaScored = spark.read.parquet(deltaPath)
       .withColumn("sim", round(

@@ -56,9 +56,9 @@ class BigBatchSpec extends SparkSpec {
   test("routed HNSW big-batch (queries as DataFrame) equals the collected path") {
     val path = queries.ApproxQueries.hnswRoutedLayout(spark, Sf0001)
     val qdf = bigQueries(NQueries, 8, scale = 50.0)
-    val big = HnswStore.bigBatchTopKRouted(spark, path, qdf, 3, probes = 4)
-    val old = HnswStore.batchTopKRouted(spark, path, collected(qdf), 3,
-      probes = 4)
+    val big = HnswStore.bigBatchSearch(spark, path, qdf, 3, HnswStore.Nearest(4))
+    val old = HnswStore.batchSearch(spark, path, collected(qdf), 3,
+      HnswStore.Nearest(4))
     assert(resultSet(big) === resultSet(old))
   }
 
@@ -68,10 +68,10 @@ class BigBatchSpec extends SparkSpec {
     val qdf = bigQueries(NQueries, 8, scale = 50.0)
     // the registered entry's mode: per-row ProbeClustersByMargin kernel
     // over the routing sidecar + shard stats vs the driver-side walk
-    val big = HnswStore.bigBatchTopKRouted(spark, path, qdf, 3,
-      stats = Some(stats))
-    val old = HnswStore.batchTopKRouted(spark, path, collected(qdf), 3,
-      stats = Some(stats))
+    val big = HnswStore.bigBatchSearch(spark, path, qdf, 3,
+      HnswStore.Adaptive(stats))
+    val old = HnswStore.batchSearch(spark, path, collected(qdf), 3,
+      HnswStore.Adaptive(stats))
     assert(resultSet(big) === resultSet(old))
   }
 

@@ -46,12 +46,12 @@ object DevHnswStoreProfile {
     timed("routedStats (two aggregates)") {
       graft.index.HnswStore.routedStats(spark, s"$p2/g")
     }
-    timed("serve: topK stored (first)") {
-      graft.index.HnswStore.topK(spark, s"$p1/g",
+    timed("serve: search stored (first)") {
+      graft.index.HnswStore.search(spark, s"$p1/g",
         graft.model.VectorModel.Query, 10).count()
     }
-    timed("serve: topK stored (second)") {
-      graft.index.HnswStore.topK(spark, s"$p1/g",
+    timed("serve: search stored (second)") {
+      graft.index.HnswStore.search(spark, s"$p1/g",
         graft.model.VectorModel.Query, 10).count()
     }
     spark.stop()

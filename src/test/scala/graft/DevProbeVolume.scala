@@ -63,9 +63,10 @@ object DevProbeVolume {
       val corpus = stats.sizes.values.sum
       val qs = VectorModel.partQueriesBig(spark, dir)
         .collect().map(r => r.getSeq[Double](1))
-      val f = qs.map(q => graft.index.HnswStore.probedShards(spark, path, q, 4))
-      val a = qs.map(q =>
-        graft.index.HnswStore.probedShardsAdaptive(spark, path, q, 3, stats))
+      def probed(q: Seq[Double], rule: graft.index.HnswStore.ProbeRule) =
+        graft.index.HnswStore.probedShards(spark, path, q, 3, rule).get
+      val f = qs.map(probed(_, graft.index.HnswStore.Nearest(4)))
+      val a = qs.map(probed(_, graft.index.HnswStore.Adaptive(stats)))
       report("hnsw_routed", f.map(_.map(stats.sizes.getOrElse(_, 0L)).sum).toSeq,
         a.map(_.map(stats.sizes.getOrElse(_, 0L)).sum).toSeq,
         corpus, f.map(_.size).toSeq, a.map(_.size).toSeq)

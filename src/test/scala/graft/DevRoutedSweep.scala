@@ -61,12 +61,12 @@ object DevRoutedSweep {
       val t0 = System.nanoTime()
       HnswStore.saveRouted(vecs, dir, numShards = numShards)
       val buildSec = (System.nanoTime() - t0) / 1e9
-      val allShards = queries.map(q => ids(HnswStore.topK(spark, dir, q, k)))
+      val allShards = queries.map(q => ids(HnswStore.search(spark, dir, q, k)))
       val allRecall = recallVs(exact, allShards)
       for (probes <- Seq(4, 8, 16)) yield {
         val t1 = System.nanoTime()
         val routed = queries.map(q =>
-          ids(HnswStore.topKRouted(spark, dir, q, k, probes = probes)))
+          ids(HnswStore.search(spark, dir, q, k, HnswStore.Nearest(probes))))
         val msPerQuery = (System.nanoTime() - t1) / 1e6 / numQueries
         val cell =
           f"""{"num_shards":$numShards,"probes":$probes,""" +
@@ -82,21 +82,27 @@ object DevRoutedSweep {
     // ---- round 8: ADAPTIVE probing grid at the 64-shard operating point.
     // The margin walk (probeClustersByMargin) must hold the fixed-8 recall
     // at FEWER mean probed shards for some alpha — that alpha becomes
-    // HnswStore.MarginAlpha, and RecallSpec gates it at test scale.
+    // HnswStore.MarginBeta, and RecallSpec gates it at test scale.
     val dir64 = graft.store.Fs.scratchDir(spark, "graft_sweep_adapt") + "/g"
     HnswStore.saveRouted(vecs, dir64, numShards = 64)
     val stats64 = HnswStore.routedStats(spark, dir64)
     Console.err.println(f"SWEEP_RADIUS ${stats64.radius}%.5f")
-    val all64 = queries.map(q => ids(HnswStore.topK(spark, dir64, q, k)))
+    val all64 = queries.map(q => ids(HnswStore.search(spark, dir64, q, k)))
+    val routing64 = graft.index.Ivf.IvfModel(HnswStore.readRouting(spark, dir64).get)
+    val rule = HnswStore.Adaptive(stats64)
     val adaptCells = for (beta <- Seq(0.5, 1.0, 1.5, 2.0)) yield {
+      // the Adaptive rule's walk at margin beta (the rule fixes
+      // HnswStore.MarginBeta); its list is a prefix of the centroid
+      // ranking, so Nearest(list size) searches exactly those shards
+      val probeCounts = queries.map(q =>
+        routing64.probeClustersByMargin(q, stats64.sizes, rule.overscan.toLong * k,
+          beta * stats64.radius, rule.minProbes, HnswStore.MaxAdaptiveProbes).size)
       val t1 = System.nanoTime()
-      val routed = queries.map(q =>
-        ids(HnswStore.topKRoutedAdaptive(spark, dir64, q, k, stats = stats64,
-          marginBeta = beta)))
+      val routed = queries.zip(probeCounts).map { case (q, n) =>
+        ids(HnswStore.search(spark, dir64, q, k, HnswStore.Nearest(n)))
+      }
       val msPerQuery = (System.nanoTime() - t1) / 1e6 / numQueries
-      val meanProbes = queries.map(q =>
-        HnswStore.probedShardsAdaptive(spark, dir64, q, k, stats64,
-          marginBeta = beta).size).sum.toDouble / numQueries
+      val meanProbes = probeCounts.sum.toDouble / numQueries
       val cell =
         f"""{"num_shards":64,"margin_beta":$beta%.2f,""" +
           f""""shard_radius":${stats64.radius}%.5f,""" +

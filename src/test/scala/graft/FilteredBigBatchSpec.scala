@@ -95,9 +95,9 @@ class FilteredBigBatchSpec extends SparkSpec {
     // accept-all: the Bloom admits every id, the beam reduces to the
     // plain search, the exact re-check is a no-op — results identical
     val all = vecs.select("id")
-    val bigAll = HnswStore.bigBatchTopKRouted(spark, path, qdf, 3,
-      probes = 4, acceptIds = Some(all), bloomFpp = 1e-9)
-    val plain = HnswStore.bigBatchTopKRouted(spark, path, qdf, 3, probes = 4)
+    val bigAll = HnswStore.bigBatchSearch(spark, path, qdf, 3,
+      HnswStore.Nearest(4), acceptIds = Some(all), bloomFpp = 1e-9)
+    val plain = HnswStore.bigBatchSearch(spark, path, qdf, 3, HnswStore.Nearest(4))
     assert(resultSet(bigAll) === resultSet(plain))
     // selective: per-query parity against the collected beam-threaded
     // filtered path (exact id set) at the same probes/efSearch — fpp 1e-9
@@ -106,14 +106,14 @@ class FilteredBigBatchSpec extends SparkSpec {
     val pred = pmod(col("id"), lit(3)) === 0
     val ids = vecs.where(pred).select("id")
     val acceptSet = ids.collect().map(_.getLong(0)).toSet
-    val big = HnswStore.bigBatchTopKRouted(spark, path, qdf, 3,
-      probes = 4, acceptIds = Some(ids), bloomFpp = 1e-9)
+    val big = HnswStore.bigBatchSearch(spark, path, qdf, 3,
+      HnswStore.Nearest(4), acceptIds = Some(ids), bloomFpp = 1e-9)
     assert(resultSet(big).forall(t => acceptSet(t._2)))
     val byQ = big.collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getLong(1)).toSet).toMap
     collected(qdf).take(6).foreach { case (qid, q) =>
-      val exp = HnswStore.topKRoutedFiltered(spark, path, q, 3, acceptSet,
-        probes = 4)
+      val exp = HnswStore.search(spark, path, q, 3, HnswStore.Nearest(4),
+        acceptSet.contains)
         .collect().map(_.getLong(0)).toSet
       assert(byQ.getOrElse(qid, Set.empty) === exp,
         s"query $qid: big-batch ${byQ.getOrElse(qid, Set.empty)} vs collected $exp")
@@ -129,8 +129,8 @@ class FilteredBigBatchSpec extends SparkSpec {
     // component before returning nothing — the guard must short-circuit
     // to an empty frame with the batch schema instead
     val none = vecs.where(col("id") < 0).select("id")
-    val out = HnswStore.bigBatchTopKRouted(spark, path, qdf, 3,
-      probes = 4, acceptIds = Some(none))
+    val out = HnswStore.bigBatchSearch(spark, path, qdf, 3,
+      HnswStore.Nearest(4), acceptIds = Some(none))
     assert(out.columns.toSeq === Seq("query_id", "id", "sim", "rn"))
     assert(out.count() === 0L)
   }

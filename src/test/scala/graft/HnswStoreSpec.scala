@@ -1,13 +1,14 @@
 package graft
 
 import graft.index.{Hnsw, HnswStore}
+import graft.index.HnswStore.{Adaptive, Nearest}
 import graft.model.VectorModel
 
 /** Guards on the persisted-HNSW layout: serving must stay CORRECT under any
   * file-split configuration (the complete-graph invariant either holds or
   * the grouping-shuffle fallback engages — never silent partial graphs),
-  * and the hyperparameter sidecar must round-trip so build-time parameters
-  * govern serving regardless of caller defaults. */
+  * and the hyperparameter sidecar must round-trip with the stored graphs
+  * serving exactly what a fresh build at those parameters does. */
 class HnswStoreSpec extends SparkSpec {
 
   private def topKPairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
@@ -25,7 +26,7 @@ class HnswStoreSpec extends SparkSpec {
       // precondition fails and serving must take the grouping shuffle
       spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
       spark.conf.set("spark.sql.files.openCostInBytes", "16")
-      val stored = topKPairs(HnswStore.topK(spark, s"$dir/g", VectorModel.Query, 10))
+      val stored = topKPairs(HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10))
       assert(stored === fresh)
       assert(stored.nonEmpty)
     } finally {
@@ -42,7 +43,7 @@ class HnswStoreSpec extends SparkSpec {
     for ((numShards, probes) <- Seq((8, 2), (64, 4))) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft_hnsw_routed_$numShards").toString
       HnswStore.saveRouted(vecs, s"$dir/g", numShards = numShards)
-      val routedDf = HnswStore.topKRouted(spark, s"$dir/g", VectorModel.Query, 10, probes = probes)
+      val routedDf = HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10, Nearest(probes))
       val routed = topKPairs(routedDf)
       assert(routed.nonEmpty)
       // shard of every stored id, captured BEFORE any files are deleted —
@@ -57,7 +58,7 @@ class HnswStoreSpec extends SparkSpec {
       assert("""PartitionFilters: \[[^\]]*part""".r.findFirstIn(plan).isDefined,
         "probe filter must appear as a partition filter:\n" + plan.take(3000))
       // all-shards fan-out on the same layout, for contrast below
-      val allShards = topKPairs(HnswStore.topK(spark, s"$dir/g", VectorModel.Query, 10))
+      val allShards = topKPairs(HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10))
       // file-level proof that routed serving READS only the probed shards:
       // delete every unprobed shard directory; routed results are unchanged
       val model = graft.index.Ivf.IvfModel(
@@ -71,7 +72,7 @@ class HnswStoreSpec extends SparkSpec {
       assert(removed.nonEmpty, s"some shards must be unprobed at probes=$probes/$numShards")
       removed.foreach(s => fs.delete(s.getPath, true))
       val routedAfter = topKPairs(
-        HnswStore.topKRouted(spark, s"$dir/g", VectorModel.Query, 10, probes = probes))
+        HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10, Nearest(probes)))
       assert(routedAfter === routed,
         "routed serving must not depend on any unprobed shard's files")
       // sanity: when a deleted shard held one of the all-shards top-k, the
@@ -81,7 +82,7 @@ class HnswStoreSpec extends SparkSpec {
       // all-shards result legitimately survives too, and the meaningful
       // assertion flips to equality
       val removedParts = removed.map(_.getPath.getName.stripPrefix("part=").toInt).toSet
-      val allAfter = topKPairs(HnswStore.topK(spark, s"$dir/g", VectorModel.Query, 10))
+      val allAfter = topKPairs(HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10))
       if (allShards.exists(t => removedParts.contains(shardOf(t._1))))
         assert(allAfter !== allShards,
           "deleting a shard holding a top-k id must change the all-shards result")
@@ -95,12 +96,12 @@ class HnswStoreSpec extends SparkSpec {
     HnswStore.saveRouted(vecs, s"$dir/g", numShards = 64)
     // stats collect from the COMPLETE layout (they are build-time
     // artifacts); serving then depends only on the probed shard files
-    val stats = HnswStore.routedStats(spark, s"$dir/g")
-    val before = topKPairs(HnswStore.topKRoutedAdaptive(
-      spark, s"$dir/g", VectorModel.Query, 10, stats = stats))
+    val adaptive = Adaptive(HnswStore.routedStats(spark, s"$dir/g"))
+    val before = topKPairs(HnswStore.search(
+      spark, s"$dir/g", VectorModel.Query, 10, adaptive))
     assert(before.nonEmpty)
-    val probed = HnswStore.probedShardsAdaptive(
-      spark, s"$dir/g", VectorModel.Query, 10, stats).toSet
+    val probed = HnswStore.probedShards(
+      spark, s"$dir/g", VectorModel.Query, 10, adaptive).get.toSet
     assert(probed.size < 64)
     val (fs, p) = graft.store.Fs.pathFs(spark, s"$dir/g")
     val removed = fs.listStatus(p)
@@ -108,8 +109,8 @@ class HnswStoreSpec extends SparkSpec {
       .filterNot(s => probed.contains(s.getPath.getName.stripPrefix("part=").toInt))
     assert(removed.nonEmpty)
     removed.foreach(s => fs.delete(s.getPath, true))
-    assert(topKPairs(HnswStore.topKRoutedAdaptive(
-      spark, s"$dir/g", VectorModel.Query, 10, stats = stats)) === before,
+    assert(topKPairs(HnswStore.search(
+      spark, s"$dir/g", VectorModel.Query, 10, adaptive)) === before,
       "adaptive routed serving must not depend on any unprobed shard's files")
   }
 
@@ -121,13 +122,14 @@ class HnswStoreSpec extends SparkSpec {
     val accept = vecs.where(col("id") % 100 === 0)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(accept.size >= 20, s"fixture needs enough qualifying rows, got ${accept.size}")
-    val filtered = HnswStore.topKFiltered(spark, s"$dir/g", VectorModel.Query, 10, accept)
+    val filtered = HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10,
+      accept = accept.contains)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(filtered.length === 10, s"beam-threaded filter must fill k, got ${filtered.length}")
     assert(filtered.forall(t => accept(t._1)))
     // the overfetch shape on the same layout (reference :386): 3k global
     // candidates post-filtered — at 1% selectivity it starves
-    val overfetch = HnswStore.topK(spark, s"$dir/g", VectorModel.Query, 30)
+    val overfetch = HnswStore.search(spark, s"$dir/g", VectorModel.Query, 30)
       .collect().map(_.getLong(0)).count(accept)
     assert(overfetch < 10, s"overfetch should starve, kept $overfetch of 30")
     // quality: the filtered traversal recovers most of the exact filtered top-k
@@ -144,12 +146,12 @@ class HnswStoreSpec extends SparkSpec {
     HnswStore.saveRouted(vecs, s"$dir/g", numShards = 8)
     val queries = (0 until 3).map(s =>
       (s.toLong, Seq(25.0 + s, 30.0, 0.5, 0.5, 0.5, 0.5, 0.5, 1.0 + s)))
-    val batch = HnswStore.batchTopKRouted(spark, s"$dir/g", queries, 5, probes = 3)
+    val batch = HnswStore.batchSearch(spark, s"$dir/g", queries, 5, Nearest(3))
       .collect()
       .map(r => (r.getLong(0), r.getLong(3), r.getLong(1), r.getDouble(2)))
       .sorted.toSeq
     val single = queries.flatMap { case (qid, q) =>
-      HnswStore.topKRouted(spark, s"$dir/g", q, 5, probes = 3)
+      HnswStore.search(spark, s"$dir/g", q, 5, Nearest(3))
         .collect().zipWithIndex
         .map { case (r, i) => (qid, (i + 1).toLong, r.getLong(0), r.getDouble(1)) }
     }.sorted.toSeq
@@ -165,8 +167,8 @@ class HnswStoreSpec extends SparkSpec {
     // a ~10%-dense filter: probed shards certainly hold >= k matches
     val accept = vecs.where(col("id") % 10 === 0)
       .select("id").collect().map(_.getLong(0)).toSet
-    val res = HnswStore.topKRoutedFiltered(spark, s"$dir/g", VectorModel.Query, 10,
-      accept, probes = 4).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val res = HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10,
+      Nearest(4), accept.contains).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(res.length === 10)
     assert(res.forall(t => accept(t._1)), "every result must satisfy the filter")
     // composition contract: the routed+filtered result equals filtering the
@@ -179,8 +181,8 @@ class HnswStoreSpec extends SparkSpec {
     fs.listStatus(p).filter(_.getPath.getName.startsWith("part="))
       .filterNot(s => probed(s.getPath.getName.stripPrefix("part=").toInt))
       .foreach(s => fs.delete(s.getPath, true))
-    val onProbedOnly = HnswStore.topKFiltered(spark, s"$dir/g", VectorModel.Query, 10,
-      accept).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val onProbedOnly = HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10,
+      accept = accept.contains).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(res.toSeq === onProbedOnly.toSeq)
   }
 
@@ -200,7 +202,7 @@ class HnswStoreSpec extends SparkSpec {
     assert(HnswStore.readRouting(spark, next).isDefined,
       "compaction must not strip the routing sidecar")
     // the maintained layout serves routed over base ∪ delta
-    val res = HnswStore.topKRouted(spark, next, VectorModel.Query, 10, probes = 2)
+    val res = HnswStore.search(spark, next, VectorModel.Query, 10, Nearest(2))
       .collect()
     assert(res.length === 10)
   }
@@ -263,8 +265,8 @@ class HnswStoreSpec extends SparkSpec {
     assert(HnswStore.readTargetRows(spark, next) === Some(target),
       "the derived policy must survive the rebuild")
     HnswStore.save(vecs, s"$dir/fresh", targetRows = target)
-    assert(topKPairs(HnswStore.topK(spark, next, VectorModel.Query, 10)) ===
-      topKPairs(HnswStore.topK(spark, s"$dir/fresh", VectorModel.Query, 10)))
+    assert(topKPairs(HnswStore.search(spark, next, VectorModel.Query, 10)) ===
+      topKPairs(HnswStore.search(spark, s"$dir/fresh", VectorModel.Query, 10)))
 
     // ROUTED layout: same policy, routing sidecar sized to the derived
     // count, and an explicitly-pinned layout's rebuild keeps its pin
@@ -288,9 +290,9 @@ class HnswStoreSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_meta").toString
     HnswStore.save(vecs, s"$dir/g", m = 24, efConstruction = 120, numPartitions = 4)
     assert(HnswStore.readMeta(spark, s"$dir/g") === Some((24, 120, 4)))
-    // caller passes wildly wrong fallback params; stored meta must win
-    val stored = topKPairs(HnswStore.topK(spark, s"$dir/g", VectorModel.Query, 10,
-      m = 2, efConstruction = 4))
+    // the stored graphs, built at non-default parameters, serve exactly
+    // what a fresh build at those parameters does
+    val stored = topKPairs(HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10))
     val fresh = topKPairs(Hnsw.hnswTopK(vecs, VectorModel.Query, 10,
       m = 24, efConstruction = 120, numPartitions = 4))
     assert(stored === fresh)

@@ -335,7 +335,7 @@ class RecallSpec extends SparkSpec {
     val vecs = graft.model.VectorModel.lineitemVectors(spark, Sf0001)
     val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_store").toString
     HnswStore.save(vecs, s"$dir/g", numPartitions = 8)
-    val stored = HnswStore.topK(spark, s"$dir/g", graft.model.VectorModel.Query, 10)
+    val stored = HnswStore.search(spark, s"$dir/g", graft.model.VectorModel.Query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val fresh = Hnsw.hnswTopK(vecs, graft.model.VectorModel.Query, 10, numPartitions = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -349,14 +349,14 @@ class RecallSpec extends SparkSpec {
     HnswStore.save(lineVecs, s"$dir/g", numPartitions = 8)
     val queries = (0 until 3).map(s =>
       (s.toLong, Seq(25.0 + s, 30.0, 0.5, 0.5, 0.5, 0.5, 0.5, 1.0 + s)))
-    val storedDf = HnswStore.batchTopK(spark, s"$dir/g", queries, 5)
+    val storedDf = HnswStore.batchSearch(spark, s"$dir/g", queries, 5)
     def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(3), r.getLong(1), r.getDouble(2))).sorted.toSeq
     val fresh = Hnsw.hnswBatchTopK(lineVecs, queries, 5, numPartitions = 8)
     assert(keyed(storedDf) === keyed(fresh))
     // one-file-per-graph layout: restore runs in place, no exchange
     // before the per-partition search (only the final top-k merge remains)
-    val p = HnswStore.topK(spark, s"$dir/g", VectorModel.Query, 10)
+    val p = HnswStore.search(spark, s"$dir/g", VectorModel.Query, 10)
       .queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning"),
       "stored-graph serving must not shuffle the index:\n" + p.take(3000))
@@ -560,8 +560,10 @@ class RecallSpec extends SparkSpec {
 
   test("routed stored-HNSW: recall vs the all-shards path at half the shards probed") {
     import graft.index.HnswStore
+    import graft.index.HnswStore.{Adaptive, Nearest}
     // the baseline in both halves is the ALL-shards fan-out over the SAME
-    // layout (topK ignores the routing sidecar and restores every graph) —
+    // layout (the default AllShards rule ignores the routing sidecar and
+    // restores every graph) —
     // isolating exactly what routing costs: neighbors whose shard the
     // centroid scoring did not probe.
     // (a) structured vectors (the lineitem view, where clustering carries
@@ -571,8 +573,8 @@ class RecallSpec extends SparkSpec {
     val lineQueries = (0 until 6).map(s =>
       Seq(25.0 + s, 30.0, 0.5, 0.5, 0.5, 0.5, 0.5, 1.0 + s))
     val linePairs = lineQueries.map { q =>
-      (HnswStore.topK(spark, s"$dirL/g", q, 10),
-        HnswStore.topKRouted(spark, s"$dirL/g", q, 10, probes = 4))
+      (HnswStore.search(spark, s"$dirL/g", q, 10),
+        HnswStore.search(spark, s"$dirL/g", q, 10, Nearest(4)))
     }
     val rl = Recall.meanRecall(linePairs, "id")
     info(s"routed HNSW (structured) recall@10 vs all-shards at probes=4/8 = $rl")
@@ -584,8 +586,8 @@ class RecallSpec extends SparkSpec {
     val dir64 = java.nio.file.Files.createTempDirectory("graft_hnsw_routed_64").toString
     HnswStore.saveRouted(lineVecs, s"$dir64/g", numShards = 64)
     val pairs64 = lineQueries.map { q =>
-      (HnswStore.topK(spark, s"$dir64/g", q, 10),
-        HnswStore.topKRouted(spark, s"$dir64/g", q, 10, probes = 8))
+      (HnswStore.search(spark, s"$dir64/g", q, 10),
+        HnswStore.search(spark, s"$dir64/g", q, 10, Nearest(8)))
     }
     val r64 = Recall.meanRecall(pairs64, "id")
     info(s"routed HNSW (structured) recall@10 vs all-shards at probes=8/64 = $r64")
@@ -599,14 +601,14 @@ class RecallSpec extends SparkSpec {
     // mean 5.5 probes, recall 0.995 vs fixed-8's 0.985); at this toy
     // scale shards hold ~94 rows, the radius is large relative to
     // centroid separation, and the walk correctly probes MORE.
-    val stats64 = HnswStore.routedStats(spark, s"$dir64/g")
+    val adaptive = Adaptive(HnswStore.routedStats(spark, s"$dir64/g"))
     val pairsAd = lineQueries.map { q =>
-      (HnswStore.topK(spark, s"$dir64/g", q, 10),
-        HnswStore.topKRoutedAdaptive(spark, s"$dir64/g", q, 10, stats = stats64))
+      (HnswStore.search(spark, s"$dir64/g", q, 10),
+        HnswStore.search(spark, s"$dir64/g", q, 10, adaptive))
     }
     val rAd = Recall.meanRecall(pairsAd, "id")
     val probedCounts = lineQueries.map(q =>
-      HnswStore.probedShardsAdaptive(spark, s"$dir64/g", q, 10, stats64).size)
+      HnswStore.probedShards(spark, s"$dir64/g", q, 10, adaptive).get.size)
     val meanProbed = probedCounts.sum.toDouble / lineQueries.size
     info(f"routed HNSW adaptive recall@10 vs all-shards at 64 shards = $rAd " +
       f"(probed ${probedCounts.min}..${probedCounts.max}, mean $meanProbed%.1f, cap ${HnswStore.MaxAdaptiveProbes})")
@@ -625,8 +627,8 @@ class RecallSpec extends SparkSpec {
       VectorModel.syntheticQuery(s)
     }
     val embPairs = embQueries.map { q =>
-      (HnswStore.topK(spark, s"$dirE/g", q, 10, idCol = "vec_id"),
-        HnswStore.topKRouted(spark, s"$dirE/g", q, 10, probes = 4, idCol = "vec_id"))
+      (HnswStore.search(spark, s"$dirE/g", q, 10, idCol = "vec_id"),
+        HnswStore.search(spark, s"$dirE/g", q, 10, Nearest(4), idCol = "vec_id"))
     }
     val re = Recall.meanRecall(embPairs, "vec_id")
     info(s"routed HNSW (uniform) recall@10 vs all-shards at probes=4/8 = $re")

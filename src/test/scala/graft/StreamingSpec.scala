@@ -729,9 +729,9 @@ class StreamingSpec extends SparkSpec {
     // deterministic: repartition by id + sort within partitions)
     val allDf = spark.createDataFrame(base ++ delta).toDF("id", "vector")
     HnswStore.save(allDf, s"$dir/fresh", numPartitions = 4)
-    val served = HnswStore.topK(spark, v1, query, 10)
+    val served = HnswStore.search(spark, v1, query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val fresh = HnswStore.topK(spark, s"$dir/fresh", query, 10)
+    val fresh = HnswStore.search(spark, s"$dir/fresh", query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(served === fresh, "maintained graph must serve identically to a fresh build")
     // post-maintenance merge serving (empty delta) equals the graph alone,
