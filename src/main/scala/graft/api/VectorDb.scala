@@ -416,9 +416,12 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
   def batchInsert(rows: Seq[(Seq[Double], Map[String, String])]): Seq[Long] = {
     rows.foreach { case (v, _) => checkDim(v) }
     val ids = rows.indices.map(nextId + _)
+    // no more slices than rows: a small insert must not add empty
+    // partitions that every later scan runs a task for
+    val slices = math.max(1, math.min(rows.size, spark.sparkContext.defaultParallelism))
     val newRows = spark.createDataFrame(
       spark.sparkContext.parallelize(
-        rows.zip(ids).map { case ((v, m), id) => Row(id, v, m) }),
+        rows.zip(ids).map { case ((v, m), id) => Row(id, v, m) }, slices),
       schema)
     data = VectorStore.insert(data, newRows, dim)
     nextId += rows.length
@@ -1536,9 +1539,11 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     ProductQuantizer.decodeDf(encoded, q)
   }
 
-  /** Previous save's cached snapshots, unpersisted once the next save's
-    * snapshot is durable — repeated mutate/save cycles hold at most one
-    * cached copy each of data and IVF assignments. */
+  /** The cached tables the facade serves after [[save]]: the re-reads of
+    * `$path/data` and of the IVF / IVF-PQ layouts. A later write serves
+    * from a plan over the cached data; the next save unpersists all three,
+    * so repeated mutate/save cycles hold at most one cached copy each of
+    * data and IVF assignments. */
   private var dataSnap: Option[DataFrame] = None
   private var ivfSnap: Option[DataFrame] = None
   private var ivfPqSnap: Option[DataFrame] = None
@@ -1548,9 +1553,15 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     *
     * Data and IVF assignments are snapshotted through the block-manager
     * cache first, so saving a loaded instance back onto its own directory
-    * does not read-while-overwriting. (A production deployment would
-    * write-to-temp-and-swap instead — cache eviction during the write
-    * would fall back to the deleted files.)
+    * does not read-while-overwriting.
+    *
+    * Once written, the facade serves from the saved files, the tables a
+    * [[VectorDb.load]] of `path` would give it, cached and materialized:
+    * `$path/data`, `$path/ivf_data` and `$path/ivfpq_data`. Scans then no
+    * longer carry the rows each [[batchInsert]] shipped from the driver.
+    * The directory must outlive the facade, as it must for `load`: evicted
+    * blocks are recomputed from these files, and a later write to the
+    * same directory (by this facade or another) is what it then serves.
     *
     * Sidecars whose in-memory state is ABSENT are deleted from the target:
     * after load → mutate (which invalidates indexes) → save onto the same
@@ -1585,13 +1596,9 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
           case (c, i) => (i, c.toSeq)
         }).toDF("cluster_id", "centroid")
           .write.mode(SaveMode.Overwrite).parquet(s"$path/ivf_centroids")
-        ivfSnap.filter(_ ne isnap).foreach(_.unpersist())
-        ivfSnap = Some(isnap)
       case None =>
         deletePath(s"$path/ivf_data")
         deletePath(s"$path/ivf_centroids")
-        ivfSnap.foreach(_.unpersist())
-        ivfSnap = None
     }
     pq match {
       case Some(q) =>
@@ -1622,14 +1629,10 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
         } yield (s, c, model.pq.codebooks(s)(c).toSeq)
         spark.createDataFrame(cbRows).toDF("subspace", "centroid_id", "centroid")
           .write.mode(SaveMode.Overwrite).parquet(s"$path/ivfpq_codebooks")
-        ivfPqSnap.filter(_ ne esnap).foreach(_.unpersist())
-        ivfPqSnap = Some(esnap)
       case None =>
         deletePath(s"$path/ivfpq_data")
         deletePath(s"$path/ivfpq_centroids")
         deletePath(s"$path/ivfpq_codebooks")
-        ivfPqSnap.foreach(_.unpersist())
-        ivfPqSnap = None
     }
     hnswPath match {
       case Some(p) if p != s"$path/hnsw" =>
@@ -1660,8 +1663,23 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
       case None =>
         deletePath(s"$path/lsh")
     }
-    dataSnap.filter(_ ne snap).foreach(_.unpersist())
-    dataSnap = Some(snap)
+    // serve from the files just written. Every pre-write snapshot goes
+    // BEFORE the re-reads are cached: after a save onto the same directory
+    // a re-read is the same cached plan as the snapshot, so unpersisting
+    // the snapshot afterwards would drop the new cache
+    (Seq(snap) ++ ivf.map(_._1) ++ ivfPq.map(_._1) ++ dataSnap ++ ivfSnap ++ ivfPqSnap)
+      .foreach(_.unpersist())
+    def cachedRead(dir: String): DataFrame = {
+      val df = spark.read.parquet(dir).cache()
+      df.count()
+      df
+    }
+    data = cachedRead(s"$path/data")
+    ivf = ivf.map { case (_, model) => (cachedRead(s"$path/ivf_data"), model) }
+    ivfPq = ivfPq.map { case (_, model) => (cachedRead(s"$path/ivfpq_data"), model) }
+    dataSnap = Some(data)
+    ivfSnap = ivf.map(_._1)
+    ivfPqSnap = ivfPq.map(_._1)
   }
 }
 
@@ -1726,12 +1744,18 @@ object VectorDb {
     if (pathExists(spark, s"$path/hnsw")) {
       db.hnswPath = Some(s"$path/hnsw")
       db.hnswOwned = false
-      // maintenance rebuilds must reuse the loaded graph's build-time
-      // partition count (its _graft_meta sidecar), not the constructor
-      // default — a rebuild with different partitioning would answer
-      // differently than the index it replaces
-      graft.index.HnswStore.readMeta(spark, s"$path/hnsw")
-        .foreach { case (_, _, np) => db.hnswNumPartitions = np }
+      // maintenance rebuilds must reuse the loaded graph's shard policy
+      // (its _graft_meta sidecar), not the constructor default — a rebuild
+      // with different partitioning would answer differently than the
+      // index it replaces. A derived layout (targetRows recorded) re-derives
+      // from the grown corpus, as it did before the save; a pinned one keeps
+      // its build-time count
+      graft.index.HnswStore.readMeta(spark, s"$path/hnsw").foreach { case (_, _, np) =>
+        db.hnswNumPartitions =
+          if (graft.index.HnswStore.readTargetRows(spark, s"$path/hnsw").isDefined)
+            graft.index.HnswStore.DeriveShards
+          else np
+      }
       // routedness is a property of the layout, detected from its sidecar
       db.hnswRouted =
         graft.index.HnswStore.readRouting(spark, s"$path/hnsw").isDefined

@@ -173,9 +173,11 @@ object HnswStore {
 
   /** Copy the hyperparameter sidecar alongside a layout copy (the facade's
     * save path rewrites the parquet through a DataFrame, which drops
-    * non-data files). */
+    * non-data files), derived-policy target included. */
   private[graft] def copyMeta(spark: SparkSession, from: String, to: String): Unit =
-    readMeta(spark, from).foreach { case (m, ef, np) => writeMeta(spark, to, m, ef, np) }
+    readMeta(spark, from).foreach { case (m, ef, np) =>
+      writeMeta(spark, to, m, ef, np, readTargetRows(spark, from))
+    }
 
   /** Copy the routing sidecar alongside a layout copy (same reason as
     * [[copyMeta]]) — without it a saved-then-loaded routed index would

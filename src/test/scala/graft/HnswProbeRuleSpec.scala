@@ -74,4 +74,36 @@ class HnswProbeRuleSpec extends SparkSpec {
     assert(answers(VectorDb.load(spark, dir, dim)) === built,
       "a save/load round trip must not change the routed answers")
   }
+
+  test("a derived-shard facade re-derives its shard count on rebuild after save/load") {
+    val dim = 2
+    val rng = new java.util.Random(13)
+    def grow(n: Int) = (0 until n).map(_ =>
+      (Seq.fill(dim)(rng.nextGaussian()), Map.empty[String, String]))
+    val seed = grow(2000)
+    // past the floor: one shard more than DefaultMinShards at the routed target
+    val growth = grow(HnswStore.DefaultMinShards * HnswStore.RoutedTargetShardRows)
+    def shards(d: VectorDb) = HnswStore.readRouting(spark, d.hnswIndexPath.get).get.length
+    def rebuiltAfterGrowth(d: VectorDb): Int = {
+      d.batchInsert(growth)
+      assert(d.maintainIndexes() === Seq("hnsw_rebuilt"))
+      shards(d)
+    }
+    val twin = new VectorDb(spark, dim)
+    twin.batchInsert(seed)
+    twin.buildHnswIndex(numPartitions = HnswStore.DeriveShards, routed = true)
+    assert(shards(twin) === HnswStore.DefaultMinShards)
+    val expected = HnswStore.DefaultMinShards + 1
+    assert(rebuiltAfterGrowth(twin) === expected)
+
+    val db = new VectorDb(spark, dim)
+    db.batchInsert(seed)
+    db.buildHnswIndex(numPartitions = HnswStore.DeriveShards, routed = true)
+    val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_derived_db").toString + "/db"
+    db.save(dir)
+    val loaded = VectorDb.load(spark, dir, dim)
+    assert(HnswStore.readTargetRows(spark, loaded.hnswIndexPath.get) ===
+      Some(HnswStore.RoutedTargetShardRows), "the saved layout keeps its derived policy")
+    assert(rebuiltAfterGrowth(loaded) === expected)
+  }
 }
