@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1548,12 +1549,38 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
   private var ivfSnap: Option[DataFrame] = None
   private var ivfPqSnap: Option[DataFrame] = None
 
+  /** Whether `df`'s plan reads files under `path`, or under a directory
+    * that contains it: a write to `path` would then overwrite files the
+    * write itself reads. */
+  private def readsUnder(df: DataFrame, path: String): Boolean = {
+    def qualified(p: String) = {
+      val (fs, hp) = graft.store.Fs.pathFs(spark, p)
+      fs.makeQualified(hp)
+    }
+    def within(p: org.apache.hadoop.fs.Path, dir: org.apache.hadoop.fs.Path) =
+      Iterator.iterate(p)(_.getParent).takeWhile(_ != null).contains(dir)
+    val target = qualified(path)
+    // the analyzed plan: a cached input still shows the files it was read from
+    df.queryExecution.analyzed.exists {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location.rootPaths.exists { root =>
+          val q = qualified(root.toString)
+          within(q, target) || within(target, q)
+        }
+        case _ => false
+      }
+      case _ => false
+    }
+  }
+
   /** W10 `save`: data Parquet + small model sidecars (centroids, codebooks
     * as tiny Parquet tables; next-id as a 1-row table).
     *
-    * Data and IVF assignments are snapshotted through the block-manager
-    * cache first, so saving a loaded instance back onto its own directory
-    * does not read-while-overwriting.
+    * Data, IVF assignments and IVF-PQ codes whose plans read files under
+    * `path` are snapshotted through the block-manager cache first, so
+    * saving a loaded instance back onto its own directory does not
+    * read-while-overwriting. A table read from anywhere else (a fresh
+    * facade's inserted rows) is written straight from its plan.
     *
     * Once written, the facade serves from the saved files, the tables a
     * [[VectorDb.load]] of `path` would give it, cached and materialized:
@@ -1570,9 +1597,16 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     * rows — the exact W3/W4 staleness bug this class exists to fix. */
   def save(path: String): Unit = {
     homePath = Some(path)
-    val snap = data.cache()
-    snap.count()
-    data = snap
+    val snaps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def guarded(df: DataFrame): DataFrame =
+      if (!readsUnder(df, path)) df
+      else {
+        val snap = df.cache()
+        snap.count()
+        snaps += snap
+        snap
+      }
+    data = guarded(data)
     VectorStore.save(data, s"$path/data")
     // constructor hyperparameters persist with the instance — the
     // reference pickles the whole object so its load restores them
@@ -1588,10 +1622,9 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
       .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
     ivf match {
       case Some((assigned, model)) =>
-        val isnap = assigned.cache()
-        isnap.count()
-        ivf = Some((isnap, model))
-        Ivf.saveClustered(isnap, s"$path/ivf_data")
+        val table = guarded(assigned)
+        ivf = Some((table, model))
+        Ivf.saveClustered(table, s"$path/ivf_data")
         spark.createDataFrame(model.centroids.toSeq.zipWithIndex.map {
           case (c, i) => (i, c.toSeq)
         }).toDF("cluster_id", "centroid")
@@ -1613,12 +1646,9 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     }
     ivfPq match {
       case Some((encoded, model)) =>
-        // snapshot through the cache like data/ivf: saving a loaded
-        // instance back onto its own directory must not read-while-write
-        val esnap = encoded.cache()
-        esnap.count()
-        ivfPq = Some((esnap, model))
-        Ivf.saveClustered(esnap, s"$path/ivfpq_data")
+        val table = guarded(encoded)
+        ivfPq = Some((table, model))
+        Ivf.saveClustered(table, s"$path/ivfpq_data")
         spark.createDataFrame(model.ivf.centroids.toSeq.zipWithIndex.map {
           case (c, i) => (i, c.toSeq)
         }).toDF("cluster_id", "centroid")
@@ -1667,8 +1697,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     // BEFORE the re-reads are cached: after a save onto the same directory
     // a re-read is the same cached plan as the snapshot, so unpersisting
     // the snapshot afterwards would drop the new cache
-    (Seq(snap) ++ ivf.map(_._1) ++ ivfPq.map(_._1) ++ dataSnap ++ ivfSnap ++ ivfPqSnap)
-      .foreach(_.unpersist())
+    (snaps ++ dataSnap ++ ivfSnap ++ ivfPqSnap).foreach(_.unpersist())
     def cachedRead(dir: String): DataFrame = {
       val df = spark.read.parquet(dir).cache()
       df.count()

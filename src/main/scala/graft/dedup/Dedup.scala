@@ -2,7 +2,9 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
+import graft.functions.{Hash60, MinhashSignature, WordNgrams}
 import graft.operators.Par
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -10,6 +12,16 @@ import graft.operators.Par
   *
   * All hashing is derived from md5 so the DuckDB oracle recomputes identical
   * signatures; everything is expression-level (codegen'd, no UDFs).
+  *
+  * Shingling and hashing run in the one-pass kernels of
+  * [[graft.functions.TextKernels]]: [[ngrams]] and [[shingles]] cut each
+  * k-gram from the text's bytes in one scan ([[graft.functions.WordNgrams]];
+  * the `transform`/`slice` form re-split the whole text for every gram,
+  * O(tokens²) per doc), [[hash60]] takes the md5 digest straight to its
+  * 60-bit long ([[graft.functions.Hash60]], no hex-string round trip), and
+  * [[minhashSignatures]] computes each row's whole signature from its text
+  * ([[graft.functions.MinhashSignature]]) instead of exploding one row per
+  * shingle into the per-doc aggregate.
   *
   * Scale notes (100 TB):
   *  - Exact dedup is one hash-shuffle on a 16-byte key — the cheapest path;
@@ -25,19 +37,18 @@ import graft.operators.Par
   */
 object Dedup {
 
-  /** Word k-grams in document order (with repeats) of a
-    * whitespace-tokenized text column. Requires ≥ k tokens (callers
-    * filter shorter docs in both engines). */
-  def ngrams(text: Column, k: Int): Column = {
-    val toks = split(text, " ")
-    transform(
-      sequence(lit(0), size(toks) - k),
-      i => concat_ws(" ", slice(toks, i + 1, lit(k))))
-  }
+  /** Word k-grams in document order (with repeats) of a text column
+    * tokenized as `split(text, " ")`: gram i is
+    * `concat_ws(" ", slice(toks, i + 1, k))`, cut from the text in one
+    * pass ([[graft.functions.WordNgrams]]). A text of fewer than k tokens
+    * (`""` included) gives the empty array; a null text gives null. */
+  def ngrams(text: Column, k: Int): Column =
+    ColumnBridge.column(WordNgrams(ColumnBridge.expression(text), k, distinct = false))
 
-  /** Word k-shingles (distinct) — the set view of [[ngrams]]. */
+  /** Word k-shingles (distinct, first-occurrence order) — the set view of
+    * [[ngrams]], equal to `array_distinct(ngrams(text, k))`. */
   def shingles(text: Column, k: Int = 3): Column =
-    array_distinct(ngrams(text, k))
+    ColumnBridge.column(WordNgrams(ColumnBridge.expression(text), k, distinct = true))
 
   /** Exact-duplicate groups by content hash: one row per distinct content,
     * keeper = min id. A single hash-shuffle; the canonical first pass. */
@@ -62,12 +73,8 @@ object Dedup {
       k: Int = 3, threshold: Double = 0.5, numHashes: Int = 32): DataFrame = {
     val sh = graft.store.CacheRegistry.cached(
       hashedShingleSets(df, idCol, textCol, k))
-    val hm = sh.select(col("doc"), explode(col("shh")).as("h"))
-      .select(col("doc"), (col("h") % MinhashP).as("hm"))
-    val hashCols = (0 until numHashes).map(j =>
-      min((lit(minhashA(j)) * col("hm") + minhashB(j)) % MinhashP).as(s"h$j"))
-    val sig = hm.groupBy("doc").agg(hashCols.head, hashCols.tail: _*)
-    bandedVerifiedPairs(sh, sig, threshold, numHashes)
+    bandedVerifiedPairs(sh, minhashSignatures(df, idCol, textCol, numHashes, k),
+      threshold, numHashes)
   }
 
   /** [[ngramJaccardPairsBanded]] with a PRECOMPUTED signature table
@@ -381,10 +388,12 @@ object Dedup {
       .select(col("da"), col("db"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** 60-bit hash of a string via md5 (mirrored by the oracle as
+  /** 60-bit hash of a string: the high 60 bits of md5 over its UTF-8
+    * bytes, i.e. `conv(substring(md5(s), 1, 15), 16, 10)` without the hex
+    * round trip ([[graft.functions.Hash60]]; mirrored by the oracle as
     * ('0x' || substr(md5(s),1,15))::BIGINT). */
   def hash60(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+    ColumnBridge.column(Hash60(ColumnBridge.expression(s)))
 
   /** Mersenne prime modulus for the minhash function family. */
   val MinhashP: Long = (1L << 31) - 1
@@ -397,17 +406,18 @@ object Dedup {
   /** MinHash signature columns h0..h{n-1}: per-doc min over shingles of
     * h_j(s) = (a_j * (md5_60(s) mod p) + b_j) mod p — one md5 per shingle,
     * the rest integer arithmetic (universal-hash family, mirrored exactly
-    * by the oracle SQL). */
+    * by the oracle SQL). Each row's signature comes from one pass over its
+    * text ([[graft.functions.MinhashSignature]]); the per-doc min then
+    * merges the rows of a repeated id, one signature row per input row. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, k: Int = 3): DataFrame = {
-    // Widen the raw scan first — see ngramJaccardPairsCapped.
-    val ex = Par.widen(df)
+    // Widen the raw scan first — see hashedShingleSets.
+    val sig = Par.widen(df)
       .where(size(split(col(textCol), " ")) >= k)
-      .select(col(idCol).as("doc"), explode(shingles(col(textCol), k)).as("sg"))
-      .select(col("doc"), (hash60(col("sg")) % MinhashP).as("hm"))
-    val hashCols = (0 until numHashes).map(j =>
-      min((lit(minhashA(j)) * col("hm") + minhashB(j)) % MinhashP).as(s"h$j"))
-    ex.groupBy("doc").agg(hashCols.head, hashCols.tail: _*)
+      .select(col(idCol).as("doc"), ColumnBridge.column(MinhashSignature(
+        ColumnBridge.expression(col(textCol)), k, numHashes)).as("sig"))
+    val hashCols = (0 until numHashes).map(j => min(col("sig")(j)).as(s"h$j"))
+    sig.groupBy("doc").agg(hashCols.head, hashCols.tail: _*)
   }
 
   /** Band-exploded signature rows (doc, carried…, band, bh), spread on

@@ -754,29 +754,22 @@ final class PcaKernel(val mean: Array[Double],
   * ([[graft.streaming.StreamingIngest.lmGateStream]]): the pair table is
   * up to B² entries, far past array-literal territory, so it rides as a
   * reference object in one fused kernel instead (the [[PcaKernel]]
-  * pattern). Hashing matches the engine/SQL convention exactly — md5 of
-  * "lm:"+token, first 15 hex chars as a long, mod B — and the weight sum
+  * pattern). Hashing matches the engine/SQL convention exactly —
+  * [[TextKernels.hash60]] of "lm:"+token, mod B — and the weight sum
   * is integer, so the kernel's output equals [[graft.text.NgramLm.score]]
   * value-for-value on the same row (StreamingSpec-gated). */
 final class LmScoreKernel(val pairs: java.util.HashMap[java.lang.Long, java.lang.Long],
     val ctxDefault: Array[Long], val b: Int) extends Serializable {
-  // one digest instance per score() call — digest() resets it, so the
-  // per-token cost is the hash alone, not an allocation
-  private def bucket(md: java.security.MessageDigest, tok: String): Int = {
-    val hex = md.digest(("lm:" + tok).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(15)
-    (java.lang.Long.parseLong(hex, 16) % b).toInt
-  }
+  private def bucket(tok: String): Int = (TextKernels.hash60("lm:" + tok) % b).toInt
   def score(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
     val toks = text.toString.split(" ", -1)
     var n = 0L
     var z = 0L
     if (toks.length >= 2) {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      var b1 = bucket(md, toks(0))
+      var b1 = bucket(toks(0))
       var i = 1
       while (i < toks.length) {
-        val b2 = bucket(md, toks(i))
+        val b2 = bucket(toks(i))
         val w = pairs.get((b1.toLong << 32) | b2.toLong)
         z += (if (w ne null) w.longValue() else ctxDefault(b1))
         n += 1L

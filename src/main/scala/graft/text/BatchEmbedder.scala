@@ -69,18 +69,6 @@ object BatchEmbedder {
     loaded
   }
 
-  /** JVM mirror of `conv(substring(md5(s), 1, 15), 16, 10)` — the token
-    * hash the codegen featurizer uses ([[graft.dedup.Dedup.hash60]]). */
-  private[graft] def hash60(token: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(token.getBytes("UTF-8"))
-    var h = 0L
-    var i = 0
-    // first 15 hex chars = the high 60 bits = 7.5 bytes
-    while (i < 7) { h = (h << 8) | (md(i) & 0xffL); i += 1 }
-    (h << 4) | ((md(7) & 0xf0L) >> 4)
-  }
-
   /** JVM mirror of the [[graft.functions.ModelExpressions.hashEmbed]]
     * kernel: signed unit votes into `h mod buckets`, sign from bit 8. */
   private[graft] def features(text: String, buckets: Int): Array[Double] = {
@@ -89,7 +77,7 @@ object BatchEmbedder {
     val toks = text.toLowerCase(java.util.Locale.ROOT).split(" ", -1)
     var i = 0
     while (i < toks.length) {
-      val h = hash60(toks(i))
+      val h = graft.functions.TextKernels.hash60(toks(i))
       val b = (h % buckets).toInt
       if (b >= 0) acc(b) += (if (((h >> 8) & 1L) == 1L) 1.0 else -1.0)
       i += 1

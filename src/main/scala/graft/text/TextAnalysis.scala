@@ -279,21 +279,14 @@ object TextAnalysis {
     when(allZero, lit("und")).otherwise(cases)
   }
 
-  /** Raw word n-grams WITH multiplicity (unlike [[graft.dedup.Dedup.shingles]],
-    * which deduplicates for set-similarity). Repetition metrics need the
-    * duplicates — they ARE the signal. Callers filter docs with < n tokens
-    * (Spark `sequence(0, negative)` would count downward, not yield empty). */
-  def rawNgrams(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    transform(sequence(lit(0), size(toks) - n), i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-  }
-
   /** Duplicate n-gram fraction (Gopher-style repetition filter): 1 −
-    * distinct/total over the doc's raw n-grams. High values flag boilerplate
-    * and degenerate repetition that survives dedup (repetition is WITHIN a
-    * document, not across documents). */
+    * distinct/total over the doc's raw n-grams ([[graft.dedup.Dedup.ngrams]],
+    * WITH multiplicity: the duplicates are the signal). High values flag
+    * boilerplate and degenerate repetition that survives dedup (repetition
+    * is WITHIN a document, not across documents). Callers filter docs with
+    * < n tokens, which have no n-grams. */
   def dupNgramFrac(text: Column, n: Int): Column = {
-    val g = rawNgrams(text, n)
+    val g = graft.dedup.Dedup.ngrams(text, n)
     lit(1.0) - size(array_distinct(g)).cast("double") / size(g).cast("double")
   }
 

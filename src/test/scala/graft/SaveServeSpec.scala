@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.api.VectorDb
@@ -118,6 +119,33 @@ class SaveServeSpec extends SparkSpec {
     assert(cachedCopies === 1)
     assert(brute(loaded) === mutated)
     assert(brute(VectorDb.load(spark, dir, Dim)) === mutated)
+  }
+
+  test("a fresh facade's save writes its inserted rows without caching them first") {
+    val db = chunked()
+    db.buildIvfIndex(k = 4)
+    val expected = (brute(db), ivf(db))
+    // per job of the save, in order: its call site and whether any of its
+    // stages reads or builds a cached RDD
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        jobs += ((e.stageInfos.maxBy(_.stageId).name,
+          e.stageInfos.exists(_.rddInfos.exists(_.storageLevel.isValid))))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      db.save(tempDir("graft_save_fresh"))
+      org.apache.spark.grafttest.ListenerBridge.waitUntilEmpty(spark.sparkContext, 30000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val seen = listener.synchronized(jobs.toList)
+    // the re-reads of the saved files are cached and counted last; every
+    // job before the first count writes straight from the inserted rows
+    val firstCount = seen.indexWhere(_._1.startsWith("count at"))
+    assert(firstCount > 0, s"the save caches before it writes: $seen")
+    assert(seen.take(firstCount).forall(!_._2), s"a write read or built a cache: $seen")
+    assert((brute(db), ivf(db)) === expected)
   }
 
   test("batchInsert adds no empty partitions: 10 single-row inserts add 10") {
