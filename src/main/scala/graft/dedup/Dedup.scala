@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.{Hash60, MinhashSignature, WordNgrams}
+import graft.functions.{Hash60, MinhashSignature, SignatureMatches, WordNgrams}
 import graft.operators.Par
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -28,9 +28,9 @@ import graft.operators.Par
   *    run it first to shrink the input to the fuzzy stages.
   *  - Shingle-join candidate generation is quadratic per shingle bucket
   *    ([[ngramJaccardPairs]], kept as the exactness twin); the scale path
-  *    is MinHash bands — constant fan-out per doc, md5-uniform bucket
-  *    keys, no skew salting — with the true Jaccard recomputed on the
-  *    candidates ([[ngramJaccardPairsBanded]]).
+  *    is MinHash bands — constant fan-out per doc, exact band-slice
+  *    bucket keys, no skew salting — with the true Jaccard recomputed on
+  *    the candidates ([[ngramJaccardPairsBanded]]).
   *  - SimHash pair generation blocks on pigeonhole bit-bands of the
   *    fingerprint (hamming ≤ k ⇒ some band of bits/(k+1) bits matches
   *    exactly), so it is equi-join-shaped and EXACT ([[simhashPairs]]).
@@ -61,8 +61,8 @@ object Dedup {
     * bands), then the TRUE Jaccard is recomputed over the full
     * distinct-shingle sets with array_intersect, so reported similarities
     * are exact. Candidate cost is O(n · numHashes) bucket rows — constant
-    * fan-out per doc — instead of the Σdf² of a shingle self-join, and the
-    * band keys are md5-uniform so no bucket skew. The only approximation is
+    * fan-out per doc — instead of the Σdf² of a shingle self-join, keyed by
+    * the exact minhash value (no bucket skew). The only approximation is
     * candidate recall: a pair with true Jaccard j agrees on any one minhash
     * with probability j, so it is missed with probability (1−j)^numHashes —
     * ≤ 2⁻³² at j ≥ 0.5 with the default 32 hashes, far below the one-pair
@@ -420,21 +420,23 @@ object Dedup {
     sig.groupBy("doc").agg(hashCols.head, hashCols.tail: _*)
   }
 
-  /** Band-exploded signature rows (doc, carried…, band, bh), spread on
-    * the join keys — the shared candidate-generation input of
-    * [[bandedCandidatePairs]] and [[lshCandidatePairs]]. `sig` must carry
-    * columns h0..h{numHashes-1}; fan-out is exactly `bands` bucket rows
-    * per doc, and band keys are md5-uniform (no skew salting needed).
-    * Spread unconditionally: sig is post-shuffle (groupBy output), and
-    * AQE would otherwise coalesce it to one partition by bytes and
-    * serialize the band self-join. */
+  /** Band-exploded signature rows (doc, sig if `carrySig`, band, bh),
+    * spread on the join keys: the candidate input of [[bandedCandidatePairs]],
+    * [[lshCandidatePairs]] and [[lshIncrementalPairs]]. `sig` must carry
+    * columns h0..h{numHashes-1}; each doc gets `bands` bucket rows. Band b's
+    * key `bh` is its exact slice `array(h_{b·r}, …, h_{b·r+r−1})`: docs share
+    * a bucket iff they agree on the whole band, and no digest is computed. */
   private def bandedExploded(sig: DataFrame, numHashes: Int, bands: Int,
-      carry: Seq[Column]): DataFrame = {
+      carrySig: Boolean): DataFrame = {
     val rpb = numHashes / bands
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
-    val bandCols = (0 until bands).map { b =>
-      md5(concat_ws(",", (0 until rpb).map(r => col(s"h${b * rpb + r}").cast("string")): _*))
-    }
+    val hs = (0 until numHashes).map(j => col(s"h$j"))
+    val bandCols = (0 until bands).map(b => array(hs.slice(b * rpb, (b + 1) * rpb): _*))
+    val carry = if (carrySig) Seq(array(hs: _*).as("sig")) else Nil
+    // Spread unconditionally: sig is post-shuffle (groupBy output), which AQE
+    // would coalesce to one partition by bytes, serializing the band join.
+    // Over a cached `sig` each self-join side runs this exchange on its own:
+    // AQE reuses no exchange above a cached-table scan.
     Par.spread(
       sig.select(col("doc") +: carry :+
         posexplode(array(bandCols: _*)).as(Seq("band", "bh")): _*),
@@ -452,11 +454,11 @@ object Dedup {
     * matches exactly once (the build replica carrying the probe row's
     * salt), but the per-task pair work drops S×. Cost: S× build-side
     * shuffle bytes and no self-join exchange reuse, which is why it is
-    * opt-in — md5-uniform band keys (this file's default pipelines) don't
-    * need it. NOTE this is OUR skew guard, not AQE's: the width-pinning
-    * repartitions (REPARTITION_BY_NUM) that protect these quadratic
-    * stages from byte-based coalescing also exempt them from AQE's
-    * skew-join splitting, so skew handling must be explicit. */
+    * opt-in: only mass-duplicated docs pile onto one band key. NOTE this
+    * is OUR skew guard, not AQE's: the width-pinning repartitions
+    * (REPARTITION_BY_NUM) that protect these quadratic stages from
+    * byte-based coalescing also exempt them from AQE's skew-join
+    * splitting, so skew handling must be explicit. */
   private def bandJoin(bl: DataFrame, skewSalt: Int = 1): DataFrame =
     saltedSelfJoin(bl, Seq("band", "bh"), "doc", skewSalt)
 
@@ -490,36 +492,37 @@ object Dedup {
   /** Distinct candidate pairs sharing at least one signature band. */
   private[graft] def bandedCandidatePairs(sig: DataFrame, numHashes: Int,
       bands: Int, skewSalt: Int = 1): DataFrame =
-    bandJoin(bandedExploded(sig, numHashes, bands, Nil), skewSalt)
+    bandJoin(bandedExploded(sig, numHashes, bands, carrySig = false), skewSalt)
       .select(col("a.doc").as("da"), col("b.doc").as("db"))
       .distinct()
 
-  /** LSH candidate pairs: docs sharing any band (band hash = md5 of the
-    * band's signature slice), with estimated Jaccard = matching-hash
-    * fraction of the two signatures.
+  /** LSH candidate pairs: docs sharing any band (the band's exact
+    * signature slice), with estimated Jaccard = matching-hash fraction of
+    * the two signatures.
     *
-    * The signature columns RIDE THROUGH the band join (packed as one
-    * array, ~numHashes longs per band row) and `est_jaccard` is computed
-    * in place, so the pair never re-joins back to `sig` — one exchange +
-    * one join + one distinct, instead of the join → distinct → two
-    * signature re-joins shape (which the round-3 driver bench measured at
-    * 3× the round-2 time of this exact query). A (da, db) pair surfacing
-    * from several bands yields identical (est) rows, so the distinct on
-    * the projected output keeps pair semantics. */
+    * Each band row carries its doc's whole signature (one array of
+    * numHashes longs) through the band join and `est_jaccard` is computed
+    * in place, so the pair never re-joins back to `sig` — one join + one
+    * distinct, instead of the join → distinct → two signature re-joins
+    * shape (which the round-3 `graft.Bench` run measured at 3× the
+    * round-2 time of this exact query). A (da, db) pair surfacing from several
+    * bands yields identical (est) rows, so the distinct on the projected
+    * output keeps pair semantics. */
   def lshCandidatePairs(sig: DataFrame, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, skewSalt: Int = 1): DataFrame = {
-    val sigArr = array((0 until numHashes).map(j => col(s"h$j")): _*)
-    val bl = bandedExploded(sig, numHashes, bands, Seq(sigArr.as("sig")))
-    val est = (0 until numHashes)
-      .map(j => when(col("a.sig")(j) === col("b.sig")(j), 1).otherwise(0))
-      .reduceLeft[Column](_ + _)
-      .cast("double") / lit(numHashes.toDouble)
-    bandJoin(bl, skewSalt)
+      threshold: Double = 0.5, skewSalt: Int = 1): DataFrame =
+    bandJoin(bandedExploded(sig, numHashes, bands, carrySig = true), skewSalt)
       .select(col("a.doc").as("da"), col("b.doc").as("db"),
-        round(est, 6).as("est_jaccard"))
+        estJaccard(numHashes).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
       .distinct()
-  }
+
+  /** Matching-hash fraction of the joined signatures `a.sig` and `b.sig`,
+    * counted by one [[graft.functions.SignatureMatches]] loop (a term per
+    * position would push the join stage's generated method past the JIT's
+    * size limit), rounded to 6 places. */
+  private def estJaccard(numHashes: Int): Column = round(ColumnBridge.column(SignatureMatches(
+    ColumnBridge.expression(col("a.sig")), ColumnBridge.expression(col("b.sig"))))
+    .cast("double") / lit(numHashes.toDouble), 6)
 
   /** Incremental LSH dedup — the daily-increment production shape: match a
     * DELTA batch's signatures against an existing corpus signature layout
@@ -548,9 +551,8 @@ object Dedup {
   def lshIncrementalPairs(deltaSig: DataFrame, corpusSig: DataFrame,
       numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5,
       skewSalt: Int = 1): DataFrame = {
-    val sigArr = array((0 until numHashes).map(j => col(s"h$j")): _*)
-    val dl0 = bandedExploded(deltaSig, numHashes, bands, Seq(sigArr.as("sig")))
-    val cl0 = bandedExploded(corpusSig, numHashes, bands, Seq(sigArr.as("sig")))
+    val dl0 = bandedExploded(deltaSig, numHashes, bands, carrySig = true)
+    val cl0 = bandedExploded(corpusSig, numHashes, bands, carrySig = true)
     val (dl, cl, saltEq) =
       if (skewSalt <= 1) (dl0, cl0, lit(true))
       else {
@@ -561,15 +563,11 @@ object Dedup {
           col("band"), col("bh"), col("salt"))
         (d, c, col("a.salt") === col("b.salt"))
       }
-    val est = (0 until numHashes)
-      .map(j => when(col("a.sig")(j) === col("b.sig")(j), 1).otherwise(0))
-      .reduceLeft[Column](_ + _)
-      .cast("double") / lit(numHashes.toDouble)
     dl.hint("shuffle_hash").as("a").join(cl.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("a.doc") =!= col("b.doc") && saltEq)
       .select(col("a.doc").as("new_doc"), col("b.doc").as("dup_of"),
-        round(est, 6).as("est_jaccard"))
+        estJaccard(numHashes).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
       .distinct()
   }

@@ -3,7 +3,8 @@ package graft.functions
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -11,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass word k-gram and md5-hash kernels of the dedup and text layers
   * ([[graft.dedup.Dedup.ngrams]], `shingles`, `hash60`,
-  * `minhashSignatures`).
+  * `minhashSignatures`), and the signature match count of the LSH pair
+  * stages ([[signatureMatches]]).
   *
   * Tokens follow Spark's `split(text, " ")`: the text splits on every
   * byte 0x20 and empty tokens (double, leading and trailing spaces) are
@@ -94,6 +96,21 @@ object TextKernels {
     }
     new GenericArrayData(out.toArray)
   }
+
+  /** Number of positions j below both lengths at which `a(j)` and `b(j)`
+    * are equal non-null longs: Σ_j `CASE WHEN a[j] = b[j] THEN 1 ELSE 0
+    * END` as one loop, so the generated code calls it instead of inlining
+    * a term per position. */
+  def signatureMatches(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var m = 0
+    var j = 0
+    while (j < n) {
+      if (!a.isNullAt(j) && !b.isNullAt(j) && a.getLong(j) == b.getLong(j)) m += 1
+      j += 1
+    }
+    m
+  }
 }
 
 /** MinHash signature of one text's word k-grams under the hash family of
@@ -173,4 +190,22 @@ case class MinhashSignature(child: Expression, k: Int, numHashes: Int)
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "minhash_signature"
+}
+
+/** `INT` count of the positions at which two `ARRAY<BIGINT>` MinHash
+  * signatures agree ([[TextKernels.signatureMatches]]); the numerator of
+  * the LSH pair stages' estimated Jaccard. */
+case class SignatureMatches(left: Expression, right: Expression)
+    extends BinaryExpression with KernelInputCheck {
+  override protected def expected: Seq[Option[DataType]] =
+    Seq(Some(ArrayType(LongType)), Some(ArrayType(LongType)))
+  override def dataType: DataType = IntegerType
+  override def nullSafeEval(a: Any, b: Any): Any =
+    TextKernels.signatureMatches(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.TextKernels.signatureMatches($a, $b);")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+  override def prettyName: String = "signature_matches"
 }

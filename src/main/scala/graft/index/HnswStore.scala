@@ -776,7 +776,10 @@ object HnswStore {
     * centroid per built shard, so a derived-count layout probes half the
     * shards it actually has. */
   def defaultRule(spark: SparkSession, path: String): ProbeRule =
-    readRouting(spark, path).fold[ProbeRule](AllShards)(centroids =>
+    defaultRule(readRouting(spark, path))
+
+  private def defaultRule(routing: Option[Array[Array[Double]]]): ProbeRule =
+    routing.fold[ProbeRule](AllShards)(centroids =>
       Nearest(math.max(2, centroids.length / 2)))
 
   private def routingModel(spark: SparkSession, path: String): Ivf.IvfModel =
@@ -812,9 +815,24 @@ object HnswStore {
     * by routing (an accepted neighbour in an unprobed shard is missed). */
   def search(spark: SparkSession, path: String, query: Seq[Double], k: Int,
       rule: ProbeRule = AllShards, accept: Long => Boolean = null,
-      efSearch: Int = 128, idCol: String = "id"): DataFrame = {
+      efSearch: Int = 128, idCol: String = "id"): DataFrame =
+    searchShards(spark, path, query, k, rule.shards(routingModel(spark, path), query, k),
+      accept, efSearch, idCol)
+
+  /** [[search]] under the layout's [[defaultRule]], reading the routing
+    * sidecar once for both the rule and its probe list. */
+  private[graft] def searchDefault(spark: SparkSession, path: String,
+      query: Seq[Double], k: Int, efSearch: Int, idCol: String): DataFrame = {
+    val routing = readRouting(spark, path)
+    val parts = defaultRule(routing).shards(
+      Ivf.IvfModel(routing.getOrElse(throw noRouting(path))), query, k)
+    searchShards(spark, path, query, k, parts, null, efSearch, idCol)
+  }
+
+  private def searchShards(spark: SparkSession, path: String, query: Seq[Double],
+      k: Int, parts: Option[Seq[Int]], accept: Long => Boolean, efSearch: Int,
+      idCol: String): DataFrame = {
     import spark.implicits._
-    val parts = rule.shards(routingModel(spark, path), query, k)
     ranked(served(spark, path, parts)(
       RestoreGroup.search(query.toArray, k, efSearch, accept)), k, idCol)
   }

@@ -209,11 +209,10 @@ object StreamingIngest {
       query: Seq[Double], k: Int, efSearch: Int = 128,
       vecCol: String = "vector", idCol: String = "id"): DataFrame = {
     // the graph leg probes the layout's default shards (the top half of a
-    // routed layout's, rest pruned — the facade's rule); the delta leg is
-    // an exact scan either way
-    val graphCand = graft.index.HnswStore.search(spark, graphPath, query, k,
-      graft.index.HnswStore.defaultRule(spark, graphPath), efSearch = efSearch,
-      idCol = idCol)
+    // routed layout's, rest pruned — the facade's rule), reading the routing
+    // sidecar once per query; the delta leg is an exact scan either way
+    val graphCand = graft.index.HnswStore.searchDefault(spark, graphPath, query, k,
+      efSearch, idCol)
     if (!graft.store.Fs.exists(spark, deltaPath)) return graphCand
     val deltaScored = spark.read.parquet(deltaPath)
       .withColumn("sim", round(

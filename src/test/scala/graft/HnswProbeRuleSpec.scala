@@ -49,6 +49,20 @@ class HnswProbeRuleSpec extends SparkSpec {
     finally bare.unpersist()
   }
 
+  test("the default-rule serve answers as search under defaultRule, routed and hash-sharded") {
+    val vecs = VectorModel.lineitemVectors(spark, Sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_default").toString
+    HnswStore.saveRouted(vecs, s"$dir/routed", numShards = 8, m = 24, efConstruction = 120)
+    HnswStore.save(vecs, s"$dir/hashed", m = 24, efConstruction = 120, numPartitions = 4)
+    for (path <- Seq(s"$dir/routed", s"$dir/hashed"); q <- queries) {
+      val rule = HnswStore.defaultRule(spark, path)
+      assert(pairs(HnswStore.searchDefault(spark, path, q, 10, 128, "id")) ===
+        pairs(HnswStore.search(spark, path, q, 10, rule)), s"$path under $rule")
+    }
+    assert(HnswStore.defaultRule(spark, s"$dir/routed") === Nearest(4))
+    assert(HnswStore.defaultRule(spark, s"$dir/hashed") === AllShards)
+  }
+
   test("a derived-shard routed facade probes half its built shards, the same before and after save/load") {
     val dim = 16
     val rng = new java.util.Random(11)

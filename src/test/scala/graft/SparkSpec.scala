@@ -2,7 +2,10 @@ package graft
 
 import scala.util.chaining._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base — one SparkSession per suite (lazy), config matching
@@ -23,4 +26,24 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.warehouse.dir", s"/tmp/graft_warehouse_${java.util.UUID.randomUUID()}")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Bytecode size of the largest generated method over every whole-stage
+    * codegen stage of `df`'s final adaptive plan (`df` is collected first
+    * so AQE settles that plan). HotSpot never JIT-compiles a method over
+    * [[HugeMethodBytes]], so a stage above it runs in the interpreter. */
+  def maxCodegenMethodBytes(df: DataFrame): Int = {
+    df.collect()
+    val stages = SparkSpec.planHelper.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w
+    }
+    assert(stages.nonEmpty, s"no whole-stage codegen in\n${df.queryExecution.executedPlan}")
+    stages.map(w => CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize).max
+  }
+
+  /** HotSpot's `-XX:+DontCompileHugeMethods` limit, in bytes. */
+  val HugeMethodBytes = 8000
+}
+
+object SparkSpec {
+  private val planHelper = new AdaptiveSparkPlanHelper {}
 }

@@ -3,18 +3,21 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
-import graft.functions.TextKernels
+import graft.functions.{SignatureMatches, TextKernels}
 
 /** The one-pass text kernels behind `Dedup.ngrams`, `shingles`, `hash60`
-  * and `minhashSignatures` are bit-identical to the column expressions
-  * they replaced (inlined below as the parity mirror, as CosineSpec keeps
-  * `cosineConst`), under whole-stage codegen and interpreted evaluation. */
+  * and `minhashSignatures`, and the LSH stages' signature match count, are
+  * bit-identical to the column expressions they replaced (inlined below as
+  * the parity mirror, as CosineSpec keeps `cosineConst`), under whole-stage
+  * codegen and interpreted evaluation. */
 class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // ---- the replaced column expressions -------------------------------
@@ -75,6 +78,31 @@ class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private lazy val allTexts = edgeTexts ++ corpusTexts
+
+  private val SigLen = 32
+
+  /** Signature pairs of length [[SigLen]]: all-equal, none-equal, null
+    * elements, and 600 seeded pairs over a 3-value alphabet (matches
+    * everywhere from none to all), half of them a perturbed copy. */
+  private lazy val sigPairs: DataFrame = {
+    val rng = new scala.util.Random(20261019L)
+    def draw(): Seq[java.lang.Long] = Seq.fill(SigLen)(Long.box(rng.nextInt(3).toLong))
+    def fill(v: java.lang.Long) = Seq.fill(SigLen)(v)
+    val fixed = Seq(fill(5L) -> fill(5L), fill(1L) -> fill(2L), fill(null) -> fill(null),
+      fill(7L) -> fill(7L).updated(3, null), draw().updated(0, null) -> draw())
+    val seeded = Seq.fill(600) {
+      val a = draw()
+      a -> (if (rng.nextBoolean()) draw()
+        else a.map(x => if (rng.nextInt(4) == 0) Long.box(x + 1) else x))
+    }
+    val sig = ArrayType(LongType, containsNull = true)
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      (fixed ++ seeded).map { case (a, b) => Row(a, b) }, 4),
+      StructType(Seq(StructField("a", sig), StructField("b", sig))))
+  }
+
+  private def signatureMatches(a: Column, b: Column): Column = ColumnBridge.column(
+    SignatureMatches(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   // ---- evaluation modes -------------------------------------------------
 
@@ -154,6 +182,20 @@ class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
     }
 
+    test(s"SignatureMatches equals the per-position CASE WHEN sum ($mode)") {
+      withConf(conf) {
+        val caseSum = (0 until SigLen)
+          .map(j => when(col("a")(j) === col("b")(j), 1).otherwise(0))
+          .reduceLeft[Column](_ + _)
+        val got = run(mode, sigPairs.select(
+          signatureMatches(col("a"), col("b")).as("m"), caseSum.as("want")))
+        assert(got.forall(r => r.getInt(0) == r.getInt(1)),
+          got.filter(r => r.getInt(0) != r.getInt(1)).take(3).mkString("; "))
+        val counts = got.map(_.getInt(0)).toSet
+        assert(counts(0) && counts(SigLen) && counts(SigLen - 1), counts)
+      }
+    }
+
     test(s"minhashSignatures equals the exploded shingle aggregation for every k ($mode)") {
       withConf(conf) {
         // ids repeat: every 7th doc shares its id with the doc before it
@@ -167,6 +209,14 @@ class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         }
       }
     }
+  }
+
+  test("SignatureMatches counts over the shorter array and is null on a null array") {
+    def arr(xs: Long*) = ArrayData.toArrayData(xs.toArray)
+    assert(TextKernels.signatureMatches(arr(1, 2, 3), arr(1, 5)) === 1)
+    assert(TextKernels.signatureMatches(arr(), arr(1)) === 0)
+    val df = spark.sql("SELECT CAST(NULL AS ARRAY<BIGINT>) AS a, ARRAY(1L) AS b")
+    assert(df.select(signatureMatches(col("a"), col("b"))).head().isNullAt(0))
   }
 
   test("texts shorter than k give no grams where the old expression threw") {
