@@ -115,7 +115,7 @@ object RecallBench {
       LshAnn.searchMulti(mtBucketed, mtTables, q, k, vecCol = "embedding", idCol = "vec_id")
         .select("vec_id"))
     val lshMtScanned = queries.map(q =>
-      LshAnn.scannedFraction(mtBucketed, mtTables, q)).sum / numQueries
+      LshAnn.scannedFraction(mtBucketed, mtTables, q, k)).sum / numQueries
     // STORED multi-table LSH — the single-copy inverted-list layout the
     // ann_lsh_* queries actually serve from (pointer-fetch join included);
     // candidate semantics equal searchMulti, so recall must match it
@@ -132,18 +132,16 @@ object RecallBench {
     // harness's k the equivalent overscan is mass/k, since LSH recall
     // tracks candidate MASS, not k (DevLshTune k=10/k=20 grids coincide
     // at equal mass)
-    val lshStoredSizes = LshAnn.bucketSizes(lshStoredFrame)
-    val lshServingMass = LshAnn.DefaultOverscan * 20L
+    val lshAdaptive = LshAnn.Adaptive(LshAnn.bucketSizes(lshStoredFrame),
+      LshAnn.DefaultOverscan * 20 / k)
     val (lshAdaptMs, lshAdaptRes) = timeAll(q =>
-      LshAnn.searchStoredAdaptive(lshStoredFrame, lshStoredModel, q, k,
-        lshStoredSizes, overscan = (lshServingMass / k).toInt,
+      LshAnn.searchStored(lshStoredFrame, lshStoredModel, q, k, lshAdaptive,
         vecCol = "embedding", idCol = "vec_id")
         .select("vec_id"))
     val lshAdaptBucketed = LshAnn.withTableBuckets(data, "embedding", lshStoredModel)
-    val lshAdaptScanned = queries.map { q =>
-      LshAnn.scannedFractionForSets(lshAdaptBucketed,
-        LshAnn.probeSetsAdaptive(q, lshStoredModel, lshStoredSizes, lshServingMass))
-    }.sum / numQueries
+    val lshAdaptScanned = queries.map(q =>
+      LshAnn.scannedFraction(lshAdaptBucketed, lshStoredModel, q, k, lshAdaptive)
+    ).sum / numQueries
     // centroid-routed stored-HNSW: probes=4 of 8 shards vs the all-shards
     // fan-out over the SAME layout (isolates the routing loss)
     val routedDir = graft.store.Fs.scratchDir(spark, "graft_recall_routed") + "/g"

@@ -729,10 +729,11 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     val model = lshModel.get
     val layout = lshLayoutFrame(root)
     if (!lshMutated && lshCoveredUpTo == nextId && filter.isEmpty)
-      graft.index.LshAnn.searchStored(layout, model, query, topK, probes)
+      graft.index.LshAnn.searchStored(layout, model, query, topK,
+        graft.index.LshAnn.Directed(probes))
     else {
       val candIds = graft.index.LshAnn.searchStored(layout, model, query,
-        topK * FilterOverfetch, probes).select(col("id"))
+        topK * FilterOverfetch, graft.index.LshAnn.Directed(probes)).select(col("id"))
       val deltaIds = data.where(col("id") >= lshCoveredUpTo).select(col("id"))
       val subset = data.join(candIds.union(deltaIds).distinct(), Seq("id"))
       VectorSearch.bruteForceTopK(subset, query, topK, filter)
@@ -1295,7 +1296,8 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
           // instead of the merge fold crashing on an empty reduce): the
           // whole batch in one union-pruned scan of the stored lists
           graft.index.LshAnn.batchSearchStored(lshLayoutFrame(root),
-            lshModel.get, indexed, topK)
+            lshModel.get, indexed, topK,
+            graft.index.LshAnn.Directed(graft.index.LshAnn.DefaultProbes))
         else {
           // post-write/filtered: per-query merge path (correctness over
           // batching, like the fresh-HNSW fallback); maintenance folds
@@ -1347,20 +1349,16 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     *    per row (stop at overscan·topK candidate rows);
     *  - hnsw (routed): [[graft.index.Ivf.IvfModel.probeClustersByMargin]]
     *    per row over the routing sidecar + per-shard stats;
-    *  - lsh: the margin-ranked flip walk
-    *    ([[graft.index.LshAnn.bigBatchSearchStoredAdaptive]]) at
-    *    [[graft.index.LshAnn.DefaultOverscan]]·topK candidate mass —
-    *    NOTE this is a different (higher-recall) operating point than the
-    *    closed-form radius-1 budget earlier rounds served; `adaptive =
-    *    false` restores radius-1, and the collected [[batchSearch]]
-    *    dispatch serves the fixed [[graft.index.LshAnn.DefaultProbes]]
-    *    multi-probe budget — the knob that aligns the two modes.
+    *  - lsh: [[graft.index.LshAnn.Adaptive]], the margin-ranked flip walk
+    *    stopping at [[graft.index.LshAnn.DefaultOverscan]]·topK candidate
+    *    mass ([[graft.index.LshAnn.bigBatchSearchStored]]).
     *
     * `adaptive = false` pins the fixed budgets (ivf max(k/2,8) probes,
     * hnsw the layout's [[graft.index.HnswStore.defaultRule]], lsh
-    * radius-1). The per-layout statistics the walks need (cluster/bucket
-    * sizes, shard stats) are computed once and memoized until the next
-    * write/rebuild. */
+    * `Directed(DefaultProbes)`), so each family answers as the collected
+    * [[batchSearch]] does. The per-layout statistics the walks need
+    * (cluster/bucket sizes, shard stats) are computed once and memoized
+    * until the next write/rebuild. */
   def batchSearchDf(queries: DataFrame, topK: Int = 5,
       method: String = "brute_force", efSearch: Int = 128,
       adaptive: Boolean = true, overscan: Int = -1,
@@ -1431,15 +1429,11 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
           throw new IllegalStateException(
             "big-batch LSH serves from a CLEAN layout: run " +
               "maintainIndexes() after writes")
-        val layout = lshLayoutFrame(root)
-        if (adaptive)
-          graft.index.LshAnn.bigBatchSearchStoredAdaptive(layout,
-            lshModel.get, q0, topK, lshSizesOf(root),
-            overscan = lshScan,
-            acceptIds = acceptFrame)
-        else
-          graft.index.LshAnn.bigBatchSearchStored(layout,
-            lshModel.get, q0, topK, probeRadius = 1, acceptIds = acceptFrame)
+        val rule =
+          if (adaptive) graft.index.LshAnn.Adaptive(lshSizesOf(root), lshScan)
+          else graft.index.LshAnn.Directed(graft.index.LshAnn.DefaultProbes)
+        graft.index.LshAnn.bigBatchSearchStored(lshLayoutFrame(root),
+          lshModel.get, q0, topK, rule, acceptIds = acceptFrame)
       case other => throw new IllegalArgumentException(
         s"unknown big-batch method '$other' (expected brute_force|hnsw|ivf|ivfpq|lsh)")
     }
@@ -1476,8 +1470,8 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
         hnswStatsMemo = Some((key, st)); st
     }
   }
-  private var lshSizesMemo: Option[(String, Map[(Int, Int), Long])] = None
-  private def lshSizesOf(root: String): Map[(Int, Int), Long] = {
+  private var lshSizesMemo: Option[(String, Array[Array[Long]])] = None
+  private def lshSizesOf(root: String): Array[Array[Long]] = {
     val cur = graft.index.LshAnn.currentLayout(spark, root)
     lshSizesMemo match {
       case Some((dir, sz)) if dir == cur => sz

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.{Hash60, MinhashSignature, SignatureMatches, WordNgrams}
+import graft.functions.{Hash60, MinhashSignature, SignatureMatches, SimhashSignature, WordNgrams}
 import graft.operators.Par
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -573,21 +573,17 @@ object Dedup {
   }
 
   /** 60-bit SimHash over distinct shingles: bit b is the sign of the sum of
-    * ±1 votes from each shingle's hash bit b. */
+    * ±1 votes from each shingle's hash bit b. One row per input row with
+    * at least k tokens, from one pass over its text
+    * ([[graft.functions.SimhashSignature]]); ids are expected unique, as
+    * the pair stages key on them. */
   def simhash(df: DataFrame, idCol: String, textCol: String, k: Int = 3,
-      bits: Int = 60): DataFrame = {
+      bits: Int = 60): DataFrame =
     // Widen the raw scan first — see ngramJaccardPairsCapped.
-    val ex = Par.widen(df)
+    Par.widen(df)
       .where(size(split(col(textCol), " ")) >= k)
-      .select(col(idCol).as("doc"), explode(shingles(col(textCol), k)).as("sg"))
-      .select(col("doc"), hash60(col("sg")).as("hw"))
-    val voteCols = (0 until bits).map(b =>
-      sum(when(shiftright(col("hw"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"s$b"))
-    val votes = ex.groupBy("doc").agg(voteCols.head, voteCols.tail: _*)
-    votes.select(col("doc"),
-      (0 until bits).map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-        .reduceLeft[Column](_ + _).as("simhash"))
-  }
+      .select(col(idCol).as("doc"), ColumnBridge.column(SimhashSignature(
+        ColumnBridge.expression(col(textCol)), k, bits)).as("simhash"))
 
   /** Near-dup pairs by SimHash hamming distance ≤ maxHamming — EXACT, via
     * pigeonhole banding: the fingerprint is split into maxHamming+1
@@ -656,8 +652,9 @@ object Dedup {
 
   def simhashPairs(sh: DataFrame, maxHamming: Int = 12, bits: Int = 60,
       skewSalt: Int = 1): DataFrame = {
-    // sh is a groupBy output: spread on the join keys — AQE would otherwise
-    // coalesce it to one partition by bytes and serialize the band join.
+    // spread on the join keys: the band join would shuffle by them anyway,
+    // and an explicit width keeps AQE from coalescing a small input to one
+    // partition and serializing the band join.
     val bl = Par.spread(
       simhashBandRows(sh, maxHamming, bits),
       col("band"), col("bv"))

@@ -8,33 +8,31 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Executor-side mirror of the sign-LSH margin-ranked ADAPTIVE probe walk
-  * ([[graft.index.LshAnn.probeSetsAdaptive]]), evaluated per query ROW —
-  * the piece that lifts the DataFrame-native big-batch LSH path from the
-  * closed-form radius-≤1 budget (recall@10 0.233, RECALL.md round 10) to
-  * the SAME query-directed multi-probe operating point the collected
-  * paths serve with, without collecting anything query-sized.
-  *
-  * Arithmetic is IDENTICAL to the driver-side walk, step for step:
+/** The sign-LSH probe walk (Multi-Probe LSH, Lv et al., VLDB 2007): the
+  * one implementation behind every [[graft.index.LshAnn.ProbeRule]], run
+  * on the driver for the collected serves (`probeSets(Array[Double])`)
+  * and per query ROW inside codegen for the big-batch serve
+  * ([[LshProbeSets]]).
   *
   *  1. per-table bit margins — `dot(plane, q) - bias`, summed in
   *     ascending-dimension order;
   *  2. per-table cost-ranked bucket stream — every ≤`maxFlips`-bit flip
   *     mask of the query's own bucket, cost = Σ|margin| over flipped bits
   *     (ascending bit order), sorted by (cost, mask) with
-  *     `java.lang.Double.compare` (the total order Scala 2.13's
-  *     `sortBy` uses), truncated to `maxProbesPerTable`;
+  *     `java.lang.Double.compare`, truncated to `maxProbesPerTable`;
   *  3. one merged ascending-(cost, table, bucket) walk over all tables'
   *     streams, stopping once the probed buckets' cumulative row count
-  *     (`sizes`) reaches `minCandidates`, with every table's rank-0 own
-  *     bucket always included.
+  *     (`sizes(table)(bucket)`, 0 past the end of an array) reaches
+  *     `minCandidates`, with every table's rank-0 own bucket always
+  *     included.
   *
-  * Identical ranking + identical stop rule ⇒ identical probe SETS, so
-  * BigBatchSpec gates exact result parity against
-  * [[graft.index.LshAnn.batchSearchStoredAdaptive]].
+  * With `minCandidates = Long.MaxValue` the walk never stops, so each
+  * table probes exactly the `maxProbesPerTable` cheapest buckets of its
+  * stream — the directed rule. LshProbeRuleSpec checks both uses against
+  * a reference walk written out in the spec.
   *
   * The flip-mask list (≈Σ C(bits, 0..maxFlips) entries) is enumerated once
-  * at kernel construction; per row the kernel computes `tables·bits`
+  * at kernel construction; per query the kernel computes `tables·bits`
   * plane dots, scores the mask list per table, and sorts two ≤few-hundred
   * entry arrays — O(masks·log masks), independent of corpus size.
   * Probes are returned PACKED as `(table << PackShift) | bucket` ints
@@ -43,12 +41,12 @@ import org.apache.spark.sql.types._
   * (table, bucket) join keys.
   */
 final class LshProbeKernel(
-    val planes: Array[Array[Array[Double]]],
-    val biases: Array[Array[Double]],
-    val sizes: Array[Array[Long]],
-    val minCandidates: Long,
-    val maxProbesPerTable: Int,
-    val maxFlips: Int) extends Serializable {
+    planes: Array[Array[Array[Double]]],
+    biases: Array[Array[Double]],
+    sizes: Array[Array[Long]],
+    minCandidates: Long,
+    maxProbesPerTable: Int,
+    maxFlips: Int) extends Serializable {
 
   private val numTables = planes.length
   private val numBits = planes(0).length
@@ -56,18 +54,18 @@ final class LshProbeKernel(
   require(numBits <= LshProbeKernel.PackShift,
     s"numBits=$numBits exceeds the ${LshProbeKernel.PackShift}-bit pack width")
 
-  /** Ascending ≤`maxFlips`-bit flip masks — the driver-side enumeration
-    * order before the cost sort (mask 0 first: the own bucket). */
+  /** Ascending ≤`maxFlips`-bit flip masks (mask 0 first: the own bucket). */
   private val masks: Array[Int] =
     (0 until (1 << numBits)).filter(m => Integer.bitCount(m) <= maxFlips).toArray
 
-  private def checkLen(v: ArrayData): Unit =
-    if (v.numElements() < dim)
-      throw new IllegalArgumentException(
-        s"vector of ${v.numElements()} elements is shorter than the model dimension $dim")
+  def probeSets(v: ArrayData): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(probeSets(v.toDoubleArray()))
 
-  def probeSets(v: ArrayData): ArrayData = {
-    checkLen(v)
+  /** The packed probes of query `q`, in merged-walk order. */
+  def probeSets(q: Array[Double]): Array[Int] = {
+    if (q.length < dim)
+      throw new IllegalArgumentException(
+        s"vector of ${q.length} elements is shorter than the model dimension $dim")
     val nm = masks.length
     val take = math.min(nm, maxProbesPerTable)
     // merged entries across tables: (cost, rank, table, bucket)
@@ -86,7 +84,7 @@ final class LshProbeKernel(
       while (b < numBits) {
         val p = tp(b)
         var dot = 0.0; var i = 0
-        while (i < dim) { dot += p(i) * v.getDouble(i); i += 1 }
+        while (i < dim) { dot += p(i) * q(i); i += 1 }
         margins(b) = dot - tb(b)
         b += 1
       }
@@ -153,12 +151,14 @@ final class LshProbeKernel(
         val tt = eTable(en); val bb = eBucket(en)
         out(o) = (tt << LshProbeKernel.PackShift) | bb
         o += 1
-        val ts = sizes(tt)
-        cum += (if (bb < ts.length) ts(bb) else 0L)
+        if (tt < sizes.length) {
+          val ts = sizes(tt)
+          if (bb < ts.length) cum += ts(bb)
+        }
       }
       i += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, o))
+    java.util.Arrays.copyOf(out, o)
   }
 }
 
@@ -168,8 +168,8 @@ object LshProbeKernel {
   val PackShift = 20
 }
 
-/** `probe_sets(qvec)` — the packed (table, bucket) probe list of the
-  * margin-ranked adaptive walk, as a codegen'd expression (the
+/** `lsh_probe_sets(qvec)` — the packed (table, bucket) probe list of
+  * [[LshProbeKernel]], as a codegen'd expression (the
   * [[ProbeClustersAdaptive]] pattern: reference-object method call inside
   * whole-stage codegen, no UDF node). */
 case class LshProbeSets(child: Expression, kernel: LshProbeKernel)

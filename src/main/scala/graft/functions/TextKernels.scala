@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass word k-gram and md5-hash kernels of the dedup and text layers
   * ([[graft.dedup.Dedup.ngrams]], `shingles`, `hash60`,
-  * `minhashSignatures`), and the signature match count of the LSH pair
-  * stages ([[signatureMatches]]).
+  * `minhashSignatures`, `simhash`), and the signature match count of the
+  * LSH pair stages ([[signatureMatches]]).
   *
   * Tokens follow Spark's `split(text, " ")`: the text splits on every
   * byte 0x20 and empty tokens (double, leading and trailing spaces) are
@@ -145,6 +145,37 @@ final class MinhashKernel(k: Int, numHashes: Int) extends Serializable {
   }
 }
 
+/** SimHash fingerprint of one text's distinct word k-grams under
+  * [[graft.dedup.Dedup.simhash]]'s rule: every distinct gram votes +1 on
+  * bit b of the fingerprint if bit b of its `hash60` is set and −1
+  * otherwise, and bit b (b < bits) is set iff its vote sum is positive.
+  * One pass over the text: no gram array, no exploded rows. */
+final class SimhashKernel(k: Int, bits: Int) extends Serializable {
+  require(bits >= 1 && bits <= 64, s"simhash bits must be in [1, 64], got $bits")
+
+  def fingerprint(text: UTF8String): Long = {
+    val bb = text.getByteBuffer
+    val b = bb.array
+    val votes = new Array[Int](bits)
+    val seen = new java.util.HashSet[UTF8String]
+    val md = TextKernels.digests.get
+    TextKernels.foreachGram(b, bb.position, bb.remaining, k) { (s, e) =>
+      if (seen.add(UTF8String.fromBytes(b, s, e - s))) {
+        val h = TextKernels.hash60(md, b, s, e - s)
+        var j = 0
+        while (j < bits) {
+          votes(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
+          j += 1
+        }
+      }
+    }
+    var fp = 0L
+    var j = 0
+    while (j < bits) { if (votes(j) > 0) fp |= 1L << j; j += 1 }
+    fp
+  }
+}
+
 /** `ARRAY<STRING>` of the word k-grams of a string ([[TextKernels.ngrams]]). */
 case class WordNgrams(child: Expression, k: Int, distinct: Boolean)
     extends UnaryExpression with KernelInputCheck {
@@ -190,6 +221,23 @@ case class MinhashSignature(child: Expression, k: Int, numHashes: Int)
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "minhash_signature"
+}
+
+/** `BIGINT` SimHash fingerprint of a string's distinct word k-grams
+  * ([[SimhashKernel]]). */
+case class SimhashSignature(child: Expression, k: Int, bits: Int)
+    extends UnaryExpression with KernelInputCheck {
+  require(k >= 1, s"k-grams need k >= 1, got $k")
+  @transient private lazy val kernel = new SimhashKernel(k, bits)
+  override protected def expected: Seq[Option[DataType]] = Seq(Some(StringType))
+  override def dataType: DataType = LongType
+  override def nullSafeEval(t: Any): Any = kernel.fingerprint(t.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kr = ctx.addReferenceObj("simhashKernel", kernel, classOf[SimhashKernel].getName)
+    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $kr.fingerprint($t);")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "simhash_signature"
 }
 
 /** `INT` count of the positions at which two `ARRAY<BIGINT>` MinHash

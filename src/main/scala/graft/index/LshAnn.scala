@@ -17,36 +17,25 @@ import graft.search.VectorSearch
   * broadcast but the seed.
   *
   * Single-table search probes the query's bucket plus all buckets within
-  * Hamming `radius`. DEFAULT HISTORY, recorded honestly: radius 1 through
-  * round 12, silently bumped to 2 in round 13 (which roughly doubled
-  * implicit callers' scan cost — the r13 advice finding), REVERTED to 1
-  * in round 14. A caller who adopted the round-13 radius-2 default
-  * implicitly gets the original radius-1 budget back — and its lower
-  * recall (0.50 vs 0.775 measured at 4 bits) — and must now opt into
-  * radius 2 explicitly; this break is also recorded in SURVEY.md's
-  * round-14 notes. The recall-gated operating point is radius 2: sign
-  * flips near a hyperplane are the dominant error mode, and at few bits
-  * the double-flip ring is what lifts recall past 0.7 (measured 0.775 at
-  * 0.68 scanned vs 0.50 at 0.33 — see [[probeBuckets]]); recall-gated
-  * callers opt in EXPLICITLY. The production serving paths are the
-  * multi-table centered layouts below. Recall AND scanned fraction are
-  * gated in ScalaTest like the other approximate operators.
+  * Hamming `radius` (default [[DefaultProbeRadius]]). The production
+  * serving paths are the multi-table centered layouts below: every serve
+  * there takes one [[ProbeRule]], resolved by the one query-directed
+  * multi-probe walk ([[graft.functions.LshProbeKernel]], Multi-Probe LSH
+  * after Lv et al., VLDB 2007) on the driver or per query row. Recall
+  * AND scanned fraction are gated in ScalaTest like the other
+  * approximate operators.
   */
 object LshAnn {
 
-  /** Single-table probe-ring radius DEFAULT — a pinned CONTRACT, not a
-    * tuning knob. Change log (the knob moved silently twice, each move a
-    * judged finding): r≤12 default 1 → round 13 silently bumped to 2
-    * (≈2× implicit callers' scan cost) → round 14 reverted to 1 (callers
-    * who adopted the r13 default silently lost recall 0.775 → 0.50).
-    * From round 15 the default lives HERE, every defaulted signature
-    * references it, and LshLifecycleSpec pins both the value and its
+  /** Single-table probe-ring radius DEFAULT — a pinned contract, not a
+    * tuning knob: every defaulted signature references it, and moving it
+    * silently changes implicit callers' scan cost (radius 2 is about 2×
+    * radius 1) or recall. LshLifecycleSpec pins the value and its
     * measured operating point (radius 1: recall 0.50 at 0.33 scanned;
     * radius 2: 0.775 at 0.68 — 4 bits, embeddings corpus, DevLshBase).
-    * Moving it again requires editing this constant, its log, and the
-    * pinning spec together — there is no silent third move. Callers who
-    * want the ≥0.7-recall single-table point pass `radius = 2`
-    * explicitly; production budgets use the multi-table adaptive walk. */
+    * Callers who want the ≥0.7-recall single-table point pass
+    * `radius = 2` explicitly; production budgets use the multi-table
+    * [[ProbeRule]]s. */
   val DefaultProbeRadius: Int = 1
 
   /** splitmix64 mix of (seed, plane, dim) → uniform double in [-1, 1). */
@@ -202,8 +191,8 @@ object LshAnn {
     * indexed (t·numBits + p), so the same splitmix64 derivation yields
     * uncorrelated tables from one seed. Centered on `center` (pass the
     * [[meanVector]]; `Array.empty` for uncentered). */
-  /** Hard cap on per-table bucket width: [[probeSet]] enumerates flip masks
-    * over the 2^numBits space driver-side, so an oversized configuration
+  /** Hard cap on per-table bucket width: the probe walk enumerates flip
+    * masks over the 2^numBits space, so an oversized configuration
     * must fail loudly at build time instead of silently allocating and
     * sorting millions of masks per query. 20 bits = 1M buckets/table is
     * already far past any useful sign-LSH operating point. */
@@ -241,116 +230,89 @@ object LshAnn {
       acc.withColumn(s"lsh_b$t", bucket)
     }
 
-  /** QUERY-DIRECTED multi-probe set for one table (the multi-probe LSH
-    * idea): a neighbor lands in a different bucket when bits whose
-    * hyperplane the query sits CLOSE to flip sign — so rank every flip
-    * mask by the sum of |margin| over its flipped bits and probe the
-    * `probes` most likely buckets, instead of treating all Hamming-r
-    * flips as equally likely. At the same scanned budget this recovers
-    * strictly more near-neighbors than blind radius probing (a tiny-margin
-    * triple flip is likelier than a wide-margin double). Masks enumerate
-    * the ≤`MaxFlips`-bit neighborhood of the 2^bits space — bucket widths
-    * stay ≤ ~16 bits by construction, driver-side. */
+  /** Flip-count bound of the probe walk: a neighbor lands in a different
+    * bucket when bits whose hyperplane the query sits CLOSE to flip sign,
+    * so each table ranks every ≤`MaxFlips`-bit flip mask of the query's
+    * bucket by the summed |margin| of its flipped bits (a tiny-margin
+    * triple flip is likelier than a wide-margin double) — strictly more
+    * near-neighbors than blind Hamming-radius probing at the same scanned
+    * budget. */
   private[graft] val MaxFlips = 4
 
-  /** The full cost-ranked bucket stream of one table: every ≤[[MaxFlips]]
-    * flip mask of the query's bucket, ascending by the summed |margin| of
-    * its flipped bits — [[probeSet]] takes a fixed prefix,
-    * [[probeSetsAdaptive]] walks it until a candidate-mass budget is met.
-    * The first entry is always the query's own bucket (mask 0, cost 0). */
-  private def rankedBuckets(query: Seq[Double], planes: Array[Array[Double]],
-      biases: Array[Double]): IndexedSeq[(Double, Int)] = {
-    require(planes.length <= MaxBits,
-      s"numBits=${planes.length} exceeds MaxBits=$MaxBits — mask enumeration is 2^numBits")
-    val margins = planes.zipWithIndex.map { case (p, b) =>
-      var dot = 0.0; var i = 0
-      while (i < p.length) { dot += p(i) * query(i); i += 1 }
-      dot - biases(b)
+  /** Which buckets a serve probes for one query. Every multi-table serve
+    * takes one rule, and each rule resolves through the one walk,
+    * [[graft.functions.LshProbeKernel]]: per table, the cost-ranked stream
+    * of flip masks (cost-0 head = the query's own bucket); across tables,
+    * one merged ascending-cost walk. The collected serves run it on the
+    * driver, [[bigBatchSearchStored]] per query row in codegen, so every
+    * serve probes the same sets under the same rule. */
+  sealed trait ProbeRule {
+    /** The walk resolving this rule at top-`k`. */
+    private[graft] final def kernel(model: LshTables, k: Int)
+        : graft.functions.LshProbeKernel = this match {
+      case Directed(probes) =>
+        new graft.functions.LshProbeKernel(model.planes, model.biases,
+          Array.empty, Long.MaxValue, probes, MaxFlips)
+      case Adaptive(sizes, overscan) =>
+        new graft.functions.LshProbeKernel(model.planes, model.biases,
+          sizes, overscan.toLong * k, DefaultProbes, MaxFlips)
     }
-    val qb = margins.zipWithIndex.map { case (mg, b) => if (mg > 0) 1 << b else 0 }.sum
-    (0 until (1 << planes.length))
-      .filter(m => Integer.bitCount(m) <= MaxFlips)
-      .map { m =>
-        var cost = 0.0
-        var b = 0
-        while (b < planes.length) {
-          if ((m & (1 << b)) != 0) cost += math.abs(margins(b))
-          b += 1
-        }
-        (cost, m)
-      }
-      .sortBy { case (cost, m) => (cost, m) }
-      .map { case (cost, m) => (cost, qb ^ m) }
   }
 
-  private[graft] def probeSet(query: Seq[Double], planes: Array[Array[Double]],
-      biases: Array[Double], probes: Int): Seq[Int] =
-    rankedBuckets(query, planes, biases).take(probes).map(_._2)
+  /** The `probes` cheapest buckets of each table's margin-ranked stream. */
+  final case class Directed(probes: Int) extends ProbeRule {
+    require(probes >= 1, s"a directed rule probes at least one bucket per table, got $probes")
+  }
 
-  /** ADAPTIVE multi-table probe sets — the sign-LSH analog of
-    * [[Ivf.IvfModel.probeClustersAdaptive]], closing the last fixed probe
-    * budget in the ANN families: instead of burning [[DefaultProbes]]
-    * query-directed flips per table regardless of what they hold, walk
-    * ALL tables' cost-ranked bucket streams in one merged ascending-cost
-    * order and STOP once the probed buckets' cumulative row count (from
-    * the layout's per-dir sizes — [[bucketSizes]], memoized beside the
-    * layout like the IVF sizes) reaches `minCandidates` (= overscan · k).
-    * Dense queries — whose low-cost flips land on full buckets — stop
-    * after a few probes; sparse ones keep flipping up to
-    * `maxProbesPerTable` per table. Anchoring the stop to CANDIDATE MASS
-    * makes the scanned volume track what the re-rank needs per query,
-    * not a worst-case constant (the [[Ivf]] adaptive rationale; measured
-    * on the DevLshTune grid — RECALL.md round 9).
-    *
-    * Every table always probes its own bucket (cost-0 head of its
-    * stream), so each table contributes its strongest signal even when
-    * the first table's buckets satisfy the budget alone. Returns one
-    * bucket list per table (possibly beyond the budget by one bucket —
-    * the walk is inclusive). */
-  private[graft] def probeSetsAdaptive(query: Seq[Double], model: LshTables,
-      sizes: Map[(Int, Int), Long], minCandidates: Long,
-      maxProbesPerTable: Int = DefaultProbes): IndexedSeq[Seq[Int]] = {
-    val streams = model.planes.indices.map { t =>
-      rankedBuckets(query, model.planes(t), model.biases(t))
-        .take(maxProbesPerTable)
-    }
-    val merged = streams.zipWithIndex.flatMap { case (s, t) =>
-      s.zipWithIndex.map { case ((c, b), r) => (c, r, t, b) }
-    }.sortBy { case (c, _, t, b) => (c, t, b) }
+  /** The merged walk that stops once the probed buckets hold
+    * `overscan · k` rows (`sizes` = [[bucketSizes]], memoized beside the
+    * layout), with at most [[DefaultProbes]] probes per table — the
+    * sign-LSH analog of [[Ivf.IvfModel.probeClustersAdaptive]]. Dense
+    * queries, whose low-cost flips land on full buckets, stop after a few
+    * probes; sparse ones keep flipping, so the scanned volume tracks what
+    * the re-rank needs per query instead of a worst-case constant. Every
+    * table always probes its own bucket, and the walk is inclusive (it may
+    * pass the budget by one bucket). */
+  final case class Adaptive(sizes: Array[Array[Long]],
+      overscan: Int = DefaultOverscan) extends ProbeRule
+
+  /** Per-table probe sets of `query` under `rule` at top-`k`. */
+  private[graft] def probeSets(model: LshTables, rule: ProbeRule,
+      query: Seq[Double], k: Int): IndexedSeq[Seq[Int]] =
+    perTable(model, rule.kernel(model, k).probeSets(query.toArray))
+
+  /** Unpacks the kernel's `(table << PackShift) | bucket` probes into one
+    * bucket list per table. */
+  private def perTable(model: LshTables, packed: Array[Int]): IndexedSeq[Seq[Int]] = {
     val out = Array.fill(model.numTables)(Vector.newBuilder[Int])
-    var cum = 0L
-    merged.foreach { case (_, r, t, b) =>
-      if (r == 0 || cum < minCandidates) {
-        out(t) += b
-        cum += sizes.getOrElse((t, b), 0L)
-      }
-    }
+    val mask = (1 << graft.functions.LshProbeKernel.PackShift) - 1
+    packed.foreach(p =>
+      out(p >>> graft.functions.LshProbeKernel.PackShift) += p & mask)
     out.map(_.result()).toIndexedSeq
   }
 
-  /** Per-(table, bucket) row counts of a stored layout — the adaptive
-    * probe walk's mass statistic. ~L·2^bits longs from one
-    * count-pushdown aggregate over the layout (parquet row-group counts,
-    * no data columns read); memoize beside the layout like the IVF
-    * cluster sizes. */
-  def bucketSizes(layout: DataFrame): Map[(Int, Int), Long] =
-    layout.groupBy(col(TableCol), col(BucketCol)).count().collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
+  /** Per-(table, bucket) row counts of a stored layout — the [[Adaptive]]
+    * walk's mass statistic, dense per table up to the largest bucket
+    * present (the walk reads 0 past it). From one count-pushdown
+    * aggregate over the layout (parquet row-group counts, no data columns
+    * read); memoize beside the layout like the IVF cluster sizes. */
+  def bucketSizes(layout: DataFrame): Array[Array[Long]] = {
+    val counts = layout.groupBy(col(TableCol), col(BucketCol)).count().collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+    val tables = if (counts.isEmpty) 0 else counts.map(_._1).max + 1
+    val width = if (counts.isEmpty) 0 else counts.map(_._2).max + 1
+    val sizes = Array.fill(tables)(new Array[Long](width))
+    counts.foreach { case (t, b, n) => sizes(t)(b) = n }
+    sizes
+  }
 
   /** Union-of-tables candidate predicate: bucket-of-table-t ∈ probes-of-
     * table-t for ANY t. A disjunction of integer `isin`s over precomputed
     * columns — codegen'd comparisons, no similarity math until the exact
     * re-rank inside the candidate set. */
-  private def candidateFilterForSets(sets: IndexedSeq[Seq[Int]]): Column =
+  private def candidateFilter(sets: IndexedSeq[Seq[Int]]): Column =
     sets.indices.map { t =>
       col(s"lsh_b$t").isin(sets(t): _*)
-    }.reduceLeft(_ || _)
-
-  private def candidateFilter(query: Seq[Double], model: LshTables,
-      probes: Int): Column =
-    model.planes.indices.map { t =>
-      col(s"lsh_b$t").isin(
-        probeSet(query, model.planes(t), model.biases(t), probes): _*)
     }.reduceLeft(_ || _)
 
   /** Default operating point — MEASURED on the DevLshTune grid (isotropic
@@ -358,7 +320,8 @@ object LshAnn {
     * 4 tables × 10 bits at 96 directed probes/table lands recall ≈ 0.78–0.8
     * scanning ≈ 0.35 of the data at both test SFs; blind Hamming-2 probing
     * at the same budget managed only ≈ 0.64. RecallSpec gates recall ≥ 0.7
-    * AND scanned ≤ 0.4; the H2 harness publishes both. */
+    * AND scanned ≤ 0.4; the H2 harness publishes both. [[DefaultProbes]]
+    * is also the [[Adaptive]] walk's per-table cap. */
   val DefaultTables = 4
   val DefaultBits = 10
   val DefaultProbes = 96
@@ -366,8 +329,8 @@ object LshAnn {
   /** Adaptive serving's candidate-mass factor: the probe walk stops at
     * overscan·k candidate rows. Calibrated on the DevLshTune adaptive
     * grid at the SERVING regime (k=20, sf0.1 — RECALL.md round 9):
-    * recall@20 0.718 at mean scanned 0.298 / 77 probes per table, vs the
-    * fixed-[[DefaultProbes]] budget's 0.793 at 0.352 — the recall gate
+    * recall@20 0.718 at mean scanned 0.298 / 77 probes per table, vs
+    * `Directed(DefaultProbes)`'s 0.793 at 0.352 — the recall gate
     * (≥ 0.7) held at 15% less data scanned, with per-query spread (27–96
     * probes) instead of a worst-case constant. The grids show recall is
     * driven by candidate MASS, not k: the k=10 and k=20 curves coincide
@@ -378,13 +341,13 @@ object LshAnn {
     * budget — adaptivity only ever SHRINKS the probe list. */
   val DefaultOverscan = 35
 
-  /** Approximate top-k over L tables: union candidates, exact re-rank.
-    * `probes` = query-directed buckets probed per table. */
+  /** Approximate top-k over L tables: union of the buckets `rule` probes,
+    * exact re-rank. */
   def searchMulti(bucketed: DataFrame, model: LshTables,
-      query: Seq[Double], topK: Int, probes: Int = DefaultProbes,
+      query: Seq[Double], topK: Int, rule: ProbeRule = Directed(DefaultProbes),
       vecCol: String = "vector", idCol: String = "id"): DataFrame =
     VectorSearch.bruteForceTopK(
-      bucketed.where(candidateFilter(query, model, probes)),
+      bucketed.where(candidateFilter(probeSets(model, rule, query, topK))),
       query, topK, None, vecCol, idCol)
 
   // ---- persisted inverted-list layout: build once, serve bucket-pruned ----
@@ -844,13 +807,6 @@ object LshAnn {
     (data(0), data(1))
   }
 
-  /** Fixed-budget probe sets: the [[DefaultProbes]]-style prefix of every
-    * table's cost-ranked stream. */
-  private def probeSetsFixed(query: Seq[Double], model: LshTables,
-      probes: Int): IndexedSeq[Seq[Int]] =
-    model.planes.indices.map(t =>
-      probeSet(query, model.planes(t), model.biases(t), probes))
-
   /** Candidate predicate over the STORED layout for explicit per-table
     * probe sets, as a conjunction of two disjunctions:
     *
@@ -866,7 +822,7 @@ object LshAnn {
     * candidate semantics — the split exists because a single OR mixing
     * partition and data columns would qualify as neither a partition
     * filter nor a pushable data filter. */
-  private[graft] def storedFilterForSets(sets: IndexedSeq[Seq[Int]],
+  private def storedFilter(sets: IndexedSeq[Seq[Int]],
       shift: Int): Column = {
     val groupPred = sets.indices.map { t =>
       col(TableCol) === t &&
@@ -877,10 +833,6 @@ object LshAnn {
     }.reduceLeft(_ || _)
     groupPred && bucketPred
   }
-
-  private[graft] def storedCandidateFilter(query: Seq[Double], model: LshTables,
-      probes: Int): Column =
-    storedFilterForSets(probeSetsFixed(query, model, probes), model.groupShift)
 
   /** Approximate top-k over the stored layout, in ONE pass over the
     * probed dirs + ONE payload fetch:
@@ -908,7 +860,7 @@ object LshAnn {
     * (BENCH_CLEAN_r8 `ann_lsh_topk` 2.05 s vs the ≤ 1 s target).
     *
     * The broadcast is bounded by the candidate set, which the probe
-    * budget bounds by construction (and [[probeSetAdaptive]] anchors to
+    * budget bounds by construction (and [[Adaptive]] anchors to
     * overscan·k) — the same small-side contract as the IVF batch path.
     * Candidate-set semantics are IDENTICAL to [[searchMulti]] (row
     * admitted iff any table probes its bucket), so recall and scanned
@@ -916,35 +868,15 @@ object LshAnn {
     * file-deletion invariance proving nothing outside probed ∪ home dirs
     * is read. */
   def searchStored(layout: DataFrame, model: LshTables,
-      query: Seq[Double], topK: Int, probes: Int = DefaultProbes,
-      vecCol: String = "vector", idCol: String = "id"): DataFrame =
-    serveStored(layout, probeSetsFixed(query, model, probes), query, topK,
-      vecCol, idCol, model.groupShift)
-
-  /** [[searchStored]] with the ADAPTIVE probe budget: probe sets from
-    * [[probeSetsAdaptive]] — the walk stops when the probed buckets hold
-    * ≥ `overscan`·topK rows (`sizes` = [[bucketSizes]], memoized beside
-    * the layout). The serving default ([[DefaultOverscan]]) is calibrated
-    * on the DevLshTune grid: same recall gate as fixed-[[DefaultProbes]]
-    * at a lower mean scanned fraction (RECALL.md round 9). */
-  def searchStoredAdaptive(layout: DataFrame, model: LshTables,
-      query: Seq[Double], topK: Int, sizes: Map[(Int, Int), Long],
-      overscan: Int = DefaultOverscan, maxProbesPerTable: Int = DefaultProbes,
-      vecCol: String = "vector", idCol: String = "id"): DataFrame =
-    serveStored(layout,
-      probeSetsAdaptive(query, model, sizes, overscan.toLong * topK,
-        maxProbesPerTable),
-      query, topK, vecCol, idCol, model.groupShift)
-
-  private def serveStored(layout: DataFrame, sets: IndexedSeq[Seq[Int]],
-      query: Seq[Double], topK: Int, vecCol: String, idCol: String,
-      shift: Int): DataFrame = {
+      query: Seq[Double], topK: Int, rule: ProbeRule = Directed(DefaultProbes),
+      vecCol: String = "vector", idCol: String = "id"): DataFrame = {
+    val shift = model.groupShift
     // renamed pointer columns — the payload fetch is a self-join on the
     // layout's lineage, and distinct names sidestep ambiguous-attribute
     // resolution entirely. LEFT SEMI: a table-0 row is fetched iff ANY
     // pointer names it, which dedups multi-table admissions for free —
     // no dropDuplicates aggregate pair in the plan at all
-    val ptr = layout.where(storedFilterForSets(sets, shift))
+    val ptr = layout.where(storedFilter(probeSets(model, rule, query, topK), shift))
       .select(col(idCol).as("__lsh_ptr_id"),
         coalesce(col(HomeCol), col(BucketCol)).as("__lsh_ptr_home"))
       .withColumn("__lsh_ptr_hgroup",
@@ -967,16 +899,13 @@ object LshAnn {
     * LshStoreSpec deletes everything outside this set and proves results
     * unchanged. */
   private[graft] def dependencyDirs(layout: DataFrame, model: LshTables,
-      query: Seq[Double], probes: Int): Set[(Int, Int)] =
-    dependencyDirsForSets(layout, probeSetsFixed(query, model, probes),
-      model.groupShift)
-
-  private[graft] def dependencyDirsForSets(layout: DataFrame,
-      sets: IndexedSeq[Seq[Int]], shift: Int): Set[(Int, Int)] = {
+      query: Seq[Double], topK: Int, rule: ProbeRule): Set[(Int, Int)] = {
+    val shift = model.groupShift
+    val sets = probeSets(model, rule, query, topK)
     val probed = sets.zipWithIndex.flatMap { case (bs, t) =>
       bs.map(b => (t, groupOf(b, shift)))
     }.toSet
-    val homes = layout.where(storedFilterForSets(sets, shift))
+    val homes = layout.where(storedFilter(sets, shift))
       .where(col(TableCol) > 0)
       .select(HomeCol).distinct().collect()
       .map(r => (0, groupOf(r.getInt(0), shift))).toSet
@@ -991,60 +920,37 @@ object LshAnn {
     * planning time — per-query admission is a broadcast equi-join on
     * (table, bucket), every candidate fetches its payload ONCE for all
     * queries via the DPP-pruned home-bucket join, and ranking is the
-    * k-bounded aggregator after the per-(query, id) pointer dedup. Per-query candidate
-    * semantics are IDENTICAL to [[searchStored]] — spec-gated
-    * (LshStoreSpec batch==single parity). */
+    * k-bounded aggregator after the per-(query, id) pointer dedup.
+    * Per-query candidate semantics are IDENTICAL to [[searchStored]] —
+    * spec-gated (LshStoreSpec batch==single parity). */
   def batchSearchStored(layout: DataFrame, model: LshTables,
-      queries: Seq[(Long, Seq[Double])], topK: Int, probes: Int = DefaultProbes,
-      vecCol: String = "vector", idCol: String = "id"): DataFrame =
-    batchServeStored(layout, queries,
-      q => probeSetsFixed(q, model, probes), topK, vecCol, idCol,
-      model.groupShift)
-
-  /** [[batchSearchStored]] with the ADAPTIVE probe budget — each query's
-    * probe sets stop at overscan·topK candidate mass
-    * ([[probeSetsAdaptive]]); the scan predicate is still the union of
-    * every query's probed dirs, so per-query adaptivity composes with the
-    * one-job batch shape unchanged. */
-  def batchSearchStoredAdaptive(layout: DataFrame, model: LshTables,
-      queries: Seq[(Long, Seq[Double])], topK: Int, sizes: Map[(Int, Int), Long],
-      overscan: Int = DefaultOverscan, maxProbesPerTable: Int = DefaultProbes,
-      vecCol: String = "vector", idCol: String = "id"): DataFrame =
-    batchServeStored(layout, queries,
-      q => probeSetsAdaptive(q, model, sizes, overscan.toLong * topK,
-        maxProbesPerTable),
-      topK, vecCol, idCol, model.groupShift)
-
-  private def batchServeStored(layout: DataFrame,
-      queries: Seq[(Long, Seq[Double])],
-      setsOf: Seq[Double] => IndexedSeq[Seq[Int]], topK: Int,
-      vecCol: String, idCol: String, shift: Int): DataFrame = {
+      queries: Seq[(Long, Seq[Double])], topK: Int,
+      rule: ProbeRule = Directed(DefaultProbes),
+      vecCol: String = "vector", idCol: String = "id"): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = layout.sparkSession
     // empty query set -> empty result frame (the other batch paths'
     // contract), not a reduceLeft crash on the empty probe union
     if (queries.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField(idCol, org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sim", org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("rn", org.apache.spark.sql.types.LongType))))
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(Seq(StructField("query_id", LongType), StructField(idCol, LongType),
+          StructField("sim", DoubleType), StructField("rn", LongType))))
+    val shift = model.groupShift
+    val kernel = rule.kernel(model, topK)
     val probed: Seq[(Long, Int, Int)] = queries.flatMap { case (qid, q) =>
-      setsOf(q).zipWithIndex.flatMap { case (bs, t) =>
+      perTable(model, kernel.probeSets(q.toArray)).zipWithIndex.flatMap { case (bs, t) =>
         bs.map(b => (qid, t, b))
       }
     }
     val byTable = probed.groupBy(_._2).view.mapValues(_.map(_._3).distinct).toMap
     // the union of every query's probe sets through the SAME
     // group-conjunct/bucket-conjunct split as the single-query path
-    // ([[storedFilterForSets]]): a single OR mixing the lsh_table
+    // ([[storedFilter]]): a single OR mixing the lsh_table
     // partition column with the lsh_bucket DATA column qualifies as
     // neither a partition filter nor a pushable parquet filter, so the
     // admission scan would read every (table, group) dir post-filter
-    val unionPred = storedFilterForSets(
+    val unionPred = storedFilter(
       IndexedSeq.tabulate(byTable.keys.max + 1)(t =>
         byTable.getOrElse(t, Seq.empty)), shift)
     val qdf = spark.createDataFrame(
@@ -1095,106 +1001,16 @@ object LshAnn {
   }
 
   /** [[batchSearchStored]] for query sets too large to collect: the
-    * queries stay a DataFrame end-to-end. Each query's bucket per table is
-    * computed by the SAME ingest-side expression ([[withTableBuckets]] —
-    * double-precision dots against the plane literals, bit-identical to
-    * the driver-side probe math), exploded to (query_id, table, bucket)
-    * probe rows, and every join in the one-pass admission → pointer-dedup
-    * → payload-fetch → score shape becomes a SHUFFLE equi-join instead of
-    * a broadcast: nothing query-sized touches the driver.
-    *
-    * The probe budget is each table's OWN bucket (probes = 1, the cost-0
-    * head of the multi-probe stream — the only prefix that is closed-form
-    * in expressions; multi-probe flip ranking is per-query margin
-    * arithmetic that belongs driver-side). That is the high-throughput
-    * operating point: T tables each contribute their strongest signal,
-    * recall comes from table count rather than per-table flips.
-    * BigBatchSpec gates exact parity against `batchSearchStored(probes=1)`
-    * on a 10k-query set. There is deliberately no static scan predicate:
-    * a big batch's probed-bucket union approaches every dir, so the
-    * admission scan reads the (narrow) pointer columns once. */
-  def bigBatchSearchStored(layout: DataFrame, model: LshTables,
-      queries: DataFrame, topK: Int,
-      vecCol: String = "vector", idCol: String = "id",
-      queryIdCol: String = "query_id", queryVecCol: String = "qvec",
-      probeRadius: Int = 0, acceptIds: Option[DataFrame] = None): DataFrame = {
-    require(probeRadius >= 0 && probeRadius <= 1,
-      s"bigBatch probe radius must be 0 (own bucket) or 1 (all single-bit " +
-        s"flips — the closed-form neighborhoods), got $probeRadius")
-    val q0 = graft.operators.Par.widen(queries)
-      .select(col(queryIdCol).cast("long").as("query_id"),
-        col(queryVecCol).cast("array<double>").as("qvec"))
-    val qb = withTableBuckets(q0, "qvec", model)
-    // per-table probe buckets: the own bucket, plus — at radius 1 —
-    // every single-bit flip (qb XOR (1<<b)); XOR over non-negative ints
-    // is expressible as conditional add/subtract, keeping the whole probe
-    // set closed-form expressions (the margin-RANKED multi-probe stream
-    // stays a driver-side algorithm — the collected paths own it)
-    def flips(b: Column): Seq[Column] =
-      if (probeRadius == 0) Seq(b)
-      else b +: (0 until model.numBits).map { bit =>
-        val m = 1 << bit
-        when(b.bitwiseAND(lit(m)) =!= 0, b - m).otherwise(b + m)
-      }
-    val probeEntries = array((0 until model.numTables).flatMap { t =>
-      flips(col(s"lsh_b$t")).map(bk =>
-        struct(lit(t).as(TableCol), bk.cast("int").as(BucketCol)))
-    }: _*)
-    val qdf = qb
-      .select(col("query_id"), explode(probeEntries).as("e"))
-      .select(col("query_id"),
-        col(s"e.$TableCol").as(TableCol), col(s"e.$BucketCol").as(BucketCol))
-    bigBatchServe(layout, q0, qdf, topK, vecCol, idCol, model.groupShift,
-      acceptIds)
-  }
-
-  /** [[bigBatchSearchStored]] with the margin-ranked ADAPTIVE probe
-    * budget — the DataFrame-native twin of [[batchSearchStoredAdaptive]]
-    * and the recall-bearing big-batch operating point: each query row's
-    * probe list is the SAME merged cost-ranked walk the collected paths
-    * use ([[probeSetsAdaptive]] — rank every ≤[[MaxFlips]]-bit sign-flip
-    * by summed |margin|, stop at `overscan·topK` candidate mass),
-    * evaluated per row by the codegen'd
-    * [[graft.functions.LshProbeKernel]] (identical ranking and stop rule
-    * ⇒ identical probe sets — BigBatchSpec gates exact result parity).
-    * The radius-≤1 closed-form budget of [[bigBatchSearchStored]] stays
-    * as the throughput/near-dup point; this path replaces it as the
-    * DEFAULT because radius-1 measures recall@10 0.233 vs the directed
-    * walk's ≥0.7 gate (RECALL.md round 10 → 11). Everything after probe
-    * assignment is the same shuffled admission → pointer-dedup → fetch →
-    * score shape: nothing query-sized touches the driver. */
-  def bigBatchSearchStoredAdaptive(layout: DataFrame, model: LshTables,
-      queries: DataFrame, topK: Int, sizes: Map[(Int, Int), Long],
-      overscan: Int = DefaultOverscan, maxProbesPerTable: Int = DefaultProbes,
-      vecCol: String = "vector", idCol: String = "id",
-      queryIdCol: String = "query_id", queryVecCol: String = "qvec",
-      acceptIds: Option[DataFrame] = None): DataFrame = {
-    val szArr = Array.tabulate(model.numTables)(t =>
-      Array.tabulate(1 << model.numBits)(b => sizes.getOrElse((t, b), 0L)))
-    val kernel = new graft.functions.LshProbeKernel(model.planes, model.biases,
-      szArr, overscan.toLong * topK, maxProbesPerTable, MaxFlips)
-    val q0 = graft.operators.Par.widen(queries)
-      .select(col(queryIdCol).cast("long").as("query_id"),
-        col(queryVecCol).cast("array<double>").as("qvec"))
-    val qdf = q0
-      .select(col("query_id"),
-        explode(graft.functions.LshProbeExpressions.probeSets(col("qvec"), kernel))
-          .as("__lsh_probe"))
-      .select(col("query_id"),
-        shiftright(col("__lsh_probe"), graft.functions.LshProbeKernel.PackShift)
-          .cast("int").as(TableCol),
-        col("__lsh_probe")
-          .bitwiseAND(lit((1 << graft.functions.LshProbeKernel.PackShift) - 1))
-          .cast("int").as(BucketCol))
-    bigBatchServe(layout, q0, qdf, topK, vecCol, idCol, model.groupShift,
-      acceptIds)
-  }
-
-  /** The shared big-batch serve shape: shuffled admission → per-(query,
-    * id) pointer dedup → one payload fetch → exact re-rank. `q0` is the
-    * normalized (query_id, qvec) frame, `qdf` its exploded
-    * (query_id, table, bucket) probe rows — only probe ASSIGNMENT differs
-    * between the closed-form and adaptive entry points.
+    * queries stay a DataFrame end-to-end. Each query row resolves `rule`
+    * with the codegen'd [[graft.functions.LshProbeSets]] expression — the
+    * same walk the collected serves run on the driver, so the probe sets
+    * (and results) are identical (BigBatchSpec-gated) — exploded to
+    * (query_id, table, bucket) probe rows, and every join in the one-pass
+    * admission → pointer-dedup → payload-fetch → score shape becomes a
+    * SHUFFLE equi-join instead of a broadcast: nothing query-sized touches
+    * the driver. There is deliberately no static scan predicate: a big
+    * batch's probed-bucket union approaches every dir, so the admission
+    * scan reads the (narrow) pointer columns once.
     *
     * `acceptIds` is the S5 filter at query-set scale: a one-column id
     * frame (the caller's predicate applied to its metadata table) LEFT
@@ -1205,9 +1021,25 @@ object LshAnn {
     * probed buckets hold too few accepted candidates — the documented
     * starvation trade of filtering a bucketed index; widen the probe
     * budget (overscan) under selective filters. */
-  private def bigBatchServe(layout: DataFrame, q0: DataFrame, qdf: DataFrame,
-      topK: Int, vecCol: String, idCol: String,
-      shift: Int, acceptIds: Option[DataFrame] = None): DataFrame = {
+  def bigBatchSearchStored(layout: DataFrame, model: LshTables,
+      queries: DataFrame, topK: Int, rule: ProbeRule = Directed(DefaultProbes),
+      vecCol: String = "vector", idCol: String = "id",
+      queryIdCol: String = "query_id", queryVecCol: String = "qvec",
+      acceptIds: Option[DataFrame] = None): DataFrame = {
+    val shift = model.groupShift
+    val q0 = graft.operators.Par.widen(queries)
+      .select(col(queryIdCol).cast("long").as("query_id"),
+        col(queryVecCol).cast("array<double>").as("qvec"))
+    val qdf = q0
+      .select(col("query_id"),
+        explode(graft.functions.LshProbeExpressions.probeSets(col("qvec"),
+          rule.kernel(model, topK))).as("__lsh_probe"))
+      .select(col("query_id"),
+        shiftright(col("__lsh_probe"), graft.functions.LshProbeKernel.PackShift)
+          .cast("int").as(TableCol),
+        col("__lsh_probe")
+          .bitwiseAND(lit((1 << graft.functions.LshProbeKernel.PackShift) - 1))
+          .cast("int").as(BucketCol))
     // narrow admission scan (id + home, no vector bytes), shuffle-joined
     // against the probe rows on (table, bucket)
     val admitted = graft.operators.Par.widen(layout)
@@ -1239,25 +1071,15 @@ object LshAnn {
       .withColumnRenamed("id", idCol)
   }
 
-  /** Fraction of rows the multi-table probe admits for `query` — the
+  /** Fraction of rows `rule` admits for `query` at top-`topK` — the
     * scanned-fraction denominator of the recall/cost trade (H2 harness
     * reports it beside recall). */
   def scannedFraction(bucketed: DataFrame, model: LshTables,
-      query: Seq[Double], probes: Int = DefaultProbes): Double = {
+      query: Seq[Double], topK: Int,
+      rule: ProbeRule = Directed(DefaultProbes)): Double = {
     val agg = bucketed.select(
       count(lit(1)).as("n"),
-      count(when(candidateFilter(query, model, probes), 1)).as("c")).head
-    val n = agg.getLong(0)
-    if (n == 0L) 0.0 else agg.getLong(1).toDouble / n
-  }
-
-  /** [[scannedFraction]] for explicit per-table probe sets (the adaptive
-    * walk's H2 denominator). */
-  private[graft] def scannedFractionForSets(bucketed: DataFrame,
-      sets: IndexedSeq[Seq[Int]]): Double = {
-    val agg = bucketed.select(
-      count(lit(1)).as("n"),
-      count(when(candidateFilterForSets(sets), 1)).as("c")).head
+      count(when(candidateFilter(probeSets(model, rule, query, topK)), 1)).as("c")).head
     val n = agg.getLong(0)
     if (n == 0L) 0.0 else agg.getLong(1).toDouble / n
   }

@@ -736,8 +736,8 @@ object ApproxQueries {
   def annLshTopK(spark: SparkSession, dir: String): DataFrame = {
     val (path, model) = lshLayout(spark, dir)
     publishLshPlanes(spark, dir, model) // repair no-op unless dir switched / root lost
-    LshAnn.searchStoredAdaptive(lshFrame(spark, path), model,
-      VectorModel.AnnQuery, 20, lshSizes(spark, dir),
+    LshAnn.searchStored(lshFrame(spark, path), model,
+      VectorModel.AnnQuery, 20, LshAnn.Adaptive(lshSizes(spark, dir)),
       vecCol = "embedding", idCol = "vec_id")
       .select("vec_id", "sim")
   }
@@ -748,7 +748,7 @@ object ApproxQueries {
     * 1<<b terms), query margins (`p·q − bias`: IEEE-commutative dot, so
     * one mirror serves both sides), the ≤[[LshAnn.MaxFlips]]-bit mask
     * enumeration ranked per table by (summed |margin| of flipped bits,
-    * mask) and truncated to maxProbesPerTable, the cross-table merge
+    * mask) and truncated to the per-table probe cap, the cross-table merge
     * ordered by (cost, table, bucket) with the candidate-mass stop —
     * taken iff per-table head OR the plain cumulative size of preceding
     * stream entries is under the budget (equivalent to the engine's
@@ -759,7 +759,7 @@ object ApproxQueries {
     val d: Int = VectorModel.EmbDim
     val bits = 10 // LshAnn.DefaultBits — the layout's build parameter
     val maxFlips: Int = LshAnn.MaxFlips
-    val maxProbesPerTable: Int = LshAnn.DefaultProbes
+    val probeCap: Int = LshAnn.DefaultProbes
     private def pE(i: Int) = s"pl.p$i"
     private def eE(i: Int) = OracleSql.listElem("e.embedding")(i)
 
@@ -811,7 +811,7 @@ object ApproxQueries {
          |  FROM stream),
          |withb AS (SELECT ${if (qkey.isEmpty) "" else s"r.$qkey AS $qkey, "}r.t AS t,
          |    xor(qb.qb, r.m) AS bucket, r.cost AS cost, r.rr AS rr
-         |  FROM (SELECT * FROM ranked WHERE rr <= $maxProbesPerTable) r
+         |  FROM (SELECT * FROM ranked WHERE rr <= $probeCap) r
          |    JOIN qb ON qb.t = r.t${if (qkey.isEmpty) "" else s" AND qb.$qkey = r.$qkey"}),
          |merged AS (SELECT ${wqsel}withb.t AS t, withb.bucket AS bucket, withb.rr AS rr,
          |    coalesce(sum(coalesce(sz.sz, 0)) OVER (${pby}ORDER BY withb.cost ASC, withb.t ASC, withb.bucket ASC
@@ -867,9 +867,9 @@ object ApproxQueries {
   }
 
   /** HASH-GATE of [[lshBigBatchTopK]] — the margin-ranked ADAPTIVE
-    * big-batch walk at budget 234·3 = 702: the LshProbeKernel's walk is
-    * the collected walk verbatim (same per-table (cost, mask) rank cut,
-    * same merged (cost, table, bucket) order, same taken rule), and the
+    * big-batch walk at budget 234·3 = 702: the LshProbeKernel's walk
+    * (per-table (cost, mask) rank cut, merged (cost, table, bucket)
+    * order, taken rule) is the one every LSH serve resolves with, and the
     * query set is DATA rows (every 16th embedding), so the margin terms
     * are pure column references; the serve's pointer-dedup candidates
     * re-rank by the pre-rounded cosine. */
@@ -907,8 +907,8 @@ object ApproxQueries {
     // single-query default (35·20): LSH recall tracks MASS, not k (the
     // DevLshTune k=10/k=20 curves coincide at equal mass — RECALL.md
     // round 9), so the budget is held constant across the k regimes
-    graft.index.LshAnn.batchSearchStoredAdaptive(lshFrame(spark, path), model,
-      annBatchQueries(3), 5, lshSizes(spark, dir), overscan = 140,
+    LshAnn.batchSearchStored(lshFrame(spark, path), model,
+      annBatchQueries(3), 5, LshAnn.Adaptive(lshSizes(spark, dir), 140),
       vecCol = "embedding", idCol = "vec_id")
       .orderBy("query_id", "rn")
   }
@@ -961,14 +961,14 @@ object ApproxQueries {
     * adaptive probe walk's mass statistic ([[graft.index.LshAnn.bucketSizes]]),
     * memoized beside the layout like [[ivfSizes]] (one count-pushdown
     * aggregate per dataset, warmed in the Bench build pre-phase). */
-  private[graft] def lshSizes(spark: SparkSession, dir: String): Map[(Int, Int), Long] =
+  private[graft] def lshSizes(spark: SparkSession, dir: String): Array[Array[Long]] =
     lshSizesCache.computeIfAbsent(dir, _ => {
       val (path, _) = lshLayout(spark, dir)
       LshAnn.bucketSizes(lshFrame(spark, path))
     })
 
   private val lshSizesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[(Int, Int), Long]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Long]]]()
 
   /** Memoized READ FRAME of an LSH layout. The layout's ~L·2^bits
     * partition dirs make a fresh `spark.read.parquet` re-list thousands of
@@ -1864,23 +1864,20 @@ object ApproxQueries {
 
   /** LSH big batch over the embeddings layout — see [[ivfBigBatchTopK]].
     * Queries are the sampled embeddings themselves (a DataFrame). Serves
-    * the margin-ranked ADAPTIVE probe walk per query row (the codegen
-    * [[graft.functions.LshProbeKernel]]): the round-10 radius-1
-    * closed-form budget measured recall@10 0.233 — far under the ≥0.7
-    * gate the collected paths hold — so the directed walk is now the
-    * registered operating point (RecallSpec gates it directly; the
-    * radius-≤1 paths remain as BigBatchSpec parity twins). `overscan` is
-    * chosen so overscan·topK lands on the calibrated serving MASS
-    * (≈700 candidate rows — [[graft.index.LshAnn.DefaultOverscan]]·k=20,
-    * the recall driver the DevLshTune grids showed is mass, not k). */
+    * the [[LshAnn.Adaptive]] rule per query row (the codegen
+    * [[graft.functions.LshProbeKernel]]), which RecallSpec gates at the
+    * collected paths' recall ≥ 0.7. `overscan` is chosen so overscan·topK
+    * lands on the calibrated serving MASS (≈700 candidate rows —
+    * [[graft.index.LshAnn.DefaultOverscan]]·k=20, the recall driver the
+    * DevLshTune grids showed is mass, not k). */
   def lshBigBatchTopK(spark: SparkSession, dir: String): DataFrame = {
     val (path, model) = lshLayout(spark, dir)
     publishLshPlanes(spark, dir, model) // repair no-op unless dir switched / root lost
     val qdf = VectorModel.embeddings(spark, dir)
       .where(pmod(col("vec_id"), lit(16)) === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    graft.index.LshAnn.bigBatchSearchStoredAdaptive(lshFrame(spark, path),
-      model, qdf, 3, lshSizes(spark, dir), overscan = 234,
+    LshAnn.bigBatchSearchStored(lshFrame(spark, path),
+      model, qdf, 3, LshAnn.Adaptive(lshSizes(spark, dir), 234),
       vecCol = "embedding", idCol = "vec_id")
       .orderBy("query_id", "rn")
   }

@@ -105,9 +105,9 @@ class BigBatchSpec extends SparkSpec {
     val layout = spark.read.parquet(path)
     val qdf = bigQueries(NQueries, VectorModel.EmbDim, scale = 1.0)
     val big = LshAnn.bigBatchSearchStored(layout, model, qdf, 3,
-      vecCol = "embedding", idCol = "vec_id")
+      LshAnn.Directed(1), vecCol = "embedding", idCol = "vec_id")
     val old = LshAnn.batchSearchStored(layout, model, collected(qdf), 3,
-      probes = 1, vecCol = "embedding", idCol = "vec_id")
+      LshAnn.Directed(1), vecCol = "embedding", idCol = "vec_id")
     assert(resultSet(big) === resultSet(old))
   }
 
@@ -116,14 +116,15 @@ class BigBatchSpec extends SparkSpec {
     val sizes = queries.ApproxQueries.lshSizes(spark, Sf0001)
     val layout = spark.read.parquet(path)
     val qdf = bigQueries(NQueries, VectorModel.EmbDim, scale = 1.0)
-    // the registered entry's operating point: per-row margin-ranked walk
-    // under a candidate-mass budget (kernel) vs the driver-side walk the
-    // collected path runs — identical ranking + stop rule must yield
-    // identical probe sets, hence identical results
-    val big = LshAnn.bigBatchSearchStoredAdaptive(layout, model, qdf, 3,
-      sizes, overscan = 234, vecCol = "embedding", idCol = "vec_id")
-    val old = LshAnn.batchSearchStoredAdaptive(layout, model, collected(qdf), 3,
-      sizes, overscan = 234, vecCol = "embedding", idCol = "vec_id")
+    // the registered entry's operating point: the margin-ranked walk under
+    // a candidate-mass budget, per row in codegen vs on the driver for the
+    // collected path — one rule must yield identical probe sets, hence
+    // identical results
+    val rule = LshAnn.Adaptive(sizes, 234)
+    val big = LshAnn.bigBatchSearchStored(layout, model, qdf, 3,
+      rule, vecCol = "embedding", idCol = "vec_id")
+    val old = LshAnn.batchSearchStored(layout, model, collected(qdf), 3,
+      rule, vecCol = "embedding", idCol = "vec_id")
     assert(resultSet(big) === resultSet(old))
   }
 }

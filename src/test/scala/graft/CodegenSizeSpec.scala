@@ -31,10 +31,6 @@ class CodegenSizeSpec extends SparkSpec {
     sig.unpersist()
   }
 
-  /** Stages known to compile a method over the limit (CHANGES.md FOUND);
-    * a stage leaves this set once it is brought under the limit. */
-  private val KnownOver = Set("Dedup.simhash")
-
   test("audit: the public Dedup, TextAnalysis and Pii stages stay under the limit, known ones aside") {
     import spark.implicits._
     val t = col("text")
@@ -91,7 +87,7 @@ class CodegenSizeSpec extends SparkSpec {
     val sizes = Seq(simhash, minhash) ++ frames.map { case (n, f) => n -> maxCodegenMethodBytes(f()) }
     sizes.foreach { case (n, b) => info(s"$n: $b bytes") }
     val over = sizes.collect { case (n, b) if b > HugeMethodBytes => n }.toSet
-    assert(over.subsetOf(KnownOver), s"over $HugeMethodBytes bytes: ${over -- KnownOver}")
+    assert(over.isEmpty, s"over $HugeMethodBytes bytes: $over")
     sig.unpersist()
     sh.unpersist()
   }

@@ -68,12 +68,12 @@ object DevLshProfile {
     // the ADAPTIVE serving default (ann_lsh_topk shape): sizes memo warm
     // (build-time state), then first + steady-state serve
     val (sizesSec, sizes) = t(LshAnn.bucketSizes(layout))
-    val (adapt1Sec, na) = t(LshAnn.searchStoredAdaptive(layout, model,
-      VectorModel.AnnQuery, 20, sizes, vecCol = "embedding", idCol = "vec_id").count())
-    val (adapt2Sec, _) = t(LshAnn.searchStoredAdaptive(layout, model,
-      VectorModel.AnnQuery, 20, sizes, vecCol = "embedding", idCol = "vec_id").count())
-    val (adaptBatchSec, nab) = t(LshAnn.batchSearchStoredAdaptive(layout, model,
-      queries, 5, sizes, overscan = 140, vecCol = "embedding", idCol = "vec_id").count())
+    val (adapt1Sec, na) = t(LshAnn.searchStored(layout, model, VectorModel.AnnQuery,
+      20, LshAnn.Adaptive(sizes), vecCol = "embedding", idCol = "vec_id").count())
+    val (adapt2Sec, _) = t(LshAnn.searchStored(layout, model, VectorModel.AnnQuery,
+      20, LshAnn.Adaptive(sizes), vecCol = "embedding", idCol = "vec_id").count())
+    val (adaptBatchSec, nab) = t(LshAnn.batchSearchStored(layout, model, queries,
+      5, LshAnn.Adaptive(sizes, 140), vecCol = "embedding", idCol = "vec_id").count())
 
     println(s"""{"sf":"$sfDir","build_sec":$buildSec,"read_sec":$readSec,""" +
       s""""serve1_sec":$serve1Sec,"serve2_fresh_read_sec":$serve2Sec,""" +

@@ -42,10 +42,10 @@ object DevLshTune {
       c.map(_ / rows.length)
     }
     // ---- adaptive sweep at the committed operating point ----------------
-    // The probe walk stops at overscan·k candidate mass
-    // (LshAnn.probeSetsAdaptive): sweep overscan and report recall /
-    // scanned / mean probes-per-table, against the fixed-probe rows below
-    // — the calibration behind LshAnn.DefaultOverscan.
+    // The LshAnn.Adaptive walk stops at overscan·k candidate mass: sweep
+    // overscan and report recall / scanned / mean probes-per-table, against
+    // the LshAnn.Directed rows below — the calibration behind
+    // LshAnn.DefaultOverscan.
     {
       val model = LshAnn.tables(LshAnn.DefaultTables, LshAnn.DefaultBits, dim, center)
       val l = LshAnn.DefaultTables
@@ -58,13 +58,12 @@ object DevLshTune {
           }.sum
         }
       }
-      val sizes: Map[(Int, Int), Long] = (0 until l).flatMap { t =>
-        buckets(t).groupBy(identity).map { case (b, xs) => ((t, b), xs.length.toLong) }
-      }.toMap
+      val sizes = Array.fill(l)(new Array[Long](1 << model.numBits))
+      (0 until l).foreach(t => buckets(t).foreach(b => sizes(t)(b) += 1))
       for (overscan <- Seq(13, 20, 25, 28, 30, 33, 35, 40, 45, 50)) {
         val (recalls, fracs, nprobes) = queries.zipWithIndex.map { case (q, qi) =>
-          val sets = LshAnn.probeSetsAdaptive(q.toSeq, model, sizes,
-            overscan.toLong * k)
+          val sets = LshAnn.probeSets(model, LshAnn.Adaptive(sizes, overscan),
+            q.toSeq, k)
           val probeSets = sets.map(_.toSet)
           val cand = rows.indices.filter(ri =>
             (0 until l).exists(t => probeSets(t)(buckets(t)(ri))))
@@ -97,8 +96,8 @@ object DevLshTune {
         }
       }
       val (recalls, fracs) = queries.zipWithIndex.map { case (q, qi) =>
-        val probeSets = (0 until l).map(t =>
-          LshAnn.probeSet(q.toSeq, model.planes(t), model.biases(t), probes).toSet)
+        val probeSets = LshAnn.probeSets(model, LshAnn.Directed(probes), q.toSeq, k)
+          .map(_.toSet)
         val cand = rows.indices.filter(ri =>
           (0 until l).exists(t => probeSets(t)(buckets(t)(ri))))
         val candIds = cand.map(ri => rows(ri)._1).toSet

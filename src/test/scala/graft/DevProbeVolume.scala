@@ -72,9 +72,9 @@ object DevProbeVolume {
         corpus, f.map(_.size).toSeq, a.map(_.size).toSeq)
     }
 
-    // ---- LSH (ann_lsh_bigbatch): topK=3, overscan=234 (mass 702); old
-    // fixed budget = closed-form radius<=1 (own bucket + every 1-bit flip
-    // per table). Mass metric for both = sum of probed (table,bucket) row
+    // ---- LSH (ann_lsh_bigbatch): topK=3, Adaptive(sizes, 234) (mass 702)
+    // against Directed(DefaultProbes), the collected dispatch's ~0.8-recall
+    // budget. Mass metric for both = sum of probed (table,bucket) row
     // counts (union overlap ignored identically on both sides).
     locally {
       val (path, model) = ApproxQueries.lshLayout(spark, dir)
@@ -84,34 +84,14 @@ object DevProbeVolume {
         .where(pmod(col("vec_id"), lit(16)) === 0)
         .select(col("embedding").cast("array<double>"))
         .collect().map(_.getSeq[Double](0))
-      def ownBucket(q: Seq[Double], t: Int): Int =
-        model.planes(t).zipWithIndex.map { case (p, b) =>
-          var dot = 0.0; var i = 0
-          while (i < p.length) { dot += p(i) * q(i); i += 1 }
-          if (dot - model.biases(t)(b) > 0) 1 << b else 0
-        }.sum
-      val nBits = model.planes(0).length
-      val f = qs.map { q =>
-        (0 until model.numTables).map { t =>
-          val own = ownBucket(q, t)
-          own +: (0 until nBits).map(b => own ^ (1 << b))
-        }
-      }
-      val a = qs.map(q =>
-        graft.index.LshAnn.probeSetsAdaptive(q, model, sizes, 234L * 3))
+      def sets(rule: graft.index.LshAnn.ProbeRule) =
+        qs.map(q => graft.index.LshAnn.probeSets(model, rule, q, 3))
+      val a = sets(graft.index.LshAnn.Adaptive(sizes, 234))
+      val fr = sets(graft.index.LshAnn.Directed(graft.index.LshAnn.DefaultProbes))
       def mass(sets: Seq[Seq[Int]]): Long =
         sets.zipWithIndex.map { case (s, t) =>
-          s.map(b => sizes.getOrElse((t, b), 0L)).sum
+          s.map(b => if (b < sizes(t).length) sizes(t)(b) else 0L).sum
         }.sum
-      report("lsh_vs_radius1", f.map(mass).toSeq, a.map(s => mass(s)).toSeq,
-        corpus, f.map(_.map(_.size).sum).toSeq, a.map(_.map(_.size).sum).toSeq)
-      // equal-recall comparison: the RECALL-BEARING fixed budget is the
-      // collected dispatch's DefaultProbes multi-probe prefix per table
-      // (the ~0.8-recall operating point), not radius-1 (recall 0.233)
-      val fr = qs.map { q =>
-        (0 until model.numTables).map(t => graft.index.LshAnn.probeSet(
-          q, model.planes(t), model.biases(t), graft.index.LshAnn.DefaultProbes))
-      }
       report("lsh_vs_multiprobe", fr.map(mass).toSeq, a.map(s => mass(s)).toSeq,
         corpus, fr.map(_.map(_.size).sum).toSeq, a.map(_.map(_.size).sum).toSeq)
     }

@@ -78,12 +78,12 @@ class FilteredBigBatchSpec extends SparkSpec {
     // acceptIds semi-joined into the payload fetch ≡ removing rejected
     // table-0 (payload) rows from the layout: bucket admission is
     // filter-independent, pointers to rejected rows simply fail the fetch
-    val big = LshAnn.bigBatchSearchStoredAdaptive(layout, model, qdf, 3,
-      sizes, overscan = 234, vecCol = "embedding", idCol = "vec_id",
-      acceptIds = Some(ids))
-    val old = LshAnn.bigBatchSearchStoredAdaptive(
+    val rule = LshAnn.Adaptive(sizes, 234)
+    val big = LshAnn.bigBatchSearchStored(layout, model, qdf, 3,
+      rule, vecCol = "embedding", idCol = "vec_id", acceptIds = Some(ids))
+    val old = LshAnn.bigBatchSearchStored(
       layout.where(col(LshAnn.TableCol) > 0 || pred), model, qdf, 3,
-      sizes, overscan = 234, vecCol = "embedding", idCol = "vec_id")
+      rule, vecCol = "embedding", idCol = "vec_id")
     assert(resultSet(big) === resultSet(old))
     assert(resultSet(big).forall(_._2 % 3 == 0))
   }

@@ -41,7 +41,7 @@ class LshLifecycleSpec extends SparkSpec {
     val cur = LshAnn.currentLayout(spark, db.lshIndexRoot.get)
     val model = LshAnn.loadTables(spark, cur)
     val eng = pairs(LshAnn.searchStored(spark.read.parquet(cur), model, Q, 10,
-      probes = Probes))
+      LshAnn.Directed(Probes)))
     assert(got === eng)
     // save relocates the live version under the save dir as its own
     // versioned root; load serves the same answers from it

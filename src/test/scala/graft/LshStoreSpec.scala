@@ -35,9 +35,9 @@ class LshStoreSpec extends SparkSpec {
     // parity: the stored candidate set is the same union-over-tables set
     val bucketed = LshAnn.withTableBuckets(embeddings, "embedding", model)
     val mem = pairs(LshAnn.searchMulti(bucketed, model, VectorModel.AnnQuery, 10,
-      probes = Probes, vecCol = "embedding", idCol = "vec_id"))
+      LshAnn.Directed(Probes), vecCol = "embedding", idCol = "vec_id"))
     val storedDf = LshAnn.searchStored(spark.read.parquet(s"$dir/t"), model,
-      VectorModel.AnnQuery, 10, probes = Probes, vecCol = "embedding", idCol = "vec_id")
+      VectorModel.AnnQuery, 10, LshAnn.Directed(Probes), vecCol = "embedding", idCol = "vec_id")
     val stored = pairs(storedDf)
     assert(stored === mem)
     assert(stored.nonEmpty)
@@ -75,7 +75,7 @@ class LshStoreSpec extends SparkSpec {
     // table-0 home group dirs pointer candidates fetch their payload
     // from; stored results are unchanged, so serving reads nothing else
     val probed = LshAnn.dependencyDirs(spark.read.parquet(s"$dir/t"), model,
-      VectorModel.AnnQuery, Probes)
+      VectorModel.AnnQuery, 10, LshAnn.Directed(Probes))
     val (fs, p) = graft.store.Fs.pathFs(spark, s"$dir/t")
     val removed = fs.listStatus(p)
       .filter(_.getPath.getName.startsWith("lsh_table="))
@@ -89,7 +89,7 @@ class LshStoreSpec extends SparkSpec {
     assert(removed.nonEmpty, "some buckets must be unprobed at this operating point")
     removed.foreach(s => fs.delete(s.getPath, true))
     val after = pairs(LshAnn.searchStored(spark.read.parquet(s"$dir/t"), model,
-      VectorModel.AnnQuery, 10, probes = Probes, vecCol = "embedding", idCol = "vec_id"))
+      VectorModel.AnnQuery, 10, LshAnn.Directed(Probes), vecCol = "embedding", idCol = "vec_id"))
     assert(after === stored,
       "stored serving must not depend on any unprobed bucket's files")
   }
@@ -104,12 +104,12 @@ class LshStoreSpec extends SparkSpec {
     val layout = spark.read.parquet(s"$dir/t")
     val queries = (0 until 4).map(s => (s.toLong, VectorModel.syntheticQuery(s)))
     val batchDf = LshAnn.batchSearchStored(layout, model, queries, 10,
-      probes = Probes, vecCol = "embedding", idCol = "vec_id")
+      LshAnn.Directed(Probes), vecCol = "embedding", idCol = "vec_id")
     val batch = batchDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val single = queries.flatMap { case (qid, q) =>
       LshAnn.searchStored(spark.read.parquet(s"$dir/t"), model, q, 10,
-        probes = Probes, vecCol = "embedding", idCol = "vec_id")
+        LshAnn.Directed(Probes), vecCol = "embedding", idCol = "vec_id")
         .select("vec_id", "sim")
         .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
     }.toSet
@@ -141,7 +141,8 @@ class LshStoreSpec extends SparkSpec {
     // group dirs); batch results unchanged — one pruned scan, nothing
     // else read
     val dep = queries.flatMap { case (_, q) =>
-      LshAnn.dependencyDirs(spark.read.parquet(s"$dir/t"), model, q, Probes)
+      LshAnn.dependencyDirs(spark.read.parquet(s"$dir/t"), model, q, 10,
+        LshAnn.Directed(Probes))
     }.toSet
     val (fs, p) = graft.store.Fs.pathFs(spark, s"$dir/t")
     val removed = fs.listStatus(p)
@@ -156,7 +157,7 @@ class LshStoreSpec extends SparkSpec {
     assert(removed.nonEmpty, "some buckets must be outside the batch's dependency set")
     removed.foreach(s => fs.delete(s.getPath, true))
     val after = LshAnn.batchSearchStored(spark.read.parquet(s"$dir/t"), model,
-      queries, 10, probes = Probes, vecCol = "embedding", idCol = "vec_id")
+      queries, 10, LshAnn.Directed(Probes), vecCol = "embedding", idCol = "vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(after === batch,
       "batch serving must not depend on any dir outside the union dependency set")
@@ -202,10 +203,10 @@ class LshStoreSpec extends SparkSpec {
       }
     val q = VectorModel.syntheticQuery(1)
     val maintained = LshAnn.searchStored(spark.read.parquet(s"$dir/t"), model1,
-      q, 10, probes = Probes, vecCol = "embedding", idCol = "vec_id")
+      q, 10, LshAnn.Directed(Probes), vecCol = "embedding", idCol = "vec_id")
       .select("vec_id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val fresh = LshAnn.searchStored(spark.read.parquet(s"$freshDir/t"), freshModel,
-      q, 10, probes = Probes, vecCol = "embedding", idCol = "vec_id")
+      q, 10, LshAnn.Directed(Probes), vecCol = "embedding", idCol = "vec_id")
       .select("vec_id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(maintained === fresh)
     assert(maintained.nonEmpty)
@@ -219,49 +220,45 @@ class LshStoreSpec extends SparkSpec {
       s"$dir/t", VectorModel.EmbDim, numBits = Bits)
     val layout = spark.read.parquet(s"$dir/t")
     val sizes = LshAnn.bucketSizes(layout)
-    assert(sizes.values.sum === embeddings.count() * model.numTables)
+    assert(sizes.map(_.sum).sum === embeddings.count() * model.numTables)
     val q = VectorModel.AnnQuery
+    def sets(rule: LshAnn.ProbeRule, k: Int) = LshAnn.probeSets(model, rule, q, k)
 
     // every table's own (cost-0) bucket survives even a 1-row budget
-    val tiny = LshAnn.probeSetsAdaptive(q, model, sizes, 1L,
-      maxProbesPerTable = Probes)
+    val tiny = sets(LshAnn.Adaptive(sizes, 1), 1)
+    val own = sets(LshAnn.Directed(1), 1)
     (0 until model.numTables).foreach { t =>
-      assert(tiny(t).head ===
-        LshAnn.probeSet(q, model.planes(t), model.biases(t), 1).head)
+      assert(own(t).size === 1)
+      assert(tiny(t).head === own(t).head)
     }
     // a larger budget never drops a probed bucket (monotone walk)
-    val budgets = Seq(1L, 5L, 20L, 100L, 1000000L)
-    budgets.map(b => LshAnn.probeSetsAdaptive(q, model, sizes, b,
-        maxProbesPerTable = Probes))
+    val budgets = Seq(1, 5, 20, 100, 1000000)
+    budgets.map(b => sets(LshAnn.Adaptive(sizes, b), 1))
       .sliding(2).foreach { case Seq(a, b) =>
         (0 until model.numTables).foreach(t =>
           assert(a(t).toSet.subsetOf(b(t).toSet)))
       case _ => ()
     }
-    // a budget beyond the corpus degenerates to exactly the fixed sets —
-    // adaptivity only ever SHRINKS the probe list
-    val sat = LshAnn.probeSetsAdaptive(q, model, sizes, Long.MaxValue / 2,
-      maxProbesPerTable = Probes)
+    // a budget beyond the corpus degenerates to exactly the directed sets
+    // at the walk's cap — adaptivity only ever SHRINKS the probe list
+    val sat = sets(LshAnn.Adaptive(sizes, 1000000), 10)
+    val directed = sets(LshAnn.Directed(LshAnn.DefaultProbes), 10)
     (0 until model.numTables).foreach { t =>
-      assert(sat(t) ===
-        LshAnn.probeSet(q, model.planes(t), model.biases(t), Probes))
+      assert(sat(t).toSet === directed(t).toSet)
     }
-    // end-to-end: saturating adaptive serving == fixed stored serving
+    // end-to-end: saturating adaptive serving == directed stored serving
     val fixed = pairs(LshAnn.searchStored(layout, model, q, 10,
-      probes = Probes, vecCol = "embedding", idCol = "vec_id"))
-    val adaptSat = pairs(LshAnn.searchStoredAdaptive(layout, model, q, 10,
-      sizes, overscan = 1000000, maxProbesPerTable = Probes,
-      vecCol = "embedding", idCol = "vec_id"))
+      LshAnn.Directed(LshAnn.DefaultProbes), vecCol = "embedding", idCol = "vec_id"))
+    val adaptSat = pairs(LshAnn.searchStored(layout, model, q, 10,
+      LshAnn.Adaptive(sizes, 1000000), vecCol = "embedding", idCol = "vec_id"))
     assert(adaptSat === fixed)
 
     // a SMALL budget serves exactly the cosine top-k of its own candidate
     // union — computed independently driver-side from the bucketed rows
-    val overscan = 2
+    val small = LshAnn.Adaptive(sizes, 2)
     val topK = 5
-    val smallSets = LshAnn.probeSetsAdaptive(q, model, sizes,
-      overscan.toLong * topK, maxProbesPerTable = Probes)
-    val small = pairs(LshAnn.searchStoredAdaptive(layout, model, q, topK,
-      sizes, overscan = overscan, maxProbesPerTable = Probes,
+    val smallSets = sets(small, topK)
+    val smallRes = pairs(LshAnn.searchStored(layout, model, q, topK, small,
       vecCol = "embedding", idCol = "vec_id"))
     val bucketed = LshAnn.withTableBuckets(embeddings, "embedding", model)
       .select((Seq(col("vec_id"), col("embedding")) ++
@@ -278,18 +275,16 @@ class LshStoreSpec extends SparkSpec {
       }
       .sortBy { case (id, sim) => (-sim, id) }
       .take(topK).toSeq
-    assert(small === expected)
-    assert(small.nonEmpty)
+    assert(smallRes === expected)
+    assert(smallRes.nonEmpty)
 
     // batch == single parity on the adaptive path
     val queries = (0 until 3).map(s => (s.toLong, VectorModel.syntheticQuery(s)))
-    val batch = LshAnn.batchSearchStoredAdaptive(layout, model, queries, topK,
-      sizes, overscan = overscan, maxProbesPerTable = Probes,
+    val batch = LshAnn.batchSearchStored(layout, model, queries, topK, small,
       vecCol = "embedding", idCol = "vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val single = queries.flatMap { case (qid, qq) =>
-      LshAnn.searchStoredAdaptive(layout, model, qq, topK, sizes,
-        overscan = overscan, maxProbesPerTable = Probes,
+      LshAnn.searchStored(layout, model, qq, topK, small,
         vecCol = "embedding", idCol = "vec_id")
         .select("vec_id", "sim")
         .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))

@@ -853,12 +853,12 @@ class StreamingSpec extends SparkSpec {
     val queries = (0 until 3).map(s => graft.model.VectorModel.syntheticQuery(s))
     def served(): Seq[Seq[(Long, Double)]] = queries.map(q =>
       LshAnn.searchStored(spark.read.parquet(s"$base/t"), model, q, 10,
-        probes = 12, vecCol = "embedding", idCol = "vec_id")
+        LshAnn.Directed(12), vecCol = "embedding", idCol = "vec_id")
         .select("vec_id", "sim").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     val grown = served()
     val mem = queries.map(q =>
-      LshAnn.searchMulti(bucketed, model, q, 10, probes = 12,
+      LshAnn.searchMulti(bucketed, model, q, 10, LshAnn.Directed(12),
         vecCol = "embedding", idCol = "vec_id")
         .select("vec_id", "sim").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq)

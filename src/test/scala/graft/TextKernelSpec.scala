@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.LambdaFunction
-import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
 import graft.dedup.Dedup
 import graft.functions.{SignatureMatches, TextKernels}
 
-/** The one-pass text kernels behind `Dedup.ngrams`, `shingles`, `hash60`
-  * and `minhashSignatures`, and the LSH stages' signature match count, are
+/** The one-pass text kernels behind `Dedup.ngrams`, `shingles`, `hash60`,
+  * `minhashSignatures` and `simhash`, and the LSH stages' signature match count, are
   * bit-identical to the column expressions they replaced (inlined below as
   * the parity mirror, as CosineSpec keeps `cosineConst`), under whole-stage
   * codegen and interpreted evaluation. */
@@ -40,6 +40,21 @@ class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .select(col("id").as("doc"), explode(oldShingles(col("text"), k)).as("sg"))
       .select(col("doc"), (oldHash60(col("sg")) % Dedup.MinhashP).as("hm"))
       .groupBy("doc").agg(hashCols.head, hashCols.tail: _*)
+  }
+
+  /** `Dedup.simhash` before its one-pass kernel: distinct shingles
+    * exploded to rows, a 60-term ±1 vote aggregate per doc. */
+  private def oldSimhash(df: DataFrame, k: Int, bits: Int): DataFrame = {
+    val ex = df
+      .where(size(split(col("text"), " ")) >= k)
+      .select(col("id").as("doc"), explode(Dedup.shingles(col("text"), k)).as("sg"))
+      .select(col("doc"), Dedup.hash60(col("sg")).as("hw"))
+    val voteCols = (0 until bits).map(b =>
+      sum(when(shiftright(col("hw"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"s$b"))
+    val votes = ex.groupBy("doc").agg(voteCols.head, voteCols.tail: _*)
+    votes.select(col("doc"),
+      (0 until bits).map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+        .reduceLeft[Column](_ + _).as("simhash"))
   }
 
   // ---- inputs ---------------------------------------------------------
@@ -209,6 +224,20 @@ class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         }
       }
     }
+
+    test(s"simhash equals the exploded vote aggregation for every k and width ($mode)") {
+      withConf(conf) {
+        val df = frame(allTexts)
+        for (k <- Ks; bits <- Seq(7, 60, 64)) {
+          def sorted(d: DataFrame) = run(mode, d).map(r => (r.getLong(0), r.getLong(1)))
+            .sortBy(_._1).toSeq
+          val got = sorted(Dedup.simhash(df, "id", "text", k, bits))
+          val want = sorted(oldSimhash(df, k, bits))
+          assert(got.nonEmpty)
+          assert(got === want, s"k=$k bits=$bits")
+        }
+      }
+    }
   }
 
   test("SignatureMatches counts over the shorter array and is null on a null array") {
@@ -236,5 +265,15 @@ class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val df = frame(corpusTexts)
     assert(shape(oldMinhashSignatures(df, 3, 32)) === ((true, true)), "premise: the check sees both")
     assert(shape(Dedup.minhashSignatures(df, "id", "text")) === ((false, false)))
+  }
+
+  test("the simhash plan has no Generate and no aggregate") {
+    def shape(df: DataFrame): (Boolean, Boolean) = {
+      val plan = df.queryExecution.optimizedPlan
+      (plan.exists(_.isInstanceOf[Generate]), plan.exists(_.isInstanceOf[Aggregate]))
+    }
+    val df = frame(corpusTexts)
+    assert(shape(oldSimhash(df, 3, 60)) === ((true, true)), "premise: the check sees both")
+    assert(shape(Dedup.simhash(df, "id", "text")) === ((false, false)))
   }
 }

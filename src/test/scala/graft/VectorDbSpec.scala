@@ -643,6 +643,11 @@ class VectorDbSpec extends SparkSpec {
       sets(db.batchSearch(queries, topK = 3, method = "ivfpq")))
     assert(sets(db.batchSearchDf(qdf, topK = 3, method = "ivfpq"))
       .map(_._1) === (0 until 40).map(_.toLong).toSet)
+    // lsh: adaptive=false serves the collected dispatch's directed rule
+    db.buildLshIndex()
+    assert(sets(db.batchSearchDf(qdf, topK = 3, method = "lsh",
+      adaptive = false)) ===
+      sets(db.batchSearch(queries, topK = 3, method = "lsh")))
     // brute force: same exact scorer, same results
     assert(sets(db.batchSearchDf(qdf, topK = 3)) ===
       sets(db.batchSearch(queries, topK = 3)))
@@ -654,7 +659,6 @@ class VectorDbSpec extends SparkSpec {
     }
     assert(ex.getMessage != null)
     // big-batch is a bulk path: no merge fallback — dirty layouts throw
-    db.buildLshIndex()
     db.insert(Seq(9.0, 9.0, 9.0, 9.0))
     intercept[IllegalStateException] {
       db.batchSearchDf(qdf, topK = 3, method = "lsh")
