@@ -2,6 +2,7 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression,
   UnsafeArrayData}
@@ -10,23 +11,30 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass word k-gram and md5-hash kernels of the dedup and text layers
-  * ([[graft.dedup.Dedup.ngrams]], `shingles`, `hash60`,
-  * `minhashSignatures`, `simhash`), and the signature match count of the
-  * LSH pair stages ([[signatureMatches]]).
+import graft.text.Pii
+
+/** One-pass kernels of the dedup and text layers: word k-grams and md5
+  * hashes ([[graft.dedup.Dedup.ngrams]], `shingles`, `hash60`,
+  * `minhashSignatures`, `simhash`), the signature match count of the LSH
+  * pair stages ([[signatureMatches]]), the token statistics of
+  * [[graft.text.TextAnalysis]] ([[tokenCount]], [[markerCount]],
+  * [[alphaTokenCount]], [[topTokenCount]]) and the guarded PII passes of
+  * [[graft.text.Pii]] ([[piiRedact]], [[piiCount]]).
   *
   * Tokens follow Spark's `split(text, " ")`: the text splits on every
   * byte 0x20 and empty tokens (double, leading and trailing spaces) are
   * kept, so n spaces make n + 1 tokens and "" is one empty token. The
   * k-gram at token i is the byte range from token i's start to token
   * i+k−1's end, which is exactly `concat_ws(" ", slice(toks, i + 1, k))`.
-  * A text of fewer than k tokens has no k-grams.
+  * A text of fewer than k tokens has no k-grams. The token statistics
+  * scan the same byte ranges and build no token strings.
   *
   * `hash60` is the high 60 bits of the md5 digest, the long that
   * `conv(substring(md5(s), 1, 15), 16, 10)` spells through hex strings
   * and that the DuckDB oracle spells `('0x' || substr(md5(s), 1, 15))::BIGINT`.
   * Every kernel here must stay bit-identical to those mirrors
-  * (TextKernelSpec pins them against the column expressions). */
+  * (TextKernelSpec and TextStatsSpec pin them against the column
+  * expressions they replaced). */
 object TextKernels {
 
   private[functions] final class Md5 {
@@ -110,6 +118,159 @@ object TextKernels {
       j += 1
     }
     m
+  }
+
+  // ---- token statistics -------------------------------------------------
+
+  /** Calls `f(start, end)` with the byte range of every token of the text
+    * in `b[off, off + len)`, in document order. */
+  private def foreachToken(b: Array[Byte], off: Int, len: Int)(f: (Int, Int) => Unit): Unit = {
+    val end = off + len
+    var s = off
+    var i = off
+    while (i < end) {
+      if (b(i) == 0x20) { f(s, i); s = i + 1 }
+      i += 1
+    }
+    f(s, end)
+  }
+
+  /** `size(split(text, " "))`: the 0x20 bytes plus one. */
+  def tokenCount(text: UTF8String): Int = {
+    val bb = text.getByteBuffer
+    val b = bb.array
+    val end = bb.position + bb.remaining
+    var n = 1
+    var i = bb.position
+    while (i < end) { if (b(i) == 0x20) n += 1; i += 1 }
+    n
+  }
+
+  /** Number of tokens whose bytes equal one of `markers`:
+    * `size(filter(split(text, " "), _.isin(markers)))`. */
+  def markerCount(text: UTF8String, markers: Array[Array[Byte]]): Int = {
+    val bb = text.getByteBuffer
+    val b = bb.array
+    var n = 0
+    foreachToken(b, bb.position, bb.remaining) { (s, e) => if (isMarker(b, s, e, markers)) n += 1 }
+    n
+  }
+
+  private def isMarker(b: Array[Byte], s: Int, e: Int, markers: Array[Array[Byte]]): Boolean = {
+    var m = 0
+    while (m < markers.length) {
+      val w = markers(m)
+      if (w.length == e - s && java.util.Arrays.equals(b, s, e, w, 0, w.length)) return true
+      m += 1
+    }
+    false
+  }
+
+  private def asciiLetter(c: Byte): Boolean = (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
+
+  /** Number of tokens holding at least one ASCII letter:
+    * `size(filter(split(text, " "), _.rlike("[A-Za-z]")))`. */
+  def alphaTokenCount(text: UTF8String): Int = {
+    val bb = text.getByteBuffer
+    val b = bb.array
+    val end = bb.position + bb.remaining
+    var n = 0
+    var alpha = false
+    var i = bb.position
+    while (i < end) {
+      val c = b(i)
+      if (c == 0x20) { if (alpha) n += 1; alpha = false }
+      else if (asciiLetter(c)) alpha = true
+      i += 1
+    }
+    if (alpha) n + 1 else n
+  }
+
+  /** Occurrences of the most frequent token: the `array_max` of
+    * `transform(array_distinct(toks), w => size(filter(toks, _ === w)))`
+    * with `toks = split(text, " ")`, in one pass over a token-count map. */
+  def topTokenCount(text: UTF8String): Int = {
+    val bb = text.getByteBuffer
+    val b = bb.array
+    val counts = new java.util.HashMap[UTF8String, Integer]
+    var top = 0
+    foreachToken(b, bb.position, bb.remaining) { (s, e) =>
+      val tok = UTF8String.fromBytes(b, s, e - s)
+      val c = counts.getOrDefault(tok, 0) + 1
+      counts.put(tok, c)
+      if (c > top) top = c
+    }
+    top
+  }
+
+  // ---- PII passes -------------------------------------------------------
+
+  /** One PII pass: its JVM pattern, a byte that every match contains, and
+    * the placeholder that replaces a match. */
+  private final class PiiPass(re: String, val guard: Byte, val placeholder: String) {
+    val pattern: Pattern = Pattern.compile(re)
+  }
+
+  /** The passes in the pinned redaction order; [[piiCount]] indexes them. */
+  private val piiPasses = Array(
+    new PiiPass(Pii.EmailRe, '@', "<EMAIL>"),
+    new PiiPass(Pii.PhoneRe, '+', "<PHONE>"),
+    new PiiPass(Pii.Ipv4JvmRe, '.', "<IP>"))
+  val EmailPass = 0
+  val PhonePass = 1
+  val Ipv4Pass = 2
+
+  private def hasByte(text: UTF8String, c: Byte): Boolean = {
+    val bb = text.getByteBuffer
+    val b = bb.array
+    val end = bb.position + bb.remaining
+    var i = bb.position
+    while (i < end) { if (b(i) == c) return true; i += 1 }
+    false
+  }
+
+  /** The text with every match of each pass replaced by its placeholder,
+    * the passes run in order on the previous pass's output. A pass runs
+    * its pattern only if the text holds its guard byte; a text that no
+    * pass changes comes back as the same `UTF8String`. */
+  def piiRedact(text: UTF8String): UTF8String = {
+    var s: String = null // the text as a String, once a guard has held
+    var changed = false
+    var k = 0
+    while (k < piiPasses.length) {
+      val p = piiPasses(k)
+      if (if (s == null) hasByte(text, p.guard) else s.indexOf(p.guard.toInt) >= 0) {
+        if (s == null) s = text.toString
+        val m = p.pattern.matcher(s)
+        if (m.find()) {
+          val out = new java.lang.StringBuilder(s.length)
+          var last = 0
+          var more = true
+          while (more) {
+            out.append(s, last, m.start).append(p.placeholder)
+            last = m.end
+            more = m.find()
+          }
+          s = out.append(s, last, s.length).toString
+          changed = true
+        }
+      }
+      k += 1
+    }
+    if (changed) UTF8String.fromString(s) else text
+  }
+
+  /** Non-overlapping matches of pass `pass`'s pattern in the text; 0
+    * without a look when the text lacks the pass's guard byte. */
+  def piiCount(text: UTF8String, pass: Int): Long = {
+    val p = piiPasses(pass)
+    if (!hasByte(text, p.guard)) 0L
+    else {
+      val m = p.pattern.matcher(text.toString)
+      var n = 0L
+      while (m.find()) n += 1
+      n
+    }
   }
 }
 
@@ -256,4 +417,85 @@ case class SignatureMatches(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
   override def prettyName: String = "signature_matches"
+}
+
+/** `INT` number of `split(text, " ")` tokens ([[TextKernels.tokenCount]]). */
+case class TokenCount(child: Expression) extends UnaryExpression with KernelInputCheck {
+  override protected def expected: Seq[Option[DataType]] = Seq(Some(StringType))
+  override def dataType: DataType = IntegerType
+  override def nullSafeEval(t: Any): Any = TextKernels.tokenCount(t.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.functions.TextKernels.tokenCount($t);")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "token_count"
+}
+
+/** `INT` number of a string's tokens that equal one of `markers`
+  * ([[TextKernels.markerCount]]). */
+case class MarkerCount(child: Expression, markers: Seq[String])
+    extends UnaryExpression with KernelInputCheck {
+  @transient private lazy val markerBytes: Array[Array[Byte]] =
+    markers.map(_.getBytes(UTF_8)).toArray
+  override protected def expected: Seq[Option[DataType]] = Seq(Some(StringType))
+  override def dataType: DataType = IntegerType
+  override def nullSafeEval(t: Any): Any =
+    TextKernels.markerCount(t.asInstanceOf[UTF8String], markerBytes)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ms = ctx.addReferenceObj("markers", markerBytes, "byte[][]")
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.functions.TextKernels.markerCount($t, $ms);")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "marker_count"
+}
+
+/** `INT` number of a string's tokens that hold an ASCII letter
+  * ([[TextKernels.alphaTokenCount]]). */
+case class AlphaTokenCount(child: Expression) extends UnaryExpression with KernelInputCheck {
+  override protected def expected: Seq[Option[DataType]] = Seq(Some(StringType))
+  override def dataType: DataType = IntegerType
+  override def nullSafeEval(t: Any): Any = TextKernels.alphaTokenCount(t.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.functions.TextKernels.alphaTokenCount($t);")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "alpha_token_count"
+}
+
+/** `INT` occurrences of a string's most frequent token
+  * ([[TextKernels.topTokenCount]]). */
+case class TopTokenCount(child: Expression) extends UnaryExpression with KernelInputCheck {
+  override protected def expected: Seq[Option[DataType]] = Seq(Some(StringType))
+  override def dataType: DataType = IntegerType
+  override def nullSafeEval(t: Any): Any = TextKernels.topTokenCount(t.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.functions.TextKernels.topTokenCount($t);")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "top_token_count"
+}
+
+/** `STRING` with every PII span masked ([[TextKernels.piiRedact]]). */
+case class PiiRedact(child: Expression) extends UnaryExpression with KernelInputCheck {
+  override protected def expected: Seq[Option[DataType]] = Seq(Some(StringType))
+  override def dataType: DataType = StringType
+  override def nullSafeEval(t: Any): Any = TextKernels.piiRedact(t.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.functions.TextKernels.piiRedact($t);")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "pii_redact"
+}
+
+/** `BIGINT` match count of one PII pass ([[TextKernels.piiCount]]). */
+case class PiiCount(child: Expression, pass: Int) extends UnaryExpression with KernelInputCheck {
+  override protected def expected: Seq[Option[DataType]] = Seq(Some(StringType))
+  override def dataType: DataType = LongType
+  override def nullSafeEval(t: Any): Any = TextKernels.piiCount(t.asInstanceOf[UTF8String], pass)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.functions.TextKernels.piiCount($t, $pass);")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "pii_count"
 }

@@ -1,7 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.functions.{PiiCount, PiiRedact, TextKernels}
 
 /** PII detection and redaction — the scrubbing stage every training-data
   * pipeline runs before a corpus ships: count and mask emails, phone
@@ -9,15 +11,28 @@ import org.apache.spark.sql.functions._
   *
   * An extension past the reference (no text pipeline there); the shape
   * follows the public corpus-cleaning recipes (C4/Gopher-style regex
-  * scrubbing). Everything is `regexp_count`/`regexp_replace` — codegen'd
-  * expressions, no UDF, so the scan stays in whole-stage codegen and the
-  * operator is a pure per-row map (no shuffle at any scale).
+  * scrubbing). The column functions are one Catalyst kernel each
+  * ([[graft.functions.PiiRedact]], [[graft.functions.PiiCount]]; no UDF),
+  * so the scan stays in whole-stage codegen and the operator is a pure
+  * per-row map (no shuffle at any scale).
   *
-  * The patterns are deliberately restricted to syntax with IDENTICAL
-  * semantics under Java regex (Spark) and RE2 (DuckDB): character
-  * classes, bounded repetition, `\b` word boundaries (both engines define
-  * word chars as [A-Za-z0-9_]), no backrefs, no lookaround — that is what
-  * keeps the operator hash-gated against the oracle.
+  * Guards: a pass runs its precompiled pattern only if the text holds a
+  * byte that every match of the pattern contains — `@` for emails, `+`
+  * for phone numbers, `.` for IPv4 addresses. UTF-8 continuation bytes
+  * are never ASCII, so the byte scan is exact; a text no pass changes
+  * comes back as the same string, with no decode and no re-encode.
+  *
+  * The patterns are restricted to syntax with identical semantics under
+  * Java regex (Spark) and RE2 (DuckDB): character classes, bounded
+  * repetition, no backrefs. The one exception is the word boundary. RE2's
+  * `\b` is ASCII (word chars are [A-Za-z0-9_]); Java's, on JDK 17, counts
+  * every Unicode letter, so `\b` before `1.2.3.4` in `é1.2.3.4` holds in
+  * DuckDB and fails on the JVM. The JVM IPv4 pattern ([[Ipv4JvmRe]])
+  * therefore spells the boundary as ASCII lookarounds, which is exactly
+  * RE2's `\b` next to a digit, and the DuckDB mirrors keep [[Ipv4Re]]:
+  * the two strings differ on purpose and match the same spans
+  * (TextStatsSpec pins them on non-ASCII neighbours). That is what keeps
+  * the operator hash-gated against the oracle.
   *
   * Redaction order is pinned (email → phone → ipv4) on both sides:
   * placeholder tokens contain no digits or dots, so an earlier pass never
@@ -28,21 +43,26 @@ object Pii {
 
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   val PhoneRe = "\\+\\d{1,3}-\\d{2,4}-\\d{3,4}-\\d{4}"
+  /** The RE2 (DuckDB) IPv4 pattern; `\b` is ASCII there. */
   val Ipv4Re = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
+  /** [[Ipv4Re]] for `java.util.regex`: RE2's ASCII `\b` next to a digit
+    * spelled as lookarounds, since Java's `\b` treats non-ASCII letters
+    * as word chars. */
+  val Ipv4JvmRe =
+    "(?<![A-Za-z0-9_])\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}(?![A-Za-z0-9_])"
+
+  private def count(text: Column, pass: Int): Column =
+    ColumnBridge.column(PiiCount(ColumnBridge.expression(text), pass))
 
   /** Non-overlapping match counts, BIGINT (the oracle's len() type). */
-  def emailCount(text: Column): Column = regexp_count(text, lit(EmailRe)).cast("long")
-  def phoneCount(text: Column): Column = regexp_count(text, lit(PhoneRe)).cast("long")
-  def ipv4Count(text: Column): Column = regexp_count(text, lit(Ipv4Re)).cast("long")
+  def emailCount(text: Column): Column = count(text, TextKernels.EmailPass)
+  def phoneCount(text: Column): Column = count(text, TextKernels.PhonePass)
+  def ipv4Count(text: Column): Column = count(text, TextKernels.Ipv4Pass)
 
   /** Masked text: every PII span replaced by its typed placeholder, in the
     * pinned pass order. */
   def redact(text: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text, EmailRe, "<EMAIL>"),
-        PhoneRe, "<PHONE>"),
-      Ipv4Re, "<IP>")
+    ColumnBridge.column(PiiRedact(ColumnBridge.expression(text)))
 
   /** The same three passes as DuckDB SQL over a text expression. */
   def redactSql(text: String): String =

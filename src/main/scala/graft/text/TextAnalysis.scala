@@ -1,15 +1,25 @@
 package graft.text
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.functions.{AlphaTokenCount, MarkerCount, TokenCount, TopTokenCount}
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language-ID heuristics, fingerprinting.
   *
-  * All operators are pure column expressions (codegen'd, no UDFs) and have
-  * exact DuckDB mirrors in [[graft.queries.TextQueries]]. This is the text
-  * pipeline the reference evidences but never shipped (jieba/GTE deps with
-  * no importing code — SURVEY.md "Reference size & layout" note).
+  * All operators are pure column expressions (no UDFs) and have exact
+  * DuckDB mirrors in [[graft.queries.TextQueries]]. The token statistics
+  * ([[tokenCount]], [[markerCount]], [[alphaTokenFraction]],
+  * [[topWordFrac]]) are one-pass byte-scan kernels of
+  * [[graft.functions.TextKernels]] under the `split(text, " ")` token
+  * rule, so [[stopwordRatio]], [[qualityScore]], [[langId]],
+  * [[avgTokenLen]] and [[symbolRatio]] compile inside whole-stage codegen
+  * with no lambda and no token array. This is the text pipeline the
+  * reference evidences but never shipped (jieba/GTE deps with no
+  * importing code — SURVEY.md "Reference size & layout" note).
   */
 object TextAnalysis {
 
@@ -17,7 +27,14 @@ object TextAnalysis {
     * matching DuckDB `string_split`. */
   def tokens(text: Column): Column = split(text, " ")
 
-  def tokenCount(text: Column): Column = size(tokens(text))
+  private def kernel(text: Column, k: Expression => Expression): Column =
+    ColumnBridge.column(k(ColumnBridge.expression(text)))
+
+  /** `size(tokens(text))`, counted from the 0x20 bytes with no token
+    * array ([[graft.functions.TokenCount]]). Like every token statistic
+    * here it is null on a null text, as `size` is with ANSI mode on
+    * (Spark 4's default). */
+  def tokenCount(text: Column): Column = kernel(text, TokenCount)
 
   /** CJK unified-ideograph detector (the BMP block — the range jieba-class
     * tokenizers treat as Chinese text). */
@@ -219,9 +236,11 @@ object TextAnalysis {
   def lexTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit(LexPattern), lit(0)))
 
-  /** Count of tokens belonging to a fixed marker set. */
+  /** Count of tokens belonging to a fixed marker set: the tokens of
+    * [[tokens]] whose bytes equal a marker, counted in one scan with no
+    * token strings ([[graft.functions.MarkerCount]]). */
   def markerCount(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isin(markers.map(_.asInstanceOf[Any]): _*)))
+    kernel(text, MarkerCount(_, markers))
 
   val Stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
 
@@ -237,8 +256,7 @@ object TextAnalysis {
     * published "80% of words contain an alphabetic character" Gopher
     * rule's statistic. */
   def alphaTokenFraction(text: Column): Column =
-    size(filter(tokens(text), t => t.rlike("[A-Za-z]"))).cast("double") /
-      tokenCount(text).cast("double")
+    kernel(text, AlphaTokenCount).cast("double") / tokenCount(text).cast("double")
 
   /** Symbol-to-token ratio over the Gopher symbol set (# and …/...):
     * occurrences counted as non-overlapping regex matches. */
@@ -291,14 +309,10 @@ object TextAnalysis {
   }
 
   /** Top-word frequency ratio: occurrences of the most frequent token over
-    * total tokens. O(distinct · total) comparisons per doc as a pure
-    * codegen'd expression — no explode, no shuffle; doc token counts are
-    * bounded, so the quadratic term is a constant, not a scale risk. */
-  def topWordFrac(text: Column): Column = {
-    val toks = tokens(text)
-    val counts = transform(array_distinct(toks), w => size(filter(toks, t => t === w)))
-    array_max(counts).cast("double") / size(toks).cast("double")
-  }
+    * total tokens, counted in one pass over a per-doc token map
+    * ([[graft.functions.TopTokenCount]]) — no explode, no shuffle. */
+  def topWordFrac(text: Column): Column =
+    kernel(text, TopTokenCount).cast("double") / tokenCount(text).cast("double")
 
   /** Exact content fingerprint (md5 of raw text). */
   def fingerprint(text: Column): Column = md5(text)

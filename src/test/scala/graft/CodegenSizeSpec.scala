@@ -49,6 +49,12 @@ class CodegenSizeSpec extends SparkSpec {
       "Dedup.hash60" -> Dedup.hash60(t),
       "TextAnalysis.tokens" -> TextAnalysis.tokens(t),
       "TextAnalysis.tokenCount" -> TextAnalysis.tokenCount(t),
+      "TextAnalysis.markerCount" -> TextAnalysis.markerCount(t, TextAnalysis.Stopwords),
+      "TextAnalysis.stopwordRatio" -> TextAnalysis.stopwordRatio(t),
+      "TextAnalysis.qualityScore" -> TextAnalysis.qualityScore(t),
+      "TextAnalysis.langId" -> TextAnalysis.langId(t),
+      "TextAnalysis.alphaTokenFraction" -> TextAnalysis.alphaTokenFraction(t),
+      "TextAnalysis.topWordFrac" -> TextAnalysis.topWordFrac(t),
       "TextAnalysis.lexTokenCount" -> TextAnalysis.lexTokenCount(t),
       "TextAnalysis.avgTokenLen" -> TextAnalysis.avgTokenLen(t),
       "TextAnalysis.symbolRatio" -> TextAnalysis.symbolRatio(t),

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -18,7 +16,7 @@ import graft.functions.{SignatureMatches, TextKernels}
   * bit-identical to the column expressions they replaced (inlined below as
   * the parity mirror, as CosineSpec keeps `cosineConst`), under whole-stage
   * codegen and interpreted evaluation. */
-class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class TextKernelSpec extends KernelModes {
 
   // ---- the replaced column expressions -------------------------------
 
@@ -82,16 +80,6 @@ class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  private def frame(texts: Seq[String], idOf: Int => Long = _.toLong): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("text", StringType, nullable = true)))
-    // an RDD, not a local relation: ConvertToLocalRelation would evaluate
-    // the projections at optimization time and bypass codegen
-    spark.createDataFrame(spark.sparkContext.parallelize(
-      texts.zipWithIndex.map { case (t, i) => Row(idOf(i), t) }, 4), schema)
-  }
-
   private lazy val allTexts = edgeTexts ++ corpusTexts
 
   private val SigLen = 32
@@ -118,36 +106,6 @@ class TextKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def signatureMatches(a: Column, b: Column): Column = ColumnBridge.column(
     SignatureMatches(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  // ---- evaluation modes -------------------------------------------------
-
-  private val Codegen = "whole-stage codegen"
-
-  /** Codegen mode fails on a compile error instead of falling back. */
-  private val Modes: Seq[(String, Seq[(String, String)])] = Seq(
-    Codegen -> Seq(
-      "spark.sql.codegen.wholeStage" -> "true",
-      "spark.sql.codegen.fallback" -> "false",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
-    "interpreted" -> Seq(
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-
-  private def withConf[T](kv: Seq[(String, String)])(body: => T): T = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  /** Collects `df`, checking the plan ran in the mode under test. */
-  private def run(mode: String, df: DataFrame): Array[Row] = {
-    val rows = df.collect()
-    val plan = df.queryExecution.executedPlan
-    assert(find(plan)(_.isInstanceOf[WholeStageCodegenExec]).isDefined === (mode == Codegen),
-      plan.treeString)
-    rows
-  }
 
   private def tokens(t: String): Int = t.split(" ", -1).length
 
