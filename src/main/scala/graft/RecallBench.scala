@@ -62,7 +62,8 @@ object RecallBench {
       VectorSearch.bruteForceTopK(data, q, k, vecCol = "embedding", idCol = "vec_id")
         .select("vec_id"))
     val (ivfMs, ivfRes) = timeAll(q =>
-      Ivf.search(ivfAssigned, ivfModel, q, k, vecCol = "embedding", idCol = "vec_id")
+      Ivf.search(ivfAssigned, ivfModel, q, k, Ivf.defaultRule(ivfModel),
+        vecCol = "embedding", idCol = "vec_id")
         .select("vec_id"))
     // ADAPTIVE candidate-mass walk at ann_ivf_topk's registered budget —
     // the serving default since round 14 (the fixed rule above stays as
@@ -77,12 +78,12 @@ object RecallBench {
     val ivfAdaptBudget = graft.queries.ApproxQueries.AnnIvfOverscan.toLong *
       graft.queries.ApproxQueries.AnnIvfTopKK
     val ivfAdaptOverscan = math.max(1, math.round(ivfAdaptBudget.toDouble / k).toInt)
+    val ivfAdaptRule = Ivf.Adaptive(ivfSizes, ivfAdaptOverscan)
     val (ivfAdaptMs, ivfAdaptRes) = timeAll(q =>
-      Ivf.searchAdaptive(ivfAssigned, ivfModel, q, k, ivfSizes,
-        overscan = ivfAdaptOverscan, vecCol = "embedding", idCol = "vec_id")
+      Ivf.search(ivfAssigned, ivfModel, q, k, ivfAdaptRule,
+        vecCol = "embedding", idCol = "vec_id")
         .select("vec_id"))
-    val ivfAdaptProbeLists = queries.map(q =>
-      ivfModel.probeClustersAdaptive(q, ivfSizes, ivfAdaptOverscan.toLong * k))
+    val ivfAdaptProbeLists = queries.map(q => ivfAdaptRule.probes(ivfModel, q, k))
     val ivfAdaptMeanProbes =
       ivfAdaptProbeLists.map(_.size).sum.toDouble / queries.size
     val ivfTotal = ivfSizes.values.sum.toDouble
@@ -170,7 +171,7 @@ object RecallBench {
       vecCol = "embedding", idCol = "vec_id")
     ivfPqEncoded.cache().count()
     val (ivfPqMs, ivfPqRes) = timeAll(q =>
-      IvfPq.search(ivfPqEncoded, ivfPqModel, q, k,
+      IvfPq.search(ivfPqEncoded, ivfPqModel, q, k, Ivf.defaultRule(ivfPqModel.ivf),
         refineFrom = Some(data), vecCol = "embedding", idCol = "vec_id")
         .select("vec_id"))
 
@@ -249,11 +250,11 @@ object RecallBench {
       val triples = sQueries.map { q =>
         val ex = VectorSearch.bruteForceTopK(vecs, q, k)
           .select("id").collect().map(_.getLong(0)).toSet
-        val fx = Ivf.search(sAssigned, sModel, q, k)
+        val fx = Ivf.search(sAssigned, sModel, q, k, Ivf.defaultRule(sModel))
           .select("id").collect().map(_.getLong(0)).toSet
-        val ad = Ivf.searchAdaptive(sAssigned, sModel, q, k, sizes)
+        val ad = Ivf.search(sAssigned, sModel, q, k, Ivf.Adaptive(sizes))
           .select("id").collect().map(_.getLong(0)).toSet
-        val probes = sModel.probeClustersAdaptive(q, sizes, 16L * k).size
+        val probes = Ivf.Adaptive(sizes).probes(sModel, q, k).size
         (if (ex.isEmpty) 1.0 else ex.intersect(fx).size.toDouble / ex.size,
           if (ex.isEmpty) 1.0 else ex.intersect(ad).size.toDouble / ex.size,
           probes.toDouble)
@@ -319,7 +320,8 @@ object RecallBench {
         .head.getSeq[Double](0)
       val ex = VectorSearch.bruteForceTopK(embedded, qv, k, vecCol = "vector", idCol = "chunk_id")
         .select("chunk_id").collect().map(_.getLong(0)).toSet
-      val ap = Ivf.search(ragAssigned, ragModel, qv, k, vecCol = "vector", idCol = "chunk_id")
+      val ap = Ivf.search(ragAssigned, ragModel, qv, k, Ivf.defaultRule(ragModel),
+        vecCol = "vector", idCol = "chunk_id")
         .select("chunk_id").collect().map(_.getLong(0)).toSet
       if (ex.isEmpty) 1.0 else ex.intersect(ap).size.toDouble / ex.size
     }

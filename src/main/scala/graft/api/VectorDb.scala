@@ -494,7 +494,7 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     checkDim(query)
     val (assigned, model) = ivf.getOrElse(
       throw new IllegalStateException("IVF index not built"))
-    Ivf.search(assigned, model, query, topK, filter)
+    Ivf.search(assigned, model, query, topK, Ivf.defaultRule(model), filter)
   }
 
   /** Build the 1-bit code layout ([[graft.pq.BinaryQuantizer]]): fit the
@@ -1279,13 +1279,13 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
         val (assigned, model) = ivf.getOrElse(
           throw new IllegalStateException("IVF index not built"))
         Ivf.batchSearch(filter.foldLeft(assigned)((d, f) => d.where(f)),
-          model, indexed, topK)
+          model, indexed, topK, Ivf.defaultRule(model))
       case "ivfpq" =>
         // filter applies at the exact refine stage (the same
         // overfetch-then-filter semantics as single-query ivfPqSearch)
         val (encoded, model) = ivfPq.getOrElse(
           throw new IllegalStateException("IVF-PQ index not built"))
-        IvfPq.batchSearch(encoded, model, indexed, topK,
+        IvfPq.batchSearch(encoded, model, indexed, topK, Ivf.defaultRule(model.ivf),
           refineFrom = data, filter = filter)
       case "lsh" =>
         val root = lshRoot.getOrElse(
@@ -1345,10 +1345,10 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     * BigBatchSpec-parity-gated on — so the probed volume tracks each
     * query's need instead of a fixed constant:
     *
-    *  - ivf / ivfpq: [[graft.index.Ivf.IvfModel.probeClustersAdaptive]]
-    *    per row (stop at overscan·topK candidate rows);
-    *  - hnsw (routed): [[graft.index.Ivf.IvfModel.probeClustersByMargin]]
-    *    per row over the routing sidecar + per-shard stats;
+    *  - ivf / ivfpq: [[graft.index.Ivf.Adaptive]] per row (stop at
+    *    overscan·topK candidate rows);
+    *  - hnsw (routed): [[graft.index.HnswStore.Adaptive]] per row, the
+    *    margin walk over the routing sidecar + per-shard stats;
     *  - lsh: [[graft.index.LshAnn.Adaptive]], the margin-ranked flip walk
     *    stopping at [[graft.index.LshAnn.DefaultOverscan]]·topK candidate
     *    mass ([[graft.index.LshAnn.bigBatchSearchStored]]).
@@ -1402,14 +1402,13 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
         val (assigned, model) = ivf.getOrElse(
           throw new IllegalStateException("IVF index not built"))
         Ivf.bigBatchSearch(assigned, model, q0, topK,
-          sizes = if (adaptive) Some(ivfSizesOf(assigned)) else None,
-          overscan = scan, filter = filter)
+          ivfRule(assigned, model, adaptive, scan), filter = filter)
       case "ivfpq" =>
         val (encoded, model) = ivfPq.getOrElse(
           throw new IllegalStateException("IVF-PQ index not built"))
-        IvfPq.bigBatchSearch(encoded, model, q0, topK, refineFrom = data,
-          sizes = if (adaptive) Some(ivfPqSizesOf(encoded)) else None,
-          overscan = scan, filter = filter)
+        IvfPq.bigBatchSearch(encoded, model, q0, topK,
+          ivfRule(encoded, model.ivf, adaptive, scan), refineFrom = data,
+          filter = filter)
       case "hnsw" =>
         val p = hnswPath.getOrElse(
           throw new IllegalStateException("HNSW index not built"))
@@ -1442,24 +1441,20 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
   // ---- memoized per-layout statistics for the adaptive big-batch walks.
   // The in-session ivf/ivfpq frames are REPLACED on every write (the
   // incremental maintenance reassigns the var), so reference identity is
-  // the exact invalidation key; the hnsw/lsh stored layouts key on the
-  // path + covered watermark the serving guard already requires.
-  private var ivfSizesMemo: Option[(DataFrame, Map[Int, Long])] = None
-  private def ivfSizesOf(assigned: DataFrame): Map[Int, Long] =
-    ivfSizesMemo match {
-      case Some((df, sz)) if df eq assigned => sz
-      case _ =>
-        val sz = Ivf.clusterSizes(assigned)
-        ivfSizesMemo = Some((assigned, sz)); sz
-    }
-  private var ivfPqSizesMemo: Option[(DataFrame, Map[Int, Long])] = None
-  private def ivfPqSizesOf(encoded: DataFrame): Map[Int, Long] =
-    ivfPqSizesMemo match {
-      case Some((df, sz)) if df eq encoded => sz
-      case _ =>
-        val sz = Ivf.clusterSizes(encoded)
-        ivfPqSizesMemo = Some((encoded, sz)); sz
-    }
+  // the exact invalidation key: Dataset keeps Object identity equality,
+  // and a weak key lets a replaced frame's entry go with it. The hnsw/lsh
+  // stored layouts key on the path + covered watermark the serving guard
+  // already requires.
+  private val clusterSizesMemo = new java.util.WeakHashMap[DataFrame, Map[Int, Long]]()
+
+  /** The ivf/ivfpq probe rule of a big-batch serve over `layout`: the
+    * candidate-mass walk over its memoized cluster sizes, or the
+    * reference's fixed count. */
+  private def ivfRule(layout: DataFrame, model: Ivf.IvfModel, adaptive: Boolean,
+      overscan: Int): Ivf.ProbeRule =
+    if (adaptive)
+      Ivf.Adaptive(clusterSizesMemo.computeIfAbsent(layout, Ivf.clusterSizes(_)), overscan)
+    else Ivf.defaultRule(model)
   private var hnswStatsMemo: Option[((String, Long), graft.index.HnswStore.RoutedStats)] = None
   private def hnswStatsOf(path: String): graft.index.HnswStore.RoutedStats = {
     val key = (path, hnswCoveredUpTo)
@@ -1501,8 +1496,8 @@ final class VectorDb(val spark: SparkSession, val dim: Int,
     checkDim(query)
     val (encoded, model) = ivfPq.getOrElse(
       throw new IllegalStateException("IVF-PQ index not built"))
-    IvfPq.search(encoded, model, query, topK, refineFrom = Some(data),
-      filter = filter)
+    IvfPq.search(encoded, model, query, topK, Ivf.defaultRule(model.ivf),
+      refineFrom = Some(data), filter = filter)
   }
 
   /** Extension (graft.text.Bm25): BM25 keyword-relevance ranking over a

@@ -1113,8 +1113,8 @@ object Dedup {
       nProbes: Int = 2): DataFrame = {
     val probed = Par.widen(df)
       .select(col(idCol).as("da"), col(vecCol).cast("array<double>").as("va"),
-        explode(graft.functions.ModelExpressions
-          .probeClusters(col(vecCol), model.centroids, nProbes)).as("cluster_id"))
+        explode(graft.functions.ModelExpressions.probeClusters(col(vecCol),
+          model.centroids, graft.functions.ProbeStop.nearest(nProbes))).as("cluster_id"))
     val members = graft.index.Ivf.assign(df, model, vecCol)
       .select(col(idCol).as("db"), col(vecCol).cast("array<double>").as("vb"),
         col("cluster_id"))

@@ -170,7 +170,7 @@ object LshProbeKernel {
 
 /** `lsh_probe_sets(qvec)` — the packed (table, bucket) probe list of
   * [[LshProbeKernel]], as a codegen'd expression (the
-  * [[ProbeClustersAdaptive]] pattern: reference-object method call inside
+  * [[ProbeClusters]] pattern: reference-object method call inside
   * whole-stage codegen, no UDF node). */
 case class LshProbeSets(child: Expression, kernel: LshProbeKernel)
     extends UnaryExpression {

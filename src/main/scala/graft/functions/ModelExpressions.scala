@@ -77,30 +77,13 @@ object ModelExpressions {
       dbl(vec), ColumnBridge.expression(clusterId),
       new IvfKernel(centroids)))
 
-  /** Top-`nProbes` cluster ids by cosine similarity
-    * ([[graft.index.Ivf.knnJoin]]'s per-row probe list). */
+  /** The probe list of the one centroid walk ([[IvfKernel.probes]]) per
+    * row of `vec`, stopping by `stop` — every per-row IVF and routed-HNSW
+    * probe list ([[graft.index.Ivf.ProbeRule]],
+    * [[graft.index.HnswStore.ProbeRule]]). */
   def probeClusters(vec: Column, centroids: Array[Array[Double]],
-      nProbes: Int): Column =
-    ColumnBridge.column(ProbeClusters(
-      dbl(vec), new IvfKernel(centroids), nProbes))
-
-  /** ADAPTIVE probe list by candidate mass
-    * ([[graft.index.Ivf.IvfModel.probeClustersAdaptive]] per row —
-    * `sizes` is the per-cluster row-count array, index = cluster id). */
-  def probeClustersAdaptive(vec: Column, centroids: Array[Array[Double]],
-      sizes: Array[Long], minCandidates: Long, minProbes: Int): Column =
-    ColumnBridge.column(ProbeClustersAdaptive(
-      dbl(vec), new IvfKernel(centroids), sizes, minCandidates, minProbes))
-
-  /** MARGIN-extended adaptive probe list
-    * ([[graft.index.Ivf.IvfModel.probeClustersByMargin]] per row — the
-    * routed-HNSW big-batch walk over the routing sidecar + shard sizes). */
-  def probeClustersByMargin(vec: Column, centroids: Array[Array[Double]],
-      sizes: Array[Long], minCandidates: Long, margin: Double,
-      minProbes: Int, maxProbes: Int): Column =
-    ColumnBridge.column(ProbeClustersByMargin(
-      dbl(vec), new IvfKernel(centroids), sizes, minCandidates, margin,
-      minProbes, maxProbes))
+      stop: ProbeStop): Column =
+    ColumnBridge.column(ProbeClusters(dbl(vec), new IvfKernel(centroids), stop))
 
   /** PQ-encode a raw vector (W8 compress). */
   def pqEncode(vec: Column, pq: ProductQuantizer): Column =
@@ -176,31 +159,53 @@ object ModelExpressions {
       ColumnBridge.expression(tokenHashes), new HashEmbedKernel(dim)))
 }
 
-/** Centroid math over Tungsten `ArrayData` — no per-row boxing. Arithmetic
-  * mirrors [[graft.index.Ivf.IvfModel]] exactly (ties to lower index).
-  * Every entry point validates the row's array length against the model
-  * dimension FIRST: `UnsafeArrayData.getDouble` past `numElements` reads
-  * arbitrary memory in production (its bounds assert is compiled out), so
-  * a corrupt/short vector must fail the job loudly, not assign a garbage
-  * cluster — the fail-loud behavior the boxed UDFs these replaced had for
-  * free. Element nulls read as 0.0, the repo-wide vector contract
-  * ([[VectorBinaryMetric]]; canonical schema is `containsNull = false`). */
+/** Where the centroid walk ([[IvfKernel.probes]]) stops. Rank `o` of the
+  * cosine ranking is admitted while `o < cap` and any of:
+  *  - the admitted clusters hold fewer than `massTarget` rows (`sizes`,
+  *    indexed by cluster id, 0 past the end) — the skew guard;
+  *  - `o < floor` — the boundary floor;
+  *  - its centroid's cosine distance is within `margin` of the best
+  *    centroid's — boundary coverage for routed graphs.
+  * A fixed count n is `floor = cap = n` with the other two terms off
+  * ([[ProbeStop.nearest]]). */
+final case class ProbeStop(sizes: Array[Long], massTarget: Long, floor: Int,
+    margin: Double, cap: Int)
+
+object ProbeStop {
+  /** The `n` most similar centroids. */
+  def nearest(n: Int): ProbeStop =
+    ProbeStop(Array.emptyLongArray, 0L, n, Double.NegativeInfinity, n)
+}
+
+/** Centroid math of the IVF family, the one implementation of its two
+  * walks: nearest-centroid assignment (L2, ties to the lower index) and
+  * the probe walk (cosine ranking, [[ProbeStop]]). Each has an
+  * `Array[Double]` entry for driver-side serves and an `ArrayData` entry
+  * for per-row codegen. Every entry point validates the vector's length
+  * against the model dimension FIRST: `UnsafeArrayData.getDouble` past
+  * `numElements` reads arbitrary memory in production (its bounds assert
+  * is compiled out), so a corrupt/short vector must fail the job loudly,
+  * not assign a garbage cluster. Element nulls read as 0.0,
+  * the repo-wide vector contract ([[VectorBinaryMetric]]; canonical schema
+  * is `containsNull = false`). */
 final class IvfKernel(val centroids: Array[Array[Double]]) extends Serializable {
 
   private val dim = centroids(0).length
 
-  private def checkLen(v: ArrayData): Unit =
-    if (v.numElements() < dim)
+  private def checkLen(n: Int): Unit =
+    if (n < dim)
       throw new IllegalArgumentException(
-        s"vector of ${v.numElements()} elements is shorter than the model dimension $dim")
+        s"vector of $n elements is shorter than the model dimension $dim")
 
-  def nearest(v: ArrayData): Int = {
-    checkLen(v)
+  def nearest(v: ArrayData): Int = nearest(v.toDoubleArray())
+
+  def nearest(v: Array[Double]): Int = {
+    checkLen(v.length)
     var best = 0; var bestD = Double.MaxValue; var j = 0
     while (j < centroids.length) {
       val c = centroids(j)
       var s = 0.0; var i = 0
-      while (i < c.length) { val d = c(i) - v.getDouble(i); s += d * d; i += 1 }
+      while (i < c.length) { val d = c(i) - v(i); s += d * d; i += 1 }
       if (s < bestD) { bestD = s; best = j }
       j += 1
     }
@@ -208,66 +213,25 @@ final class IvfKernel(val centroids: Array[Array[Double]]) extends Serializable 
   }
 
   def dist(v: ArrayData, cl: Int): Double = {
-    checkLen(v)
+    checkLen(v.numElements())
     val c = centroids(cl)
     var s = 0.0; var i = 0
     while (i < c.length) { val d = c(i) - v.getDouble(i); s += d * d; i += 1 }
     math.sqrt(s)
   }
 
-  /** Top-n centroid indices by cosine similarity, ties to lower index —
-    * the [[graft.index.Ivf.IvfModel.probeClusters]] ordering (sort by
-    * (-sim, index)), computed with an O(k·n) selection instead of a sort. */
-  def probes(v: ArrayData, n: Int): ArrayData = {
-    checkLen(v)
-    val k = centroids.length
-    val sims = new Array[Double](k)
-    var j = 0
-    while (j < k) {
-      val c = centroids(j)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < c.length) {
-        val x = c(i); val y = v.getDouble(i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      sims(j) = if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-      j += 1
-    }
-    val taken = new Array[Boolean](k)
-    val out = new Array[Int](math.min(n, k))
-    var o = 0
-    while (o < out.length) {
-      var best = -1; var bestS = Double.NegativeInfinity
-      var c = 0
-      while (c < k) {
-        if (!taken(c) && sims(c) > bestS) { bestS = sims(c); best = c }
-        c += 1
-      }
-      // all remaining sims NaN (an Inf vector component makes every
-      // cosine NaN): fall back to the lowest unclaimed index — the
-      // deterministic total-order the sortBy-based model path had
-      if (best < 0) {
-        var c2 = 0
-        while (taken(c2)) c2 += 1
-        best = c2
-      }
-      taken(best) = true
-      out(o) = best
-      o += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  def probes(v: ArrayData, stop: ProbeStop): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(probes(v.toDoubleArray(), stop))
 
-  /** ADAPTIVE probe list — the executor-side mirror of
-    * [[graft.index.Ivf.IvfModel.probeClustersAdaptive]]: walk the
-    * centroids in the SAME (cosine desc, index asc) ranked order as
-    * [[probes]] and stop once the probed clusters' cumulative row count
-    * (`sizes`, indexed by cluster id) reaches `minCandidates`, floored at
-    * `minProbes`. Same candidate-mass contract, evaluated per query ROW —
-    * the piece that makes the DataFrame-native big-batch path adaptive. */
-  def probesAdaptive(v: ArrayData, sizes: Array[Long], minCandidates: Long,
-      minProbes: Int): ArrayData = {
-    checkLen(v)
+  /** The probe walk: rank centroids by cosine similarity to `q`, best
+    * first, and admit them in rank order until `stop` ends the walk. Each
+    * rank is tested before it is admitted. A zero-norm side scores 0;
+    * similarities compare by `java.lang.Double.compare` (so 0.0 ranks
+    * above -0.0, which an overflowing query norm produces), ties go to the
+    * lower index, and NaN similarities rank after every number. The
+    * ranking is an O(k) selection per admitted rank, not a sort. */
+  def probes(q: Array[Double], stop: ProbeStop): Array[Int] = {
+    checkLen(q.length)
     val k = centroids.length
     val sims = new Array[Double](k)
     var j = 0
@@ -275,90 +239,45 @@ final class IvfKernel(val centroids: Array[Array[Double]]) extends Serializable 
       val c = centroids(j)
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < c.length) {
-        val x = c(i); val y = v.getDouble(i)
+        val x = c(i); val y = q(i)
         dot += x * y; na += x * x; nb += y * y; i += 1
       }
       sims(j) = if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
       j += 1
     }
+    val n = math.max(0, math.min(k, stop.cap))
     val taken = new Array[Boolean](k)
-    val out = new Array[Int](k)
-    var cum = 0L
-    var o = 0
-    while (o < k && (cum < minCandidates || o < minProbes)) {
-      var best = -1; var bestS = Double.NegativeInfinity
-      var c = 0
-      while (c < k) {
-        if (!taken(c) && sims(c) > bestS) { bestS = sims(c); best = c }
-        c += 1
-      }
-      if (best < 0) {
-        var c2 = 0
-        while (taken(c2)) c2 += 1
-        best = c2
-      }
-      taken(best) = true
-      out(o) = best
-      cum += (if (best < sizes.length) sizes(best) else 0L)
-      o += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, o))
-  }
-
-  /** MARGIN-extended adaptive probe list — the executor-side mirror of
-    * [[graft.index.Ivf.IvfModel.probeClustersByMargin]] (the routed-graph
-    * walk: keep probing while cumulative mass is below `minCandidates` OR
-    * the shard's centroid cosine distance is within `margin` of the best
-    * shard's), evaluated per query ROW — the piece that makes the routed
-    * big-batch path adaptive. Same (cosine desc, index asc) ranking as
-    * [[probes]]; the stop condition is tested against each rank BEFORE
-    * admitting it, exactly like the driver-side walk, so probe sets are
-    * identical (BigBatchSpec parity). */
-  def probesByMargin(v: ArrayData, sizes: Array[Long], minCandidates: Long,
-      margin: Double, minProbes: Int, maxProbes: Int): ArrayData = {
-    checkLen(v)
-    val k = centroids.length
-    val sims = new Array[Double](k)
-    var j = 0
-    while (j < k) {
-      val c = centroids(j)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < c.length) {
-        val x = c(i); val y = v.getDouble(i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      sims(j) = if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-      j += 1
-    }
-    val taken = new Array[Boolean](k)
-    val out = new Array[Int](math.min(k, maxProbes))
+    val out = new Array[Int](n)
     var bestDist = 0.0
     var cum = 0L
     var o = 0
-    var continue = true
-    while (continue && o < k && o < maxProbes) {
-      var best = -1; var bestS = Double.NegativeInfinity
+    var go = true
+    while (go && o < n) {
+      var best = -1; var bestS = Double.NaN
       var c = 0
       while (c < k) {
-        if (!taken(c) && sims(c) > bestS) { bestS = sims(c); best = c }
+        val sc = sims(c)
+        if (!taken(c) && !sc.isNaN &&
+            (best < 0 || java.lang.Double.compare(sc, bestS) > 0)) { bestS = sc; best = c }
         c += 1
       }
+      // all remaining sims NaN (an Inf vector component makes every
+      // cosine NaN): the lowest unclaimed index
       if (best < 0) {
-        var c2 = 0
-        while (taken(c2)) c2 += 1
-        best = c2
+        best = 0
+        while (taken(best)) best += 1
         bestS = sims(best)
       }
       if (o == 0) bestDist = 1.0 - bestS
-      if (cum < minCandidates || o < minProbes ||
-          (1.0 - bestS) <= bestDist + margin) {
+      if (cum < stop.massTarget || o < stop.floor ||
+          (1.0 - bestS) <= bestDist + stop.margin) {
         taken(best) = true
         out(o) = best
-        cum += (if (best < sizes.length) sizes(best) else 0L)
+        cum += (if (best < stop.sizes.length) stop.sizes(best) else 0L)
         o += 1
-      } else continue = false
+      } else go = false
     }
-    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, o))
+    java.util.Arrays.copyOf(out, o)
   }
 }
 
@@ -532,55 +451,19 @@ case class CentroidDistance(left: Expression, right: Expression, kernel: IvfKern
   override def prettyName: String = "centroid_distance"
 }
 
-case class ProbeClusters(child: Expression, kernel: IvfKernel, nProbes: Int)
+case class ProbeClusters(child: Expression, kernel: IvfKernel, stop: ProbeStop)
     extends UnaryExpression with KernelInputCheck {
   override protected def expected: Seq[Option[DataType]] = Seq(Vec)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
-    kernel.probes(v.asInstanceOf[ArrayData], nProbes)
+    kernel.probes(v.asInstanceOf[ArrayData], stop)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val k = ctx.addReferenceObj("ivfKernel", kernel, classOf[IvfKernel].getName)
-    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $k.probes($v, $nProbes);")
+    val s = ctx.addReferenceObj("probeStop", stop, classOf[ProbeStop].getName)
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $k.probes($v, $s);")
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "probe_clusters"
-}
-
-case class ProbeClustersAdaptive(child: Expression, kernel: IvfKernel,
-    sizes: Array[Long], minCandidates: Long, minProbes: Int)
-    extends UnaryExpression with KernelInputCheck {
-  override protected def expected: Seq[Option[DataType]] = Seq(Vec)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    kernel.probesAdaptive(v.asInstanceOf[ArrayData], sizes, minCandidates, minProbes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("ivfKernel", kernel, classOf[IvfKernel].getName)
-    val sz = ctx.addReferenceObj("ivfSizes", sizes, "long[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = $k.probesAdaptive($v, $sz, ${minCandidates}L, $minProbes);")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "probe_clusters_adaptive"
-}
-
-case class ProbeClustersByMargin(child: Expression, kernel: IvfKernel,
-    sizes: Array[Long], minCandidates: Long, margin: Double,
-    minProbes: Int, maxProbes: Int)
-    extends UnaryExpression with KernelInputCheck {
-  override protected def expected: Seq[Option[DataType]] = Seq(Vec)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    kernel.probesByMargin(v.asInstanceOf[ArrayData], sizes, minCandidates,
-      margin, minProbes, maxProbes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("ivfKernel", kernel, classOf[IvfKernel].getName)
-    val sz = ctx.addReferenceObj("shardSizes", sizes, "long[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = $k.probesByMargin($v, $sz, ${minCandidates}L, " +
-        s"$margin, $minProbes, $maxProbes);")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "probe_clusters_by_margin"
 }
 
 case class PqEncode(child: Expression, kernel: PqKernel)

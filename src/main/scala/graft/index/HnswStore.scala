@@ -738,13 +738,25 @@ object HnswStore {
       * by `routing` — read only when the rule routes. Both routed rules
       * probe a prefix of the centroid ranking. */
     final def shards(routing: => Ivf.IvfModel, query: Seq[Double], k: Int)
-        : Option[Seq[Int]] = this match {
-      case AllShards => None
-      case Nearest(n) => Some(routing.probeClusters(query, n))
-      case Adaptive(st, overscan, minProbes) =>
-        Some(routing.probeClustersByMargin(query, st.sizes, overscan.toLong * k,
-          MarginBeta * st.radius, minProbes, MaxAdaptiveProbes))
-    }
+        : Option[Seq[Int]] =
+      if (this == AllShards) None
+      else {
+        val model = routing
+        Some(new graft.functions.IvfKernel(model.centroids)
+          .probes(query.toArray, stop(model.k, k)).toSeq)
+      }
+
+    /** This rule as a stop of the one centroid walk
+      * ([[graft.functions.IvfKernel.probes]]) over `numShards` routing
+      * centroids at top-`k`; [[AllShards]] walks every centroid. */
+    private[graft] final def stop(numShards: Int, k: Int): graft.functions.ProbeStop =
+      this match {
+        case AllShards => graft.functions.ProbeStop.nearest(numShards)
+        case Nearest(n) => graft.functions.ProbeStop.nearest(n)
+        case Adaptive(st, overscan, minProbes) =>
+          graft.functions.ProbeStop(Array.tabulate(numShards)(c => st.sizes.getOrElse(c, 0L)),
+            overscan.toLong * k, minProbes, MarginBeta * st.radius, MaxAdaptiveProbes)
+      }
   }
 
   /** Every shard: the all-shards fan-out, restoring every graph. */
@@ -756,8 +768,8 @@ object HnswStore {
     * recall vs [[AllShards]] is spec-gated). */
   final case class Nearest(n: Int) extends ProbeRule
 
-  /** The probe list chosen per query by the margin-extended walk
-    * ([[Ivf.IvfModel.probeClustersByMargin]] over the routing sidecar and
+  /** The probe list chosen per query by the margin-extended centroid walk
+    * ([[graft.functions.IvfKernel.probes]] over the routing sidecar and
     * `stats`): it keeps probing while the candidate mass is below
     * `overscan · k` (the skew guard) OR the shard's centroid distance is
     * within `best + MarginBeta · stats.radius` (boundary coverage — the
@@ -872,9 +884,8 @@ object HnswStore {
 
   /** [[batchSearch]] for query sets too large to collect: the queries
     * stay a DataFrame end-to-end. Each query row resolves `rule` with the
-    * codegen'd [[graft.functions.ModelExpressions.probeClusters]] /
-    * [[graft.functions.ModelExpressions.probeClustersByMargin]] expression
-    * over the routing centroids (the same ranking and stop rule as
+    * codegen'd [[graft.functions.ProbeClusters]] walk over the routing
+    * centroids (the same ranking and stop rule as
     * [[ProbeRule.shards]] — BigBatchSpec gates exact result parity), then
     * a COGROUP on the shard id pairs every shard's stored graph rows with
     * exactly the queries that probed it: one grouping shuffle of (query,
@@ -892,26 +903,14 @@ object HnswStore {
       acceptIds: Option[DataFrame] = None, bloomFpp: Double = 0.01): DataFrame = {
     import spark.implicits._
     val model = routingModel(spark, path)
-    // the rule evaluated per query ROW by the codegen'd probe kernels —
-    // identical ranking and stop rule to ProbeRule.shards, so probe sets
-    // match the collected paths exactly (BigBatchSpec-gated). The adaptive
+    // the rule evaluated per query ROW by the codegen'd walk — the walk
+    // ProbeRule.shards runs, so probe sets match the collected paths
+    // exactly (BigBatchSpec-gated). The adaptive
     // walk spends probes on boundary queries and stops early on
     // concentrated ones, so the cogroup volume tracks per-query need
     // instead of |queries|·probes.
-    val probeList = rule match {
-      case AllShards =>
-        graft.functions.ModelExpressions.probeClusters(
-          col("qvec"), model.centroids, model.centroids.length)
-      case Nearest(n) =>
-        graft.functions.ModelExpressions.probeClusters(
-          col("qvec"), model.centroids, n)
-      case Adaptive(st, overscan, minProbes) =>
-        val sizesArr = Array.tabulate(model.centroids.length)(c =>
-          st.sizes.getOrElse(c, 0L))
-        graft.functions.ModelExpressions.probeClustersByMargin(
-          col("qvec"), model.centroids, sizesArr, overscan.toLong * k,
-          MarginBeta * st.radius, minProbes, MaxAdaptiveProbes)
-    }
+    val probeList = graft.functions.ModelExpressions.probeClusters(
+      col("qvec"), model.centroids, rule.stop(model.k, k))
     val probed = graft.operators.Par.widen(queries)
       .select(col(queryIdCol).cast("long").as("query_id"),
         col(queryVecCol).cast("array<double>").as("qvec"))

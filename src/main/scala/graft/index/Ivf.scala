@@ -25,115 +25,67 @@ object Ivf {
   case class IvfModel(centroids: Array[Array[Double]]) {
     def k: Int = centroids.length
 
-    /** Index of the L2-nearest centroid (the assignment function; ties to
-      * the lower index, matching Lloyd's scan order). */
-    def nearestCentroid(v: Seq[Double]): Int = {
-      var best = 0; var bestD = Double.MaxValue; var j = 0
-      while (j < centroids.length) {
-        val c = centroids(j)
-        var s = 0.0; var i = 0
-        while (i < c.length) { val d = c(i) - v(i); s += d * d; i += 1 }
-        if (s < bestD) { bestD = s; best = j }
-        j += 1
-      }
-      best
-    }
-
-    /** Every centroid scored by cosine similarity to the query, best
-      * first (ties to the lower index) — the one ranking both the fixed
-      * and adaptive probe walks consume, so the scoring convention
-      * (zero-norm → 0, tie-break) cannot silently diverge between them. */
-    private def rankedCentroids(query: Seq[Double]): Array[(Double, Int)] = {
-      def cos(c: Array[Double]): Double = {
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < c.length) { dot += c(i) * query(i); na += c(i) * c(i); nb += query(i) * query(i); i += 1 }
-        if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-      }
-      centroids.zipWithIndex
-        .map { case (c, i) => (cos(c), i) }
-        .sortBy { case (s, i) => (-s, i) }
-    }
-
-    /** Probe cluster ids: top-n centroids by cosine similarity to the query
-      * (the reference scores centroids by cosine, `:438`). */
+    /** The `nProbes` centroids most similar to `query`: [[Nearest]]'s
+      * probe list (the benchmark's probe-count layer reads it). */
     def probeClusters(query: Seq[Double], nProbes: Int): Seq[Int] =
-      rankedCentroids(query).take(nProbes).map(_._2).toSeq
-
-    /** ADAPTIVE probe list: walk the centroids in similarity order and stop
-      * once the probed clusters hold at least `minCandidates` rows — the
-      * knob a skewed corpus needs. A FIXED probe count spends its budget
-      * obliviously: when the query lands near small clusters it scans too
-      * few rows to fill a confident top-k, near huge ones it scans far
-      * more than the re-rank needs. Anchoring the stop condition to
-      * CANDIDATE COUNT (c·k, the same contract the IVF-PQ refine stage
-      * uses for its 4k rerank set) makes the scanned volume — and so both
-      * recall and cost — stable under any cluster-size distribution.
-      * `sizes` is the per-cluster row count: ≤ k longs from one cheap
-      * aggregate, memoized per layout beside the centroids.
-      *
-      * `minProbes` (default 3) floors the walk: candidate MASS bounds the
-      * re-rank confidence, but neighbors of a query near a cluster
-      * BOUNDARY live in runner-up clusters regardless of how many rows
-      * the winner holds — one giant nearest cluster satisfying the mass
-      * target alone measurably starves boundary queries (probing 1: H2
-      * recall 0.70; 2: 0.945; 3: 1.00 — vs 1.00 for fixed 8), so a
-      * constant few regions are always consulted. Reference parity (fixed
-      * max(k/2, 8)) stays the default in [[Ivf.search]]. */
-    def probeClustersAdaptive(query: Seq[Double], sizes: Map[Int, Long],
-        minCandidates: Long, minProbes: Int = 3): Seq[Int] = {
-      val ranked = probeClusters(query, centroids.length)
-      val out = Seq.newBuilder[Int]
-      var cum = 0L
-      var i = 0
-      while (i < ranked.length && (cum < minCandidates || i < minProbes)) {
-        val cl = ranked(i)
-        out += cl
-        cum += sizes.getOrElse(cl, 0L)
-        i += 1
-      }
-      out.result()
-    }
-
-    /** MARGIN-extended adaptive probe list — the routed-graph variant of
-      * [[probeClustersAdaptive]]. The pure candidate-mass stop works for
-      * IVF (scanned rows ARE the recall driver: probed clusters re-rank
-      * exactly), but on balanced shards it degenerates to a near-constant
-      * probe count, and for routed GRAPHS the recall driver is boundary
-      * COVERAGE — how many shards plausibly hold true neighbors — not row
-      * mass. A true top-k neighbor sits within ~epsilon of the query, so
-      * its shard's CENTROID sits within about (best-shard distance +
-      * shard radius): the walk keeps probing while EITHER condition
-      * holds — cumulative mass below `minCandidates` (the skew guard), or
-      * the shard's centroid cosine distance within `margin` (an absolute
-      * slack the CALLER derives from the layout's measured mean shard
-      * radius — the geometry that makes the constant transfer across
-      * datasets) of the best shard's. Measured on the routed layout
-      * (DevRouteMargins): dense-region queries have flat distance curves
-      * and neighbors scattered to rank ~9 — the margin extends to cover
-      * them — while isolated queries have sharp curves and neighbors in
-      * the top 2 — the margin stops early. Floored at `minProbes`, capped
-      * at `maxProbes`; calibrated on the DevRoutedSweep grid (RECALL.md
-      * round 8). */
-    def probeClustersByMargin(query: Seq[Double], sizes: Map[Int, Long],
-        minCandidates: Long, margin: Double, minProbes: Int = 3,
-        maxProbes: Int = Int.MaxValue): Seq[Int] = {
-      val ranked = rankedCentroids(query)
-      val bestDist = 1.0 - ranked.head._1
-      val out = Seq.newBuilder[Int]
-      var cum = 0L
-      var i = 0
-      while (i < ranked.length && i < maxProbes &&
-          (cum < minCandidates || i < minProbes ||
-            (1.0 - ranked(i)._1) <= bestDist + margin)) {
-        val cl = ranked(i)._2
-        out += cl
-        cum += sizes.getOrElse(cl, 0L)
-        i += 1
-      }
-      out.result()
-    }
+      Nearest(nProbes).probes(this, query, nProbes)
   }
+
+  /** Which clusters a serve probes for one query. Every IVF and IVF-PQ
+    * serve takes one rule, and both cases resolve through the one centroid
+    * walk, [[graft.functions.IvfKernel.probes]]: centroids ranked by cosine
+    * similarity to the query (the reference scores centroids by cosine,
+    * `:438`), ties to the lower index. The collected serves run it on the
+    * driver, the big-batch serves per query row in codegen
+    * ([[graft.functions.ProbeClusters]]), so every serve probes the same
+    * clusters under the same rule. */
+  sealed trait ProbeRule {
+    /** The walk's stop rule for a top-`topK` serve over `model`. */
+    private[graft] final def stop(model: IvfModel, topK: Int): graft.functions.ProbeStop =
+      this match {
+        case Nearest(n) => graft.functions.ProbeStop.nearest(n)
+        case Adaptive(sizes, overscan, minProbes) =>
+          graft.functions.ProbeStop(Array.tabulate(model.k)(c => sizes.getOrElse(c, 0L)),
+            overscan.toLong * topK, minProbes, Double.NegativeInfinity, Int.MaxValue)
+      }
+
+    /** The clusters `query` probes at top-`topK`, in walk order. */
+    final def probes(model: IvfModel, query: Seq[Double], topK: Int): Seq[Int] =
+      new graft.functions.IvfKernel(model.centroids)
+        .probes(query.toArray, stop(model, topK)).toSeq
+
+    /** The same walk per row of `vec`, as a probe-list column. */
+    private[graft] final def column(vec: Column, model: IvfModel, topK: Int): Column =
+      graft.functions.ModelExpressions.probeClusters(vec, model.centroids,
+        stop(model, topK))
+  }
+
+  /** The `n` centroids most similar to the query. The reference's rule is
+    * [[defaultRule]], `Nearest(max(k/2, 8))`. */
+  final case class Nearest(n: Int) extends ProbeRule
+
+  /** The candidate-mass walk: probe centroids in similarity order until
+    * the probed clusters hold `overscan · topK` rows (`sizes` =
+    * [[clusterSizes]], memoized beside the layout), never fewer than
+    * `minProbes`. A FIXED probe count spends its budget obliviously: when
+    * the query lands near small clusters it scans too few rows to fill a
+    * confident top-k, near huge ones it scans far more than the re-rank
+    * needs. Anchoring the stop to CANDIDATE COUNT (the same contract the
+    * IVF-PQ refine stage uses for its 4k rerank set) keeps the scanned
+    * volume — and so both recall and cost — stable under any cluster-size
+    * distribution.
+    *
+    * `minProbes` floors the walk: neighbors of a query near a cluster
+    * BOUNDARY live in runner-up clusters however many rows the winner
+    * holds — one giant nearest cluster satisfying the mass target alone
+    * measurably starves boundary queries (probing 1: H2 recall 0.70; 2:
+    * 0.945; 3: 1.00 — vs 1.00 for fixed 8). */
+  final case class Adaptive(sizes: Map[Int, Long], overscan: Int = 16,
+      minProbes: Int = 3) extends ProbeRule
+
+  /** The reference's probe rule, `max(k/2, 8)` nearest clusters
+    * (vervectordb/__init__.py:441-442). */
+  def defaultRule(model: IvfModel): ProbeRule = Nearest(math.max(model.k / 2, 8))
 
   /** Rows used to fit the centroids. 16 centroids converge on a bounded
     * sample; at 100 TB a full-table k-means is neither feasible nor needed —
@@ -464,38 +416,23 @@ object Ivf {
   def probeFilter(probes: Seq[Int]): Column =
     array_contains(typedLit(probes.sorted.toArray), col("cluster_id"))
 
-  /** S3: probe-pruned approximate top-k. `max(k/2, 8)` probes per the
-    * reference; filter-first exact semantics within the probed subset. */
+  /** S3: probe-pruned approximate top-k over the clusters `rule` probes
+    * ([[defaultRule]] is the reference's); filter-first exact semantics
+    * within the probed subset. The probe filter is a partition filter over
+    * the clustered layout whichever rule chose the list. */
   def search(assigned: DataFrame, model: IvfModel, query: Seq[Double], topK: Int,
-      filter: Option[Column] = None, vecCol: String = "vector", idCol: String = "id")
-      : DataFrame = {
-    val nProbes = math.max(model.k / 2, 8)
-    val probes = model.probeClusters(query, nProbes)
-    val pruned = assigned.where(probeFilter(probes))
+      rule: ProbeRule, filter: Option[Column] = None, vecCol: String = "vector",
+      idCol: String = "id"): DataFrame = {
+    val pruned = assigned.where(probeFilter(rule.probes(model, query, topK)))
     VectorSearch.bruteForceTopK(pruned, query, topK, filter, vecCol, idCol)
   }
 
-  /** Per-cluster row counts of an assigned view — the adaptive-probing
+  /** Per-cluster row counts of an assigned view — the [[Adaptive]]
     * statistic: one cheap aggregate (≤ k rows back), computed once per
     * layout beside the centroids. */
   def clusterSizes(assigned: DataFrame): Map[Int, Long] =
     assigned.groupBy("cluster_id").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-  /** S3 with ADAPTIVE probing ([[IvfModel.probeClustersAdaptive]]): probe
-    * centroids in similarity order until the probed clusters hold
-    * `overscan · topK` candidate rows. Same pruned-scan plan as [[search]]
-    * (the probe filter is still a partition filter over the clustered
-    * layout) — only the probe LIST is chosen by candidate mass instead of
-    * a fixed count, so skewed cluster sizes stop under- or over-scanning. */
-  def searchAdaptive(assigned: DataFrame, model: IvfModel, query: Seq[Double],
-      topK: Int, sizes: Map[Int, Long], overscan: Int = 16, minProbes: Int = 3,
-      filter: Option[Column] = None, vecCol: String = "vector", idCol: String = "id")
-      : DataFrame = {
-    val probes = model.probeClustersAdaptive(query, sizes, overscan.toLong * topK, minProbes)
-    val pruned = assigned.where(probeFilter(probes))
-    VectorSearch.bruteForceTopK(pruned, query, topK, filter, vecCol, idCol)
-  }
 
   /** S4 with method=ivf (vervectordb/__init__.py:532-534, which the
     * reference loops serially): ONE distributed job for the whole query
@@ -506,25 +443,15 @@ object Ivf {
     * the persisted clustered layout), and ranking is the k-bounded
     * aggregator, shuffling at most k rows per (query, task). */
   def batchSearch(assigned: DataFrame, model: IvfModel,
-      queries: Seq[(Long, Seq[Double])], topK: Int,
-      vecCol: String = "vector", idCol: String = "id",
-      sizes: Option[Map[Int, Long]] = None, overscan: Int = 16,
-      minProbes: Int = 3): DataFrame = {
+      queries: Seq[(Long, Seq[Double])], topK: Int, rule: ProbeRule,
+      vecCol: String = "vector", idCol: String = "id"): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = assigned.sparkSession
-    val nProbes = math.max(model.k / 2, 8)
-    // `sizes` switches every query's probe list to the adaptive
-    // candidate-mass walk — the join volume then scales with each
-    // query's actual candidate need instead of |queries|·nProbes
-    // (minProbes mirrors [[searchAdaptive]], keeping batch==single parity
-    // at ANY boundary-floor setting, not just the default)
-    def probesOf(q: Seq[Double]): Seq[Int] = sizes match {
-      case Some(sz) => model.probeClustersAdaptive(q, sz, overscan.toLong * topK, minProbes)
-      case None => model.probeClusters(q, nProbes)
-    }
+    // under [[Adaptive]] the join volume scales with each query's
+    // candidate need instead of |queries|·probes
     val probeRows = queries.flatMap { case (qid, q) =>
-      probesOf(q).map(c => Row(qid, c, q))
+      rule.probes(model, q, topK).map(c => Row(qid, c, q))
     }
     val qdf = spark.createDataFrame(
       spark.sparkContext.parallelize(probeRows),
@@ -541,47 +468,37 @@ object Ivf {
   }
 
   /** [[batchSearch]] for query sets too large to collect: the queries stay
-    * a DataFrame end-to-end — probe clusters are assigned per query row by
-    * the codegen'd [[graft.functions.ModelExpressions.probeClusters]]
-    * expression (the [[knnJoin]] kernel), and the probe rows equi-join the
-    * cluster-assigned table on cluster_id. NOTHING query-sized touches the
-    * driver or a broadcast: both join inputs shuffle, so the path survives
-    * query sets far past the broadcast/driver ceiling the collected path
-    * hits.
+    * a DataFrame end-to-end — each query row resolves `rule` with the
+    * codegen'd [[graft.functions.ProbeClusters]] expression (the same walk
+    * the collected serves run on the driver, so probe lists match them
+    * exactly — BigBatchSpec gates result parity under both rules), and
+    * the probe rows equi-join the cluster-assigned table on cluster_id.
+    * NOTHING query-sized touches the driver or a broadcast: both join
+    * inputs shuffle, so the path survives query sets far past the
+    * broadcast/driver ceiling the collected path hits.
     *
     * cluster_id alone has only `model.k` values — too few join keys for a
     * cluster — so the data side is salted by `hash(id) mod S` and the
     * (small) probe rows are replicated S ways, giving k·S join granules
-    * with each (query, candidate) pair matched exactly once. Probe rules
-    * mirror the collected path exactly: fixed max(k/2, 8) by default, or
-    * — with `sizes` — the ADAPTIVE candidate-mass walk evaluated PER
-    * QUERY ROW by the codegen'd ProbeClustersAdaptive kernel (identical
-    * ranking and stop rule, so join volume scales with each query's
-    * candidate need). BigBatchSpec gates exact result parity against
-    * [[batchSearch]] on both modes. */
+    * with each (query, candidate) pair matched exactly once. */
   def bigBatchSearch(assigned: DataFrame, model: IvfModel, queries: DataFrame,
-      topK: Int, queryIdCol: String = "query_id", queryVecCol: String = "qvec",
-      vecCol: String = "vector", idCol: String = "id",
-      nProbes: Option[Int] = None, sizes: Option[Map[Int, Long]] = None,
-      overscan: Int = 16, minProbes: Int = 3,
+      topK: Int, rule: ProbeRule, queryIdCol: String = "query_id",
+      queryVecCol: String = "qvec", vecCol: String = "vector", idCol: String = "id",
       filter: Option[Column] = None): DataFrame = {
     val spark = assigned.sparkSession
     val salts = bigBatchSalts(spark, model.k)
-    val probeList = bigBatchProbeList(model.centroids,
-      nProbes.getOrElse(math.max(model.k / 2, 8)), topK, sizes, overscan,
-      minProbes)
     val probed = graft.operators.Par.widen(queries)
       .select(col(queryIdCol).cast("long").as("query_id"),
         col(queryVecCol).cast("array<double>").as("qvec"))
-      .select(col("query_id"), col("qvec"), explode(probeList).as("cluster_id"))
+      .select(col("query_id"), col("qvec"),
+        explode(rule.column(col("qvec"), model, topK)).as("cluster_id"))
       .withColumn("__salt", explode(array((0 until salts).map(lit(_)): _*)))
     // S5 semantics at query-set scale, same exact filter-first contract as
-    // [[search]]/[[searchAdaptive]]: the predicate lands on the candidate
-    // scan BEFORE any scoring (pushed into the layout's parquet read), so
-    // every returned row satisfies it and ranks against the full accepted
-    // candidate set — no overfetch starvation. Probe lists are
-    // filter-independent (the model ranks centroids, not rows), matching
-    // the collected paths.
+    // [[search]]: the predicate lands on the candidate scan BEFORE any
+    // scoring (pushed into the layout's parquet read), so every returned
+    // row satisfies it and ranks against the full accepted candidate set —
+    // no overfetch starvation. Probe lists are filter-independent (the
+    // model ranks centroids, not rows), matching the collected paths.
     val data = filter.foldLeft(assigned)((d, f) => d.where(f))
       .withColumn("__salt", pmod(hash(col(idCol)), lit(salts)))
     val joined = probed.hint("shuffle_hash")
@@ -590,23 +507,6 @@ object Ivf {
         graft.GraftExtensions.cosineSim(col(vecCol), col("qvec")).as("sim_raw"))
     graft.operators.TopK.perGroupTopK(joined, "query_id", col(idCol), col("sim_raw"), topK)
       .withColumnRenamed("id", idCol)
-  }
-
-  /** Per-query-ROW probe-list expression of the big-batch paths (shared
-    * by [[bigBatchSearch]] and [[IvfPq.bigBatchSearch]] so the probe
-    * contract cannot drift): the fixed top-`nProbes` kernel, or — with
-    * `sizes` — the adaptive candidate-mass walk. Reads the `qvec`
-    * column. */
-  private[index] def bigBatchProbeList(centroids: Array[Array[Double]],
-      nProbes: Int, topK: Int, sizes: Option[Map[Int, Long]],
-      overscan: Int, minProbes: Int): Column = sizes match {
-    case Some(sz) =>
-      val arr = Array.tabulate(centroids.length)(c => sz.getOrElse(c, 0L))
-      graft.functions.ModelExpressions.probeClustersAdaptive(
-        col("qvec"), centroids, arr, overscan.toLong * topK, minProbes)
-    case None =>
-      graft.functions.ModelExpressions.probeClusters(
-        col("qvec"), centroids, nProbes)
   }
 
   /** Salt factor of the big-batch cluster joins: k·S join granules should
@@ -631,8 +531,7 @@ object Ivf {
       vecCol: String = "vector", idCol: String = "id"): DataFrame = {
     val left = graft.operators.Par.widen(df)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(graft.functions.ModelExpressions
-          .probeClusters(col(vecCol), model.centroids, nProbes)).as("cluster_id"))
+        explode(Nearest(nProbes).column(col(vecCol), model, k)).as("cluster_id"))
     val right = assign(df, model, vecCol)
       .select(col(idCol).as("id"), col(vecCol).as("dv"), col("cluster_id"))
     val joined = left.join(right.hint("shuffle_hash"), Seq("cluster_id"))

@@ -52,8 +52,9 @@ object IvfPq {
       .collect()
       .sortBy(_.getLong(0))
       .map(_.getSeq[Double](1).toArray)
+    val kernel = new graft.functions.IvfKernel(ivf.centroids)
     val residuals = sample.map { v =>
-      val c = ivf.centroids(ivf.nearestCentroid(v))
+      val c = ivf.centroids(kernel.nearest(v))
       Array.tabulate(v.length)(i => v(i) - c(i))
     }
     val pq = new ProductQuantizer(dim, m, nBits).fit(residuals, seed)
@@ -77,55 +78,52 @@ object IvfPq {
       vecCol: String = "vector", idCol: String = "id"): DataFrame =
     encodeAssigned(Ivf.assign(df, model.ivf, vecCol), model, vecCol, idCol)
 
-  /** ADC search over the encoded table: probe `max(k/2, 8)` clusters (the
-    * reference's S3 probe rule), score codes via the per-cluster residual
-    * LUTs, keep the `refineFactor·topK` best, then (if `refineFrom` is
-    * given) re-rank those exactly by cosine against the raw vectors. The
-    * refined output is (id, sim) — the same ranking contract as
-    * [[graft.search.VectorSearch.bruteForceTopK]] restricted to the
-    * candidate set. */
-  /** `filter` (S5 semantics over the refine stage): applied to the raw
+  /** Residual ADC lookup table of `query` in cluster `cl`:
+    * lut(s)(code) = ||(q − centroid_cl) slice s − codebook(s)(code)||². */
+  private def residualLut(model: IvfPqModel, query: Array[Double],
+      cl: Int): Array[Array[Double]] = {
+    val cent = model.ivf.centroids(cl)
+    val qr = Array.tabulate(query.length)(i => query(i) - cent(i))
+    val subDim = model.pq.subDim
+    Array.tabulate(model.pq.m) { s =>
+      Array.tabulate(model.pq.k) { c =>
+        val cb = model.pq.codebooks(s)(c)
+        var d = 0.0
+        var j = 0
+        while (j < subDim) { val diff = qr(s * subDim + j) - cb(j); d += diff * diff; j += 1 }
+        d
+      }
+    }
+  }
+
+  /** ADC search over the encoded table: probe the clusters `rule` picks
+    * ([[Ivf.defaultRule]] is the reference's S3 rule; under
+    * [[Ivf.Adaptive]] the composed path prunes BOTH ways — fewer probed
+    * partitions AND m-byte codes per row), score codes via the
+    * per-cluster residual LUTs, keep the `refineFactor·topK` best, then
+    * (if `refineFrom` is given) re-rank those exactly by cosine against
+    * the raw vectors. The refined output is (id, sim) — the same ranking
+    * contract as [[graft.search.VectorSearch.bruteForceTopK]] restricted
+    * to the candidate set.
+    *
+    * `filter` (S5 semantics over the refine stage): applied to the raw
     * rows during re-rank — every returned row satisfies it exactly, but
     * because ADC candidates are selected before filtering, a selective
     * predicate can return fewer than topK rows (the reference's own
     * overfetch-then-filter behavior, vervectordb/__init__.py:470-485;
     * raise `refineFactor` to compensate). Requires `refineFrom`. */
   def search(encoded: DataFrame, model: IvfPqModel, query: Seq[Double], topK: Int,
-      refineFrom: Option[DataFrame] = None, refineFactor: Int = 4,
-      vecCol: String = "vector", idCol: String = "id",
-      filter: Option[Column] = None,
-      sizes: Option[Map[Int, Long]] = None, overscan: Int = 16,
-      minProbes: Int = 3): DataFrame = {
+      rule: Ivf.ProbeRule, refineFrom: Option[DataFrame] = None,
+      refineFactor: Int = 4, vecCol: String = "vector", idCol: String = "id",
+      filter: Option[Column] = None): DataFrame = {
     require(filter.isEmpty || refineFrom.nonEmpty,
       "filtered IVF-PQ search needs refineFrom (the filter applies to raw rows)")
-    // `sizes` switches probing to the ADAPTIVE candidate-mass walk
-    // ([[Ivf.IvfModel.probeClustersAdaptive]]) — the composed path then
-    // prunes BOTH ways: fewer probed partitions AND m-byte codes per row;
-    // default stays the reference's fixed max(k/2, 8)
-    val probes = sizes match {
-      case Some(sz) => model.ivf.probeClustersAdaptive(query, sz, overscan.toLong * topK, minProbes)
-      case None => model.ivf.probeClusters(query, math.max(model.ivf.k / 2, 8))
-    }
+    val probes = rule.probes(model.ivf, query, topK)
     val q = query.toArray
-    val m = model.pq.m
-    val subDim = model.pq.subDim
-    // lut(cluster)(s)(code) = ||(q − centroid_cluster) slice s − codebook(s)(code)||²
-    // — dense-indexed by cluster_id (unprobed entries null; the scan is
+    // dense-indexed by cluster_id (unprobed entries null; the scan is
     // pruned to probed partitions before the scoring projection)
     val luts = new Array[Array[Array[Double]]](model.ivf.k)
-    probes.foreach { cl =>
-      val cent = model.ivf.centroids(cl)
-      val qr = Array.tabulate(q.length)(i => q(i) - cent(i))
-      luts(cl) = Array.tabulate(m) { s =>
-        Array.tabulate(model.pq.k) { c =>
-          val cb = model.pq.codebooks(s)(c)
-          var d = 0.0
-          var j = 0
-          while (j < subDim) { val diff = qr(s * subDim + j) - cb(j); d += diff * diff; j += 1 }
-          d
-        }
-      }
-    }
+    probes.foreach(cl => luts(cl) = residualLut(model, q, cl))
     val cand = encoded.where(Ivf.probeFilter(probes))
       .withColumn("adc_score", graft.functions.ModelExpressions
         .adcScoreClustered(col("cluster_id"), col("pq_code"), luts))
@@ -161,42 +159,19 @@ object IvfPq {
     * cosine against raw vectors via two broadcast joins. Returns
     * (query_id, idCol, sim, rn) — the same contract as every batch path. */
   def batchSearch(encoded: DataFrame, model: IvfPqModel,
-      queries: Seq[(Long, Seq[Double])], topK: Int, refineFrom: DataFrame,
-      refineFactor: Int = 4, vecCol: String = "vector", idCol: String = "id",
-      filter: Option[Column] = None,
-      sizes: Option[Map[Int, Long]] = None, overscan: Int = 16,
-      minProbes: Int = 3): DataFrame = {
+      queries: Seq[(Long, Seq[Double])], topK: Int, rule: Ivf.ProbeRule,
+      refineFrom: DataFrame, refineFactor: Int = 4, vecCol: String = "vector",
+      idCol: String = "id", filter: Option[Column] = None): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = encoded.sparkSession
-    val nProbes = math.max(model.ivf.k / 2, 8)
-    val m = model.pq.m
-    val subDim = model.pq.subDim
-    // `sizes` = per-query adaptive probing (see [[search]]) — fewer probed
-    // (query, cluster) pairs means fewer LUTs shipped AND a smaller
-    // probe join, the batch path's two per-query costs (minProbes mirrors
-    // the single-query path for parity at any boundary-floor setting)
-    def probesOf(q: Seq[Double]): Seq[Int] = sizes match {
-      case Some(sz) => model.ivf.probeClustersAdaptive(q, sz, overscan.toLong * topK, minProbes)
-      case None => model.ivf.probeClusters(q, nProbes)
-    }
+    // under [[Ivf.Adaptive]] fewer probed (query, cluster) pairs means
+    // fewer LUTs shipped AND a smaller probe join, the batch path's two
+    // per-query costs
     val luts: Map[(Long, Int), Array[Array[Double]]] = (for {
       (qid, q) <- queries
-      cl <- probesOf(q)
-    } yield {
-      val cent = model.ivf.centroids(cl)
-      val qa = q.toArray
-      val qr = Array.tabulate(qa.length)(i => qa(i) - cent(i))
-      (qid, cl) -> Array.tabulate(m) { s =>
-        Array.tabulate(model.pq.k) { c =>
-          val cb = model.pq.codebooks(s)(c)
-          var d = 0.0
-          var j = 0
-          while (j < subDim) { val diff = qr(s * subDim + j) - cb(j); d += diff * diff; j += 1 }
-          d
-        }
-      }
-    }).toMap
+      cl <- rule.probes(model.ivf, q, topK)
+    } yield (qid, cl) -> residualLut(model, q.toArray, cl)).toMap
     val kernel = new graft.functions.BatchAdcKernel(luts)
     val probeRows = luts.keys.toSeq.sorted.map { case (qid, cl) => Row(qid, cl) }
     val qdf = spark.createDataFrame(
@@ -241,32 +216,30 @@ object IvfPq {
   }
 
   /** [[batchSearch]] for query sets too large to collect: the queries
-    * stay a DataFrame end-to-end. Probe lists come from the codegen'd
-    * ProbeClusters / ProbeClustersAdaptive kernels per query row; ADC
-    * scores come from the LUT-free [[graft.functions.ModelExpressions
+    * stay a DataFrame end-to-end. Probe lists come from `rule`'s codegen'd
+    * [[graft.functions.ProbeClusters]] walk per query row; ADC scores
+    * come from the LUT-free [[graft.functions.ModelExpressions
     * .adcScoreDirect]] kernel (bit-identical arithmetic to the collected
     * path's per-(query, cluster) LUTs — the LUT is pure precomputation,
     * which is exactly the driver state this path refuses to hold); the
     * probe join salts the k-valued cluster_id key like
     * [[Ivf.bigBatchSearch]]; the exact refine joins candidates, raw
     * vectors, and query vectors with SHUFFLE joins. BigBatchSpec gates
-    * exact multi-thousand-query parity against [[batchSearch]] on both
-    * probe modes. */
+    * exact multi-thousand-query parity against [[batchSearch]] under both
+    * rules. */
   def bigBatchSearch(encoded: DataFrame, model: IvfPqModel,
-      queries: DataFrame, topK: Int, refineFrom: DataFrame,
+      queries: DataFrame, topK: Int, rule: Ivf.ProbeRule, refineFrom: DataFrame,
       refineFactor: Int = 4, vecCol: String = "vector", idCol: String = "id",
       queryIdCol: String = "query_id", queryVecCol: String = "qvec",
-      sizes: Option[Map[Int, Long]] = None, overscan: Int = 16,
-      minProbes: Int = 3, filter: Option[Column] = None): DataFrame = {
+      filter: Option[Column] = None): DataFrame = {
     val spark = encoded.sparkSession
-    val probeList = Ivf.bigBatchProbeList(model.ivf.centroids,
-      math.max(model.ivf.k / 2, 8), topK, sizes, overscan, minProbes)
     val salts = Ivf.bigBatchSalts(spark, model.ivf.k)
     val q0 = graft.operators.Par.widen(queries)
       .select(col(queryIdCol).cast("long").as("query_id"),
         col(queryVecCol).cast("array<double>").as("qvec"))
     val probed = q0
-      .select(col("query_id"), col("qvec"), explode(probeList).as("cluster_id"))
+      .select(col("query_id"), col("qvec"),
+        explode(rule.column(col("qvec"), model.ivf, topK)).as("cluster_id"))
       .withColumn("__salt", explode(array((0 until salts).map(lit(_)): _*)))
     val data = encoded.withColumn("__salt", pmod(hash(col(idCol)), lit(salts)))
     val cand = probed.hint("shuffle_hash")

@@ -267,7 +267,7 @@ object LshAnn {
   /** The merged walk that stops once the probed buckets hold
     * `overscan · k` rows (`sizes` = [[bucketSizes]], memoized beside the
     * layout), with at most [[DefaultProbes]] probes per table — the
-    * sign-LSH analog of [[Ivf.IvfModel.probeClustersAdaptive]]. Dense
+    * sign-LSH analog of [[Ivf.Adaptive]]. Dense
     * queries, whose low-cost flips land on full buckets, stop after a few
     * probes; sparse ones keep flipping, so the scanned volume tracks what
     * the re-rank needs per query instead of a worst-case constant. Every
@@ -335,7 +335,7 @@ object LshAnn {
     * probes) instead of a worst-case constant. The grids show recall is
     * driven by candidate MASS, not k: the k=10 and k=20 curves coincide
     * at equal mass, so the overscan·k anchor is calibrated per serving-k
-    * regime (the [[Ivf.IvfModel.probeClustersByMargin]] caller-derived-
+    * regime (the [[HnswStore.Adaptive]] margin walk's caller-derived-
     * constant precedent). On a corpus so small the ≤4-flip neighborhood
     * can't reach the mass target, the walk degenerates to the fixed
     * budget — adaptivity only ever SHRINKS the probe list. */

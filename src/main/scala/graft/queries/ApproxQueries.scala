@@ -35,7 +35,7 @@ object ApproxQueries {
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val (assigned, model) = Ivf.fit(VectorModel.lineitemVectors(spark, dir))
     publishIvfCentroids(spark, dir, model)
-    Ivf.search(assigned, model, VectorModel.Query, 10)
+    Ivf.search(assigned, model, VectorModel.Query, 10, Ivf.defaultRule(model))
       .select("id", "sim", "cluster_id")
   }
 
@@ -54,8 +54,8 @@ object ApproxQueries {
     * (RecallSpec), not this entry. */
   val AnnIvfOverscan = 12
 
-  /** Probe floor of the adaptive walk — [[Ivf.searchAdaptive]]'s
-    * default, named here because the oracle mirrors it. */
+  /** Probe floor of the adaptive walk — [[Ivf.Adaptive]]'s default,
+    * named here because the oracle mirrors it. */
   val AnnIvfMinProbes = 3
 
   /** The entry's k — named because the oracle's budget and RecallBench's
@@ -64,7 +64,7 @@ object ApproxQueries {
   val AnnIvfTopKK = 20
 
   /** S3 over the embeddings table — served by the ADAPTIVE candidate-mass
-    * walk ([[Ivf.searchAdaptive]]) since round 14: probe centroids in
+    * walk ([[Ivf.Adaptive]]) since round 14: probe centroids in
     * similarity order until the probed clusters hold
     * [[AnnIvfOverscan]]·topK rows (floor [[AnnIvfMinProbes]]), instead of
     * the oblivious fixed count (which stays pinned as the
@@ -78,9 +78,8 @@ object ApproxQueries {
       VectorModel.embeddings(spark, dir).withColumn("embedding", col("embedding").cast("array<double>")),
       vecCol = "embedding", idCol = "vec_id")
     publishCentroidsFlat(spark, "ivf_centroids_emb", dir, model.centroids)
-    Ivf.searchAdaptive(assigned, model, VectorModel.AnnQuery, AnnIvfTopKK,
-      Ivf.clusterSizes(assigned), overscan = AnnIvfOverscan,
-      minProbes = AnnIvfMinProbes,
+    Ivf.search(assigned, model, VectorModel.AnnQuery, AnnIvfTopKK,
+      Ivf.Adaptive(Ivf.clusterSizes(assigned), AnnIvfOverscan, AnnIvfMinProbes),
       vecCol = "embedding", idCol = "vec_id")
       .select("vec_id", "sim", "cluster_id")
   }
@@ -150,7 +149,7 @@ object ApproxQueries {
     val (path, model) = ivfLayout(spark, dir)
     publishIvfCentroids(spark, dir, model) // repair no-op unless dir switched / root lost
     val clustered = spark.read.parquet(path)
-    Ivf.searchAdaptive(clustered, model, VectorModel.Query, 10, ivfSizes(spark, dir))
+    Ivf.search(clustered, model, VectorModel.Query, 10, Ivf.Adaptive(ivfSizes(spark, dir)))
       .select("id", "sim", "cluster_id")
   }
 
@@ -210,7 +209,7 @@ object ApproxQueries {
     val (path, model) = ivfLayout(spark, dir)
     publishIvfCentroids(spark, dir, model) // repair no-op unless dir switched / root lost
     val clustered = spark.read.parquet(path)
-    Ivf.search(clustered, model, VectorModel.Query, 10)
+    Ivf.search(clustered, model, VectorModel.Query, 10, Ivf.defaultRule(model))
       .select("id", "sim", "cluster_id")
   }
 
@@ -407,7 +406,7 @@ object ApproxQueries {
     * query batch in one job, each query scanning only its probed cluster
     * partitions ([[Ivf.batchSearch]]) — adaptive per-query probe lists
     * (the serving default), so join volume scales with each query's
-    * candidate need instead of |queries|·nProbes. */
+    * candidate need instead of |queries|·probes. */
   def ivfBatchTopK(spark: SparkSession, dir: String): DataFrame = {
     val (path, model) = ivfLayout(spark, dir)
     publishIvfCentroids(spark, dir, model) // repair no-op unless dir switched / root lost
@@ -417,8 +416,7 @@ object ApproxQueries {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1)
       .toSeq
-    Ivf.batchSearch(clustered, model, queries, 3,
-      sizes = Some(ivfSizes(spark, dir)))
+    Ivf.batchSearch(clustered, model, queries, 3, Ivf.Adaptive(ivfSizes(spark, dir)))
       .orderBy("query_id", "rn")
   }
 
@@ -449,7 +447,7 @@ object ApproxQueries {
     // fetch reads row groups ∝ the bounded candidate count
     val emb = spark.read.parquet(vecByIdLayout(spark, dir))
     graft.index.IvfPq.search(encoded, model, VectorModel.AnnQuery, 20,
-      refineFrom = Some(emb), vecCol = "embedding", idCol = "vec_id")
+      Ivf.defaultRule(model.ivf), refineFrom = Some(emb), vecCol = "embedding", idCol = "vec_id")
       .select("vec_id", "sim")
   }
 
@@ -692,7 +690,7 @@ object ApproxQueries {
     val emb = spark.read.parquet(vecByIdLayout(spark, dir))
       .withColumn("embedding", col("embedding").cast("array<double>"))
     graft.index.IvfPq.batchSearch(encoded, model, annBatchQueries(3), 5,
-      refineFrom = emb, vecCol = "embedding", idCol = "vec_id")
+      Ivf.defaultRule(model.ivf), refineFrom = emb, vecCol = "embedding", idCol = "vec_id")
       .orderBy("query_id", "rn")
   }
 
@@ -710,8 +708,8 @@ object ApproxQueries {
     val qdf = emb.where(pmod(col("vec_id"), lit(256)) === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     graft.index.IvfPq.bigBatchSearch(encoded, model, qdf, 5,
-      refineFrom = emb, vecCol = "embedding", idCol = "vec_id",
-      sizes = Some(ivfPqSizes(spark, dir)))
+      Ivf.Adaptive(ivfPqSizes(spark, dir)), refineFrom = emb, vecCol = "embedding",
+      idCol = "vec_id")
       .orderBy("query_id", "rn")
   }
 
@@ -1642,14 +1640,14 @@ object ApproxQueries {
     // the walk extends instead of starving.
     graft.index.Ivf.bigBatchSearch(spark.read.parquet(path), model,
       VectorModel.partQueriesBig(spark, dir, modulus = 64), 3,
-      sizes = Some(ivfSizes(spark, dir)), minProbes = 2)
+      Ivf.Adaptive(ivfSizes(spark, dir), minProbes = 2))
       .orderBy("query_id", "rn")
   }
 
   /** S5 × S4 at query-set scale, HASH-GATED — the FILTERED big-batch IVF
     * path under the driver end to end (FilteredBigBatchSpec proves
     * cross-family parity; this entry puts one such path under the DuckDB
-    * oracle). Probing uses the FIXED top-4 rule (`nProbes=Some(4)`) so
+    * oracle). Probing uses the FIXED top-4 rule (`Ivf.Nearest(4)`) so
     * the whole serve is closed-form GIVEN the stored layout: the
     * [[OracleSidecars]] centroid sidecar lets the oracle re-derive
     * cluster assignment (L2 argmin), the probe ranking (centroid cosine,
@@ -1661,8 +1659,7 @@ object ApproxQueries {
     val (path, model) = ivfLayout(spark, dir)
     publishIvfCentroids(spark, dir, model) // repair no-op unless dir switched / root lost
     graft.index.Ivf.bigBatchSearch(spark.read.parquet(path), model,
-      VectorModel.partQueriesBig(spark, dir, modulus = 64), 3,
-      nProbes = Some(4),
+      VectorModel.partQueriesBig(spark, dir, modulus = 64), 3, Ivf.Nearest(4),
       filter = Some(col("category") === "R" && col("status") === "F"))
       .orderBy("query_id", "rn")
   }
@@ -1674,9 +1671,10 @@ object ApproxQueries {
     * top-n rule (`rnk <= n`) AND the ADAPTIVE candidate-mass walk
     * (`cumb < minCandidates OR rnk <= minProbes`: probe i is taken iff
     * the cumulative size of the probes BEFORE it is under the budget —
-    * exactly [[graft.index.Ivf.IvfModel.probeClustersAdaptive]]'s
-    * `while (cum < minCandidates || i < minProbes)` loop, with cluster
-    * sizes re-derived in SQL from the re-derived assignment), filtered
+    * exactly the [[graft.index.Ivf.Adaptive]] walk's
+    * `cum < massTarget || o < floor` stop in
+    * [[graft.functions.IvfKernel.probes]], with cluster sizes re-derived
+    * in SQL from the re-derived assignment), filtered
     * or not, single-query or per-query-partitioned. ONE definition so
     * the six mirrors cannot drift.
     *
@@ -1718,7 +1716,7 @@ object ApproxQueries {
          |  CAST('1.0' AS DOUBLE) AS q5, CAST('2.0' AS DOUBLE) AS q6, CAST('3.0' AS DOUBLE) AS q7
          |FROM part WHERE $where)""".stripMargin
 
-    /** Single-query mirror of [[graft.index.Ivf.search]]/searchAdaptive:
+    /** Single-query mirror of [[graft.index.Ivf.search]] under either rule:
       * one probe window, then the brute-force rule over probed clusters —
       * ranked by the ROUNDED sim like [[VectorSearch.bruteForceTopK]]. */
     def single(queryLits: Seq[Double], probeWhere: String, k: Int): String =
@@ -1744,7 +1742,8 @@ object ApproxQueries {
          |    JOIN probed p ON p.cluster_id = asg.cluster_id)
          |ORDER BY sim DESC, id ASC LIMIT $k""".stripMargin
 
-    /** Batch mirror of [[graft.index.Ivf.batchSearch]]/bigBatchSearch:
+    /** Batch mirror of [[graft.index.Ivf.batchSearch]] and
+      * [[graft.index.Ivf.bigBatchSearch]]:
       * per-query probe windows, then the k-bounded aggregator rule —
       * ranked by the RAW sim, rounded for output, (query_id, id, sim,
       * rn) ordered by (query_id, rn). */
@@ -1807,8 +1806,6 @@ object ApproxQueries {
   lazy val ivfBigBatchSql: String =
     IvfOracleSql.batch("p_partkey % 64 = 0", "cumb < 48 OR rnk <= 2", 3)
 
-  /** Mirror of the embeddings-family fixed-probe serve ([[annIvfTopK]]):
-    * its own 64-d centroid sidecar, same closed-form pipeline. */
   /** Mirror of the ADAPTIVE serve: re-derived assignment → per-cluster
     * sizes, centroids ranked by (query cosine DESC, id ASC), and the
     * candidate-mass walk as a cumulative window — probe i is taken iff

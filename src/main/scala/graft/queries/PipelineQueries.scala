@@ -302,8 +302,8 @@ object PipelineQueries {
     * decontamination ladder: the SAME fixed-probe bucketed pipeline, plus
     * a publish of the fitted eval-side centroids as an oracle sidecar so
     * DuckDB re-derives the whole chain (eval assignment by squared-L2
-    * asc / cluster asc — the nearestCentroid rule; train probes by
-    * centroid cosine desc / cluster asc — the probeClusters rule; exact
+    * asc / cluster asc — the nearest-centroid rule; train probes by
+    * centroid cosine desc / cluster asc — the probe walk's rule; exact
     * candidate cosines; threshold + rounding) and hash-compares it. The
     * base entry stays the recall-gated operator (spec vs the
     * broadcast-exact path); this twin pins the serving math end to end. */
@@ -328,8 +328,8 @@ object PipelineQueries {
       .select(col("vector").as("evemb"), col("cluster_id"))
     val flagged = docs.where(col("source") =!= EvalSource)
       .select(col("doc_id"), col("emb"),
-        explode(graft.functions.ModelExpressions.probeClusters(
-          col("emb"), model.centroids, SemIvfProbes)).as("cluster_id"))
+        explode(graft.functions.ModelExpressions.probeClusters(col("emb"),
+          model.centroids, graft.functions.ProbeStop.nearest(SemIvfProbes))).as("cluster_id"))
       .join(evalAssigned.hint("shuffle_hash"), Seq("cluster_id"))
       .select(col("doc_id"),
         graft.GraftExtensions.cosineSim(col("emb"), col("evemb")).as("s"))
@@ -649,7 +649,8 @@ object PipelineQueries {
     val qv = spark.range(1)
       .select(embedder.embed(lit(RagQuery)).as("v"))
       .head.getSeq[Double](0)
-    Ivf.search(assigned, model, qv, 10, vecCol = "vector", idCol = "chunk_id")
+    Ivf.search(assigned, model, qv, 10, Ivf.defaultRule(model), vecCol = "vector",
+      idCol = "chunk_id")
       .select("chunk_id", "sim", "cluster_id")
   }
 

@@ -142,8 +142,10 @@ object SqlSurface {
         |  s -> concat_ws(' ', slice(split(t, ' '), s + 1, sz)))) pe""".stripMargin,
     // PII scrubbing — [[graft.text.Pii]] as scalar functions. The regex
     // literals ride through the SQL parser's escape processing, hence the
-    // doubled backslashes (sqlRe); bodies are otherwise the same
-    // regexp_count/regexp_replace chains as the Column twins.
+    // doubled backslashes (sqlRe); Spark runs them as Java regex, so IPv4
+    // takes the JVM spelling of RE2's ASCII `\b` (Pii.Ipv4JvmRe). Bodies
+    // are otherwise the same regexp_count/regexp_replace chains as the
+    // Column twins.
     "tx_pii_emails" ->
       s"""CREATE OR REPLACE TEMPORARY FUNCTION tx_pii_emails(t STRING)
          |RETURNS BIGINT RETURN CAST(regexp_count(t, '${sqlRe(Pii.EmailRe)}') AS BIGINT)""".stripMargin,
@@ -152,14 +154,14 @@ object SqlSurface {
          |RETURNS BIGINT RETURN CAST(regexp_count(t, '${sqlRe(Pii.PhoneRe)}') AS BIGINT)""".stripMargin,
     "tx_pii_ips" ->
       s"""CREATE OR REPLACE TEMPORARY FUNCTION tx_pii_ips(t STRING)
-         |RETURNS BIGINT RETURN CAST(regexp_count(t, '${sqlRe(Pii.Ipv4Re)}') AS BIGINT)""".stripMargin,
+         |RETURNS BIGINT RETURN CAST(regexp_count(t, '${sqlRe(Pii.Ipv4JvmRe)}') AS BIGINT)""".stripMargin,
     "tx_pii_redact" ->
       s"""CREATE OR REPLACE TEMPORARY FUNCTION tx_pii_redact(t STRING)
          |RETURNS STRING RETURN
          |regexp_replace(regexp_replace(regexp_replace(t,
          |  '${sqlRe(Pii.EmailRe)}', '<EMAIL>'),
          |  '${sqlRe(Pii.PhoneRe)}', '<PHONE>'),
-         |  '${sqlRe(Pii.Ipv4Re)}', '<IP>')""".stripMargin,
+         |  '${sqlRe(Pii.Ipv4JvmRe)}', '<IP>')""".stripMargin,
     // Okapi BM25 top-k over the session's corpus view — [[Bm25.topK]] as a
     // TABLE function, stats and all (N, Σdl, df as CTE aggregates instead
     // of collected literals; identical arithmetic, ranking on the rounded

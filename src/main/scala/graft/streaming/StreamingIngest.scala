@@ -1233,7 +1233,8 @@ object StreamingIngest {
       .select(col("id"), col("vector"), col("cluster_id"))
     val batchProbed = b.select(col("id"), col("vector"),
       explode(graft.functions.ModelExpressions.probeClusters(
-        col("vector"), model.centroids, nProbes)).as("cluster_id"))
+        col("vector"), model.centroids, graft.functions.ProbeStop.nearest(nProbes)))
+        .as("cluster_id"))
     batchAssigned.write.mode("append").partitionBy("cluster_id").parquet(assignedPath)
     batchProbed.write.mode("append").partitionBy("cluster_id").parquet(probedPath)
     // corpus-so-far INCLUDING this batch (read back after the appends):

@@ -37,8 +37,8 @@ class BigBatchSpec extends SparkSpec {
     val (path, model) = queries.ApproxQueries.ivfLayout(spark, Sf0001)
     val clustered = spark.read.parquet(path)
     val qdf = bigQueries(NQueries, 8, scale = 50.0)
-    val big = Ivf.bigBatchSearch(clustered, model, qdf, 3)
-    val old = Ivf.batchSearch(clustered, model, collected(qdf), 3)
+    val big = Ivf.bigBatchSearch(clustered, model, qdf, 3, Ivf.defaultRule(model))
+    val old = Ivf.batchSearch(clustered, model, collected(qdf), 3, Ivf.defaultRule(model))
     assert(resultSet(big) === resultSet(old))
   }
 
@@ -47,9 +47,8 @@ class BigBatchSpec extends SparkSpec {
     val sizes = queries.ApproxQueries.ivfSizes(spark, Sf0001)
     val clustered = spark.read.parquet(path)
     val qdf = bigQueries(NQueries, 8, scale = 50.0)
-    val big = Ivf.bigBatchSearch(clustered, model, qdf, 3, sizes = Some(sizes))
-    val old = Ivf.batchSearch(clustered, model, collected(qdf), 3,
-      sizes = Some(sizes))
+    val big = Ivf.bigBatchSearch(clustered, model, qdf, 3, Ivf.Adaptive(sizes))
+    val old = Ivf.batchSearch(clustered, model, collected(qdf), 3, Ivf.Adaptive(sizes))
     assert(resultSet(big) === resultSet(old))
   }
 
@@ -66,8 +65,8 @@ class BigBatchSpec extends SparkSpec {
     val path = queries.ApproxQueries.hnswRoutedLayout(spark, Sf0001)
     val stats = queries.ApproxQueries.routedStats(spark, Sf0001)
     val qdf = bigQueries(NQueries, 8, scale = 50.0)
-    // the registered entry's mode: per-row ProbeClustersByMargin kernel
-    // over the routing sidecar + shard stats vs the driver-side walk
+    // the registered entry's mode: the per-row margin walk over the
+    // routing sidecar + shard stats vs the same walk on the driver
     val big = HnswStore.bigBatchSearch(spark, path, qdf, 3,
       HnswStore.Adaptive(stats))
     val old = HnswStore.batchSearch(spark, path, collected(qdf), 3,
@@ -84,19 +83,18 @@ class BigBatchSpec extends SparkSpec {
     // refine joins make this one heavier per query, so gate the same
     // property at 2k (still far past any collectable API batch)
     val qdf = bigQueries(2000, VectorModel.EmbDim, scale = 1.0)
-    val big = graft.index.IvfPq.bigBatchSearch(encoded, model, qdf, 5,
+    val fixed = Ivf.defaultRule(model.ivf)
+    val big = graft.index.IvfPq.bigBatchSearch(encoded, model, qdf, 5, fixed,
       refineFrom = emb, vecCol = "embedding", idCol = "vec_id")
-    val old = graft.index.IvfPq.batchSearch(encoded, model, collected(qdf), 5,
+    val old = graft.index.IvfPq.batchSearch(encoded, model, collected(qdf), 5, fixed,
       refineFrom = emb, vecCol = "embedding", idCol = "vec_id")
     assert(resultSet(big) === resultSet(old))
     // the ADAPTIVE branch too — the mode the registered entry serves with
     val sizes = Ivf.clusterSizes(encoded)
-    val bigA = graft.index.IvfPq.bigBatchSearch(encoded, model, qdf, 5,
-      refineFrom = emb, vecCol = "embedding", idCol = "vec_id",
-      sizes = Some(sizes))
+    val bigA = graft.index.IvfPq.bigBatchSearch(encoded, model, qdf, 5, Ivf.Adaptive(sizes),
+      refineFrom = emb, vecCol = "embedding", idCol = "vec_id")
     val oldA = graft.index.IvfPq.batchSearch(encoded, model, collected(qdf), 5,
-      refineFrom = emb, vecCol = "embedding", idCol = "vec_id",
-      sizes = Some(sizes))
+      Ivf.Adaptive(sizes), refineFrom = emb, vecCol = "embedding", idCol = "vec_id")
     assert(resultSet(bigA) === resultSet(oldA))
   }
 

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.index.Ivf
 import graft.model.VectorModel
 import graft.text.{Pii, TextAnalysis}
 
-/** Every generated method of the dedup and text stages stays small enough
+/** Every generated method of the dedup, text and IVF big-batch stages stays small enough
   * for HotSpot to JIT-compile ([[SparkSpec.maxCodegenMethodBytes]] against
   * [[SparkSpec.HugeMethodBytes]]): a stage over the limit runs its whole
   * row loop in the bytecode interpreter. */
@@ -29,6 +30,22 @@ class CodegenSizeSpec extends SparkSpec {
       assert(bytes <= HugeMethodBytes, s"$name: largest generated method $bytes bytes")
     }
     sig.unpersist()
+  }
+
+  /** The per-row probe stage of `Ivf.bigBatchSearch` (the one
+    * `probe_clusters` walk) under both IVF rules, and the whole serve. */
+  private def ivfProbeStages: Seq[(String, () => DataFrame)] = {
+    val (path, model) = queries.ApproxQueries.ivfLayout(spark, Sf0001)
+    val sizes = queries.ApproxQueries.ivfSizes(spark, Sf0001)
+    val qs = VectorModel.partQueriesBig(spark, Sf0001, modulus = 64)
+    Seq(Ivf.defaultRule(model), Ivf.Adaptive(sizes)).flatMap { rule =>
+      val name = rule.getClass.getSimpleName
+      Seq(
+        s"Ivf.bigBatchSearch $name probe stage" -> (() => qs.select(col("query_id"),
+          explode(rule.column(col("qvec"), model, 3)).as("cluster_id"))),
+        s"Ivf.bigBatchSearch $name" -> (() =>
+          Ivf.bigBatchSearch(spark.read.parquet(path), model, qs, 3, rule)))
+    }
   }
 
   test("audit: the public Dedup, TextAnalysis and Pii stages stay under the limit, known ones aside") {
@@ -89,7 +106,7 @@ class CodegenSizeSpec extends SparkSpec {
         "Dedup.connectedComponents" -> (() => Dedup.connectedComponents(docs, "doc_id", pairs)),
         "Dedup.embeddingNearDupPairs" -> (() => Dedup.embeddingNearDupPairs(
           VectorModel.embeddings(spark, Sf0001), "vec_id", "embedding", "label",
-          VectorModel.EmbDim, 0.3)))
+          VectorModel.EmbDim, 0.3))) ++ ivfProbeStages
     val sizes = Seq(simhash, minhash) ++ frames.map { case (n, f) => n -> maxCodegenMethodBytes(f()) }
     sizes.foreach { case (n, b) => info(s"$n: $b bytes") }
     val over = sizes.collect { case (n, b) if b > HugeMethodBytes => n }.toSet

@@ -47,20 +47,19 @@ object DevIvfEmbSweep {
       queries.map(q => probesOf(q).map(c => sizes.getOrElse(c, 0L)).sum / total)
         .sum / queries.size
 
-    val nFixed = math.max(model.k / 2, 8)
+    val fixed = Ivf.defaultRule(model)
     val (rFixed, _) = recallOf(q =>
-      Ivf.search(assigned, model, q, k, vecCol = "embedding", idCol = "vec_id"))
-    println(f"DEVIVF fixed probes=$nFixed recall=$rFixed%.4f " +
-      f"scanned=${scannedOf(q => model.probeClusters(q, nFixed))}%.4f")
+      Ivf.search(assigned, model, q, k, fixed, vecCol = "embedding", idCol = "vec_id"))
+    println(f"DEVIVF fixed $fixed recall=$rFixed%.4f " +
+      f"scanned=${scannedOf(q => fixed.probes(model, q, k))}%.4f")
 
     Seq(8, 16, 24, 32, 48, 64, 96).foreach { overscan =>
+      val rule = Ivf.Adaptive(sizes, overscan)
       val (r, _) = recallOf(q =>
-        Ivf.searchAdaptive(assigned, model, q, k, sizes, overscan = overscan,
-          vecCol = "embedding", idCol = "vec_id"))
-      val probes = queries.map(q =>
-        model.probeClustersAdaptive(q, sizes, overscan.toLong * k).size)
+        Ivf.search(assigned, model, q, k, rule, vecCol = "embedding", idCol = "vec_id"))
+      val probes = queries.map(q => rule.probes(model, q, k).size)
       println(f"DEVIVF adaptive overscan=$overscan recall=$r%.4f " +
-        f"scanned=${scannedOf(q => model.probeClustersAdaptive(q, sizes, overscan.toLong * k))}%.4f " +
+        f"scanned=${scannedOf(q => rule.probes(model, q, k))}%.4f " +
         f"meanProbes=${probes.sum.toDouble / probes.size}%.2f")
     }
     spark.stop()

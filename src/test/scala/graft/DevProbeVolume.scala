@@ -47,8 +47,8 @@ object DevProbeVolume {
       val corpus = sizes.values.sum
       val qs = VectorModel.partQueriesBig(spark, dir, modulus = 64)
         .collect().map(r => r.getSeq[Double](1))
-      val f = qs.map(q => model.probeClusters(q, 2))
-      val a = qs.map(q => model.probeClustersAdaptive(q, sizes, 16L * 3, 2))
+      val f = qs.map(q => graft.index.Ivf.Nearest(2).probes(model, q, 3))
+      val a = qs.map(q => graft.index.Ivf.Adaptive(sizes, minProbes = 2).probes(model, q, 3))
       // getOrElse: the size maps only hold non-empty clusters, and a
       // fixed probe list can rank an empty one
       report("ivf", f.map(_.map(sizes.getOrElse(_, 0L)).sum).toSeq,

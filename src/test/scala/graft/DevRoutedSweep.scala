@@ -80,7 +80,7 @@ object DevRoutedSweep {
       }
     }
     // ---- round 8: ADAPTIVE probing grid at the 64-shard operating point.
-    // The margin walk (probeClustersByMargin) must hold the fixed-8 recall
+    // The margin walk (HnswStore.Adaptive) must hold the fixed-8 recall
     // at FEWER mean probed shards for some alpha — that alpha becomes
     // HnswStore.MarginBeta, and RecallSpec gates it at test scale.
     val dir64 = graft.store.Fs.scratchDir(spark, "graft_sweep_adapt") + "/g"
@@ -88,15 +88,16 @@ object DevRoutedSweep {
     val stats64 = HnswStore.routedStats(spark, dir64)
     Console.err.println(f"SWEEP_RADIUS ${stats64.radius}%.5f")
     val all64 = queries.map(q => ids(HnswStore.search(spark, dir64, q, k)))
-    val routing64 = graft.index.Ivf.IvfModel(HnswStore.readRouting(spark, dir64).get)
+    val routing64 = new graft.functions.IvfKernel(HnswStore.readRouting(spark, dir64).get)
+    val sizes64 = Array.tabulate(64)(c => stats64.sizes.getOrElse(c, 0L))
     val rule = HnswStore.Adaptive(stats64)
     val adaptCells = for (beta <- Seq(0.5, 1.0, 1.5, 2.0)) yield {
       // the Adaptive rule's walk at margin beta (the rule fixes
       // HnswStore.MarginBeta); its list is a prefix of the centroid
       // ranking, so Nearest(list size) searches exactly those shards
-      val probeCounts = queries.map(q =>
-        routing64.probeClustersByMargin(q, stats64.sizes, rule.overscan.toLong * k,
-          beta * stats64.radius, rule.minProbes, HnswStore.MaxAdaptiveProbes).size)
+      val stop = graft.functions.ProbeStop(sizes64, rule.overscan.toLong * k,
+        rule.minProbes, beta * stats64.radius, HnswStore.MaxAdaptiveProbes)
+      val probeCounts = queries.map(q => routing64.probes(q.toArray, stop).length)
       val t1 = System.nanoTime()
       val routed = queries.zip(probeCounts).map { case (q, n) =>
         ids(HnswStore.search(spark, dir64, q, k, HnswStore.Nearest(n)))

@@ -33,21 +33,22 @@ class FilteredBigBatchSpec extends SparkSpec {
     val clustered = spark.read.parquet(path)
     val qdf = bigQueries(2000, 8, scale = 50.0)
     val pred = pmod(col("id"), lit(2)) === 0
-    // filter-first IS the ivf contract (search/searchAdaptive filter the
-    // candidate scan before scoring), so the filtered big-batch must
+    // filter-first IS the ivf contract (search filters the candidate scan
+    // before scoring under every rule), so the filtered big-batch must
     // equal the collected batch run over the pre-filtered layout
-    val big = Ivf.bigBatchSearch(clustered, model, qdf, 3,
+    val rule = Ivf.defaultRule(model)
+    val big = Ivf.bigBatchSearch(clustered, model, qdf, 3, rule,
       filter = Some(pred))
-    val old = Ivf.batchSearch(clustered.where(pred), model, collected(qdf), 3)
+    val old = Ivf.batchSearch(clustered.where(pred), model, collected(qdf), 3, rule)
     assert(resultSet(big) === resultSet(old))
     assert(resultSet(big).forall(_._2 % 2 == 0))
     // adaptive mode too (same sizes on both sides — probe lists are
     // filter-independent)
     val sizes = queries.ApproxQueries.ivfSizes(spark, Sf0001)
-    val bigA = Ivf.bigBatchSearch(clustered, model, qdf, 3,
-      sizes = Some(sizes), filter = Some(pred))
+    val bigA = Ivf.bigBatchSearch(clustered, model, qdf, 3, Ivf.Adaptive(sizes),
+      filter = Some(pred))
     val oldA = Ivf.batchSearch(clustered.where(pred), model, collected(qdf), 3,
-      sizes = Some(sizes))
+      Ivf.Adaptive(sizes))
     assert(resultSet(bigA) === resultSet(oldA))
   }
 
@@ -58,11 +59,11 @@ class FilteredBigBatchSpec extends SparkSpec {
       .withColumn("embedding", col("embedding").cast("array<double>"))
     val qdf = bigQueries(500, VectorModel.EmbDim, scale = 1.0)
     val pred = pmod(col("vec_id"), lit(2)) === 0
-    val big = IvfPq.bigBatchSearch(encoded, model, qdf, 5,
+    val big = IvfPq.bigBatchSearch(encoded, model, qdf, 5, Ivf.defaultRule(model.ivf),
       refineFrom = emb, vecCol = "embedding", idCol = "vec_id",
       filter = Some(pred))
     val old = IvfPq.batchSearch(encoded, model, collected(qdf), 5,
-      refineFrom = emb, vecCol = "embedding", idCol = "vec_id",
+      Ivf.defaultRule(model.ivf), refineFrom = emb, vecCol = "embedding", idCol = "vec_id",
       filter = Some(pred))
     assert(resultSet(big) === resultSet(old))
     assert(resultSet(big).forall(_._2 % 2 == 0))

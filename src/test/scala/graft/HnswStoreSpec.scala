@@ -63,7 +63,7 @@ class HnswStoreSpec extends SparkSpec {
       // delete every unprobed shard directory; routed results are unchanged
       val model = graft.index.Ivf.IvfModel(
         HnswStore.readRouting(spark, s"$dir/g").get)
-      val probed = model.probeClusters(VectorModel.Query, probes).toSet
+      val probed = HnswStore.Nearest(probes).shards(model, VectorModel.Query, 10).get.toSet
       assert(probed.size === probes)
       val (fs, p) = graft.store.Fs.pathFs(spark, s"$dir/g")
       val removed = fs.listStatus(p)
@@ -176,7 +176,7 @@ class HnswStoreSpec extends SparkSpec {
     // threaded predicate is exact within them (compare vs the unrouted
     // filtered search on a layout holding only the probed shards)
     val model = graft.index.Ivf.IvfModel(HnswStore.readRouting(spark, s"$dir/g").get)
-    val probed = model.probeClusters(VectorModel.Query, 4).toSet
+    val probed = HnswStore.Nearest(4).shards(model, VectorModel.Query, 10).get.toSet
     val (fs, p) = graft.store.Fs.pathFs(spark, s"$dir/g")
     fs.listStatus(p).filter(_.getPath.getName.startsWith("part="))
       .filterNot(s => probed(s.getPath.getName.stripPrefix("part=").toInt))

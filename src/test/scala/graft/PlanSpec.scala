@@ -51,7 +51,7 @@ class PlanSpec extends SparkSpec {
     val (assigned, model) = Ivf.fit(VectorModel.lineitemVectors(spark, Sf0001))
     Ivf.saveClustered(assigned, s"$dir/t")
     val reread = spark.read.parquet(s"$dir/t")
-    val probes = model.probeClusters(VectorModel.Query, 8)
+    val probes = Ivf.Nearest(8).probes(model, VectorModel.Query, 10)
     val probed = reread.where(col("cluster_id").isin(probes: _*))
     val scan = probed.queryExecution.executedPlan.collectLeaves().head.toString
     assert(scan.contains("PartitionFilters") && scan.contains("cluster_id"),
@@ -65,7 +65,8 @@ class PlanSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_serve").toString
     val (assigned, model) = Ivf.fit(VectorModel.lineitemVectors(spark, Sf0001))
     Ivf.saveClustered(assigned, s"$dir/t")
-    val served = Ivf.search(spark.read.parquet(s"$dir/t"), model, VectorModel.Query, 10)
+    val served = Ivf.search(spark.read.parquet(s"$dir/t"), model, VectorModel.Query, 10,
+      Ivf.defaultRule(model))
     val scan = served.queryExecution.executedPlan.collectLeaves().head.toString
     assert(scan.contains("PartitionFilters") && scan.contains("cluster_id"),
       "probe filter must prune cluster partitions:\n" + scan.take(2000))
@@ -128,7 +129,7 @@ class PlanSpec extends SparkSpec {
     Ivf.saveClustered(encoded, s"$dir/t")
     val layout = spark.read.parquet(s"$dir/t")
     val served = IvfPq.search(layout, model, VectorModel.AnnQuery, 10,
-      refineFrom = None, idCol = "vec_id")
+      Ivf.defaultRule(model.ivf), refineFrom = None, idCol = "vec_id")
     val scan = served.queryExecution.executedPlan.collectLeaves().head.toString
     assert(scan.contains("PartitionFilters") && scan.contains("cluster_id"),
       "ADC scan must prune cluster partitions:\n" + scan.take(2000))

@@ -3,6 +3,7 @@ package graft
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
+import graft.functions.ProbeStop
 import graft.index.{HnswIndex, LshAnn}
 import graft.multimodal.Multimodal
 import graft.pq.ProductQuantizer
@@ -135,51 +136,55 @@ object PureProps extends Properties("graft.pure") {
     val rng = new java.util.Random(7)
     Array.fill(8)(Array.fill(dim)(rng.nextDouble() * 4 - 2))
   }
-  private val ivfModel = graft.index.Ivf.IvfModel(ivfCentroids)
+  private val ivfKernel = new graft.functions.IvfKernel(ivfCentroids)
+
+  private def ranking(q: Array[Double]): Seq[Int] =
+    ivfKernel.probes(q, ProbeStop.nearest(ivfCentroids.length)).toSeq
 
   property("ivf probeClusters: distinct, in range, min(n, k) of them") =
     forAll(vecGen, Gen.choose(1, 12)) { (q, n) =>
-      val p = ivfModel.probeClusters(q.toSeq, n)
+      val p = ivfKernel.probes(q, ProbeStop.nearest(n)).toSeq
       p.distinct.size == p.size &&
         p.forall(i => i >= 0 && i < ivfCentroids.length) &&
         p.size == math.min(n, ivfCentroids.length)
     }
 
-  private val uniformSizes: Map[Int, Long] =
-    ivfCentroids.indices.map(_ -> 100L).toMap
+  private val uniformSizes: Array[Long] = Array.fill(ivfCentroids.length)(100L)
+
+  /** The margin walk: mass target, floor 2 unless given, margin, cap. */
+  private def marginWalk(q: Array[Double], minCandidates: Long, margin: Double,
+      minProbes: Int = 2, maxProbes: Int = Int.MaxValue): Seq[Int] =
+    ivfKernel.probes(q, ProbeStop(uniformSizes, minCandidates, minProbes, margin,
+      maxProbes)).toSeq
 
   property("margin walk: probe list is a prefix of the similarity ranking, floored and capped") =
     forAll(vecGen, Gen.choose(0.0, 0.5), Gen.choose(1, 8)) { (q, margin, cap) =>
-      val p = ivfModel.probeClustersByMargin(q.toSeq, uniformSizes,
-        minCandidates = 1L, margin = margin, minProbes = 2, maxProbes = cap)
-      val ranking = ivfModel.probeClusters(q.toSeq, ivfCentroids.length)
-      p == ranking.take(p.size) &&
+      val p = marginWalk(q, minCandidates = 1L, margin = margin, maxProbes = cap)
+      p == ranking(q).take(p.size) &&
         p.size >= math.min(2, cap) && p.size <= cap
     }
 
   property("margin walk: widening the margin never shrinks the probe set (monotone)") =
     forAll(vecGen, Gen.choose(0.0, 0.3), Gen.choose(0.0, 0.3)) { (q, a, b) =>
       val lo = math.min(a, b); val hi = math.max(a, b)
-      val pl = ivfModel.probeClustersByMargin(q.toSeq, uniformSizes, 1L, lo)
-      val ph = ivfModel.probeClustersByMargin(q.toSeq, uniformSizes, 1L, hi)
+      val pl = marginWalk(q, 1L, lo, minProbes = 3)
+      val ph = marginWalk(q, 1L, hi, minProbes = 3)
       ph.size >= pl.size && pl == ph.take(pl.size)
     }
 
   property("margin walk: the mass guard extends past the margin when nearest clusters are tiny") =
     forAll(vecGen) { q =>
-      val ranking = ivfModel.probeClusters(q.toSeq, ivfCentroids.length)
       // every cluster tiny -> the 350-candidate target needs 4 clusters of
       // 100 even with a zero margin (the skew guard the mass term exists for)
-      val p = ivfModel.probeClustersByMargin(q.toSeq, uniformSizes,
-        minCandidates = 350L, margin = 0.0, minProbes = 1)
-      p.size >= 4 && p == ranking.take(p.size)
+      val p = marginWalk(q, minCandidates = 350L, margin = 0.0, minProbes = 1)
+      p.size >= 4 && p == ranking(q).take(p.size)
     }
 
   property("ivf nearestCentroid minimizes squared L2 over all centroids") =
     forAll(vecGen) { v =>
       def d2(a: Array[Double]) =
         a.zip(v).map { case (x, y) => (x - y) * (x - y) }.sum
-      val dc = d2(ivfCentroids(ivfModel.nearestCentroid(v.toSeq)))
+      val dc = d2(ivfCentroids(ivfKernel.nearest(v)))
       ivfCentroids.forall(o => dc <= d2(o) + 1e-12)
     }
 

@@ -18,7 +18,7 @@ class RecallSpec extends SparkSpec {
   test("IVF recall@10 on lineitem vectors >= 0.6") {
     val exact = VectorSearch.bruteForceTopK(lineVecs, VectorModel.Query, 10)
     val (assigned, model) = Ivf.fit(lineVecs)
-    val approx = Ivf.search(assigned, model, VectorModel.Query, 10)
+    val approx = Ivf.search(assigned, model, VectorModel.Query, 10, Ivf.defaultRule(model))
     val r = Recall.recallAtK(exact, approx, "id")
     info(s"IVF recall@10 = $r")
     assert(r >= 0.6)
@@ -28,11 +28,11 @@ class RecallSpec extends SparkSpec {
     val (assigned, model) = Ivf.fit(lineVecs)
     val sizes = Ivf.clusterSizes(assigned)
     val exact = VectorSearch.bruteForceTopK(lineVecs, VectorModel.Query, 10)
-    val fixed = Ivf.search(assigned, model, VectorModel.Query, 10)
-    val adaptive = Ivf.searchAdaptive(assigned, model, VectorModel.Query, 10, sizes)
+    val fixed = Ivf.search(assigned, model, VectorModel.Query, 10, Ivf.defaultRule(model))
+    val adaptive = Ivf.search(assigned, model, VectorModel.Query, 10, Ivf.Adaptive(sizes))
     val rFixed = Recall.recallAtK(exact, fixed, "id")
     val rAdaptive = Recall.recallAtK(exact, adaptive, "id")
-    val probed = model.probeClustersAdaptive(VectorModel.Query, sizes, 16L * 10)
+    val probed = Ivf.Adaptive(sizes).probes(model, VectorModel.Query, 10)
     info(s"adaptive: recall $rAdaptive over ${probed.size} probes (fixed: $rFixed over 8)")
     // candidate-mass stop scans a fraction of the fixed budget on this
     // corpus (avg cluster ~n/16, 160 candidates ≈ 1-2 clusters) with no
@@ -47,19 +47,21 @@ class RecallSpec extends SparkSpec {
     // most-similar clusters are TINY the walk keeps probing until the
     // candidate mass target is met; when they are HUGE it stops early —
     // the two failure modes a fixed count cannot see
-    val ranked = model.probeClusters(VectorModel.Query, model.k)
+    val ranked = Ivf.Nearest(model.k).probes(model, VectorModel.Query, 10)
     val tinyNearest = ranked.zipWithIndex.map { case (cl, i) =>
       cl -> (if (i < 3) 1L else 1000L)
     }.toMap
     val hugeNearest = ranked.zipWithIndex.map { case (cl, i) =>
       cl -> (if (i == 0) 1000L else 1L)
     }.toMap
-    assert(model.probeClustersAdaptive(VectorModel.Query, tinyNearest, 160).size === 4)
+    // (a 160-row mass target: overscan 16 at k = 10)
+    def walk(sz: Map[Int, Long]) = Ivf.Adaptive(sz).probes(model, VectorModel.Query, 10)
+    assert(walk(tinyNearest).size === 4)
     // huge nearest cluster meets the mass target alone, but the boundary
     // floor still consults the runners-up
-    assert(model.probeClustersAdaptive(VectorModel.Query, hugeNearest, 160).size === 3)
+    assert(walk(hugeNearest).size === 3)
     // degenerate guard: empty/absent sizes still probe at least one cluster
-    assert(model.probeClustersAdaptive(VectorModel.Query, Map.empty, 160).size === model.k)
+    assert(walk(Map.empty).size === model.k)
   }
 
   test("stored-IVF serving default is adaptive; reference-parity fixed mode stays pinned") {
@@ -71,7 +73,7 @@ class RecallSpec extends SparkSpec {
     val rParity = Recall.recallAtK(exact, parity, "id")
     val (path, model) = ApproxQueries.ivfLayout(spark, Sf0001)
     val sizes = ApproxQueries.ivfSizes(spark, Sf0001)
-    val adaptiveProbes = model.probeClustersAdaptive(VectorModel.Query, sizes, 16L * 10)
+    val adaptiveProbes = Ivf.Adaptive(sizes).probes(model, VectorModel.Query, 10)
     info(s"stored default: recall $rStored over ${adaptiveProbes.size} probes " +
       s"(parity: $rParity over ${math.max(model.k / 2, 8)})")
     // the default probes FEWER partitions than the reference rule at no
@@ -82,7 +84,7 @@ class RecallSpec extends SparkSpec {
     // parity mode is bit-for-bit the reference probe rule over the same
     // stored layout — the explicit escape hatch a migrating user pins
     val clustered = spark.read.parquet(path)
-    val pin = Ivf.search(clustered, model, VectorModel.Query, 10)
+    val pin = Ivf.search(clustered, model, VectorModel.Query, 10, Ivf.defaultRule(model))
       .select("id", "sim", "cluster_id")
     assert(parity.collect().map(_.toSeq).toSeq === pin.collect().map(_.toSeq).toSeq)
   }
@@ -95,7 +97,7 @@ class RecallSpec extends SparkSpec {
       vecCol = "embedding", idCol = "vec_id")
     val (assigned, model) = Ivf.fit(embeddings, vecCol = "embedding", idCol = "vec_id")
     val approx = Ivf.search(assigned, model, VectorModel.AnnQuery, 20,
-      vecCol = "embedding", idCol = "vec_id")
+      Ivf.defaultRule(model), vecCol = "embedding", idCol = "vec_id")
     val r = Recall.recallAtK(exact, approx, "vec_id")
     info(s"IVF embeddings recall@20 = $r")
     assert(r >= 0.45)
@@ -124,21 +126,20 @@ class RecallSpec extends SparkSpec {
     assigned.cache().count()
     val sizes = Ivf.clusterSizes(assigned)
     val total = sizes.values.sum.toDouble
-    val budget = ApproxQueries.AnnIvfOverscan.toLong * ApproxQueries.AnnIvfTopKK
     val queries = (0 until 20).map(graft.model.VectorModel.syntheticQuery)
-    val nFixed = math.max(model.k / 2, 8)
+    val fixedRule = Ivf.defaultRule(model)
+    val adaptRule = Ivf.Adaptive(sizes, ApproxQueries.AnnIvfOverscan)
     val (rF, rA, sF, sA) = queries.map { q =>
       val exact = VectorSearch.bruteForceTopK(emb01, q, 20,
         vecCol = "embedding", idCol = "vec_id")
       val fixed = Recall.recallAtK(exact,
-        Ivf.search(assigned, model, q, 20,
+        Ivf.search(assigned, model, q, 20, fixedRule,
           vecCol = "embedding", idCol = "vec_id"), "vec_id")
       val adapt = Recall.recallAtK(exact,
-        Ivf.searchAdaptive(assigned, model, q, 20, sizes,
-          overscan = ApproxQueries.AnnIvfOverscan,
+        Ivf.search(assigned, model, q, 20, adaptRule,
           vecCol = "embedding", idCol = "vec_id"), "vec_id")
-      val scF = model.probeClusters(q, nFixed).map(c => sizes.getOrElse(c, 0L)).sum / total
-      val scA = model.probeClustersAdaptive(q, sizes, budget)
+      val scF = fixedRule.probes(model, q, 20).map(c => sizes.getOrElse(c, 0L)).sum / total
+      val scA = adaptRule.probes(model, q, 20)
         .map(c => sizes.getOrElse(c, 0L)).sum / total
       (fixed, adapt, scF, scA)
     }.foldLeft((0.0, 0.0, 0.0, 0.0)) { case ((a, b, c, d), (w, x, y, z)) =>
@@ -152,9 +153,8 @@ class RecallSpec extends SparkSpec {
       s"the adaptive default must match the fixed rule's mean scan ($sA vs $sF)")
     // and the registered entry serves exactly this operating point
     val registered = ApproxQueries.queries("ann_ivf_topk")(spark, Sf001)
-    val pin = Ivf.searchAdaptive(assigned, model, graft.model.VectorModel.AnnQuery, 20,
-      sizes, overscan = ApproxQueries.AnnIvfOverscan,
-      vecCol = "embedding", idCol = "vec_id")
+    val pin = Ivf.search(assigned, model, graft.model.VectorModel.AnnQuery, 20,
+      adaptRule, vecCol = "embedding", idCol = "vec_id")
       .select("vec_id", "sim", "cluster_id")
     assert(registered.collect().map(_.toSeq).toSeq === pin.collect().map(_.toSeq).toSeq)
   }
@@ -303,6 +303,38 @@ class RecallSpec extends SparkSpec {
     assert(frac <= 0.4, s"scanned fraction $frac must stay under 0.4")
   }
 
+  test("ADAPTIVE LSH stops under the per-table cap at a budget below the corpus size") {
+    import graft.index.LshAnn
+    // the serving budgets (overscan·k ≈ 700 rows) exceed the 500-row
+    // sf0.01 corpus, so there the walk runs to the DefaultProbes cap on
+    // every query and reads as Directed(DefaultProbes). A 100-row budget
+    // (overscan 10 at k = 10) is below the corpus, so the mass stop must
+    // end each walk early — and recall must hold the floor measured at it
+    // (recall 0.517 at 45.5 mean probes per table on the six queries).
+    val (path, model) = graft.queries.ApproxQueries.lshLayout(spark, Sf001)
+    val sizes = graft.queries.ApproxQueries.lshSizes(spark, Sf001)
+    val corpus = sizes.head.sum // every table holds every row
+    val rule = LshAnn.Adaptive(sizes, 10)
+    assert(10L * 10 < corpus, s"budget must be below the $corpus-row corpus")
+    val emb01 = VectorModel.embeddings(spark, Sf001)
+    val bucketed = LshAnn.withTableBuckets(emb01, "embedding", model).cache()
+    val qs = (0 until 6).map(VectorModel.syntheticQuery)
+    val meanProbes = qs.map(q => LshAnn.probeSets(model, rule, q, 10).map(_.size).sum)
+      .sum.toDouble / qs.size / model.numTables
+    val recall = qs.map { q =>
+      val exact = VectorSearch.bruteForceTopK(emb01, q, 10,
+        vecCol = "embedding", idCol = "vec_id")
+      Recall.recallAtK(exact, LshAnn.searchMulti(bucketed, model, q, 10, rule,
+        vecCol = "embedding", idCol = "vec_id"), "vec_id")
+    }.sum / qs.size
+    info(f"adaptive LSH at a 100-row budget: recall@10 = $recall%.3f at " +
+      f"$meanProbes%.1f mean probes per table (cap ${LshAnn.DefaultProbes})")
+    assert(meanProbes < LshAnn.DefaultProbes,
+      s"the mass stop must fire under the ${LshAnn.DefaultProbes}-probe cap, got $meanProbes")
+    assert(recall >= 0.5, s"adaptive recall $recall under the measured floor")
+    bucketed.unpersist()
+  }
+
   test("HNSW recall@10 on lineitem vectors >= 0.8") {
     val exact = VectorSearch.bruteForceTopK(lineVecs, VectorModel.Query, 10)
     val approx = Hnsw.hnswTopK(lineVecs, VectorModel.Query, 10, numPartitions = 8)
@@ -380,12 +412,12 @@ class RecallSpec extends SparkSpec {
     val queries = (0 until 3).map { s =>
       (s.toLong, Seq(25.0 + s, 30.0, 0.5, 0.5, 0.5, 0.5, 0.5, 1.0 + s))
     }
-    val batch = Ivf.batchSearch(assigned, model, queries, 5)
+    val batch = Ivf.batchSearch(assigned, model, queries, 5, Ivf.defaultRule(model))
       .collect()
       .map(r => (r.getLong(0), r.getLong(3), r.getLong(1), r.getDouble(2)))
       .sorted.toSeq
     val single = queries.flatMap { case (qid, q) =>
-      Ivf.search(assigned, model, q, 5)
+      Ivf.search(assigned, model, q, 5, Ivf.defaultRule(model))
         .select("id", "sim").collect().zipWithIndex
         .map { case (r, i) => (qid, (i + 1).toLong, r.getLong(0), r.getDouble(1)) }
     }.sorted.toSeq
@@ -430,14 +462,15 @@ class RecallSpec extends SparkSpec {
       vecCol = "embedding", idCol = "vec_id")
     assert(encoded.select(max(length(col("pq_code")))).head.getInt(0) === 8)
     val approx = IvfPq.search(encoded, model, VectorModel.AnnQuery, 20,
-      refineFrom = Some(embeddings), vecCol = "embedding", idCol = "vec_id")
+      Ivf.defaultRule(model.ivf), refineFrom = Some(embeddings), vecCol = "embedding",
+      idCol = "vec_id")
     val r = Recall.recallAtK(exact, approx, "vec_id")
     // same probed fraction as plain IVF; ADC candidate selection plus the
     // exact 4k refine must not lose more than a sliver vs scanning raw
     // vectors in the probed clusters
     val (assignedRaw, ivfModel) = Ivf.fit(embeddings, vecCol = "embedding", idCol = "vec_id")
     val ivfOnly = Ivf.search(assignedRaw, ivfModel, VectorModel.AnnQuery, 20,
-      vecCol = "embedding", idCol = "vec_id")
+      Ivf.defaultRule(ivfModel), vecCol = "embedding", idCol = "vec_id")
     val rIvf = Recall.recallAtK(exact, ivfOnly, "vec_id")
     info(s"IVF-PQ recall@20 = $r (plain IVF = $rIvf)")
     assert(r >= 0.9 * rIvf)
@@ -456,12 +489,12 @@ class RecallSpec extends SparkSpec {
     val sizes = Ivf.clusterSizes(encoded)
     val exact = VectorSearch.bruteForceTopK(lineVecs, VectorModel.Query, 10)
     val fixed = IvfPq.search(encoded, model, VectorModel.Query, 10,
-      refineFrom = Some(lineVecs))
+      Ivf.defaultRule(model.ivf), refineFrom = Some(lineVecs))
     val adaptive = IvfPq.search(encoded, model, VectorModel.Query, 10,
-      refineFrom = Some(lineVecs), sizes = Some(sizes))
+      Ivf.Adaptive(sizes), refineFrom = Some(lineVecs))
     val rFixed = Recall.recallAtK(exact, fixed, "id")
     val rAdaptive = Recall.recallAtK(exact, adaptive, "id")
-    val probed = model.ivf.probeClustersAdaptive(VectorModel.Query, sizes, 16L * 10)
+    val probed = Ivf.Adaptive(sizes).probes(model.ivf, VectorModel.Query, 10)
     info(s"IVF-PQ adaptive recall $rAdaptive over ${probed.size} probes (fixed $rFixed over 8)")
     // the subject is the PROBING knob composing into the IVFADC path —
     // adaptive must not lose recall vs fixed while probing a fraction of
@@ -480,9 +513,9 @@ class RecallSpec extends SparkSpec {
       (s.toLong, Seq(25.0 + s, 30.0, 0.5, 0.5, 0.5, 0.5, 0.5, 1.0 + s)))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(3), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    val batch = rows(Ivf.batchSearch(assigned, model, queries, 5, sizes = Some(sizes)))
+    val batch = rows(Ivf.batchSearch(assigned, model, queries, 5, Ivf.Adaptive(sizes)))
     val single = queries.flatMap { case (qid, q) =>
-      Ivf.searchAdaptive(assigned, model, q, 5, sizes)
+      Ivf.search(assigned, model, q, 5, Ivf.Adaptive(sizes))
         .select("id", "sim").collect().zipWithIndex
         .map { case (r, i) => (qid, (i + 1).toLong, r.getLong(0), r.getDouble(1)) }
     }.sorted.toSeq
@@ -491,10 +524,10 @@ class RecallSpec extends SparkSpec {
     val (encoded, pqModel) = IvfPq.build(lineVecs, 8)
     val pqSizes = Ivf.clusterSizes(encoded)
     val pqBatch = rows(IvfPq.batchSearch(encoded, pqModel, queries, 5,
-      refineFrom = lineVecs, sizes = Some(pqSizes)))
+      Ivf.Adaptive(pqSizes), refineFrom = lineVecs))
     val pqSingle = queries.flatMap { case (qid, q) =>
-      IvfPq.search(encoded, pqModel, q, 5,
-        refineFrom = Some(lineVecs), sizes = Some(pqSizes))
+      IvfPq.search(encoded, pqModel, q, 5, Ivf.Adaptive(pqSizes),
+        refineFrom = Some(lineVecs))
         .collect().zipWithIndex
         .map { case (r, i) => (qid, (i + 1).toLong, r.getLong(0), r.getDouble(1)) }
     }.sorted.toSeq
@@ -524,13 +557,13 @@ class RecallSpec extends SparkSpec {
     // identical candidate ordering (adc desc, id asc) and identical exact
     // refine -> the batch rows must match the single-query operator row
     // for row, not just in recall
-    val batch = IvfPq.batchSearch(encoded, model, queries, 5,
+    val batch = IvfPq.batchSearch(encoded, model, queries, 5, Ivf.defaultRule(model.ivf),
       refineFrom = embeddings, vecCol = "embedding", idCol = "vec_id")
       .collect()
       .map(r => (r.getLong(0), r.getLong(3), r.getLong(1), r.getDouble(2)))
       .sorted.toSeq
     val single = queries.flatMap { case (qid, q) =>
-      IvfPq.search(encoded, model, q, 5,
+      IvfPq.search(encoded, model, q, 5, Ivf.defaultRule(model.ivf),
         refineFrom = Some(embeddings), vecCol = "embedding", idCol = "vec_id")
         .collect().zipWithIndex
         .map { case (r, i) => (qid, (i + 1).toLong, r.getLong(0), r.getDouble(1)) }

@@ -47,15 +47,25 @@ class ServeCodegenSpec extends SparkSpec {
 
   test("ivfSearch compiles no new classes for a new probe set") {
     // the facade's model, refitted with its deterministic defaults
-    val (_, model) = Ivf.fit(db.toDf, "vector", 16, 42L)
+    val (assigned, model) = Ivf.fit(db.toDf, "vector", 16, 42L)
     val qs = Seq(11L, 12L, 13L).map(query)
-    val probeSets = qs.map(q => model.probeClusters(q, math.max(model.k / 2, 8)).toSet)
+    val probeSets = qs.map(q => Ivf.defaultRule(model).probes(model, q, 10).toSet)
     assert(probeSets.distinct.size === 3, "the queries must probe different clusters")
     db.ivfSearch(qs(0), 10).collect()
     val after = compiles
     db.ivfSearch(qs(1), 10).collect()
     db.ivfSearch(qs(2), 10).collect()
     assert(compiles === after, "a new probe set must reuse the compiled plan")
+    // the candidate-mass rule changes only the probe list, so it too
+    // reuses the plan across probe sets of different lengths
+    val adaptive = Ivf.Adaptive(Ivf.clusterSizes(assigned))
+    val adaptiveSets = qs.map(q => adaptive.probes(model, q, 10).toSet)
+    assert(adaptiveSets.distinct.size === 3, "the queries must probe different clusters")
+    Ivf.search(assigned, model, qs(0), 10, adaptive).collect()
+    val warm = compiles
+    Ivf.search(assigned, model, qs(1), 10, adaptive).collect()
+    Ivf.search(assigned, model, qs(2), 10, adaptive).collect()
+    assert(compiles === warm, "a new adaptive probe set must reuse the compiled plan")
   }
 
   test("the brute-force sim projection is a handful of expression nodes") {

@@ -99,7 +99,11 @@ class SqlSurfaceSpec extends SparkSpec {
     val planted = spark.createDataFrame(Seq(
         (0L, "mail ops@example.com or +1-555-867-5309 from 10.0.0.1"),
         (1L, "a@b.co c@d.io twice"),
-        (2L, "nothing sensitive here"))).toDF("id", "t")
+        (2L, "nothing sensitive here"),
+        // a non-ASCII letter next to the address: RE2's ASCII \b (DuckDB)
+        // masks it, so the SQL functions must too
+        (3L, "é1.2.3.4 x"),
+        (4L, "1.2.3.4中"))).toDF("id", "t")
     planted.createOrReplaceTempView("pii_probe")
     val viaSql = spark.sql(
       """SELECT id, tx_pii_emails(t), tx_pii_phones(t), tx_pii_ips(t),
@@ -111,6 +115,8 @@ class SqlSurfaceSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     assert(viaSql === viaCols)
     assert(viaSql(0L).last === "mail <EMAIL> or <PHONE> from <IP>")
+    assert(viaSql(3L).last === "é<IP> x")
+    assert(viaSql(4L).last === "<IP>中")
   }
 
   test("registration is idempotent and covers the declared surface") {

@@ -152,9 +152,9 @@ class StreamingSpec extends SparkSpec {
     val (freshAssigned, freshModel) = Ivf.fit(historical.union(drifted), k = 4)
     assert(model1.centroids.map(_.toSeq).toSeq === freshModel.centroids.map(_.toSeq).toSeq)
     val query = Seq.fill(dim)(9.0)
-    val served = Ivf.search(maintained, model1, query, 10)
+    val served = Ivf.search(maintained, model1, query, 10, Ivf.defaultRule(model1))
       .select("id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val fresh = Ivf.search(freshAssigned, freshModel, query, 10)
+    val fresh = Ivf.search(freshAssigned, freshModel, query, 10, Ivf.defaultRule(freshModel))
       .select("id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(served === fresh, "maintained index must serve identically to a fresh build")
   }
@@ -201,9 +201,10 @@ class StreamingSpec extends SparkSpec {
     val (freshAssigned, freshModel) = Ivf.fit(gen2, k = 4)
     assert(model1.centroids.map(_.toSeq).toSeq === freshModel.centroids.map(_.toSeq).toSeq)
     val query = Seq.fill(dim)(9.0)
-    val served = Ivf.search(Ivf.currentClustered(spark, root), model1, query, 10)
+    val served = Ivf.search(Ivf.currentClustered(spark, root), model1, query, 10,
+      Ivf.defaultRule(model1))
       .select("id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val fresh = Ivf.search(freshAssigned, freshModel, query, 10)
+    val fresh = Ivf.search(freshAssigned, freshModel, query, 10, Ivf.defaultRule(freshModel))
       .select("id", "sim").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(served === fresh)
   }
@@ -786,7 +787,8 @@ class StreamingSpec extends SparkSpec {
     val qv = spark.range(1).select(embedder.embed(lit("vector database search")).as("v"))
       .head.getSeq[Double](0)
     assert(graft.index.Ivf.search(spark.read.parquet(s"$dir/index"), model, qv, 5,
-      vecCol = "vector", idCol = "chunk_id").count() === 5)
+      graft.index.Ivf.defaultRule(model), vecCol = "vector", idCol = "chunk_id")
+      .count() === 5)
   }
 
   test("streaming HNSW delta ingest serves like the facade's post-insert search") {

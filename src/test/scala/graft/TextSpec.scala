@@ -234,7 +234,8 @@ class TextSpec extends SparkSpec {
       lit("quick brown fox jumps over a lazy dog by the river")).as("v"))
       .head.getSeq[Double](0)
     val top = graft.index.Ivf
-      .search(assigned, model, qv, 1, vecCol = "vector", idCol = "id")
+      .search(assigned, model, qv, 1, graft.index.Ivf.defaultRule(model),
+        vecCol = "vector", idCol = "id")
       .collect()
     assert(top.length === 1 && top.head.getLong(0) === 1L,
       "the planted near-dup must rank first")
