@@ -403,6 +403,12 @@ object Dedup {
   def minhashA(j: Int): Long = 2L * j + 3
   def minhashB(j: Int): Long = 7L * j + 1
 
+  /** One text's MinHash signature, `numHashes` BIGINTs over its word
+    * k-grams ([[graft.functions.MinhashSignature]]); NULL for a text of
+    * fewer than `k` tokens. */
+  def minhashSignature(text: Column, numHashes: Int, k: Int): Column =
+    ColumnBridge.column(MinhashSignature(ColumnBridge.expression(text), k, numHashes))
+
   /** MinHash signature columns h0..h{n-1}: per-doc min over shingles of
     * h_j(s) = (a_j * (md5_60(s) mod p) + b_j) mod p — one md5 per shingle,
     * the rest integer arithmetic (universal-hash family, mirrored exactly
@@ -414,8 +420,7 @@ object Dedup {
     // Widen the raw scan first — see hashedShingleSets.
     val sig = Par.widen(df)
       .where(size(split(col(textCol), " ")) >= k)
-      .select(col(idCol).as("doc"), ColumnBridge.column(MinhashSignature(
-        ColumnBridge.expression(col(textCol)), k, numHashes)).as("sig"))
+      .select(col(idCol).as("doc"), minhashSignature(col(textCol), numHashes, k).as("sig"))
     val hashCols = (0 until numHashes).map(j => min(col("sig")(j)).as(s"h$j"))
     sig.groupBy("doc").agg(hashCols.head, hashCols.tail: _*)
   }

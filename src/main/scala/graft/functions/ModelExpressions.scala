@@ -633,14 +633,15 @@ final class PcaKernel(val mean: Array[Double],
 }
 
 /** Per-row bigram-LM score under a FROZEN [[graft.text.NgramLm]] model —
-  * (n_bigrams, nll_q) as a 2-long array, for the stateless streaming gate
+  * (n_bigrams, nll_q) as a 2-long array, the one scorer of
+  * [[graft.text.NgramLm.score]] and so of the stateless streaming gate
   * ([[graft.streaming.StreamingIngest.lmGateStream]]): the pair table is
   * up to B² entries, far past array-literal territory, so it rides as a
   * reference object in one fused kernel instead (the [[PcaKernel]]
   * pattern). Hashing matches the engine/SQL convention exactly —
   * [[TextKernels.hash60]] of "lm:"+token, mod B — and the weight sum
-  * is integer, so the kernel's output equals [[graft.text.NgramLm.score]]
-  * value-for-value on the same row (StreamingSpec-gated). */
+  * is integer, so the kernel's output equals the fit's exploded-bigram
+  * bucketing and the DuckDB mirror value-for-value (LearnedGateSpec). */
 final class LmScoreKernel(val pairs: java.util.HashMap[java.lang.Long, java.lang.Long],
     val ctxDefault: Array[Long], val b: Int) extends Serializable {
   private def bucket(tok: String): Int = (TextKernels.hash60("lm:" + tok) % b).toInt

@@ -485,14 +485,6 @@ object Ivf {
       topK: Int, rule: ProbeRule, queryIdCol: String = "query_id",
       queryVecCol: String = "qvec", vecCol: String = "vector", idCol: String = "id",
       filter: Option[Column] = None): DataFrame = {
-    val spark = assigned.sparkSession
-    val salts = bigBatchSalts(spark, model.k)
-    val probed = graft.operators.Par.widen(queries)
-      .select(col(queryIdCol).cast("long").as("query_id"),
-        col(queryVecCol).cast("array<double>").as("qvec"))
-      .select(col("query_id"), col("qvec"),
-        explode(rule.column(col("qvec"), model, topK)).as("cluster_id"))
-      .withColumn("__salt", explode(array((0 until salts).map(lit(_)): _*)))
     // S5 semantics at query-set scale, same exact filter-first contract as
     // [[search]]: the predicate lands on the candidate scan BEFORE any
     // scoring (pushed into the layout's parquet read), so every returned
@@ -500,23 +492,41 @@ object Ivf {
     // no overfetch starvation. Probe lists are filter-independent (the
     // model ranks centroids, not rows), matching the collected paths.
     val data = filter.foldLeft(assigned)((d, f) => d.where(f))
-      .withColumn("__salt", pmod(hash(col(idCol)), lit(salts)))
-    val joined = probed.hint("shuffle_hash")
-      .join(data, Seq("cluster_id", "__salt"))
+    val (_, cand) = saltedProbeJoin(queries, data, model, topK, rule,
+      queryIdCol, queryVecCol, idCol)
+    val joined = cand
       .select(col("query_id"), col(idCol),
         graft.GraftExtensions.cosineSim(col(vecCol), col("qvec")).as("sim_raw"))
     graft.operators.TopK.perGroupTopK(joined, "query_id", col(idCol), col("sim_raw"), topK)
       .withColumnRenamed("id", idCol)
   }
 
-  /** Salt factor of the big-batch cluster joins: k·S join granules should
-    * cover the cluster's parallelism, CAPPED — the salt replicates the
-    * PROBE rows (which grow with |queries|), so an unbounded
-    * S = defaultParallelism would blow the probe-side shuffle up by
-    * cluster width on exactly the path built for huge query sets. */
-  private[index] def bigBatchSalts(spark: SparkSession, k: Int): Int =
-    math.min(64, math.max(1,
-      math.ceil(spark.sparkContext.defaultParallelism.toDouble / k).toInt))
+  /** The salted probe join of the big-batch serves ([[bigBatchSearch]],
+    * [[IvfPq.bigBatchSearch]]): the widened query frame, cast to
+    * (query_id BIGINT, qvec ARRAY<DOUBLE>), and its probe rows — one per
+    * probed cluster (from `rule`) and salt — joined to `data` on
+    * (cluster_id, __salt), each data row salted by `pmod(hash(id), S)`.
+    *
+    * Salt factor S: k·S join granules should cover the cluster's
+    * parallelism, CAPPED — the salt replicates the PROBE rows (which grow
+    * with |queries|), so an unbounded S = defaultParallelism would blow
+    * the probe-side shuffle up by cluster width on exactly the path built
+    * for huge query sets. */
+  private[index] def saltedProbeJoin(queries: DataFrame, data: DataFrame,
+      model: IvfModel, topK: Int, rule: ProbeRule, queryIdCol: String,
+      queryVecCol: String, idCol: String): (DataFrame, DataFrame) = {
+    val salts = math.min(64, math.max(1,
+      math.ceil(data.sparkSession.sparkContext.defaultParallelism.toDouble / model.k).toInt))
+    val q = graft.operators.Par.widen(queries)
+      .select(col(queryIdCol).cast("long").as("query_id"),
+        col(queryVecCol).cast("array<double>").as("qvec"))
+    val probed = q
+      .select(col("query_id"), col("qvec"),
+        explode(rule.column(col("qvec"), model, topK)).as("cluster_id"))
+      .withColumn("__salt", explode(array((0 until salts).map(lit(_)): _*)))
+    val salted = data.withColumn("__salt", pmod(hash(col(idCol)), lit(salts)))
+    (q, probed.hint("shuffle_hash").join(salted, Seq("cluster_id", "__salt")))
+  }
 
   /** Distributed approximate k-NN SELF-join — the similarity-join shape
     * that survives past the broadcast/driver limit (the exact blocked

@@ -232,18 +232,9 @@ object IvfPq {
       refineFactor: Int = 4, vecCol: String = "vector", idCol: String = "id",
       queryIdCol: String = "query_id", queryVecCol: String = "qvec",
       filter: Option[Column] = None): DataFrame = {
-    val spark = encoded.sparkSession
-    val salts = Ivf.bigBatchSalts(spark, model.ivf.k)
-    val q0 = graft.operators.Par.widen(queries)
-      .select(col(queryIdCol).cast("long").as("query_id"),
-        col(queryVecCol).cast("array<double>").as("qvec"))
-    val probed = q0
-      .select(col("query_id"), col("qvec"),
-        explode(rule.column(col("qvec"), model.ivf, topK)).as("cluster_id"))
-      .withColumn("__salt", explode(array((0 until salts).map(lit(_)): _*)))
-    val data = encoded.withColumn("__salt", pmod(hash(col(idCol)), lit(salts)))
-    val cand = probed.hint("shuffle_hash")
-      .join(data, Seq("cluster_id", "__salt"))
+    val (q0, probed) = Ivf.saltedProbeJoin(queries, encoded, model.ivf, topK, rule,
+      queryIdCol, queryVecCol, idCol)
+    val cand = probed
       .withColumn("adc", graft.functions.ModelExpressions.adcScoreDirect(
         col("qvec"), col("cluster_id"), col("pq_code"),
         model.pq, model.ivf.centroids))

@@ -1487,16 +1487,16 @@ object PipelineQueries {
     * [[temperatureMix]]. HASH-GATED end-to-end by composing the two
     * mirrors: the weight-sidecar logit CTEs ([[TextQueries.
     * qualityLogitCtes]]) feed the mix arithmetic verbatim. Same scale
-    * shape as the temperature mix plus one bounded-broadcast scoring
-    * join; report = (source, n_docs, n_quality, n_kept, threshold). */
+    * shape as the temperature mix plus one per-row scoring pass;
+    * report = (source, n_docs, n_quality, n_kept, threshold). */
   def qualityMix(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val model = TextQueries.qualityModel(spark, dir)
     TextQueries.publishQualityWeights(spark, dir, model) // repair no-op
     val docs = VectorModel.documents(spark, dir)
-    // the gate scoring subtree (explode + weight join + per-doc aggregate)
-    // feeds BOTH the mass branch and the acceptance branch — cache the
-    // tiny id set or the corpus is scored twice
+    // the gate scoring subtree feeds BOTH the mass branch and the
+    // acceptance branch — cache the tiny id set or the corpus is scored
+    // twice
     val gatedIds = graft.store.CacheRegistry.cached(
       graft.text.QualityModel.score(docs.select("doc_id", "text"), model)
         .where(col("is_quality") === 1L).select("doc_id"))
@@ -1816,10 +1816,10 @@ object PipelineQueries {
     * GATED end-to-end by composing the three factored mirrors
     * ([[TextQueries.qualityLogitCtes]] + [[dsirKeptCtes]] + the mix
     * arithmetic) — no stage's oracle text is duplicated, so none can
-    * drift. Scale shape: one cached gate-scoring pass, one DSIR scoring
-    * pass over the gated survivors (bounded broadcast joins), one
-    * bounded per-source mass broadcast, pure-expression acceptance —
-    * three shuffles total, nothing corpus-sized collected. Report:
+    * drift. Scale shape: one cached gate-scoring pass, one per-row DSIR
+    * scoring pass over the gated survivors, one bounded per-source mass
+    * broadcast, pure-expression acceptance — nothing corpus-sized
+    * collected. Report:
     * (source, n_docs, n_quality, n_dsir, n_kept, threshold) with LEFT
     * joins so a source fully dropped at any stage still reports. */
   def dsirMix(spark: SparkSession, dir: String): DataFrame = {
@@ -1912,17 +1912,16 @@ object PipelineQueries {
     * quality gate drops no-evidence docs). Reports the per-lang ledger:
     * the reference language passes at a visibly higher rate.
     *
-    * Scale shape: the scoring pass (bounded broadcasts + one doc-keyed
-    * shuffle, [[graft.text.NgramLm.score]]), one scalar aggregate, one
+    * Scale shape: the per-row scoring pass ([[graft.text.NgramLm.score]]),
+    * one scalar aggregate, one
     * broadcast scalar join, one bounded per-lang ledger aggregate. */
   def perplexityGate(spark: SparkSession, dir: String): DataFrame = {
     val m = TextQueries.lmModel(spark, dir)
     TextQueries.publishLmSidecars(spark, dir, m) // repair no-op
     val docs = VectorModel.documents(spark, dir)
-    // the scoring pass (explode + weight joins + doc-keyed shuffle) feeds
-    // BOTH the threshold aggregate and the acceptance branch — cache it
-    // (CacheRegistry) or the corpus is scored twice (the recurring
-    // shared-lineage class)
+    // the scoring pass feeds BOTH the threshold aggregate and the
+    // acceptance branch — cache it (CacheRegistry) or the corpus is scored
+    // twice (the recurring shared-lineage class)
     val scores = graft.store.CacheRegistry.cached(
       graft.text.NgramLm.score(docs.select("doc_id", "text"), m))
     val thr = scores.where(col("n_bigrams") > 0)

@@ -1040,14 +1040,14 @@ object TextQueries {
   // twins are gated by (or term-for-term expansions of the function
   // bodies), so the SQL surface earns the identical hash gate.
 
-  /** Bind [[graft.sql.SqlSurface.DocsView]] + register the SQL functions —
-    * the session setup a pure-SQL consumer performs once. */
-  /** Sessions whose temporary functions are already registered — the
-    * registration is idempotent (OR REPLACE) but NOT free: it is ~16 DDL
-    * statements through the parser and catalog, and re-running it per
-    * query charged every `tx_sql_*` serve ~1.5 s of pure DDL (measured:
-    * the tx_sql_chunks plan is identical to tx_chunks', yet it benched
-    * 8× slower). The VIEW rebind stays per-call — the dir changes. */
+  /** Sessions whose table functions are already registered — the
+    * registration is idempotent (OR REPLACE) but NOT free: it is 2 DDL
+    * statements through the parser and catalog (the scalar functions are
+    * injected by [[graft.GraftExtensions]] and need none), and re-running
+    * the registration per query once charged every `tx_sql_*` serve
+    * ~1.5 s of pure DDL (measured with ~16 statements: the tx_sql_chunks
+    * plan is identical to tx_chunks', yet it benched 8× slower). The VIEW
+    * rebind stays per-call — the dir changes. */
   // Keyed on the SESSION OBJECT (synchronized weak-identity map), not
   // System.identityHashCode: identity hashes are not unique across
   // distinct sessions, so a collision would silently skip registerAll
@@ -1068,7 +1068,7 @@ object TextQueries {
     * token-count floor → exact-dedup (first doc per content fingerprint)
     * → language breakdown. Every operator in the text is a registered SQL
     * function; the plan is the same codegen'd expressions as the Column
-    * API (SQL UDF bodies inline at resolution). */
+    * API (each function's builder calls its Column operator). */
   def sqlClean(spark: SparkSession, dir: String): DataFrame = {
     sqlSurfaceSession(spark, dir)
     spark.sql(
@@ -1360,7 +1360,8 @@ object TextQueries {
     val m = qualityModel(spark, dir)
     publishQualityWeights(spark, dir, m) // repair no-op unless dir switched / root lost
     graft.text.QualityModel.score(
-      VectorModel.documents(spark, dir).select("doc_id", "text"), m)
+        VectorModel.documents(spark, dir).select("doc_id", "text"), m)
+      .orderBy("doc_id")
   }
 
   /** The quality-logit CTE chain (weights sidecar → token buckets →

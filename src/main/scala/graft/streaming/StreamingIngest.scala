@@ -999,124 +999,52 @@ object StreamingIngest {
     * ([[graft.queries.TextQueries.qualityModelScores]]): score a document
     * stream under a FROZEN published model — the deployment shape of a
     * trained curation gate (train offline, serve the quantized weights on
-    * the firehose). PURE PER-ROW: the bounded 256-weight table rides as
-    * an array literal and the integer token-weight sum is one
-    * `aggregate(transform(...))` expression — no explode, no join, no
-    * streaming aggregation state, so the stream runs in plain append
-    * mode and output rows are identical to the batch scorer on the same
-    * docs (the integer sum is order-free; StreamingSpec). Model drift is
-    * a REDEPLOY, not stream state — scores stay frozen at their arrival
-    * model version like every incremental twin here. */
+    * the firehose). It is the batch scorer itself
+    * ([[graft.text.QualityModel.score]]), which is pure per-row: no
+    * explode, no join, no streaming aggregation state, so the stream runs
+    * in plain append mode. NULL-text docs are dropped, as in batch. Model
+    * drift is a REDEPLOY, not stream state — scores stay frozen at their
+    * arrival model version like every incremental twin here. */
   def qualityGateStream(docs: DataFrame,
-      model: graft.text.QualityModel.Model): DataFrame = {
-    val wq = typedLit(model.wq.toSeq)
-    val dot = aggregate(
-      transform(graft.text.TextAnalysis.tokens(col("text")),
-        t => element_at(wq, (graft.text.QualityModel.bucket(t) + 1).cast("int"))),
-      lit(0L), (acc, x) => acc + x)
-    val n = graft.text.TextAnalysis.tokenCount(col("text"))
-    val logit = graft.text.QualityModel.logitCol(model, dot, n)
-    docs.select(col("doc_id"), logit.as("logit"),
-      when(logit > 0.0, 1L).otherwise(0L).as("is_quality"))
-  }
+      model: graft.text.QualityModel.Model): DataFrame =
+    graft.text.QualityModel.score(docs, model)
 
   /** Streaming twin of the DSIR resampler ([[graft.text.Dsir]]) under a
     * FROZEN fitted model — the deployment shape: fit once on a corpus +
-    * target sample (a build step), then gate the doc firehose. Pure
-    * per-row like [[qualityGateStream]]: the 256 quantized LLR weights
-    * and the 257 acceptance thresholds ride as array literals, the score
-    * is one integer `aggregate(transform(tokens))`, the level clamp and
-    * the salted md5 coin are scalar expressions — no state, no
-    * watermark, plain append mode, and the decision for a doc is
-    * IDENTICAL to [[graft.text.Dsir.decisions]] on the same row
-    * (StreamingSpec), which is exactly the per-doc purity TrancheSpec's
-    * composition case proves. Model drift is a redeploy, not stream
-    * state. */
-  def dsirGateStream(docs: DataFrame, model: graft.text.Dsir.Model): DataFrame = {
-    import graft.text.Dsir
-    val wq = typedLit(model.wq.toSeq)
-    val thr = typedLit(model.thr.toSeq)
-    // coalesce: NULL text must score the batch path's empty-product 0
-    // (Dsir.score's explode drops the row, the left join restores z=0) —
-    // an un-coalesced NULL would propagate through level into a REJECT,
-    // silently flipping the decision vs Dsir.decisions
-    val z = coalesce(
-      aggregate(
-        transform(graft.text.TextAnalysis.tokens(col("text")),
-          t => element_at(wq, (Dsir.bucket(t) + 1).cast("int"))),
-        lit(0L), (acc, x) => acc + x),
-      lit(0L))
-    val level = least(expr(s"greatest(0L, -z) DIV ${Dsir.LevelQ}"),
-      lit(Dsir.Levels.toLong))
-    val u = graft.dedup.Dedup.hash60(
-      concat(col("doc_id").cast("string"), lit(Dsir.AcceptSalt)))
-    docs.select(col("doc_id"), z.as("z"))
-      .withColumn("level", level)
-      .select(col("doc_id"), col("z"), col("level"),
-        when(u < element_at(thr, (col("level") + 1).cast("int")), 1L)
-          .otherwise(0L).as("kept"))
-  }
+    * target sample (a build step), then gate the doc firehose. It is
+    * [[graft.text.Dsir.decisions]] itself, which is pure per-row: no
+    * state, no watermark, plain append mode — the per-doc purity
+    * TrancheSpec's composition case proves. Model drift is a redeploy,
+    * not stream state. */
+  def dsirGateStream(docs: DataFrame, model: graft.text.Dsir.Model): DataFrame =
+    graft.text.Dsir.decisions(docs, model)
 
   /** Streaming twin of the learned language ID
     * ([[graft.text.LangIdModel.classify]]) under a frozen model —
     * completes the stream-twin set of the four learned gates (quality,
-    * DSIR, LM, language). The batch path aggregates per-(doc, bucket)
-    * counts through a join; per-row the same integer dot is one
-    * `aggregate(transform(grams))` per language over the |langs|·256
-    * array literals, and the argmax is `array_max` over (score, −rank,
-    * lang) structs — the batch struct-max's ordering exactly. Docs too
-    * short to gram take the batch path's ('und', 0) via the size guard
-    * (an unguarded argmax over all-zero scores would pick rank 0
-    * instead). Stateless, append mode; classification is row-identical
-    * to the batch operator (StreamingSpec). */
+    * DSIR, LM, language). It is the batch classifier itself, which is
+    * pure per-row: stateless, append mode. */
   def langIdStream(docs: DataFrame,
-      m: graft.text.LangIdModel.Model): DataFrame = {
-    import graft.text.LangIdModel
-    val gs = LangIdModel.grams(col("text"))
-    val scored = LangIdModel.Langs.zipWithIndex.map { case (l, r) =>
-      val wq = typedLit(m.wq(l).toSeq)
-      struct(
-        aggregate(
-          transform(gs, g => element_at(wq, (LangIdModel.bucket(g) + 1).cast("int"))),
-          lit(0L), (acc, x) => acc + x).as("score"),
-        lit(-r).as("nr"), lit(l).as("lang"))
-    }
-    val best = array_max(array(scored: _*))
-    docs.select(col("doc_id"),
-      when(col("text").isNull || size(gs) === 0, lit("und"))
-        .otherwise(best.getField("lang")).as("lang"),
-      when(col("text").isNull || size(gs) === 0, lit(0L))
-        .otherwise(best.getField("score")).as("score"))
-  }
+      m: graft.text.LangIdModel.Model): DataFrame =
+    graft.text.LangIdModel.classify(docs, m)
 
   /** Streaming twin of the relative perplexity gate
     * ([[graft.queries.PipelineQueries.perplexityGate]]) under a FROZEN
     * model AND a FROZEN threshold — the deployment shape: the LM fits on
     * the reference slice and the pooled threshold freezes at train time
-    * (both build steps), then the doc firehose gates statelessly.
-    * Unlike [[qualityGateStream]]/[[dsirGateStream]], whose 256-entry
-    * weight tables ride as array literals, the bigram pair table is up
-    * to B² entries — so the model rides as ONE fused kernel expression
-    * ([[graft.functions.LmScoreKernel]], reference object, no literal,
-    * no join, no state). Per-row output (doc_id, n_bigrams, nll_q, kept)
-    * is value-identical to [[graft.text.NgramLm.score]] + the gate's
-    * integer micro-nats compare on the same rows (StreamingSpec), NULL
-    * text scoring the batch path's empty-product (0, 0) and never kept.
-    * Threshold drift is a redeploy, not stream state — the same contract
-    * as model drift. */
+    * (both build steps), then the doc firehose gates statelessly. The
+    * scores are [[graft.text.NgramLm.score]]'s, whose per-row kernel
+    * carries the model (no literal, no join, no state); output (doc_id,
+    * n_bigrams, nll_q, kept) adds the gate's integer micro-nats compare,
+    * docs without bigrams (NULL, empty, one token) never kept. Threshold
+    * drift is a redeploy, not stream state — the same contract as model
+    * drift. */
   def lmGateStream(docs: DataFrame, model: graft.text.NgramLm.Model,
-      thrMicro: Long): DataFrame = {
-    val s = coalesce(
-      graft.functions.ModelExpressions.lmScore(col("text"), model),
-      typedLit(Seq(0L, 0L)))
-    docs.select(col("doc_id"), s.as("_s"))
-      .select(col("doc_id"),
-        element_at(col("_s"), 1).as("n_bigrams"),
-        element_at(col("_s"), 2).as("nll_q"))
-      .withColumn("kept",
+      thrMicro: Long): DataFrame =
+    graft.text.NgramLm.score(docs, model)
+      .select(col("doc_id"), col("n_bigrams"), col("nll_q"),
         when(col("n_bigrams") > 0 &&
-          expr("nll_q div n_bigrams") < lit(thrMicro), 1L).otherwise(0L))
-  }
+          expr("nll_q div n_bigrams") < lit(thrMicro), 1L).otherwise(0L).as("kept"))
 
   /** Streaming twin of the PII scrub ([[graft.queries.TextQueries]]'s
     * `tx_pii` stage): typed match counts + the redacted text, per

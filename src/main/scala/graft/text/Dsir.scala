@@ -37,10 +37,10 @@ import graft.dedup.Dedup
   *
   * Scale shape: fit = two [[B]]-row aggregates (one over the target
   * sample — tiny by definition — one over the corpus, map-side
-  * combinable); serving = one explode → broadcast join against [[B]]
-  * weight rows → per-doc integer sum (the one shuffle, keyed by doc) →
-  * broadcast join against 257 threshold rows → pure-expression accept.
-  * Nothing corpus-sized is collected or broadcast.
+  * combinable); serving is per row ([[z]]): the [[B]] weights and the
+  * 257 thresholds ride as array literals, so there is no join, no
+  * shuffle and no state, and the batch decisions and the streaming gate
+  * run the same expressions. Nothing corpus-sized is collected.
   */
 object Dsir {
 
@@ -103,24 +103,22 @@ object Dsir {
     Model(wq, thr)
   }
 
-  /** Per-doc importance scores: (doc_id, z) with z = Σ_tok wq[bucket] in
-    * fixed point — the log importance weight of the document under the
-    * two unigram models, times [[Scale]]. Docs with no tokens carry the
-    * empty-product score 0 via the left join (they are neither target
-    * evidence nor counter-evidence). */
-  def score(docs: DataFrame, m: Model): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val w = broadcast(
-      m.wq.toSeq.zipWithIndex.map { case (wq, b) => (b, wq) }.toDF("b", "wq"))
-    val sums = docs
-      .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      .withColumn("b", bucket(col("tok")))
-      .join(w, "b")
-      .groupBy("doc_id").agg(sum("wq").as("z"))
-    docs.select("doc_id").join(sums, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("z"), lit(0L)).as("z"))
+  /** One text's importance score, per row: z = Σ_tok wq[bucket] in fixed
+    * point — the log importance weight of the document under the two
+    * unigram models, times [[Scale]]. A NULL text scores the
+    * empty-product 0 (neither target evidence nor counter-evidence). */
+  def z(text: Column, m: Model): Column = {
+    val wq = typedLit(m.wq.toSeq)
+    coalesce(
+      aggregate(
+        transform(TextAnalysis.tokens(text), t => element_at(wq, (bucket(t) + 1).cast("int"))),
+        lit(0L), (acc, x) => acc + x),
+      lit(0L))
   }
+
+  /** Per-doc importance scores: (doc_id, z), one row per doc. */
+  def score(docs: DataFrame, m: Model): DataFrame =
+    docs.select(col("doc_id"), z(col("text"), m).as("z"))
 
   /** Acceptance decisions: (doc_id, z, level, kept 0/1). level =
     * min(⌊max(0, −z)/[[LevelQ]]⌋, [[Levels]]) — integer on both engines
@@ -128,17 +126,13 @@ object Dsir {
     * floor agree) — and kept iff the doc's salted md5-60 uniform is
     * under the level's precomputed threshold. */
   def decisions(docs: DataFrame, m: Model): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val thr = broadcast(
-      m.thr.toSeq.zipWithIndex.map { case (t, l) => (l.toLong, t) }.toDF("level", "thr"))
+    val thr = typedLit(m.thr.toSeq)
+    val u = Dedup.hash60(concat(col("doc_id").cast("string"), lit(AcceptSalt)))
     score(docs, m)
       .withColumn("level",
         least(expr(s"greatest(0L, -z) DIV $LevelQ"), lit(Levels.toLong)))
-      .join(thr, "level")
-      .withColumn("u", Dedup.hash60(
-        concat(col("doc_id").cast("string"), lit(AcceptSalt))))
       .select(col("doc_id"), col("z"), col("level"),
-        when(col("u") < col("thr"), 1L).otherwise(0L).as("kept"))
+        when(u < element_at(thr, (col("level") + 1).cast("int")), 1L)
+          .otherwise(0L).as("kept"))
   }
 }

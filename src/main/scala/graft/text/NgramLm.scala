@@ -27,10 +27,11 @@ import graft.dedup.Dedup
   * unlike any libm-scored LM.
   *
   * Scale shape: fit = one bounded ≤[[B]]²-row aggregate over the
-  * reference slice (tiny by definition); serving = one exploded bigram
-  * pass, two bounded broadcast joins (seen-pair weights + per-context
-  * defaults), one doc-keyed shuffle for the per-doc sum. Nothing
-  * corpus-sized is collected or broadcast.
+  * reference slice (tiny by definition); serving is per row, one fused
+  * kernel over the text ([[graft.functions.ModelExpressions.lmScore]]:
+  * the pair table rides as a reference object), so there is no join and
+  * no shuffle, and the batch scorer and the streaming gate run the same
+  * expression. Nothing corpus-sized is collected or broadcast.
   */
 object NgramLm {
 
@@ -61,25 +62,20 @@ object NgramLm {
     * 1e-6-nat fixed point. */
   case class Model(pairs: Map[(Int, Int), Long], ctxDefault: Array[Long])
 
-  /** (doc_id, b1, b2) bucket bigrams of `docs` — the shared explode the
-    * fit aggregate and the scoring pass both run. Docs under two tokens
-    * contribute nothing (guarded like [[graft.queries.TextQueries.
-    * bigramRarity]] — ngrams' sequence() is descending there). */
-  private[text] def bucketBigrams(docs: DataFrame): DataFrame =
-    docs
-      .where(size(TextAnalysis.tokens(col("text"))) >= 2)
-      .select(col("doc_id"), explode(Dedup.ngrams(col("text"), 2)).as("g"))
-      .select(col("doc_id"),
-        bucket(element_at(split(col("g"), " "), 1)).as("b1"),
-        bucket(element_at(split(col("g"), " "), 2)).as("b2"))
-
   /** Fit on the reference slice: bounded (b1, b2) counts, then driver-side
     * add-one smoothing over the [[B]]-bucket next-token vocabulary —
     * p(b2|b1) = (c(b1,b2)+1)/(c(b1·)+B) — quantized to [[Scale]]. Seen
     * pairs publish their weight; every context publishes its unseen-pair
-    * default −ln(1/(c(b1·)+B)) = ln(c(b1·)+B). */
+    * default −ln(1/(c(b1·)+B)) = ln(c(b1·)+B). Docs under two tokens
+    * contribute nothing (guarded like [[graft.queries.TextQueries.
+    * bigramRarity]] — ngrams' sequence() is descending there). */
   def fit(reference: DataFrame): Model = {
-    val counts = bucketBigrams(reference)
+    val counts = reference
+      .where(size(TextAnalysis.tokens(col("text"))) >= 2)
+      .select(explode(Dedup.ngrams(col("text"), 2)).as("g"))
+      .select(
+        bucket(element_at(split(col("g"), " "), 1)).as("b1"),
+        bucket(element_at(split(col("g"), " "), 2)).as("b2"))
       .groupBy("b1", "b2").agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     val ctxTotals = counts.groupBy(_._1._1).view.mapValues(_.values.sum).toMap
@@ -93,34 +89,26 @@ object NgramLm {
     Model(pairs, ctxDefault)
   }
 
-  /** Per-doc cross-entropy: (doc_id, n_bigrams, nll_q, nats) with nll_q
-    * the exact fixed-point Long sum, and nats derived INTEGER-FIRST:
-    * micro-nats = nll_q div n (exact integer division — the fixed-point
-    * mean), then nats = micro/10⁶, one correctly-rounded division of an
-    * exactly-representable integer — NO round() anywhere. A direct
-    * round(nll_q/(n·10⁶), 6) looks equivalent but is not mirrorable:
-    * the quotient lands EXACTLY on 7th-digit ties (integer over n·10⁶),
-    * where Spark rounds half-up and DuckDB half-even — measured
-    * off-by-one-ulp disagreements at sf0.1. Docs without bigrams carry
-    * the empty-product (0, 0, 0.0) via the left join — no evidence
-    * either way, the [[Dsir.score]] convention. */
+  /** Per-doc cross-entropy: (doc_id, n_bigrams, nll_q, nats), one row
+    * per doc, with nll_q the exact fixed-point Long sum of the doc's
+    * bigram weights ([[graft.functions.ModelExpressions.lmScore]]), and
+    * nats derived INTEGER-FIRST: micro-nats = nll_q div n (exact integer
+    * division — the fixed-point mean), then nats = micro/10⁶, one
+    * correctly-rounded division of an exactly-representable integer — NO
+    * round() anywhere. A direct round(nll_q/(n·10⁶), 6) looks equivalent
+    * but is not mirrorable: the quotient lands EXACTLY on 7th-digit ties
+    * (integer over n·10⁶), where Spark rounds half-up and DuckDB
+    * half-even — measured off-by-one-ulp disagreements at sf0.1. Docs
+    * without bigrams (NULL, empty or one-token text) carry the
+    * empty-product (0, 0, 0.0) — no evidence either way, the
+    * [[Dsir.z]] convention. */
   def score(docs: DataFrame, m: Model): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val w = broadcast(m.pairs.toSeq.map { case ((b1, b2), q) => (b1, b2, q) }
-      .toDF("b1", "b2", "wq"))
-    val d = broadcast(m.ctxDefault.toSeq.zipWithIndex
-      .map { case (q, b1) => (b1, q) }.toDF("b1", "defq"))
-    val sums = bucketBigrams(docs)
-      .join(w, Seq("b1", "b2"), "left")
-      .join(d, Seq("b1"))
-      .select(col("doc_id"), coalesce(col("wq"), col("defq")).as("q"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("q").as("nll_q"))
-    docs.select("doc_id").join(sums, Seq("doc_id"), "left")
+    val s = coalesce(graft.functions.ModelExpressions.lmScore(col("text"), m),
+      typedLit(Seq(0L, 0L)))
+    docs.select(col("doc_id"), s.as("_s"))
       .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("nll_q"), lit(0L)).as("nll_q"))
+        element_at(col("_s"), 1).as("n_bigrams"),
+        element_at(col("_s"), 2).as("nll_q"))
       .withColumn("nats",
         when(col("n_bigrams") === 0L, lit(0.0))
           .otherwise(expr("nll_q div n_bigrams").cast("double") / lit(Scale)))

@@ -31,10 +31,10 @@ import graft.dedup.Dedup
   *    `(bq + (Σ_token wq[bucket(tok)]) / n_tokens) / 1e6` is an exact
   *    integer sum followed by three IEEE double ops in a fixed order —
   *    bit-identically mirrored in DuckDB from the published weight
-  *    sidecar (the SQ8/PQ-ADC two-step oracle pattern). The bucket join
-  *    broadcasts [[D]] rows (bounded model state), the token sum is one
-  *    map-side-combinable aggregation, and nothing corpus-sized leaves
-  *    the executors. */
+  *    sidecar (the SQ8/PQ-ADC two-step oracle pattern). Scoring is per
+  *    row ([[logit]]): the [[D]] weights (bounded model state) ride as an
+  *    array literal, so there is no join and no shuffle, and the batch
+  *    scorer and the streaming gate run the same expression. */
 object QualityModel {
 
   /** Hashed feature buckets. Bounded model state: the weight table is D
@@ -95,34 +95,30 @@ object QualityModel {
       Math.round(fit.intercept * Scale))
   }
 
-  /** The serving logit, shared by Spark and the spec: given the exact
-    * integer token-weight sum `dot` and token count `n`,
-    * `(bq + dot/n) / Scale` in that association. */
-  def logitCol(m: Model, dot: Column, n: Column): Column =
-    (lit(m.bq).cast("double") + dot.cast("double") / n.cast("double")) / lit(Scale)
+  /** The serving logit of one text under `m`, per row:
+    * `(bq + dot/n) / Scale` in that association, where `dot` is the exact
+    * integer sum of the text's token weights and `n` its token count.
+    * NULL on a NULL text. */
+  def logit(text: Column, m: Model): Column = {
+    val wq = typedLit(m.wq.toSeq)
+    val dot = aggregate(
+      transform(TextAnalysis.tokens(text), t => element_at(wq, (bucket(t) + 1).cast("int"))),
+      lit(0L), (acc, x) => acc + x)
+    (lit(m.bq).cast("double") + dot.cast("double") /
+      TextAnalysis.tokenCount(text).cast("double")) / lit(Scale)
+  }
 
-  /** Score `docs` under `m`: (doc_id, logit rounded 6, is_quality 0/1).
-    * One explode → bounded-broadcast bucket join → map-side-combinable
-    * integer sum per document; the only shuffle is the doc_id aggregate. */
+  /** Score `docs` under `m`: (doc_id, logit, is_quality 0/1), one row per
+    * doc with a text (NULL-text docs have no tokens to score and are
+    * dropped). The logit is NOT rounded: every op in the chain (exact
+    * BIGINT sum, two correctly-rounded casts, division, addition,
+    * division) is bit-identical across engines, whereas round-to-6
+    * half-boundary behavior is not — the raw double IS the comparable
+    * value. */
   def score(docs: DataFrame, m: Model): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val w = broadcast(
-      m.wq.toSeq.zipWithIndex.map { case (wq, b) => (b, wq) }.toDF("b", "wq"))
-    val raw = docs
-      .withColumn("n", TextAnalysis.tokenCount(col("text")))
-      .select(col("doc_id"), col("n"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      .withColumn("b", bucket(col("tok")))
-      .join(w, "b")
-      .groupBy("doc_id", "n").agg(sum("wq").as("dot"))
-    // NOT rounded: every op in the logit chain (exact BIGINT sum, two
-    // correctly-rounded casts, division, addition, division) is
-    // bit-identical across engines, whereas round-to-6 half-boundary
-    // behavior is not — the raw double IS the comparable value
-    val logit = logitCol(m, col("dot"), col("n"))
-    raw.select(col("doc_id"),
-      logit.as("logit"),
-      when(logit > 0.0, 1L).otherwise(0L).as("is_quality"))
-      .orderBy("doc_id")
+    val l = logit(col("text"), m)
+    docs.where(col("text").isNotNull)
+      .select(col("doc_id"), l.as("logit"),
+        when(l > 0.0, 1L).otherwise(0L).as("is_quality"))
   }
 }

@@ -318,9 +318,11 @@ object TextAnalysis {
   def fingerprint(text: Column): Column = md5(text)
 
   /** Order-insensitive bag-of-words fingerprint: md5 over the sorted token
-    * list — catches shuffled near-identical docs. */
+    * list — catches shuffled near-identical docs. `sort_array`, not
+    * `array_sort`: the same ascending order over `split`'s NULL-free
+    * tokens, with no comparator lambda in the plan. */
   def sortedTokenFingerprint(text: Column): Column =
-    md5(array_join(array_sort(split(lower(text), " ")), " "))
+    md5(array_join(sort_array(split(lower(text), " ")), " "))
 
   /** Modulus for the rolling fingerprint (Mersenne 2^31-1: products of two
     * residues stay within 63 bits). */

@@ -7,11 +7,12 @@ import graft.sql.SqlSurface
 import graft.text.TextAnalysis
 
 /** The pure-SQL pipeline surface must be VALUE-IDENTICAL to the Column-API
-  * operators it mirrors — the SQL UDF bodies are generated from the same
-  * constants, and this spec is the gate that keeps them from drifting:
-  * every scalar function, the chunking table function, and the corpus-level
-  * BM25 table function are compared against their engine twins on the real
-  * documents table. */
+  * operators it mirrors — the scalar functions' builders call those
+  * operators, the two table functions are SQL UDFs, and this spec is the
+  * gate that keeps them from drifting: every scalar function, the chunking
+  * table function, and the corpus-level BM25 table function are compared
+  * against their engine twins on the real documents table, and every
+  * scalar function's plan is checked for lambdas. */
 class SqlSurfaceSpec extends SparkSpec {
 
   private lazy val docs = {
@@ -54,8 +55,11 @@ class SqlSurfaceSpec extends SparkSpec {
     val n = 16
     val k = 3
     val viaSql = docs.sparkSession.sql(
-      s"SELECT doc_id, dd_minhash_sig(text, $n, $k) AS sig FROM ${SqlSurface.DocsView}")
+      s"""SELECT doc_id, dd_minhash_sig(text, $n, $k) AS sig FROM ${SqlSurface.DocsView}
+         |UNION ALL SELECT -1L, dd_minhash_sig(CAST(NULL AS STRING), $n, $k)""".stripMargin)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    // a NULL text has no signature: NULL, not an array of n NULLs
+    assert(viaSql(-1L) === null)
     val viaOp = graft.dedup.Dedup.minhashSignatures(docs, "doc_id", "text",
       numHashes = n, k = k)
       .collect().map(r =>
@@ -63,9 +67,23 @@ class SqlSurfaceSpec extends SparkSpec {
     // the operator filters docs with < k tokens; the scalar function
     // totals with array() — same signatures on the shared domain
     viaOp.foreach { case (id, sig) => assert(viaSql(id) === sig, s"doc $id") }
-    val short = viaSql.keySet -- viaOp.keySet
+    val short = viaSql.keySet -- viaOp.keySet - -1L
     short.foreach(id => assert(viaSql(id).isEmpty, s"doc $id"))
     assert(viaOp.nonEmpty)
+  }
+
+  test("dd_minhash_sig needs foldable n and k of at least 1") {
+    for ((args, msg) <- Seq(
+        "text, CAST(doc_id AS INT), 3" -> "should be a foldable",
+        "text, 16, doc_id" -> "should be a foldable",
+        "text, 0, 3" -> "must be between",
+        "text, 16, CAST(NULL AS INT)" -> "must be between")) {
+      val err = intercept[org.apache.spark.sql.AnalysisException] {
+        docs.sparkSession.sql(
+          s"SELECT dd_minhash_sig($args) FROM ${SqlSurface.DocsView}").collect()
+      }
+      assert(err.getMessage.contains(msg), s"$args: ${err.getMessage}")
+    }
   }
 
   test("tx_chunks LATERAL equals TextAnalysis.chunks per document") {
@@ -121,10 +139,33 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("registration is idempotent and covers the declared surface") {
     SqlSurface.registerAll(spark) // second call: OR REPLACE, no throw
-    val names = SqlSurface.definitions.map(_._1)
-    assert(names.distinct === names)
-    for (required <- Seq("tx_chunks", "tx_token_count", "tx_quality_score",
-        "dd_minhash_sig", "tx_bm25"))
-      assert(names.contains(required))
+    for (name <- ScalarFunctions :+ "tx_chunks" :+ "tx_bm25")
+      assert(spark.catalog.functionExists(name), name)
+  }
+
+  private val ScalarFunctions = Seq("tx_token_count", "tx_lex_token_count",
+    "tx_stopword_ratio", "tx_avg_token_len", "tx_quality_score", "tx_lang_id",
+    "tx_fingerprint", "tx_sorted_fingerprint", "tx_pii_emails", "tx_pii_phones",
+    "tx_pii_ips", "tx_pii_redact", "dd_minhash_sig")
+
+  test("no scalar function's plan holds a lambda; the token statistics compile whole-stage") {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    docs // force registration
+    for (f <- ScalarFunctions) {
+      val args = if (f == "dd_minhash_sig") "text, 16, 3" else "text"
+      val df = spark.sql(s"SELECT $f($args) AS out FROM ${SqlSurface.DocsView}")
+      df.collect()
+      val plans = Seq(df.queryExecution.analyzed, df.queryExecution.optimizedPlan)
+      assert(!plans.exists(_.exists(_.expressions.exists(_.exists(_.isInstanceOf[LambdaFunction])))),
+        s"$f:\n${df.queryExecution.analyzed}")
+      if (Set("tx_quality_score", "tx_lang_id", "tx_stopword_ratio")(f))
+        assert(helper.find(df.queryExecution.executedPlan) {
+          case w: WholeStageCodegenExec => w.child.exists(_.isInstanceOf[ProjectExec])
+          case _ => false
+        }.isDefined, s"$f:\n${df.queryExecution.executedPlan}")
+    }
   }
 }
